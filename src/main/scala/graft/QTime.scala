@@ -1,35 +1,86 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Ad-hoc per-query profiler: `runMain graft.QTime q30_minhash_lsh [reps]
-  * [explain]`. Times each named query cold (cache cleared between reps,
-  * like Bench — with Bench's one exception: the shared postings family is
-  * re-warmed UNTIMED before each rep of its consumers, so isolated and
-  * pack numbers measure the same warm-postings cost) and optionally
-  * prints the formatted physical plan. */
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Per-query measurement tool: one session setup, three modes.
+  *
+  *   sbt "runMain graft.QTime q30_minhash_lsh [reps] [explain]"
+  *
+  * Times each named query cold (cache cleared between reps, like Bench —
+  * with Bench's one exception: the shared postings family is re-warmed
+  * UNTIMED before each rep of its consumers, so isolated and pack numbers
+  * measure the same warm-postings cost) and optionally prints the
+  * formatted physical plan.
+  *
+  *   sbt "runMain graft.QTime plan plans/r14 _before"
+  *
+  * Writes `explain("formatted")` for every declared query — or the
+  * SPARK_GRAFT_ONLY subset — captured from the exact Dataset the bench
+  * times (shared frames warmed first, so consumer plans read the warm
+  * layout, not a rebuild).
+  *
+  *   sbt "runMain graft.QTime final plans/r15 _final q96_sorted_neighborhood"
+  *
+  * Executes each named query and writes the AQE FINAL executed plan — the
+  * plan the bench actually pays for, after runtime re-optimization
+  * (SMJ→SHJ conversion, coalescing, skew splits) — which
+  * `explain("formatted")` cannot show (it prints `isFinalPlan=false`
+  * before execution).
+  *
+  * Both plan modes write `<dir>/<qNN><suffix>.txt`, never touch bench
+  * artifacts, and exit nonzero if any query failed. SPARK_GRAFT_ANALYZE=1
+  * (timing and final modes) refreshes the persisted ANALYZE profile before
+  * priming, so the plan is the stats-hydrated one Bench's children run
+  * (the parent's analyzeOnce writes graft_table_stats, every child
+  * hydrates it). Without this an isolated number can measure a DIFFERENT
+  * plan than the pack's. */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val names = args.filter(a => !a.forall(_.isDigit) && a != "explain")
-    val reps = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
-    val doExplain = args.contains("explain")
-    // SPARK_GRAFT_ANALYZE=1: refresh the persisted ANALYZE profile before
-    // priming, so isolated timings plan with StatsBroadcastJoins active —
-    // the environment Bench's children run in (the parent's analyzeOnce
-    // writes graft_table_stats, every child hydrates it). Without this an
-    // isolated number can measure a DIFFERENT plan than the pack's.
     val raw = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     raw.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_ANALYZE").contains("1"))
+    if (!args.headOption.contains("plan") && sys.env.get("SPARK_GRAFT_ANALYZE").contains("1"))
       graft.plans.StatsStore.analyze(raw, sfDir,
         graft.plans.StatsStore.ProfiledTables)
     val spark = GraftSession.prime(raw)
+    val failed = args.toSeq match {
+      case "plan" +: rest =>
+        val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+        val names = SparkEntry.queries.keys.toSeq.sorted
+          .filter(n => only.forall(_.exists(p => n == p || n.startsWith(p + "_"))))
+        writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r14"),
+          rest.lift(1).getOrElse("_before"), names, "plandump")(
+          _.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      case "final" +: rest =>
+        writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r15"),
+          rest.lift(1).getOrElse("_final"), rest.drop(2), "finalplan") { df =>
+          // run df's OWN plan (count() would plan and run a new one, leaving
+          // this one at isFinalPlan=false): AdaptiveSparkPlanExec then
+          // renders its final physical plan including AQEShuffleRead nodes
+          df.queryExecution.toRdd.foreach(_ => ())
+          val plan = df.queryExecution.executedPlan.toString
+          spark.sharedState.cacheManager.clearCache()
+          plan
+        }
+      case _ => time(spark, sfDir, args); 0
+    }
+    spark.stop()
+    if (failed > 0) sys.exit(1)
+  }
+
+  private def time(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    val names = args.filter(a => !a.forall(_.isDigit) && a != "explain")
+    val reps = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      if (doExplain) fn(spark, sfDir).explain("formatted")
+      if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
       val ts = (1 to reps).map { _ =>
         queries.SharedFrames.warmFor(name, spark, sfDir)
         // same untimed post-warm GC breather as Bench.runPack — pack and
@@ -43,6 +94,28 @@ object QTime {
       }
       println(f"QTIME $name min=${ts.min}%.3f runs=${ts.map(t => f"$t%.3f").mkString(",")}")
     }
-    spark.stop()
+  }
+
+  /** Render each named query's plan into `<outDir>/<qNN><suffix>.txt`;
+    * returns the number of queries that failed. */
+  private def writePlans(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: Seq[String], tag: String)(
+      render: DataFrame => String): Int = {
+    Files.createDirectories(Paths.get(outDir))
+    names.count { name =>
+      // NonFatal only: an OOM/linkage error must propagate, and any
+      // per-query failure makes the run exit nonzero — a fully failed
+      // dump must not look successful to a calling script
+      try {
+        queries.SharedFrames.warmFor(name, spark, sfDir)
+        val plan = render(SparkEntry.queries(name)(spark, sfDir))
+        Files.write(Paths.get(outDir, s"${name.takeWhile(_ != '_')}$suffix.txt"),
+          plan.getBytes("UTF-8"))
+        false
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[$tag] $name FAILED: ${e.getMessage}")
+        true
+      }
+    }
   }
 }

@@ -189,14 +189,8 @@ object Launcher {
         try go()
         finally {
           // the execution-listener bus is async: wait for the line count
-          // to stabilize before snapshotting (the Profiling.measure rule)
-          var prev = -1
-          var tries = 0
-          while (tries < 50 && buf.synchronized(buf.size) != prev) {
-            prev = buf.synchronized(buf.size)
-            Thread.sleep(100)
-            tries += 1
-          }
+          // to stabilize, then write whatever lines arrived either way
+          Profiling.awaitStable(buf.synchronized(buf.size))
           spark.listenerManager.unregister(listener)
           val lines = buf.synchronized(buf.map(_.jsonLine).toSeq)
           java.nio.file.Files.write(java.nio.file.Paths.get(path),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
 
+import graft.operators.Raster
+
 /** The plugin chain — the engine's operator surface, mirroring the
   * reference's `fun(job)` plugins (doc/source/plugins.rst:4-11) as pure
   * `PipelineContext => PipelineContext` transforms over immutable state.
@@ -234,59 +236,44 @@ object Plugins {
   }
 
   /** `aggregate` (plugins/__init__.py:124-130): block-downsample the scene
-    * raster by integer pixel blocks — groupBy on bucketed coords, partial
-    * aggregation map-side. */
-  final case class Aggregate(xFactor: Int, yFactor: Int,
-      yCol: String = "y", xCol: String = "x", valueCol: String = "value")
-      extends Plugin {
+    * raster by integer pixel blocks — [[Raster.blockMean]], one hash
+    * aggregate with map-side partials. */
+  final case class Aggregate(xFactor: Int, yFactor: Int) extends Plugin {
     require(xFactor > 0 && yFactor > 0, "block factors must be positive")
     val name = "aggregate"
     def apply(ctx: PipelineContext): PipelineContext =
       if (ctx.aborted.isDefined) ctx
       else ctx.copy(frames = ctx.frames.map { case (area, df) =>
-        val keys = df.columns.filterNot(c => c == yCol || c == xCol || c == valueCol)
-        area -> df
-          .groupBy((keys.map(col) :+ expr(s"$yCol div $yFactor").as(yCol)
-            :+ expr(s"$xCol div $xFactor").as(xCol)): _*)
-          .agg(avg(col(valueCol)).as(valueCol))
+        val keys = df.columns.filterNot(Set("y", "x", "value"))
+        area -> Raster.blockMean(df, keys.toSeq, Seq("y" -> yFactor.toLong, "x" -> xFactor.toLong))
+          .drop("__n")
       })
   }
 
   /** `resample` (plugins/__init__.py:133-201): produce one frame per target
     * area by remapping source cells into the target grid. Per-target
-    * `mode` (the reference's per-area `resampler` override, :149-159):
-    *   - `average` (default): area-average of the source cells covering
-    *     each target cell — one hash aggregate, map-side partials;
+    * `mode` (the reference's per-area `resampler` override, :149-159)
+    * picks one of the shared tall-layout kernels in [[Raster]]:
+    *   - `average` (default): [[Raster.average]], the area-average of the
+    *     source rows covering each target cell;
     *   - `nearest` (the reference's default kd-tree nearest resampler):
-    *     each target cell takes the single source cell whose center is
-    *     nearest to the target cell center — a window rank over the
-    *     target-cell partitioning (exact integer distance arithmetic, see
-    *     [[graft.queries.Trollflow.q55ResampleNearest]]), so it shuffles
-    *     once on the same key the average mode aggregates on.
-    *   - `bilinear`: mask-aware bilinear interpolation over the ≤ 4
-    *     surrounding source cells (weight-renormalized where corners are
-    *     missing — the NaN-fill behavior), four corner equi-joins, no
-    *     window (see [[graft.queries.Trollflow.q63ResampleBilinear]]).
+    *     [[Raster.nearest]], the source row whose center is nearest the
+    *     target cell center, as an argmin aggregate on the target key;
+    *   - `bilinear`: [[Raster.bilinear]] over the per-pixel cell means,
+    *     mask-aware over the ≤ 4 surrounding cells;
     *   - `ewa` (the reference's elliptical-weighted-average swath
-    *     resampler, plugins/__init__.py:134-146): scatter-splat — each
-    *     source cell contributes gaussian-weighted values to the target
-    *     cells inside its footprint, one bounded explode then one hash
-    *     aggregate (see the mode body for the weight model and the
-    *     circular-footprint divergence).
-    * The source is ALWAYS restricted to the target's source window —
-    * resampling semantics never include out-of-window cells (in the
-    * reference the kd-tree/EWA footprint does this implicitly), and a
-    * truncating `div` would otherwise fold cells just OUTSIDE the
-    * window onto edge target cells and emit phantom out-of-range rows.
-    * `reduceData` is retained as the reference's config knob
-    * (`reduce_data`, a pre-crop performance toggle there): results
-    * never depend on it here because Catalyst pushes the window
-    * predicate into the parquet scan either way. The native (None)
-    * frame passes through, as the reference's `null` area does. */
+    *     resampler, plugins/__init__.py:134-146): [[Raster.ewa]]'s
+    *     scatter-splat over the cell means.
+    * The source is ALWAYS cropped to the target's source window
+    * ([[Raster.Grid.crop]]) — resampling semantics never include
+    * out-of-window cells (in the reference the kd-tree/EWA footprint does
+    * this implicitly). The reference's `reduce_data` pre-crop toggle has
+    * nothing to switch here: Catalyst pushes the window predicate into
+    * the parquet scan either way, so [[PluginRegistry]] validates and
+    * ignores it. The native (None) frame passes through, as the
+    * reference's `null` area does. */
   final case class Resample(
       targets: Seq[ResampleTarget],
-      yCol: String = "y", xCol: String = "x", valueCol: String = "value",
-      reduceData: Boolean = true,
       /** `use_coarsest_area` / `use_finest_area` (plugins/__init__.py:
         * 171-186): for the native (None) area, re-grid every product onto
         * the coarsest ("coarsest") or finest ("finest") member product's
@@ -303,17 +290,14 @@ object Plugins {
     private def regridAxis(df: DataFrame, keys: Seq[String], cSrc: String,
         otherCoord: String, n: Long, t: Long): DataFrame =
       if (t == n) df
-      else if (n % t == 0) {
-        val f = n / t
-        df.groupBy((keys.map(col) :+ col(otherCoord)
-            :+ expr(s"$cSrc div $f").as(cSrc)): _*)
-          .agg(avg(col(valueCol)).as(valueCol))
-      } else {
+      else if (n % t == 0)
+        Raster.blockMean(df, keys :+ otherCoord, Seq(cSrc -> n / t)).drop("__n")
+      else {
         // t % n == 0 checked by the caller: replicate each source cell
         val f = t / n
         df.withColumn("__r", explode(sequence(lit(0L), lit(f - 1))))
           .select((keys.map(col) :+ col(otherCoord)
-            :+ (col(cSrc) * f + col("__r")).as(cSrc) :+ col(valueCol)): _*)
+            :+ (col(cSrc) * f + col("__r")).as(cSrc) :+ col("value")): _*)
       }
 
     /** Native re-grid of the whole scene onto the coarsest/finest member
@@ -323,7 +307,7 @@ object Plugins {
     private def resampleNative(src: DataFrame, mode: String,
         keys: Seq[String]): Either[String, DataFrame] = {
       val grids = src.groupBy(keys.map(col): _*)
-        .agg((max(col(yCol)) + 1).as("__h"), (max(col(xCol)) + 1).as("__w"))
+        .agg((max(col("y")) + 1).as("__h"), (max(col("x")) + 1).as("__w"))
         .collect()
         .map(r => keys.map(k => r.getAs[Any](k)).toSeq ->
           (r.getAs[Number]("__h").longValue, r.getAs[Number]("__w").longValue))
@@ -345,8 +329,8 @@ object Plugins {
                 .foldLeft(lit(true))((c, p) => c && col(p._1) <=> lit(p._2))
               val slice = src.filter(member)
               regridAxis(
-                regridAxis(slice, keys, yCol, xCol, h, th),
-                keys, xCol, yCol, w, tw)
+                regridAxis(slice, keys, "y", "x", h, th),
+                keys, "x", "y", w, tw)
             }
             Right(parts.reduce(_.unionByName(_)))
         }
@@ -358,251 +342,48 @@ object Plugins {
       else ctx.frames.get(None) match {
         case None => ctx.abort("resample: no scene")
         case Some(src0) =>
-          val keyCols = src0.columns
-            .filterNot(c => c == yCol || c == xCol || c == valueCol).toSeq
+          val keyCols = src0.columns.filterNot(Set("y", "x", "value")).toSeq
           val nativeResult = nativeMode match {
             case Some(mode) => resampleNative(src0, mode, keyCols)
             case None => Right(src0)
           }
           nativeResult match {
             case Left(err) => ctx.abort(err)
-            case Right(src) => resampleTargets(ctx, src)
+            case Right(src) => resampleTargets(ctx, src, keyCols)
           }
       }
 
-    private def resampleTargets(ctx: PipelineContext, src: DataFrame): PipelineContext = {
-          val resampled = targets.map { t =>
-            // unconditional: see the class docstring — the window filter
-            // is resampling SEMANTICS, not the reduceData optimization
-            val cropped =
-              src.filter(col(yCol) >= t.srcYMin && col(yCol) < t.srcYMax &&
-                         col(xCol) >= t.srcXMin && col(xCol) < t.srcXMax)
-            val keys = src.columns.filterNot(c => c == yCol || c == xCol || c == valueCol)
-            val ty = expr(s"(($yCol - ${t.srcYMin}) * ${t.height}) div ${t.srcYMax - t.srcYMin}")
-            val tx = expr(s"(($xCol - ${t.srcXMin}) * ${t.width}) div ${t.srcXMax - t.srcXMin}")
-            val out = t.mode match {
-              case "average" =>
-                cropped
-                  .groupBy((keys.map(col) :+ ty.as(yCol) :+ tx.as(xCol)): _*)
-                  .agg(avg(col(valueCol)).as(valueCol))
-              case "nearest" =>
-                // source center vs target center in a 2·height(width)-scaled
-                // integer space: dy = (2(y-y0)+1)·H - (2ty+1)·(y1-y0).
-                // __dy carries a hidden 2H factor and __dx a 2W factor, so
-                // the Euclidean comparison must cross-weight by the OTHER
-                // axis' factor (dy²·W² + dx²·H²) — a bare dy²+dx² would
-                // bias the pick toward the finer-scaled axis whenever the
-                // y and x scale factors differ (exact long arithmetic, so
-                // equal-scale grids order identically either way)
-                val mapped = cropped.withColumn("__ty", ty).withColumn("__tx", tx)
-                  .withColumn("__dy",
-                    (col(yCol).cast("long") - t.srcYMin) * 2 * t.height
-                      + t.height
-                      - (col("__ty").cast("long") * 2 + 1)
-                        * (t.srcYMax - t.srcYMin))
-                  .withColumn("__dx",
-                    (col(xCol).cast("long") - t.srcXMin) * 2 * t.width
-                      + t.width
-                      - (col("__tx").cast("long") * 2 + 1)
-                        * (t.srcXMax - t.srcXMin))
-                val w = org.apache.spark.sql.expressions.Window
-                  .partitionBy((keys.map(col) :+ col("__ty") :+ col("__tx")): _*)
-                  .orderBy((col("__dy") * col("__dy") * lit(t.width.toLong * t.width)
-                      + col("__dx") * col("__dx") * lit(t.height.toLong * t.height)).asc,
-                    col(yCol), col(xCol))
-                mapped.withColumn("__rn", row_number().over(w))
-                  .filter(col("__rn") === 1)
-                  .select((keys.map(col) :+ col("__ty").as(yCol)
-                    :+ col("__tx").as(xCol) :+ col(valueCol)): _*)
-              case "bilinear" =>
-                // mask-aware bilinear (q63's form, generalized grid):
-                // target center -> continuous source coord; corner index
-                // via floor (exact: ny/(2h) is double-exact whenever it is
-                // an integer), fraction via exact-integer numerator; blend
-                // renormalized over the <= 4 corners that exist
-                val h = t.height.toLong; val wd = t.width.toLong
-                val ry = t.srcYMax - t.srcYMin; val rx = t.srcXMax - t.srcXMin
-                val cells = cropped
-                  .groupBy((keys.map(col) :+ col(yCol) :+ col(xCol)): _*)
-                  .agg(avg(col(valueCol)).as(valueCol))
-                val ny = lit(2 * t.srcYMin * h) + (col("__ty") * 2 + 1) * ry - h
-                val nx = lit(2 * t.srcXMin * wd) + (col("__tx") * 2 + 1) * rx - wd
-                val targets = cells.select(keys.map(col): _*).distinct()
-                  .crossJoin(ctx.spark.range(h).toDF("__ty"))
-                  .crossJoin(ctx.spark.range(wd).toDF("__tx"))
-                  .withColumn("__y0", floor(ny / (2.0 * h)).cast("long"))
-                  .withColumn("__x0", floor(nx / (2.0 * wd)).cast("long"))
-                  .withColumn("__fy", (ny - col("__y0") * 2 * h) / (2.0 * h))
-                  .withColumn("__fx", (nx - col("__x0") * 2 * wd) / (2.0 * wd))
-                val joined = Seq(("00", 0, 0), ("01", 0, 1), ("10", 1, 0), ("11", 1, 1))
-                  .foldLeft(targets) { case (df, (tag, dy, dx)) =>
-                    df.join(
-                      cells.select((keys.map(c => col(c).as(s"__k${tag}_$c")) :+
-                        col(yCol).as(s"__y_$tag") :+ col(xCol).as(s"__x_$tag") :+
-                        col(valueCol).as(s"__v_$tag")): _*),
-                      keys.map(c => col(c) === col(s"__k${tag}_$c"))
-                        .foldLeft((col("__y0") + dy === col(s"__y_$tag")) &&
-                                  (col("__x0") + dx === col(s"__x_$tag")))(_ && _),
-                      "left")
-                  }
-                def wgt(tag: String): Column = tag match {
-                  case "00" => (lit(1.0) - col("__fy")) * (lit(1.0) - col("__fx"))
-                  case "01" => (lit(1.0) - col("__fy")) * col("__fx")
-                  case "10" => col("__fy") * (lit(1.0) - col("__fx"))
-                  case "11" => col("__fy") * col("__fx")
-                }
-                def pres(tag: String): Column =
-                  when(col(s"__v_$tag").isNull, lit(0.0)).otherwise(lit(1.0))
-                val tags = Seq("00", "01", "10", "11")
-                val num = tags.map(t0 => wgt(t0) * coalesce(col(s"__v_$t0"), lit(0.0))).reduce(_ + _)
-                val den = tags.map(t0 => wgt(t0) * pres(t0)).reduce(_ + _)
-                joined.withColumn("__den", den)
-                  .filter(col("__den") > 0)
-                  .select((keys.map(col) :+ col("__ty").as(yCol)
-                    :+ col("__tx").as(xCol) :+ (num / col("__den")).as(valueCol)): _*)
-              case "ewa" =>
-                // EWA (plugins/__init__.py:134-146 — the reference's
-                // elliptical-weighted-average swath resampler): SCATTER
-                // resampling. Each source cell splats a gaussian-weighted
-                // contribution onto every target cell whose center lies
-                // within `weight_distance_max` target-cell units of the
-                // cell's continuous target-space position, and each target
-                // cell blends what landed on it:
-                //   w = exp(-d² · ln(1/weight_min) / r²)   (w = weight_min
-                // exactly at d = r). `maximum_weight_mode` keeps the single
-                // heaviest contribution instead of blending; cells whose
-                // accumulated weight is below `weight_sum_min` are dropped.
-                // Divergence: the reference's footprint is the elliptical
-                // per-scan ellipse from swath geometry; the grid model has
-                // no scan metadata, so the footprint is circular.
-                //
-                // Plan: bounded explode ((2·ceil(r)+1)² candidates per
-                // source cell, 9 at the default r=1) → ONE hash aggregate
-                // on the target key. One shuffle, no window, no self-join —
-                // the scatter direction is what keeps it linear at swath
-                // scale (the gather modes would need a per-target radius
-                // search).
-                val h = t.height.toLong; val wd = t.width.toLong
-                val ry = t.srcYMax - t.srcYMin; val rx = t.srcXMax - t.srcXMin
-                val r = t.weightDistanceMax
-                require(r > 0 && t.weightMin > 0 && t.weightMin < 1,
-                  s"ewa: need weight_distance_max > 0 and weight_min in (0,1): $t")
-                val reach = math.ceil(r).toInt
-                // cross-scan (y) reach: the swath ellipse can extend to
-                // min(2r, weightDeltaMax); circular footprint stays at r
-                val reachY = t.rowsPerScan match {
-                  case Some(_) => math.ceil(math.min(2 * r, t.weightDeltaMax)).toInt
-                  case None => reach
-                }
-                val negLnOverR2 = -math.log(1.0 / t.weightMin) / (r * r)
-                val cells = cropped
-                  .groupBy((keys.map(col) :+ col(yCol) :+ col(xCol)): _*)
-                  .agg(avg(col(valueCol)).as(valueCol))
-                // cross-scan semi-axis scale per source row (swath mode):
-                // rows_per_scan splits the swath into scans; within a scan
-                // the footprint widens linearly from the center row to 2×
-                // at the scan-edge rows (the bow-tie), capped so that
-                // r·s <= weightDeltaMax. m = |2·rowInScan - (rps-1)| is an
-                // exact integer; s = 1 + m/(rps-1)
-                val sCol = t.rowsPerScan match {
-                  case Some(rps) =>
-                    require(rps >= 2, s"ewa: rows_per_scan must be >= 2: $rps")
-                    val row = ((col(yCol) - t.srcYMin) % rps + rps) % rps
-                    val m = abs(row * 2 - (rps - 1))
-                    least(lit(1.0) + m.cast("double") / (rps - 1.0),
-                      lit(t.weightDeltaMax / r))
-                  case None => lit(1.0)
-                }
-                // continuous target-space position of the source center:
-                // py = __ny / (2·ry) with __ny = ((y-y0)·2+1)·H — integer
-                // numerators so the base candidate floor(py - 0.5) is
-                // exact integer division (positive-biased: both engines
-                // agree on non-negative operands)
-                val bias = 1L << 20
-                val cand = cells
-                  .withColumn("__s", sCol)
-                  .withColumn("__ny", (col(yCol) - t.srcYMin) * 2 * h + h)
-                  .withColumn("__nx", (col(xCol) - t.srcXMin) * 2 * wd + wd)
-                  .withColumn("__tyb",
-                    expr(s"(__ny - $ry + ${2 * ry * bias}) div ${2 * ry} - $bias"))
-                  .withColumn("__txb",
-                    expr(s"(__nx - $rx + ${2 * rx * bias}) div ${2 * rx} - $bias"))
-                  .withColumn("__ky", explode(sequence(lit(-reachY), lit(reachY))))
-                  .withColumn("__kx", explode(sequence(lit(-reach), lit(reach))))
-                  .withColumn("__ty", col("__tyb") + col("__ky"))
-                  .withColumn("__tx", col("__txb") + col("__kx"))
-                  .withColumn("__dy", col("__ny") / (2.0 * ry) - (col("__ty") + 0.5))
-                  .withColumn("__dx", col("__nx") / (2.0 * rx) - (col("__tx") + 0.5))
-                val inGrid = col("__ty") >= 0 && col("__ty") < h &&
-                  col("__tx") >= 0 && col("__tx") < wd
-                val splat = t.rowsPerScan match {
-                  case None => // circular footprint: w = wmin at d = r
-                    cand
-                      .withColumn("__d2",
-                        col("__dy") * col("__dy") + col("__dx") * col("__dx"))
-                      .filter(col("__d2") <= r * r && inGrid)
-                      .withColumn("__w", exp(col("__d2") * negLnOverR2))
-                  case Some(_) => // swath ellipse: w = wmin on the boundary
-                    cand
-                      .withColumn("__e2",
-                        (col("__dx") * col("__dx") +
-                          col("__dy") * col("__dy") / (col("__s") * col("__s")))
-                          / (r * r))
-                      .filter(col("__e2") <= 1.0 && inGrid)
-                      .withColumn("__w",
-                        exp(col("__e2") * -math.log(1.0 / t.weightMin)))
-                }
-                val grouped = splat.groupBy(
-                  (keys.map(col) :+ col("__ty") :+ col("__tx")): _*)
-                val blended =
-                  if (t.maximumWeightMode)
-                    // deterministic ties: heaviest weight, then (y, x)
-                    grouped.agg(
-                      max_by(col(valueCol),
-                        struct(col("__w"), col(yCol), col(xCol))).as(valueCol),
-                      sum(col("__w")).as("__wsum"))
-                  else
-                    grouped.agg(
-                      (sum(col("__w") * col(valueCol)) / sum(col("__w")))
-                        .as(valueCol),
-                      sum(col("__w")).as("__wsum"))
-                blended.filter(col("__wsum") >= t.weightSumMin)
-                  .select((keys.map(col) :+ col("__ty").as(yCol)
-                    :+ col("__tx").as(xCol) :+ col(valueCol)): _*)
-              case other =>
-                throw new IllegalArgumentException(s"unknown resample mode: $other")
-            }
-            Option(t.area) -> out
-          }
-          // native mode also republishes the re-gridded None frame (the
-          // reference stores it in resampled_scenes, plugins/__init__.py:175)
-          val nativeFrame: Map[Option[String], DataFrame] =
-            if (nativeMode.isDefined) Map((None: Option[String]) -> src) else Map.empty
-          ctx.copy(frames = ctx.frames ++ resampled ++ nativeFrame)
+    private def resampleTargets(ctx: PipelineContext, src: DataFrame,
+        keys: Seq[String]): PipelineContext = {
+      val resampled = targets.map { t =>
+        val cropped = t.grid.crop(src)
+        val out = t.mode match {
+          case "average" => Raster.average(cropped, keys, t.grid)
+          case "nearest" => Raster.nearest(cropped, keys, t.grid)
+          case "bilinear" =>
+            val cells = Raster.cellMeans(cropped, keys)
+            Raster.bilinear(cells, keys,
+              Raster.bilinearTargets(cells.select(keys.map(col): _*), t.grid))
+          case "ewa" => Raster.ewa(Raster.cellMeans(cropped, keys), keys, t.grid, t.ewa)
+          case other =>
+            throw new IllegalArgumentException(s"unknown resample mode: $other")
+        }
+        Option(t.area) -> out.drop("__n")
+      }
+      // native mode also republishes the re-gridded None frame (the
+      // reference stores it in resampled_scenes, plugins/__init__.py:175)
+      val nativeFrame: Map[Option[String], DataFrame] =
+        if (nativeMode.isDefined) Map((None: Option[String]) -> src) else Map.empty
+      ctx.copy(frames = ctx.frames ++ resampled ++ nativeFrame)
     }
   }
   final case class ResampleTarget(area: String, width: Int, height: Int,
       srcYMin: Long, srcYMax: Long, srcXMin: Long, srcXMax: Long,
       mode: String = "average",
-      /** ewa knobs (plugins/__init__.py:134-146 defaults): footprint
-        * radius in target-cell units, the weight at that radius, the
-        * minimum accumulated weight for a target cell to be emitted
-        * (-1 = emit all), and maximum_weight_mode (keep the heaviest
-        * contribution instead of blending). */
-      weightDistanceMax: Double = 1.0,
-      weightMin: Double = 0.01,
-      weightSumMin: Double = -1.0,
-      maximumWeightMode: Boolean = false,
-      /** per-scan swath geometry (RESAMPLER_DEFAULT_OPTIONS["ewa"]
-        * `rows_per_scan` / `weight_delta_max`, plugins/__init__.py:137,
-        * 144): when set, the footprint is the swath ELLIPSE instead of a
-        * circle — the along-scan (x) semi-axis stays
-        * `weightDistanceMax`, while the cross-scan (y) semi-axis grows
-        * linearly from the scan center to 2× at the scan edge (the
-        * bow-tie widening of off-nadir scan rows), capped at
-        * `weightDeltaMax` target-cell units. */
-      rowsPerScan: Option[Int] = None,
-      weightDeltaMax: Double = 10.0)
+      /** the `ewa` mode's settings (plugins/__init__.py:134-146). */
+      ewa: Raster.Ewa = Raster.Ewa()) {
+    def grid: Raster.Grid = Raster.Grid(srcYMin, srcYMax, srcXMin, srcXMax, height, width)
+  }
 
   /** `check_valid_data_fraction` (plugins/__init__.py:955-1079): persist
     * the scene once, compute per-product valid fractions in ONE aggregate

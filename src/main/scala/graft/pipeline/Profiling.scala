@@ -63,24 +63,33 @@ object Profiling {
     spark.sparkContext.addSparkListener(counter)
     try {
       val result = body
-      var prev = counter.snapshot
-      var stable = false
-      var tries = 0
-      while (!stable && tries < 50) {
-        Thread.sleep(100)
-        val cur = counter.snapshot
-        stable = cur == prev
-        prev = cur
-        tries += 1
-      }
+      val (last, stable) = awaitStable(counter.snapshot)
       // an unstabilized snapshot is a measurement failure, not a smaller
       // measurement — surfacing it beats returning an undercount that
       // reads as a product regression
       if (!stable)
         throw new IllegalStateException(
-          s"listener bus did not stabilize within 5s; last snapshot: $prev")
-      (result, prev)
+          s"listener bus did not stabilize within 5s; last snapshot: $last")
+      (result, last)
     } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  /** Drain wait for state an async listener bus feeds: poll `read` every
+    * 100 ms until two consecutive reads are equal, at most 50 times.
+    * Returns the last read and whether it settled; what an unsettled read
+    * means is the caller's policy. */
+  private[pipeline] def awaitStable[S](read: => S): (S, Boolean) = {
+    var prev = read
+    var stable = false
+    var tries = 0
+    while (!stable && tries < 50) {
+      Thread.sleep(100)
+      val cur = read
+      stable = cur == prev
+      prev = cur
+      tries += 1
+    }
+    (prev, stable)
   }
 
   /** One completed (or failed) Spark ACTION, structured: the unit of the

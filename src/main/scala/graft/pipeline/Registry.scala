@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.operators.Raster
 import graft.pipeline.Plugins._
 
 /** Plugin registry — resolves a [[LoadedConfig]]'s `workers:` chain into
@@ -133,12 +134,13 @@ object PluginRegistry {
               Option(t.get(f)).map(_.asLong).getOrElse(
                 throw ConfigException(s"resample target missing '$f': $t"))
             // ewa knobs: per-target JSON field, falling back to the
-            // product-list setting of the same name, then the reference's
+            // product-list setting of the same name, then Raster.Ewa's
             // RESAMPLER_DEFAULT_OPTIONS["ewa"] defaults
             // (plugins/__init__.py:134-146)
-            def ewaNum(f: String, dflt: Double): Double =
+            val dflt = Raster.Ewa()
+            def ewaNum(f: String, d: Double): Double =
               Option(t.get(f)).map(_.asDouble)
-                .orElse(str(f).map(num(f, _))).getOrElse(dflt)
+                .orElse(str(f).map(num(f, _))).getOrElse(d)
             ResampleTarget(
               area = Option(t.get("area")).map(_.asText).getOrElse(
                 throw ConfigException(s"resample target missing 'area': $t")),
@@ -147,16 +149,16 @@ object PluginRegistry {
               srcXMin = i("src_x_min"), srcXMax = i("src_x_max"),
               mode = Option(t.get("mode")).map(_.asText)
                 .orElse(str("resampler")).getOrElse("average"),
-              weightDistanceMax = ewaNum("weight_distance_max", 1.0),
-              weightMin = ewaNum("weight_min", 0.01),
-              weightSumMin = ewaNum("weight_sum_min", -1.0),
-              maximumWeightMode = Option(t.get("maximum_weight_mode"))
-                .map(_.asBoolean).getOrElse(bool("maximum_weight_mode")),
-              // swath geometry (RESAMPLER_DEFAULT_OPTIONS["ewa"]): absent
-              // = circular footprint, the defaults' rows_per_scan: None
-              rowsPerScan = Option(t.get("rows_per_scan")).map(_.asInt)
-                .orElse(str("rows_per_scan").map(int("rows_per_scan", _))),
-              weightDeltaMax = ewaNum("weight_delta_max", 10.0))
+              ewa = Raster.Ewa(
+                distanceMax = ewaNum("weight_distance_max", dflt.distanceMax),
+                weightMin = ewaNum("weight_min", dflt.weightMin),
+                weightSumMin = ewaNum("weight_sum_min", dflt.weightSumMin),
+                maximumWeightMode = Option(t.get("maximum_weight_mode"))
+                  .map(_.asBoolean).getOrElse(bool("maximum_weight_mode")),
+                // swath geometry: absent = circular footprint
+                rowsPerScan = Option(t.get("rows_per_scan")).map(_.asInt)
+                  .orElse(str("rows_per_scan").map(int("rows_per_scan", _))),
+                weightDeltaMax = ewaNum("weight_delta_max", dflt.weightDeltaMax)))
           }.toSeq
         }.getOrElse {
           if (nativeMode.isDefined) Seq.empty[ResampleTarget]
@@ -166,10 +168,9 @@ object PluginRegistry {
               "(or use_coarsest_area/use_finest_area for native re-gridding), " +
               "or construct Resample in code")
         }
-        Resample(targets,
-          reduceData = str("reduce_data")
-            .forall(conv("reduce_data", _, "a boolean")(_.toBoolean)),
-          nativeMode = nativeMode)
+        // reduce_data is validated and ignored: the crop is resample semantics
+        bool("reduce_data")
+        Resample(targets, nativeMode = nativeMode)
 
       case "check_valid_data_fraction" =>
         // the reference's setting is a PERCENT (doc/source/plugins.rst:

@@ -54,8 +54,8 @@ object StatsStore {
   val TableName = "graft_table_stats"
 
   /** The ten fixture tables every ANALYZE entry point profiles. ONE
-    * definition shared by Bench.analyzeOnce, QTime and FinalPlan: the
-    * isolated-measurement tools exist to reproduce the bench children's
+    * definition shared by Bench.analyzeOnce and QTime: the isolated-
+    * measurement modes exist to reproduce the bench children's
     * stats-hydrated planning, and a drifted copy of this list would make
     * them silently plan against a different profile — the exact mismatch
     * SPARK_GRAFT_ANALYZE=1 exists to prevent (ADVICE r14). */

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Raster
+
 /** Tile-row raster encoding — SURVEY §1.2 mapping (b), the declared
   * 100 TB mirror of the reference's chunked dask arrays
   * (plugins/__init__.py:34-35: a Scene's rasters are xarray DataArrays
@@ -162,34 +164,16 @@ object TiledRaster {
     * grain). The `reduce_data` crop (y,x < 128) prunes at TILE grain —
     * 128 = 4·TileSize, so `tile_y < 4 AND tile_x < 4` is the exact crop
     * and the filter eliminates whole tile ROWS before any work. Cells
-    * then posexplode WITHIN the tile row (narrow — no exchange) into
-    * their covering target cells, and `min(struct(d², y, x, cell))`
-    * partial-aggregates map-side: each partition combines its pixels
-    * down to one candidate per target cell BEFORE the exchange, so the
-    * shuffle carries O(target cells) rows per partition — never pixel
-    * rows (pinned by TiledRasterSpec). Ties break on (y, x), matching
-    * q55's window order, via the struct's lexicographic min. */
-  def q165TiledResampleNearest(spark: SparkSession, dir: String): DataFrame = {
-    val n = TileSize
-    tiles(spark, dir)
-      .filter(col("tile_y") < 128 / n && col("tile_x") < 128 / n)
-      .select(col("area"), col("product"),
-        col("tile_y").as("tyt"), col("tile_x").as("txt"),
-        posexplode(col("cells")).as(Seq("idx", "cell")))
-      .filter(col("cell").isNotNull)
-      .withColumn("y", col("tyt") * n + expr(s"idx div $n"))
-      .withColumn("x", col("txt") * n + expr(s"idx % $n"))
-      .withColumn("ty", expr("(y * 100) div 256"))
-      .withColumn("tx", expr("(x * 100) div 256"))
-      .withColumn("d2",
-        expr("(y * 100 + 50 - (ty * 256 + 128)) * (y * 100 + 50 - (ty * 256 + 128))" +
-          " + (x * 100 + 50 - (tx * 256 + 128)) * (x * 100 + 50 - (tx * 256 + 128))"))
-      .groupBy(col("area"), col("product"), col("ty"), col("tx"))
-      .agg(min(struct(col("d2"), col("y"), col("x"), col("cell"))).as("best"))
-      .select(col("area"), col("product"), col("ty"), col("tx"),
-        round(lit(1e-9) + col("best.cell"), 4).as("nearest"))
-      .orderBy(col("area"), col("product"), col("ty"), col("tx"))
-  }
+    * then posexplode WITHIN the tile row (narrow — no exchange) and
+    * [[Raster.nearest]]'s `min(struct(d², y, x, value))` partial-
+    * aggregates map-side: each partition combines its pixels down to one
+    * candidate per target cell BEFORE the exchange, so the shuffle
+    * carries O(target cells) rows per partition — never pixel rows
+    * (pinned by TiledRasterSpec). Ties break on (y, x), matching the
+    * oracle's window order, via the struct's lexicographic min. */
+  def q165TiledResampleNearest(spark: SparkSession, dir: String): DataFrame =
+    Trollflow.shaped(Raster.nearest(croppedPixels(spark, dir), pk, Trollflow.areaGrid),
+      pk, "nearest", None)
 
   val q165Sql: String =
     s"""WITH ${Trollflow.rasterSql},
@@ -447,46 +431,18 @@ object TiledRaster {
     *
     * SCATTER is the tile-friendly direction (the reference's own EWA
     * works this way over dask chunks): cells posexplode WITHIN the tile
-    * row, fan out by the plan-time constant 9 (3×3 candidate window),
-    * and the single target-grain hash aggregate partial-combines
-    * map-side — the same exchange shape as q165, with sums instead of a
-    * min. No halo needed: scatter means a contribution is computed
+    * row, then [[Raster.ewa]] fans them out by the plan-time constant 9
+    * (3×3 candidate window), and its target-grain hash aggregate
+    * partial-combines map-side — the same exchange shape as q165, with
+    * sums instead of a min. No halo needed: scatter means a contribution is computed
     * where the SOURCE lives and merged at the target key, so cross-tile
     * support costs nothing extra (compare q167, where the GATHER form
     * needs ghost cells). Together the three tiled resamplers cover the
     * three scale patterns: in-tile kernel (q164), scatter + partial agg
     * (q165/q168), gather + halo (q167). */
-  def q168TiledResampleEwa(spark: SparkSession, dir: String): DataFrame = {
-    val lnInv = 4.605170185988092 // ln(1/0.01), shared literal (q123's)
-    val n = TileSize
-    tiles(spark, dir)
-      .filter(col("tile_y") < 128 / n && col("tile_x") < 128 / n)
-      .select(col("area"), col("product"),
-        col("tile_y").as("tyt"), col("tile_x").as("txt"),
-        posexplode(col("cells")).as(Seq("idx", "cell")))
-      .filter(col("cell").isNotNull)
-      .withColumn("y", col("tyt") * n + expr(s"idx div $n"))
-      .withColumn("x", col("txt") * n + expr(s"idx % $n"))
-      .withColumn("ny", col("y") * 200 + 100) // ((2y+1)·100)
-      .withColumn("nx", col("x") * 200 + 100)
-      .withColumn("tyb", expr(s"(ny - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("txb", expr(s"(nx - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("ky", explode(sequence(lit(-1), lit(1))))
-      .withColumn("kx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("ty", col("tyb") + col("ky"))
-      .withColumn("tx", col("txb") + col("kx"))
-      .withColumn("dy", col("ny") / 256.0 - (col("ty") + lit(0.5)))
-      .withColumn("dx", col("nx") / 256.0 - (col("tx") + lit(0.5)))
-      .withColumn("d2", col("dy") * col("dy") + col("dx") * col("dx"))
-      .filter(col("d2") <= 1.0 &&
-        col("ty") >= 0 && col("ty") < 100 && col("tx") >= 0 && col("tx") < 100)
-      .withColumn("w", exp(col("d2") * lit(-lnInv)))
-      .groupBy(col("area"), col("product"), col("ty"), col("tx"))
-      .agg(round(lit(1e-9) + sum(col("w") * col("cell")) / sum(col("w")), 4)
-        .as("ewa"),
-        count(lit(1)).as("n_contrib"))
-      .orderBy(col("area"), col("product"), col("ty"), col("tx"))
-  }
+  def q168TiledResampleEwa(spark: SparkSession, dir: String): DataFrame =
+    Trollflow.shaped(Raster.ewa(croppedPixels(spark, dir), pk, Trollflow.cropGrid),
+      pk, "ewa", Some("n_contrib"))
 
   val q168Sql: String =
     s"""WITH ${Trollflow.rasterSql},
@@ -517,115 +473,56 @@ object TiledRaster {
        |GROUP BY 1, 2, 3, 4
        |ORDER BY area, product, ty, tx""".stripMargin
 
-  /** Tall twins at the SAME per-product grain — the spec's tall ≡ tiled
-    * equivalence pins the Spark implementations against each other
-    * (the DuckDB oracle independently re-derives the same results from
-    * the tall CTE). Pixel-grain shuffles throughout: the encoding the
-    * tile table exists to replace at scale. */
-  private[graft] def tallBlockAggregate(spark: SparkSession, dir: String): DataFrame =
-    Trollflow.raster(spark, dir)
-      .groupBy(col("area"), col("product"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .groupBy(col("area"), col("product"),
-        expr("y div 8").as("by"), expr("x div 8").as("bx"))
-      .agg(round(lit(1e-9) + avg(col("cell")), 4).as("block_mean"),
-        count(lit(1)).as("n_cells"))
-      .orderBy(col("area"), col("product"), col("by"), col("bx"))
+  /** The `reduce_data` crop's non-fill pixels as a tall (area, product,
+    * y, x, value) frame: the crop (y, x < 128 = 4·TileSize) prunes whole
+    * tile rows on the tile KEYS, then cells posexplode WITHIN each tile
+    * row — narrow, no exchange. */
+  private def croppedPixels(spark: SparkSession, dir: String): DataFrame = {
+    val n = TileSize
+    tiles(spark, dir)
+      .filter(col("tile_y") < 128 / n && col("tile_x") < 128 / n)
+      .select(col("area"), col("product"), col("tile_y"), col("tile_x"),
+        posexplode(col("cells")).as(Seq("idx", "value")))
+      .filter(col("value").isNotNull)
+      .select(col("area"), col("product"),
+        (col("tile_y") * n + expr(s"idx div $n")).as("y"),
+        (col("tile_x") * n + expr(s"idx % $n")).as("x"), col("value"))
+  }
 
+  private val pk = Seq("area", "product")
+
+  /** Tall twins at the SAME per-product grain: the shared [[Raster]]
+    * kernels over the tall derivation's cell means, so the spec's
+    * tall ≡ tiled pins hold the tile-layout kernels (q164, q167) to the
+    * one definition the plugins and the Trollflow queries use (the DuckDB
+    * oracle independently re-derives the same results from the tall
+    * CTE). Pixel-grain shuffles throughout: the encoding the tile table
+    * exists to replace at scale. */
+  private[graft] def tallBlockAggregate(spark: SparkSession, dir: String): DataFrame =
+    Trollflow.shaped(Raster.blockMean(Raster.cellMeans(Trollflow.raster(spark, dir), pk),
+      pk, Seq("y" -> 8L, "x" -> 8L)), pk, "block_mean", Some("n_cells"), "by", "bx")
+
+  /** Bilinear at any target-mapping offset: y0 = (128·t + off) div 100,
+    * fy = ((128·t + off) % 100) / 100 — the mapping q167's tile kernel
+    * uses, which no integer [[Raster.Grid]] states for off ≠ 14. */
   private[graft] def tallResampleBilinear(spark: SparkSession, dir: String,
       off: Int = 14): DataFrame = {
-    val cells = Trollflow.raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128)
-      .groupBy(col("area"), col("product"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .persist()
-    val targets = cells.select(col("area"), col("product")).distinct()
-      .crossJoin(spark.range(100).toDF("ty"))
-      .crossJoin(spark.range(100).toDF("tx"))
-      .withColumn("y0", expr(s"(128 * ty + $off) div 100"))
-      .withColumn("x0", expr(s"(128 * tx + $off) div 100"))
-      .withColumn("fy", expr(s"((128 * ty + $off) % 100) / 100.0"))
-      .withColumn("fx", expr(s"((128 * tx + $off) % 100) / 100.0"))
-    val joined = Seq(("00", 0, 0), ("01", 0, 1), ("10", 1, 0), ("11", 1, 1))
-      .foldLeft(targets) { case (df, (tag, dy, dx)) =>
-        df.join(
-          cells.select(col("area").as(s"a_$tag"), col("product").as(s"p_$tag"),
-            col("y").as(s"y_$tag"), col("x").as(s"x_$tag"),
-            col("cell").as(s"v_$tag")),
-          col("area") === col(s"a_$tag") && col("product") === col(s"p_$tag") &&
-            col("y0") + dy === col(s"y_$tag") &&
-            col("x0") + dx === col(s"x_$tag"),
-          "left")
-      }
-    def w(tag: String): org.apache.spark.sql.Column = tag match {
-      case "00" => (lit(1.0) - col("fy")) * (lit(1.0) - col("fx"))
-      case "01" => (lit(1.0) - col("fy")) * col("fx")
-      case "10" => col("fy") * (lit(1.0) - col("fx"))
-      case "11" => col("fy") * col("fx")
-    }
-    def present(tag: String): org.apache.spark.sql.Column =
-      when(col(s"v_$tag").isNull, lit(0.0)).otherwise(lit(1.0))
-    val num = Seq("00", "01", "10", "11")
-      .map(t => w(t) * coalesce(col(s"v_$t"), lit(0.0))).reduce(_ + _)
-    val den = Seq("00", "01", "10", "11")
-      .map(t => w(t) * present(t)).reduce(_ + _)
-    val nNb = Seq("00", "01", "10", "11")
-      .map(t => present(t)).reduce(_ + _).cast("int")
-    joined
-      .withColumn("den", den)
-      .filter(col("den") > 0)
-      .select(col("area"), col("product"), col("ty"), col("tx"),
-        round(lit(1e-9) + num / col("den"), 4).as("bilinear"),
-        nNb.as("n_nb"))
-      .orderBy(col("area"), col("product"), col("ty"), col("tx"))
+    val cells = Trollflow.croppedCells(spark, dir, pk)
+    val targets = Raster.targetCells(cells.select(pk.map(col): _*), 100, 100)
+      .withColumn("__y0", expr(s"(128 * __ty + $off) div 100"))
+      .withColumn("__x0", expr(s"(128 * __tx + $off) div 100"))
+      .withColumn("__fy", expr(s"((128 * __ty + $off) % 100) / 100.0"))
+      .withColumn("__fx", expr(s"((128 * __tx + $off) % 100) / 100.0"))
+    Trollflow.shaped(Raster.bilinear(cells, pk, targets), pk, "bilinear", Some("n_nb"))
   }
 
-  private[graft] def tallResampleEwa(spark: SparkSession, dir: String): DataFrame = {
-    val lnInv = 4.605170185988092
-    Trollflow.raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128)
-      .groupBy(col("area"), col("product"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .withColumn("ny", col("y") * 200 + 100)
-      .withColumn("nx", col("x") * 200 + 100)
-      .withColumn("tyb", expr(s"(ny - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("txb", expr(s"(nx - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("ky", explode(sequence(lit(-1), lit(1))))
-      .withColumn("kx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("ty", col("tyb") + col("ky"))
-      .withColumn("tx", col("txb") + col("kx"))
-      .withColumn("dy", col("ny") / 256.0 - (col("ty") + lit(0.5)))
-      .withColumn("dx", col("nx") / 256.0 - (col("tx") + lit(0.5)))
-      .withColumn("d2", col("dy") * col("dy") + col("dx") * col("dx"))
-      .filter(col("d2") <= 1.0 &&
-        col("ty") >= 0 && col("ty") < 100 && col("tx") >= 0 && col("tx") < 100)
-      .withColumn("w", exp(col("d2") * lit(-lnInv)))
-      .groupBy(col("area"), col("product"), col("ty"), col("tx"))
-      .agg(round(lit(1e-9) + sum(col("w") * col("cell")) / sum(col("w")), 4)
-        .as("ewa"),
-        count(lit(1)).as("n_contrib"))
-      .orderBy(col("area"), col("product"), col("ty"), col("tx"))
-  }
+  private[graft] def tallResampleEwa(spark: SparkSession, dir: String): DataFrame =
+    Trollflow.shaped(Raster.ewa(Trollflow.croppedCells(spark, dir, pk), pk, Trollflow.cropGrid),
+      pk, "ewa", Some("n_contrib"))
 
-  private[graft] def tallResampleNearest(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Trollflow.raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128)
-      .groupBy(col("area"), col("product"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .withColumn("ty", expr("(y * 100) div 256"))
-      .withColumn("tx", expr("(x * 100) div 256"))
-      .withColumn("dy", col("y") * 100 + 50 - (col("ty") * 256 + 128))
-      .withColumn("dx", col("x") * 100 + 50 - (col("tx") * 256 + 128))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("area"), col("product"), col("ty"), col("tx"))
-      .orderBy((col("dy") * col("dy") + col("dx") * col("dx")).asc,
-        col("y"), col("x"))
-    cells.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("area"), col("product"), col("ty"), col("tx"),
-        round(lit(1e-9) + col("cell"), 4).as("nearest"))
-      .orderBy(col("area"), col("product"), col("ty"), col("tx"))
-  }
+  private[graft] def tallResampleNearest(spark: SparkSession, dir: String): DataFrame =
+    Trollflow.shaped(Raster.nearest(Trollflow.croppedCells(spark, dir, pk), pk, Trollflow.areaGrid),
+      pk, "nearest", None)
 
   val defs: Map[String, Q] = Map(
     "q164_tiled_block_aggregate" -> (q164TiledBlockAggregate _),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Raster
 import graft.sources.Tables
 
 /** Reference-parity pack: the trollflow2 operator semantics re-expressed as
@@ -37,17 +38,38 @@ object Trollflow {
       |    CAST(l_quantity AS DOUBLE) AS value, CAST(l_discount AS DOUBLE) AS disc
       |  FROM lineitem)""".stripMargin
 
+  private val areaKey = Seq("area")
+
+  /** The resample queries' source: per-pixel cell means over `keys` of
+    * the raster's `reduce_data` crop (y, x < 128) — the crop filter
+    * pushes into the parquet scan, before the shuffle. */
+  private[graft] def croppedCells(spark: SparkSession, dir: String,
+      keys: Seq[String]): DataFrame =
+    Raster.cellMeans(raster(spark, dir).filter(col("y") < 128 && col("x") < 128), keys)
+
+  /** The whole 256×256 source grid onto a 100×100 target area (q40/q55
+    * resample only its cropped quarter). */
+  private[graft] val areaGrid = Raster.Grid(0, 256, 0, 256, 100, 100)
+
+  /** The cropped 128×128 window onto a 100×100 target area. */
+  private[graft] val cropGrid = Raster.Grid(0, 128, 0, 128, 100, 100)
+
+  /** A [[Raster]] kernel result in the pack's output shape: target
+    * coordinates renamed, the value under the pack-wide float guard
+    * round(1e-9 + ·, 4), the support count renamed (or dropped), rows
+    * sorted. */
+  private[graft] def shaped(df: DataFrame, keys: Seq[String], value: String,
+      n: Option[String], y: String = "ty", x: String = "tx"): DataFrame =
+    df.select(keys.map(col) ++ Seq(col("y").as(y), col("x").as(x),
+        round(lit(1e-9) + col("value"), 4).as(value)) ++ n.map(col("__n").as(_)): _*)
+      .orderBy((keys :+ y :+ x).map(col): _*)
+
   /** T1 `aggregate` (plugins/__init__.py:124-130): block-downsample the
     * raster by {x: 8, y: 8} pixel blocks — cell mean then block mean, a
     * two-level hash aggregate with map-side partials at both levels. */
   def q39BlockAggregate(spark: SparkSession, dir: String): DataFrame =
-    raster(spark, dir)
-      .groupBy(col("area"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .groupBy(col("area"), expr("y div 8").as("by"), expr("x div 8").as("bx"))
-      .agg(round(lit(1e-9) + avg(col("cell")), 4).as("block_mean"),
-        count(lit(1)).as("n_cells"))
-      .orderBy(col("area"), col("by"), col("bx"))
+    shaped(Raster.blockMean(Raster.cellMeans(raster(spark, dir), areaKey), areaKey,
+      Seq("y" -> 8L, "x" -> 8L)), areaKey, "block_mean", Some("n_cells"), "by", "bx")
 
   val q39Sql: String =
     s"""WITH $rasterSql,
@@ -66,15 +88,8 @@ object Trollflow {
     * shuffle (the filter pushes into the parquet scan), then cells are
     * area-averaged into target bins. */
   def q40Resample(spark: SparkSession, dir: String): DataFrame =
-    raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128) // reduce_data crop
-      .groupBy(col("area"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .groupBy(col("area"),
-        expr("(y * 100) div 256").as("ty"), expr("(x * 100) div 256").as("tx"))
-      .agg(round(lit(1e-9) + avg(col("cell")), 4).as("resampled"),
-        count(lit(1)).as("n_src"))
-      .orderBy(col("area"), col("ty"), col("tx"))
+    shaped(Raster.average(croppedCells(spark, dir, areaKey), areaKey, areaGrid),
+      areaKey, "resampled", Some("n_src"))
 
   val q40Sql: String =
     s"""WITH $rasterSql,
@@ -92,30 +107,16 @@ object Trollflow {
     * the reference's default `radius_of_influence` nearest resampler):
     * every source cell maps into its covering target cell; the target
     * takes the value of the source cell whose center is nearest to the
-    * target cell's center. Distances are compared in a ×100-scaled
-    * integer coordinate space (source center `100·y+50`, target center
-    * `256·ty+128`), so the rank is exact integer arithmetic in both
-    * engines; ties break on (y, x). The window partitions by target cell
-    * — hash-partitioned, no shuffle beyond the one the groupBy already
-    * needs. */
-  def q55ResampleNearest(spark: SparkSession, dir: String): DataFrame = {
-    val cells = raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128) // reduce_data crop
-      .groupBy(col("area"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .withColumn("ty", expr("(y * 100) div 256"))
-      .withColumn("tx", expr("(x * 100) div 256"))
-      .withColumn("dy", col("y") * 100 + 50 - (col("ty") * 256 + 128))
-      .withColumn("dx", col("x") * 100 + 50 - (col("tx") * 256 + 128))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("area"), col("ty"), col("tx"))
-      .orderBy((col("dy") * col("dy") + col("dx") * col("dx")).asc, col("y"), col("x"))
-    cells.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("area"), col("ty"), col("tx"),
-        round(lit(1e-9) + col("cell"), 4).as("nearest"))
-      .orderBy(col("area"), col("ty"), col("tx"))
-  }
+    * target cell's center ([[Raster.nearest]]). The oracle compares
+    * distances in a ×100-scaled integer space (source center `100·y+50`,
+    * target center `256·ty+128`); the kernel's 2H/2W-scaled distances
+    * order candidates identically when H = W, so both engines pick by
+    * exact integer arithmetic; ties break on (y, x). The argmin combines
+    * map-side on the target key — no shuffle beyond the one the cell
+    * means already need. */
+  def q55ResampleNearest(spark: SparkSession, dir: String): DataFrame =
+    shaped(Raster.nearest(croppedCells(spark, dir, areaKey), areaKey, areaGrid),
+      areaKey, "nearest", None)
 
   val q55Sql: String =
     s"""WITH $rasterSql,
@@ -146,59 +147,21 @@ object Trollflow {
     * maps to a continuous source coordinate; its value is the
     * weight-renormalized blend of the ≤ 4 surrounding source cells that
     * exist (mask-aware bilinear, the NaN-fill behavior of the reference's
-    * resamplers). Corner indices and fractions are exact rational
-    * arithmetic — source index = (128·t + 14)/100, so `div`/`%` give the
-    * integer corner and the fraction is a two-digit decimal — and the
-    * blend is a fixed-order expression over four LEFT-joined corners, so
-    * both engines compute bit-identical doubles before rounding.
+    * resamplers; [[Raster.bilinear]]). Corner indices and fractions are
+    * exact rational arithmetic — source index = (128·t + 14)/100, which
+    * the kernel's (ny − 2h·y0)/(2h) states as the same rational, so both
+    * engines round the fraction to the same double — and the blend is a
+    * fixed-order expression over four LEFT-joined corners, so both
+    * engines compute bit-identical doubles before rounding.
     *
     * Scale: targets × 4 corner lookups = four shuffle equi-joins on the
     * (area, y, x) cell key (broadcast when the grid side is small); no
     * window, no explode, output one row per covered target cell. */
   def q63ResampleBilinear(spark: SparkSession, dir: String): DataFrame = {
-    val cells = raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128) // reduce_data crop
-      .groupBy(col("area"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-      .persist() // four corner joins read this
-    val targets = cells.select(col("area")).distinct()
-      .crossJoin(spark.range(100).toDF("ty"))
-      .crossJoin(spark.range(100).toDF("tx"))
-      .withColumn("y0", expr("(128 * ty + 14) div 100"))
-      .withColumn("x0", expr("(128 * tx + 14) div 100"))
-      .withColumn("fy", expr("((128 * ty + 14) % 100) / 100.0"))
-      .withColumn("fx", expr("((128 * tx + 14) % 100) / 100.0"))
-    val joined = Seq(("00", 0, 0), ("01", 0, 1), ("10", 1, 0), ("11", 1, 1))
-      .foldLeft(targets) { case (df, (tag, dy, dx)) =>
-        df.join(
-          cells.select(col("area").as(s"a_$tag"), col("y").as(s"y_$tag"),
-            col("x").as(s"x_$tag"), col("cell").as(s"v_$tag")),
-          col("area") === col(s"a_$tag") &&
-            col("y0") + dy === col(s"y_$tag") &&
-            col("x0") + dx === col(s"x_$tag"),
-          "left")
-      }
-    def w(tag: String): Column = tag match {
-      case "00" => (lit(1.0) - col("fy")) * (lit(1.0) - col("fx"))
-      case "01" => (lit(1.0) - col("fy")) * col("fx")
-      case "10" => col("fy") * (lit(1.0) - col("fx"))
-      case "11" => col("fy") * col("fx")
-    }
-    def present(tag: String): Column =
-      when(col(s"v_$tag").isNull, lit(0.0)).otherwise(lit(1.0))
-    val num = Seq("00", "01", "10", "11")
-      .map(t => w(t) * coalesce(col(s"v_$t"), lit(0.0))).reduce(_ + _)
-    val den = Seq("00", "01", "10", "11")
-      .map(t => w(t) * present(t)).reduce(_ + _)
-    val nNb = Seq("00", "01", "10", "11")
-      .map(t => present(t)).reduce(_ + _).cast("int")
-    joined
-      .withColumn("den", den)
-      .filter(col("den") > 0)
-      .select(col("area"), col("ty"), col("tx"),
-        round(lit(1e-9) + num / col("den"), 4).as("bilinear"),
-        nNb.as("n_nb"))
-      .orderBy(col("area"), col("ty"), col("tx"))
+    val cells = croppedCells(spark, dir, areaKey)
+    shaped(Raster.bilinear(cells, areaKey,
+      Raster.bilinearTargets(cells.select(col("area")), cropGrid)),
+      areaKey, "bilinear", Some("n_nb"))
   }
 
   val q63Sql: String =
@@ -243,7 +206,7 @@ object Trollflow {
 
   /** T2 `resample`, ewa mode (plugins/__init__.py:134-146 — the
     * reference's elliptical-weighted-average swath resampler, here the
-    * circular-footprint grid form of [[graft.pipeline.Plugins.Resample]]):
+    * circular-footprint form of [[Raster.ewa]]):
     * SCATTER resampling. Each source cell's center maps to a continuous
     * position in the 100×100 target grid (py = ((2y+1)·100)/(2·128), a
     * power-of-two denominator so the double is exact); the cell splats a
@@ -257,40 +220,17 @@ object Trollflow {
     * index floor(py − ½) via positive-biased integer division, identical
     * in both engines); dy/dx are exact doubles (denominator 2⁸); the only
     * engine-sensitive steps — exp and the summation order — sit under
-    * round(1e-9 + ·, 4), the pack-wide float guard. ln(1/0.01) is the
-    * shared double literal 4.605170185988092, not each engine's ln().
+    * round(1e-9 + ·, 4), the pack-wide float guard. The oracle writes
+    * ln(1/0.01) as the double literal the JVM's `math.log` returns.
     *
     * Scale: the explode factor is the constant (2·ceil(r)+1)² = 9, then
     * ONE hash aggregate on (area, ty, tx) — one shuffle, no window, no
     * join. The scatter direction is what makes EWA linear over swath
     * pixels; a gather formulation would need a radius search per target
     * cell. */
-  def q123ResampleEwa(spark: SparkSession, dir: String): DataFrame = {
-    val lnInv = 4.605170185988092 // ln(1/0.01), shared literal
-    val cells = raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128) // reduce_data crop
-      .groupBy(col("area"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-    val splat = cells
-      .withColumn("ny", col("y") * 200 + 100)  // ((2y+1)·100)
-      .withColumn("nx", col("x") * 200 + 100)
-      .withColumn("tyb", expr(s"(ny - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("txb", expr(s"(nx - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("ky", explode(sequence(lit(-1), lit(1))))
-      .withColumn("kx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("ty", col("tyb") + col("ky"))
-      .withColumn("tx", col("txb") + col("kx"))
-      .withColumn("dy", col("ny") / 256.0 - (col("ty") + lit(0.5)))
-      .withColumn("dx", col("nx") / 256.0 - (col("tx") + lit(0.5)))
-      .withColumn("d2", col("dy") * col("dy") + col("dx") * col("dx"))
-      .filter(col("d2") <= 1.0 &&
-        col("ty") >= 0 && col("ty") < 100 && col("tx") >= 0 && col("tx") < 100)
-      .withColumn("w", exp(col("d2") * lit(-lnInv)))
-    splat.groupBy(col("area"), col("ty"), col("tx"))
-      .agg(round(lit(1e-9) + sum(col("w") * col("cell")) / sum(col("w")), 4).as("ewa"),
-        count(lit(1)).as("n_contrib"))
-      .orderBy(col("area"), col("ty"), col("tx"))
-  }
+  def q123ResampleEwa(spark: SparkSession, dir: String): DataFrame =
+    shaped(Raster.ewa(croppedCells(spark, dir, areaKey), areaKey, cropGrid),
+      areaKey, "ewa", Some("n_contrib"))
 
   val q123Sql: String =
     s"""WITH $rasterSql,
@@ -344,35 +284,9 @@ object Trollflow {
     * constant (2·ceil(2r)+1)·(2·ceil(r)+1) = 15 (the cross-scan reach
     * covers the widest scan-edge ellipse), then ONE hash aggregate on
     * (area, ty, tx). One shuffle, no window, no join. */
-  def q131ResampleEwaSwath(spark: SparkSession, dir: String): DataFrame = {
-    val lnInv = 4.605170185988092 // ln(1/0.01), shared literal
-    val cells = raster(spark, dir)
-      .filter(col("y") < 128 && col("x") < 128) // reduce_data crop
-      .groupBy(col("area"), col("y"), col("x"))
-      .agg(avg(col("value")).as("cell"))
-    val splat = cells
-      .withColumn("m", abs(col("y") % 4 * 2 - 3))
-      .withColumn("s", lit(1.0) + col("m") / lit(3.0))
-      .withColumn("ny", col("y") * 200 + 100)  // ((2y+1)·100)
-      .withColumn("nx", col("x") * 200 + 100)
-      .withColumn("tyb", expr(s"(ny - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("txb", expr(s"(nx - 128 + ${256L * (1L << 20)}) div 256 - ${1L << 20}"))
-      .withColumn("ky", explode(sequence(lit(-2), lit(2))))
-      .withColumn("kx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("ty", col("tyb") + col("ky"))
-      .withColumn("tx", col("txb") + col("kx"))
-      .withColumn("dy", col("ny") / 256.0 - (col("ty") + lit(0.5)))
-      .withColumn("dx", col("nx") / 256.0 - (col("tx") + lit(0.5)))
-      .withColumn("e2",
-        col("dx") * col("dx") + col("dy") * col("dy") / (col("s") * col("s")))
-      .filter(col("e2") <= 1.0 &&
-        col("ty") >= 0 && col("ty") < 100 && col("tx") >= 0 && col("tx") < 100)
-      .withColumn("w", exp(col("e2") * lit(-lnInv)))
-    splat.groupBy(col("area"), col("ty"), col("tx"))
-      .agg(round(lit(1e-9) + sum(col("w") * col("cell")) / sum(col("w")), 4).as("ewa"),
-        count(lit(1)).as("n_contrib"))
-      .orderBy(col("area"), col("ty"), col("tx"))
-  }
+  def q131ResampleEwaSwath(spark: SparkSession, dir: String): DataFrame =
+    shaped(Raster.ewa(croppedCells(spark, dir, areaKey), areaKey, cropGrid,
+      Raster.Ewa(rowsPerScan = Some(4))), areaKey, "ewa", Some("n_contrib"))
 
   val q131Sql: String =
     s"""WITH $rasterSql,

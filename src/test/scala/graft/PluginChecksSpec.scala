@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.pipeline._
+import graft.operators.Raster
 import graft.pipeline.Plugins._
 
 /** Plugin-chain checks mirroring the reference's TestCovers / TestSZACheck /
@@ -401,6 +402,35 @@ class PluginChecksSpec extends SparkSpec {
     assert(math.abs(avg - 204.0 / 9.0) < 1e-12)
   }
 
+  test("resample nearest breaks distance ties on (y, x)") {
+    import spark.implicits._
+    // 2x2 source onto a 1x1 target: all four centers are equidistant from
+    // the target center, so the tie-break alone picks source (0,0)
+    val frame = Seq(("N", 1, 1, 4.0), ("N", 1, 0, 3.0), ("N", 0, 1, 2.0),
+      ("N", 0, 0, 1.0)).toDF("product", "y", "x", "value")
+    val out = Resample(Seq(ResampleTarget("euro", 1, 1, 0, 2, 0, 2,
+      mode = "nearest")))(ctxOf(oneProductSpec(), Map(None -> frame)))
+    assert(out.frames(Some("euro")).collect().map(_.getAs[Double]("value"))
+      .toSeq == Seq(1.0))
+  }
+
+  test("resample nearest measures true distance under unequal y/x scales") {
+    import spark.implicits._
+    // rows [0,6) onto height 1, cols [0,8) onto width 2: target (0,0)'s
+    // center is source (3.0, 2.0). Source (2,0) is 0.5 rows and 1.5 cols
+    // away (d² = 2.5); source (0,2) is 2.5 rows and 0.5 cols away
+    // (d² = 6.5). The integer distances carry a 2H factor on y and 2W on
+    // x, so a bare dy² + dx² (1 + 36 = 37 vs 25 + 4 = 29) would pick (0,2)
+    val frame = Seq(("N", 0, 2, 1.0), ("N", 2, 0, 2.0))
+      .toDF("product", "y", "x", "value")
+    val out = Resample(Seq(ResampleTarget("euro", 2, 1, 0, 6, 0, 8,
+      mode = "nearest")))(ctxOf(oneProductSpec(), Map(None -> frame)))
+    val got = out.frames(Some("euro")).collect()
+    assert(got.length == 1)
+    assert(got.head.getAs[Long]("y") == 0L && got.head.getAs[Long]("x") == 0L)
+    assert(got.head.getAs[Double]("value") == 2.0)
+  }
+
   test("resample bilinear reproduces a linear field exactly at target centers") {
     import spark.implicits._
     // dense 4x4 grid with v = 10y + x: bilinear interpolation of a linear
@@ -430,8 +460,7 @@ class PluginChecksSpec extends SparkSpec {
     val frame = Seq(("N", 1, 1, 7.0)).toDF("product", "y", "x", "value")
     val ctx = ctxOf(oneProductSpec(), Map(None -> frame))
     val out = Resample(Seq(
-      ResampleTarget("euro", 2, 2, 0, 4, 0, 4, mode = "bilinear")),
-      reduceData = false)(ctx)
+      ResampleTarget("euro", 2, 2, 0, 4, 0, 4, mode = "bilinear")))(ctx)
     val got = out.frames(Some("euro")).collect()
     assert(got.nonEmpty)
     assert(got.forall(_.getAs[Double]("value") == 7.0))
@@ -462,7 +491,7 @@ class PluginChecksSpec extends SparkSpec {
     val ctx = ctxOf(oneProductSpec(), Map(None -> frame))
     val out = Resample(Seq(
       ResampleTarget("euro", 2, 1, 0, 1, 0, 2, mode = "ewa",
-        maximumWeightMode = true)))(ctx)
+        ewa = Raster.Ewa(maximumWeightMode = true))))(ctx)
     val got = out.frames(Some("euro")).collect()
       .map(r => r.getAs[Long]("x") -> r.getAs[Double]("value")).toMap
     assert(got == Map(0L -> 0.0, 1L -> 10.0))
@@ -482,7 +511,7 @@ class PluginChecksSpec extends SparkSpec {
       .toDF("product", "y", "x", "value")
     val ctx = ctxOf(oneProductSpec(), Map(None -> frame))
     val tgt = ResampleTarget("euro", 1, 4, 0, 4, 0, 1, mode = "ewa",
-      rowsPerScan = Some(4))
+      ewa = Raster.Ewa(rowsPerScan = Some(4)))
     val got = Resample(Seq(tgt))(ctx).frames(Some("euro")).collect()
       .map(r => r.getAs[Long]("y") -> r.getAs[Double]("value")).toMap
     val ln = math.log(100.0)
@@ -498,7 +527,7 @@ class PluginChecksSpec extends SparkSpec {
       (10 + 20 * a + 30 * 0.01) / (b + 1 + a + 0.01)) < 1e-12)
     // the circular footprint blends the same cells differently — the
     // ellipse is an observable semantic, not a reparameterization
-    val circ = Resample(Seq(tgt.copy(rowsPerScan = None)))(ctx)
+    val circ = Resample(Seq(tgt.copy(ewa = Raster.Ewa())))(ctx)
       .frames(Some("euro")).collect()
       .map(r => r.getAs[Long]("y") -> r.getAs[Double]("value")).toMap
     assert(math.abs(circ(0L) - 10 * 0.01 / 1.01) < 1e-12)
@@ -513,11 +542,32 @@ class PluginChecksSpec extends SparkSpec {
     val ctx = ctxOf(oneProductSpec(), Map(None -> frame))
     val out = Resample(Seq(
       ResampleTarget("euro", 2, 1, 0, 1, 0, 2, mode = "ewa",
-        weightSumMin = 0.5)))(ctx)
+        ewa = Raster.Ewa(weightSumMin = 0.5))))(ctx)
     val got = out.frames(Some("euro")).collect()
     assert(got.length == 1)
     assert(got.head.getAs[Long]("x") == 0L)
     assert(got.head.getAs[Double]("value") == 7.0)
+  }
+
+  test("aggregate and every resample mode keep scene key columns of any name") {
+    import spark.implicits._
+    // every column other than y/x/value is a key, so key names the
+    // kernels might use internally must pass through untouched
+    val frame = (for { y <- 0 until 4; x <- 0 until 4 }
+      yield ("N", 7L, 8L, 9L, y, x, 10.0 * y + x))
+      .toDF("product", "n", "ty", "y0", "y", "x", "value")
+    val ctx = ctxOf(oneProductSpec(), Map(None -> frame))
+    val agg = Aggregate(xFactor = 2, yFactor = 2)(ctx).frames(None)
+    val modes = Seq("average", "nearest", "bilinear", "ewa")
+    val out = Resample(modes.map(m => ResampleTarget(m, 2, 2, 0, 4, 0, 4, mode = m)))(ctx)
+    for ((label, df) <- ("aggregate" -> agg) +: modes.map(m => m -> out.frames(Some(m)))) {
+      assert(df.columns.toSeq.sorted == Seq("n", "product", "ty", "value", "x", "y", "y0"),
+        s"$label: ${df.columns.mkString(", ")}")
+      val rows = df.collect()
+      assert(rows.length == 4, label)
+      assert(rows.forall(r => r.getAs[Long]("n") == 7L && r.getAs[Long]("ty") == 8L &&
+        r.getAs[Long]("y0") == 9L), label)
+    }
   }
 
   // ------------------------------------------------------ metadata_alias

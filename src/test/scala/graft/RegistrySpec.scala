@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import graft.operators.Raster
 import graft.pipeline._
 import graft.pipeline.Plugins._
 
@@ -150,11 +151,19 @@ class RegistrySpec extends SparkSpec {
         |    platform_name: [noaa15, noaa18]
         |    start_time: -40
         |  min_valid_data_fraction: 10.0
+        |  resampler: ewa
+        |  rows_per_scan: 4
+        |  resample_targets:
+        |    - {area: euro, width: 2, height: 2, weight_min: 0.05,
+        |       src_y_min: 0, src_y_max: 4, src_x_min: 0, src_x_max: 4}
+        |    - {area: pacific, width: 2, height: 2, mode: nearest,
+        |       src_y_min: 0, src_y_max: 4, src_x_min: 0, src_x_max: 4}
         |  areas: {}
         |workers:
         |  - fun: check_metadata
         |  - fun: check_valid_data_fraction
         |  - fun: save_datasets
+        |  - fun: resample
         |""".stripMargin)
     val chain = PluginRegistry.chain(cfg, Seq.empty)
     val cm = chain(0).asInstanceOf[CheckMetadata]
@@ -167,6 +176,12 @@ class RegistrySpec extends SparkSpec {
     assert(sd.outDir == "/tmp/out" && sd.eagerWriting)
     assert(sd.stagingZone.contains("/tmp/staging"))
     assert(sd.overviews == Seq(4, 8))
+    // ewa settings: per-target field, then the product-list setting, then
+    // Raster.Ewa's defaults
+    val Seq(euro, pacific) = chain(3).asInstanceOf[Resample].targets
+    assert(euro.mode == "ewa" && pacific.mode == "nearest")
+    assert(euro.ewa == Raster.Ewa(weightMin = 0.05, rowsPerScan = Some(4)))
+    assert(pacific.ewa == Raster.Ewa(rowsPerScan = Some(4)))
   }
 
   test("call_on_done resolves named callbacks; callback_move needs early_moving") {
@@ -228,6 +243,18 @@ class RegistrySpec extends SparkSpec {
       PluginRegistry.build(agg, WorkerSpec("aggregate"), Seq.empty)
     }
     assert(e2.getMessage.contains("aggregate.x"))
+    val rs = ProductListLoader.fromYaml(
+      """product_list:
+        |  reduce_data: maybe
+        |  resample_targets:
+        |    - {area: euro, width: 1, height: 1,
+        |       src_y_min: 0, src_y_max: 2, src_x_min: 0, src_x_max: 2}
+        |  areas: {}
+        |""".stripMargin)
+    val e3 = intercept[ConfigException] {
+      PluginRegistry.build(rs, WorkerSpec("resample"), Seq.empty)
+    }
+    assert(e3.getMessage.contains("reduce_data"))
   }
 
   test("worker options keep document order (load_composites with 5+ columns)") {
