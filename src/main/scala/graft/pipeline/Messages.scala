@@ -29,6 +29,10 @@ import org.apache.spark.sql.SparkSession
 object Messages {
   private val mapper = new ObjectMapper()
 
+  /** Separator of a list-valued metadata entry: [[parse]] joins a list of
+    * scalars with it and [[Plugins.MetadataAlias]] splits on it. */
+  val ListSep = ","
+
   final case class ParsedMessage(msgType: String, paths: Seq[String],
       metadata: Map[String, String],
       /** `datetime_decoder` parity (cli.py:77-96): every string value
@@ -98,7 +102,7 @@ object Messages {
         e.getKey -> e.getValue.asText()
       case e if e.getValue.isArray &&
           e.getValue.elements().asScala.forall(_.isValueNode) =>
-        e.getKey -> e.getValue.elements().asScala.map(_.asText()).mkString(",")
+        e.getKey -> e.getValue.elements().asScala.map(_.asText()).mkString(ListSep)
     }.toMap
     // recursive datetime decode (cli.py:77-96): any textual value at any
     // depth that parses as ISO becomes a typed instant

@@ -15,10 +15,14 @@ import graft.operators.Raster
   * plugins/__init__.py:394-395): every plugin up to [[SaveDatasets]] only
   * *builds* DataFrames — Catalyst holds the logical plans exactly like
   * dask holds the delayed graph — and SaveDatasets' write actions are the
-  * only compute triggers. Shared upstream frames are computed once per
-  * write unless persisted; [[CheckValidDataFraction]] persists before its
-  * data-dependent check just as the reference calls dask.persist
-  * (plugins/__init__.py:1014-1032).
+  * only compute triggers, apart from [[CheckValidDataFraction]]'s one
+  * data-dependent aggregate (the reference's dask.persist there,
+  * plugins/__init__.py:1014-1032). Shared upstream frames are computed
+  * once per action that reads them.
+  *
+  * Abort contract: a plugin aborts with [[PipelineContext.abort]] and
+  * [[Runner]] stops the chain there, so no plugin tests `ctx.aborted`
+  * itself.
   */
 final case class WrittenFile(
     area: Option[String], product: String, format: String,
@@ -40,8 +44,9 @@ final case class PipelineContext(
       * takes precedence over [[Plugins.CreateScene]]'s constructor
       * paths. */
     inputs: Seq[String] = Seq.empty,
-    /** Set by aborting plugins (`AbortProcessing`, launcher.py:456-457):
-      * downstream plugins become no-ops; the runner logs and moves on. */
+    /** Set by an aborting plugin (`AbortProcessing`, launcher.py:456-457).
+      * [[Runner]] stops the chain at the first aborted context: the
+      * plugins after it are not run. */
     aborted: Option[String] = None) {
   def abort(reason: String): PipelineContext = copy(aborted = Some(reason))
 }
@@ -67,6 +72,11 @@ object Plugins {
     Messages.parseIso(s).getOrElse(throw new IllegalArgumentException(
       s"metadata $key='$s' is not an ISO datetime"))
 
+  /** Metadata keys of the scene time window (the reference's
+    * `start_time`/`end_time` message fields). */
+  private val StartTime = "start_time"
+  private val EndTime = "end_time"
+
   /** `create_scene` (plugins/__init__.py:86-99): open inputs with a named
     * reader into the native-projection frame; `options` carries the
     * reference's `reader_kwargs` (launcher.py passes them through to the
@@ -83,8 +93,7 @@ object Plugins {
       extends Plugin {
     val name = "create_scene"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else try {
+      try {
         val srcs = if (ctx.inputs.nonEmpty) ctx.inputs else paths
         val df = ctx.spark.read.format(reader).options(options).load(srcs: _*)
         ctx.copy(frames = ctx.frames + (None -> df))
@@ -113,7 +122,7 @@ object Plugins {
   final case class CacheInputs(cacheDir: String) extends Plugin {
     val name = "use_fsspec_cache"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined || ctx.inputs.isEmpty) ctx
+      if (ctx.inputs.isEmpty) ctx
       else try {
         val conf = ctx.spark.sparkContext.hadoopConfiguration
         val dst = new org.apache.hadoop.fs.Path(cacheDir)
@@ -147,9 +156,11 @@ object Plugins {
 
   /** `clear_fsspec_cache` (plugins/__init__.py:1161-1167): drop every
     * staged copy in the cache directory (the reference calls
-    * `fs.clear_cache()` on each input's caching filesystem). Runs even
-    * for aborted jobs — cache hygiene is not part of the job's success
-    * path — and never aborts: a missing dir is already-clear.
+    * `fs.clear_cache()` on each input's caching filesystem). Never
+    * aborts: a missing dir is already-clear. Like every plugin it does
+    * not run after an abort (the reference's loop break); what an
+    * aborted job staged is removed by the next clear, which deletes the
+    * whole cache directory.
     *
     * Place it AFTER the write stage, like the reference's worker lists
     * do: frames are lazy plans over the staged paths, so clearing before
@@ -173,8 +184,7 @@ object Plugins {
   final case class LoadComposites(derived: Map[String, String]) extends Plugin {
     val name = "load_composites"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.frames.get(None) match {
+      ctx.frames.get(None) match {
         case None => ctx.abort("load_composites: no scene")
         case Some(df) =>
           val out = derived.foldLeft(df) { case (d, (colName, sqlExpr)) =>
@@ -189,48 +199,42 @@ object Plugins {
     * old (negative maxAgeMinutes = max age, the reference's convention). */
   final case class CheckMetadata(
       allowed: Map[String, Seq[String]] = Map.empty,
-      startTimeKey: String = "start_time",
       maxAgeMinutes: Option[Long] = None,
       now: () => Instant = () => Instant.now()) extends Plugin {
     val name = "check_metadata"
-    def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else {
-        val badKey = allowed.collectFirst {
-          case (k, vs) if ctx.metadata.get(k).exists(v => !vs.contains(v)) =>
-            s"$k=${ctx.metadata(k)} not in ${vs.mkString(",")}"
-        }
-        val tooOld = maxAgeMinutes.flatMap { age =>
-          ctx.metadata.get(startTimeKey).flatMap { ts =>
-            val start = isoInstant(startTimeKey, ts)
-            val ageMin = java.time.Duration.between(start, now()).toMinutes
-            if (age < 0 && ageMin > -age) Some(s"$startTimeKey older than ${-age} min")
-            else if (age > 0 && ageMin < age) Some(s"$startTimeKey younger than $age min")
-            else None
-          }
-        }
-        badKey.orElse(tooOld).map(ctx.abort).getOrElse(ctx)
+    def apply(ctx: PipelineContext): PipelineContext = {
+      val badKey = allowed.collectFirst {
+        case (k, vs) if ctx.metadata.get(k).exists(v => !vs.contains(v)) =>
+          s"$k=${ctx.metadata(k)} not in ${vs.mkString(",")}"
       }
+      val tooOld = maxAgeMinutes.flatMap { age =>
+        ctx.metadata.get(StartTime).flatMap { ts =>
+          val ageMin = java.time.Duration.between(isoInstant(StartTime, ts), now()).toMinutes
+          if (age < 0 && ageMin > -age) Some(s"$StartTime older than ${-age} min")
+          else if (age > 0 && ageMin < age) Some(s"$StartTime younger than $age min")
+          else None
+        }
+      }
+      badKey.orElse(tooOld).map(ctx.abort).getOrElse(ctx)
+    }
   }
 
   /** `metadata_alias` (plugins/__init__.py:717-736): rewrite metadata
     * values through an alias map; unknown values pass through. Multi-valued
     * metadata (the reference's list/tuple/set values, rewritten element-wise
     * at plugins/__init__.py:729-731 — sensor lists being the common case,
-    * :611-615) is represented here as a `listSep`-joined string: each
-    * element is rewritten through the alias map and the list re-joined in
-    * order; a value without the separator is the scalar case. */
-  final case class MetadataAlias(aliases: Map[String, Map[String, String]],
-      listSep: String = ",") extends Plugin {
+    * :611-615) is represented here as a [[Messages.ListSep]]-joined
+    * string, the form [[Messages.parse]] gives a list value: each element
+    * is rewritten through the alias map and the list re-joined in order;
+    * a value without the separator is the scalar case. */
+  final case class MetadataAlias(aliases: Map[String, Map[String, String]])
+      extends Plugin {
     val name = "metadata_alias"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.copy(metadata = ctx.metadata.map { case (k, v) =>
+      ctx.copy(metadata = ctx.metadata.map { case (k, v) =>
         k -> aliases.get(k).map { amap =>
-          if (v.contains(listSep))
-            v.split(java.util.regex.Pattern.quote(listSep), -1)
-              .map(e => amap.getOrElse(e, e)).mkString(listSep)
-          else amap.getOrElse(v, v)
+          v.split(java.util.regex.Pattern.quote(Messages.ListSep), -1)
+            .map(e => amap.getOrElse(e, e)).mkString(Messages.ListSep)
         }.getOrElse(v)
       })
   }
@@ -242,8 +246,7 @@ object Plugins {
     require(xFactor > 0 && yFactor > 0, "block factors must be positive")
     val name = "aggregate"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.copy(frames = ctx.frames.map { case (area, df) =>
+      ctx.copy(frames = ctx.frames.map { case (area, df) =>
         val keys = df.columns.filterNot(Set("y", "x", "value"))
         area -> Raster.blockMean(df, keys.toSeq, Seq("y" -> yFactor.toLong, "x" -> xFactor.toLong))
           .drop("__n")
@@ -338,8 +341,7 @@ object Plugins {
     }
 
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.frames.get(None) match {
+      ctx.frames.get(None) match {
         case None => ctx.abort("resample: no scene")
         case Some(src0) =>
           val keyCols = src0.columns.filterNot(Set("y", "x", "value")).toSeq
@@ -385,50 +387,46 @@ object Plugins {
     def grid: Raster.Grid = Raster.Grid(srcYMin, srcYMax, srcXMin, srcXMax, height, width)
   }
 
-  /** `check_valid_data_fraction` (plugins/__init__.py:955-1079): persist
-    * the scene once, compute per-product valid fractions in ONE aggregate
-    * pass, drop failing work-list items. Data-dependent pruning — the only
-    * plugin that triggers compute before save, exactly like the reference. */
-  final case class CheckValidDataFraction(
-      minFraction: Double, productCol: String = "product",
-      valueCol: String = "value") extends Plugin {
+  /** `check_valid_data_fraction` (plugins/__init__.py:955-1079): compute
+    * per-product valid fractions of every resampled area in ONE aggregate
+    * pass and drop the failing work-list items. A null or NaN value is
+    * fill, as the reference's `notnull()` on a float array counts it
+    * (see [[graft.functions.ValidFraction]]). Data-dependent pruning —
+    * the only plugin that triggers compute before save, exactly like the
+    * reference. */
+  final case class CheckValidDataFraction(minFraction: Double) extends Plugin {
     val name = "check_valid_data_fraction"
-    def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else {
-        val checked = ctx.frames.toSeq.collect {
-          case (Some(name), df) => name -> df
-        }
-        if (checked.isEmpty) ctx
-        else {
-          // ALL areas in ONE aggregation over one unioned, persisted plan
-          // — the reference persists every checked product at once
-          // (plugins/__init__.py:1014-1032) precisely so shared inputs
-          // compute together; the per-area sequential loop this replaces
-          // ran one Spark job per area and recomputed shared upstream
-          // frames per iteration. The collect() is config-sized: one row
-          // per (area, product).
-          val tagged = checked.map { case (name, df) =>
-            df.select(lit(name).as("__cvdf_area"),
-              col(productCol).cast("string").as("__cvdf_product"),
-              col(valueCol).isNotNull.cast("double").as("__cvdf_valid"))
-          }
-          val all = tagged.reduce(_.unionAll(_)).persist()
-          val fractions: Map[(Option[String], String), Double] =
-            try {
-              all.groupBy(col("__cvdf_area"), col("__cvdf_product"))
-                .agg(avg(col("__cvdf_valid")).as("frac"))
-                .collect()
-                .map(r => (Option(r.getString(0)), r.getString(1)) -> r.getDouble(2))
-                .toMap
-            } finally { all.unpersist() }
-          val pruned = ctx.worklist.filter { item =>
-            item.area.isEmpty ||
-              fractions.get((item.area, item.product)).forall(_ >= minFraction)
-          }
-          ctx.copy(worklist = pruned)
-        }
+    def apply(ctx: PipelineContext): PipelineContext = {
+      val checked = ctx.frames.toSeq.collect {
+        case (Some(name), df) => name -> df
       }
+      if (checked.isEmpty) ctx
+      else {
+        // ALL areas in ONE aggregation over one unioned plan — the
+        // reference checks every product at once (plugins/__init__.py:
+        // 1014-1032) so shared inputs compute together. The union feeds
+        // exactly this one action, so it is not persisted. The collect()
+        // is config-sized: one row per (area, product).
+        val tagged = checked.map { case (name, df) =>
+          df.select(lit(name).as("__cvdf_area"),
+            col("product").cast("string").as("__cvdf_product"),
+            when(col("value").isNull || isnan(col("value")), 0.0).otherwise(1.0)
+              .as("__cvdf_valid"))
+        }
+        val fractions: Map[(Option[String], String), Double] =
+          tagged.reduce(_.unionAll(_))
+            .groupBy(col("__cvdf_area"), col("__cvdf_product"))
+            .agg(avg(col("__cvdf_valid")).as("frac"))
+            .collect()
+            .map(r => (Option(r.getString(0)), r.getString(1)) -> r.getDouble(2))
+            .toMap
+        val pruned = ctx.worklist.filter { item =>
+          item.area.isEmpty ||
+            fractions.get((item.area, item.product)).forall(_ >= minFraction)
+        }
+        ctx.copy(worklist = pruned)
+      }
+    }
   }
 
   /** trollsift-style `compose` (used at plugins/__init__.py:211-212):
@@ -488,68 +486,62 @@ object Plugins {
     * GeoTIFF overview levels. */
   final case class SaveDatasets(
       outDir: String, fnamePattern: String = "{area}_{product}.{format}",
-      productCol: String = "product", eagerWriting: Boolean = false,
+      eagerWriting: Boolean = false,
       stagingZone: Option[String] = None, overviews: Seq[Int] = Seq.empty,
       callbacks: Seq[WrittenFile => Unit] = Seq.empty,
-      earlyMoving: Boolean = false,
-      yCol: String = "y", xCol: String = "x", valueCol: String = "value")
+      earlyMoving: Boolean = false)
       extends Plugin {
     require(overviews.forall(_ > 1), s"overview factors must be > 1: $overviews")
     val name = "save_datasets"
 
-    def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else {
-        Files.createDirectories(Paths.get(outDir))
-        stagingZone.foreach(s => Files.createDirectories(Paths.get(s)))
-        // without a staging zone the tmp->final rename IS the publication
-        // (the reference's direct final-name write); deferral only exists
-        // for the two-hop staged path
-        val immediate = earlyMoving || stagingZone.isEmpty
-        val pending = scala.collection.mutable.ArrayBuffer.empty[Staged]
-        def commit(sink: Sink): Option[WrittenFile] =
-          writeStaged(sink).flatMap { st =>
-            if (immediate) Some(publish(st)) else { pending += st; None }
-          }
-        val written =
-          if (eagerWriting)
-            ctx.worklist.flatMap(item => planOne(ctx, item).flatMap(commit))
-          else {
-            // force every plan before the first action (see class doc)
-            val sinks = ctx.worklist.flatMap(item => planOne(ctx, item))
-            sinks.flatMap(commit)
-          }
-        // renamed_files (plugins/__init__.py:318-327): publish the whole
-        // batch only after every write committed
-        val manifest = if (immediate) written else pending.map(publish).toSeq
-        ctx.copy(manifest = ctx.manifest ++ manifest)
-      }
+    def apply(ctx: PipelineContext): PipelineContext = {
+      Files.createDirectories(Paths.get(outDir))
+      stagingZone.foreach(s => Files.createDirectories(Paths.get(s)))
+      // without a staging zone the tmp->final rename IS the publication
+      // (the reference's direct final-name write); deferral only exists
+      // for the two-hop staged path
+      val immediate = earlyMoving || stagingZone.isEmpty
+      val pending = scala.collection.mutable.ArrayBuffer.empty[Staged]
+      def commit(sink: Sink): Option[WrittenFile] =
+        writeStaged(sink).flatMap { st =>
+          if (immediate) Some(publish(st)) else { pending += st; None }
+        }
+      val written =
+        if (eagerWriting)
+          ctx.worklist.flatMap(item => planOne(ctx, item).flatMap(commit))
+        else {
+          // force every plan before the first action (see class doc)
+          val sinks = ctx.worklist.flatMap(item => planOne(ctx, item))
+          sinks.flatMap(commit)
+        }
+      // renamed_files (plugins/__init__.py:318-327): publish the whole
+      // batch only after every write committed
+      val manifest = if (immediate) written else pending.map(publish).toSeq
+      ctx.copy(manifest = ctx.manifest ++ manifest)
+    }
 
     /** Build the sink plans for one work item: the product slice plus any
       * overview levels. Pure plan construction — no Spark action. */
     private def planOne(ctx: PipelineContext, item: WorkItem): Seq[Sink] = {
       ctx.frames.get(item.area).orElse(ctx.frames.get(None)).toSeq.flatMap { frame =>
         // unknown product -> empty slice -> zero-row skip at commit (W2/P1)
-        val slice = frame.filter(col(productCol).isin(item.members: _*))
+        val slice = frame.filter(col("product").isin(item.members: _*))
         val writer = item.settings.getOrElse("writer", formatWriter(item.format))
         val fname = compose(fnamePattern,
           ctx.metadata ++ item.settings +
             ("area" -> item.area.getOrElse("native")) +
             ("product" -> item.product) + ("format" -> item.format))
         val main = Sink(slice, writer, fname, item)
-        val ovs = overviews.flatMap { factor =>
-          if (!slice.columns.contains(yCol) || !slice.columns.contains(xCol))
-            None
+        val ovs =
+          if (!slice.columns.contains("y") || !slice.columns.contains("x")) Nil
           else {
-            val keys = slice.columns
-              .filterNot(c => c == yCol || c == xCol || c == valueCol)
-            val down = slice
-              .groupBy((keys.map(col) :+ expr(s"$yCol div $factor").as(yCol)
-                :+ expr(s"$xCol div $factor").as(xCol)): _*)
-              .agg(avg(col(valueCol)).as(valueCol))
-            Some(Sink(down, writer, s"$fname.ov$factor", item))
+            val keys = slice.columns.filterNot(Set("y", "x", "value")).toSeq
+            overviews.map { f =>
+              val down = Raster.blockMean(slice, keys, Seq("y" -> f.toLong, "x" -> f.toLong))
+                .drop("__n")
+              Sink(down, writer, s"$fname.ov$f", item)
+            }
           }
-        }
         main +: ovs
       }
     }
@@ -678,8 +670,7 @@ object Plugins {
     val name = "format_decoration"
     private val DecoText = """decorate\.\d+\.text""".r
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.copy(worklist = ctx.worklist.map { item =>
+      ctx.copy(worklist = ctx.worklist.map { item =>
         val values = ctx.metadata ++ item.settings +
           ("area" -> item.area.getOrElse("native")) +
           ("product" -> item.product) + ("format" -> item.format)
@@ -764,16 +755,6 @@ object Plugins {
     }
   }
 
-  object OrbitModel {
-    /** Back-compat constructor: the default model is the synthetic
-      * circular orbit (existing configs and q139 keep their numbers). */
-    def apply(inclinationDeg: Double = 98.7,
-        periodMin: Double = 101.0, ascNodeLonDeg: Double = -80.0,
-        swathHalfAngleDeg: Double = 12.0, stepMin: Double = 2.0): CircularOrbit =
-      CircularOrbit(inclinationDeg, periodMin, ascNodeLonDeg,
-        swathHalfAngleDeg, stepMin)
-  }
-
   /** Deterministic circular-orbit ground track: standard math (argument
     * of latitude u = 2π·m/T; sin(track lat) = sin(incl)·sin(u); track
     * lon = node + atan2(cos(incl)·sin u, cos u) − ω⊕·m with Earth
@@ -837,38 +818,34 @@ object Plugins {
   final case class Covers(
       areaBounds: Map[String, AreaBounds],
       lonExpr: String, latExpr: String,
-      minCoverageKey: String = "min_coverage",
-      coverageByCollectionArea: Boolean = false,
-      collectionAreaIdKey: String = "collection_area_id") extends Plugin {
+      coverageByCollectionArea: Boolean = false) extends Plugin {
     val name = "covers"
-    def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else {
-        val badCollection = coverageByCollectionArea &&
-          ctx.metadata.get(collectionAreaIdKey)
-            .exists(id => !ctx.spec.areas.exists(_.name.contains(id)))
-        if (badCollection)
-          ctx.abort(s"Area collection ID '${ctx.metadata(collectionAreaIdKey)}' " +
-            s"does not match production area(s) " +
-            ctx.spec.areas.flatMap(_.name).mkString("[", ", ", "]"))
-        else footprint(ctx) match {
-          case None => ctx // no footprint -> keep all areas (ref :586-589)
-          case Some(pass) =>
-            val pruned = ctx.worklist.flatMap { item =>
-              val minCov = Worklist.configValue(ctx.spec, item, minCoverageKey)
-                .map(_.toDouble).filter(_ > 0.0)
-              (item.area.flatMap(areaBounds.get), minCov) match {
-                case (Some(bounds), Some(min)) =>
-                  val pct = bounds.coveragePctBy(pass)
-                  if (pct < min) None
-                  else Some(item.copy(settings = item.settings +
-                    ("area_coverage_percent" -> pct.toString)))
-                case _ => Some(item)
-              }
+    def apply(ctx: PipelineContext): PipelineContext = {
+      val badCollection = coverageByCollectionArea &&
+        ctx.metadata.get("collection_area_id")
+          .exists(id => !ctx.spec.areas.exists(_.name.contains(id)))
+      if (badCollection)
+        ctx.abort(s"Area collection ID '${ctx.metadata("collection_area_id")}' " +
+          s"does not match production area(s) " +
+          ctx.spec.areas.flatMap(_.name).mkString("[", ", ", "]"))
+      else footprint(ctx) match {
+        case None => ctx // no footprint -> keep all areas (ref :586-589)
+        case Some(pass) =>
+          val pruned = ctx.worklist.flatMap { item =>
+            val minCov = Worklist.configValue(ctx.spec, item, "min_coverage")
+              .map(_.toDouble).filter(_ > 0.0)
+            (item.area.flatMap(areaBounds.get), minCov) match {
+              case (Some(bounds), Some(min)) =>
+                val pct = bounds.coveragePctBy(pass)
+                if (pct < min) None
+                else Some(item.copy(settings = item.settings +
+                  ("area_coverage_percent" -> pct.toString)))
+              case _ => Some(item)
             }
-            ctx.copy(worklist = pruned)
-        }
+          }
+          ctx.copy(worklist = pruned)
       }
+    }
 
     private def footprint(ctx: PipelineContext): Option[AreaBounds] =
       ctx.frames.get(None).flatMap { df =>
@@ -900,12 +877,10 @@ object Plugins {
     * (`sunzen_maximum_angle`: drop iff sza > limit). Like the reference,
     * the minimum check wins when both are set (:763-779, the `continue`
     * after the nighttime branch). Pure config math — zero Spark jobs. */
-  final case class SzaCheck(startTimeKey: String = "start_time") extends Plugin {
+  final case class SzaCheck() extends Plugin {
     val name = "sza_check"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.metadata.get(startTimeKey)
-          .map(isoInstant(startTimeKey, _)) match {
+      ctx.metadata.get(StartTime).map(isoInstant(StartTime, _)) match {
         case None => ctx
         case Some(t) =>
           val pruned = ctx.worklist.filter { item =>
@@ -944,32 +919,24 @@ object Plugins {
     * supplying the ground track: [[Sgp4Orbit]] for real TLE propagation
     * (the configuration q150's oracle pins) or [[CircularOrbit]] for
     * the deterministic synthetic orbit (q139's). The
-    * pass window is [start_time, end_time] (falling back to
-    * `passWindowMin` when the metadata carries no end time), and an
+    * pass window is [start_time, end_time] (falling back to 90 minutes
+    * when the metadata carries no end time), and an
     * area the pass never touches scores 0.0 exactly like the
     * reference's outside-the-overpass branch (:886-888). Coverage is
     * memoized per (area, check_pass) exactly like the reference's
     * `coverage = {True: None, False: None}` dict (:829-856). */
   final case class SunlightCoverage(
       areaBounds: Map[String, AreaBounds],
-      startTimeKey: String = "start_time",
-      minKey: String = "sunlight_min", maxKey: String = "sunlight_max",
-      gridN: Int = 8,
-      orbit: OrbitModel = OrbitModel(),
-      checkPassKey: String = "check_pass",
-      endTimeKey: String = "end_time",
-      passWindowMin: Double = 90.0) extends Plugin {
+      orbit: OrbitModel = CircularOrbit()) extends Plugin {
     val name = "check_sunlight_coverage"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else ctx.metadata.get(startTimeKey)
-          .map(isoInstant(startTimeKey, _)) match {
+      ctx.metadata.get(StartTime).map(isoInstant(StartTime, _)) match {
         case None => ctx
         case Some(t) =>
-          val windowMin = ctx.metadata.get(endTimeKey)
-            .map(isoInstant(endTimeKey, _))
+          val windowMin = ctx.metadata.get(EndTime)
+            .map(isoInstant(EndTime, _))
             .map(e => math.max(0.0, java.time.Duration.between(t, e).toSeconds / 60.0))
-            .getOrElse(passWindowMin)
+            .getOrElse(90.0)
           // align the scene window to the orbit: a model with an
           // ABSOLUTE epoch (Sgp4Orbit's TLE) must be sampled at the
           // window's offset from that epoch, not from track minute 0 —
@@ -984,9 +951,10 @@ object Plugins {
           def sunlitPct(a: String, checkPass: Boolean): Double =
             memo.getOrElseUpdate((a, checkPass), {
               val b = areaBounds(a)
-              val pts = for { i <- 0 until gridN; j <- 0 until gridN } yield {
-                val lon = b.lonMin + (i + 0.5) * (b.lonMax - b.lonMin) / gridN
-                val lat = b.latMin + (j + 0.5) * (b.latMax - b.latMin) / gridN
+              val n = 8 // the q45 sample grid is n×n
+              val pts = for { i <- 0 until n; j <- 0 until n } yield {
+                val lon = b.lonMin + (i + 0.5) * (b.lonMax - b.lonMin) / n
+                val lat = b.latMin + (j + 0.5) * (b.latMax - b.latMin) / n
                 (lat, lon)
               }
               val cut = if (checkPass)
@@ -1000,7 +968,7 @@ object Plugins {
           val pruned = ctx.worklist.flatMap { item =>
             def conf(k: String): Option[String] =
               Worklist.configValue(ctx.spec, item, k)
-            val (mn, mx) = (conf(minKey).map(_.toDouble), conf(maxKey).map(_.toDouble))
+            val (mn, mx) = (conf("sunlight_min").map(_.toDouble), conf("sunlight_max").map(_.toDouble))
             item.area.filter(areaBounds.contains) match {
               case Some(a) if mn.isDefined || mx.isDefined =>
                 // the string config is parsed with YAML boolean semantics
@@ -1009,7 +977,7 @@ object Plugins {
                 // bool (ref reads `if self.check_pass:`) — a bare
                 // `.toBoolean` would throw on `check_pass: 1`/`yes` and
                 // abort the whole apply
-                val checkPass = conf(checkPassKey).exists(v =>
+                val checkPass = conf("check_pass").exists(v =>
                   !Set("false", "no", "off", "0", "").contains(v.trim.toLowerCase))
                 val pct = sunlitPct(a, checkPass)
                 if (mn.exists(pct < _) || mx.exists(pct > _)) None
@@ -1047,7 +1015,7 @@ object Plugins {
       extends Plugin {
     val name = "s3.uploader"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined || ctx.manifest.isEmpty) ctx
+      if (ctx.manifest.isEmpty) ctx
       else try {
         val conf = ctx.spark.sparkContext.hadoopConfiguration
         val dst = new org.apache.hadoop.fs.Path(remoteDir)
@@ -1079,8 +1047,7 @@ object Plugins {
   final case class CheckRemoteFile() extends Plugin {
     val name = "check_s3_file"
     def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else try {
+      try {
         val conf = ctx.spark.sparkContext.hadoopConfiguration
         val bad = ctx.manifest.filter { f =>
           val p = new org.apache.hadoop.fs.Path(f.path)
@@ -1101,16 +1068,14 @@ object Plugins {
     * the runner can report exactly like the reference's exit-code check. */
   final case class CheckResults() extends Plugin {
     val name = "check_results"
-    def apply(ctx: PipelineContext): PipelineContext =
-      if (ctx.aborted.isDefined) ctx
-      else {
-        val bad = ctx.manifest.filter(f =>
-          !Files.exists(Paths.get(f.path)) || f.bytes == 0L || f.rows == 0L)
-        if (bad.nonEmpty)
-          ctx.abort(s"check_results: ${bad.size} empty/missing outputs: " +
-            bad.map(_.path).mkString(", "))
-        else ctx
-      }
+    def apply(ctx: PipelineContext): PipelineContext = {
+      val bad = ctx.manifest.filter(f =>
+        !Files.exists(Paths.get(f.path)) || f.bytes == 0L || f.rows == 0L)
+      if (bad.nonEmpty)
+        ctx.abort(s"check_results: ${bad.size} empty/missing outputs: " +
+          bad.map(_.path).mkString(", "))
+      else ctx
+    }
   }
 
   /** One published message row — the typed shape of the reference's

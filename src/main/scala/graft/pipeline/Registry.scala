@@ -175,7 +175,8 @@ object PluginRegistry {
       case "check_valid_data_fraction" =>
         // the reference's setting is a PERCENT (doc/source/plugins.rst:
         // "min_valid_data_fraction: 10.0" = 10%); the plugin's parameter
-        // is a [0,1] fraction compared against avg(value IS NOT NULL)
+        // is a [0,1] fraction compared against the valid (non-null,
+        // non-NaN) share of each product
         CheckValidDataFraction(
           minFraction =
             num("min_valid_data_fraction", required("min_valid_data_fraction")) / 100.0)

@@ -8,6 +8,13 @@ import scala.concurrent.duration._
   * launcher.py:434), with an optional per-plugin timeout and
   * AbortProcessing semantics.
   *
+  * Abort contract: the Runner holds the one abort check, like the
+  * reference's single `except AbortProcessing` around the worker loop
+  * (launcher.py:456-457). The chain stops at the first aborted context
+  * (a plugin's own abort, a crash or a timeout): the aborting plugin's
+  * [[PluginResult]] has `abortedAfter` set, and the plugins after it
+  * are not run and get no result.
+  *
   * Timeout divergence from the reference, documented: the reference uses
   * SIGALRM (launcher.py:441-455) which preempts; on the JVM cancellation
   * is cooperative — we time out the await and cancel the session's job
@@ -49,9 +56,12 @@ object Runner {
     val jobGroup = s"graft-pipeline-p$prio"
     start.spark.sparkContext.setJobGroup(jobGroup,
       s"pipeline priority $prio", interruptOnCancel = true)
-    val (finalCtx, results) =
-      plugins.foldLeft((start, Vector.empty[PluginResult])) {
-        case ((ctx, acc), plugin) =>
+    // the one abort check: the chain stops at the first aborted context
+    @annotation.tailrec
+    def run(ctx: PipelineContext, rest: Seq[Plugin],
+            acc: Vector[PluginResult]): (PipelineContext, Vector[PluginResult]) =
+      rest match {
+        case plugin +: tail if ctx.aborted.isEmpty =>
           val t0 = System.nanoTime()
           val next =
             try {
@@ -89,8 +99,10 @@ object Runner {
                 ctx.abort(s"${plugin.name} crashed: ${e.getMessage}")
             }
           val secs = (System.nanoTime() - t0) / 1e9
-          (next, acc :+ PluginResult(plugin.name, secs, next.aborted))
+          run(next, tail, acc :+ PluginResult(plugin.name, secs, next.aborted))
+        case _ => (ctx, acc)
       }
+    val (finalCtx, results) = run(start, plugins, Vector.empty)
     start.spark.sparkContext.clearJobGroup()
     JobReport(prio, results, finalCtx)
   }

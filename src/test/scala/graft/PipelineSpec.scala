@@ -195,6 +195,15 @@ class PipelineSpec extends SparkSpec {
     assert(kept == Set("N")) // R is 50% valid -> dropped
     // areas without a checked frame are untouched
     assert(pruned.worklist.exists(_.area.contains("pacific")))
+    // NaN is fill too, as the reference's notnull() on a float array
+    // counts it: R with a NaN cell is 50% valid -> dropped
+    val nanFilled = Seq(
+      ("N", 1, 1, 1.0), ("N", 1, 2, 2.0),
+      ("R", 1, 1, Double.NaN), ("R", 1, 2, 3.0)
+    ).toDF("product", "y", "x", "value")
+    val nanPruned = CheckValidDataFraction(minFraction = 0.8)(
+      ctx.copy(frames = Map(Option("euro") -> nanFilled)))
+    assert(nanPruned.worklist.filter(_.area.contains("euro")).map(_.product).toSet == Set("N"))
   }
 
   test("valid-fraction check: one action, job count independent of area count") {
@@ -217,7 +226,7 @@ class PipelineSpec extends SparkSpec {
     def actionsAndJobs(areas: Map[Option[String], org.apache.spark.sql.DataFrame])
         : (PipelineContext, Int, Int) = {
       val actions = new java.util.concurrent.atomic.AtomicInteger
-      val l = Profiling.installAuditLog(spark, _ => actions.incrementAndGet())
+      val l = Profiling.installAudit(spark, _ => actions.incrementAndGet())
       try {
         val (out, cost) = Profiling.measure(spark) {
           CheckValidDataFraction(minFraction = 0.8)(
@@ -236,8 +245,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("audit log listener emits one line per action with exchange count") {
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    val l = Profiling.installAuditLog(spark, s => lines.synchronized { lines += s })
+    val lines = scala.collection.mutable.ArrayBuffer.empty[Profiling.ActionAudit]
+    val l = Profiling.installAudit(spark, a => lines.synchronized { lines += a })
     try {
       spark.read.parquet(s"$sf/region.parquet")
         .groupBy(col("r_regionkey")).count().collect()
@@ -247,9 +256,13 @@ class PipelineSpec extends SparkSpec {
         Thread.sleep(100); tries += 1
       }
     } finally spark.listenerManager.unregister(l)
-    val got = lines.synchronized(lines.toList)
+    val audits = lines.synchronized(lines.toList)
+    val got = audits.map(_.logLine)
     assert(got.nonEmpty, "no audit line arrived")
     assert(got.exists(s => s.contains("action=") && s.contains("exchanges=")), got.mkString("; "))
+    // one groupBy = one shuffle: counted on the typed plan, not on the
+    // adaptive plan's string form (which prints final and initial trees)
+    assert(audits.exists(a => a.action == "collect" && a.exchanges == 1), got.mkString("; "))
   }
 
   test("remote upload moves staged outputs; check_s3_file flags empty remotes") {
@@ -337,11 +350,11 @@ class PipelineSpec extends SparkSpec {
   test("aborted context short-circuits downstream plugins") {
     val ctx = PipelineContext(spark, spec, Map.empty, Map.empty,
       Worklist.expand(spec)).abort("boom")
-    val out = Seq[Plugin](
+    val reports = Runner.processJobs(ctx, Seq[Plugin](
       CreateScene(Seq(s"$sf/lineitem.parquet")),
       SaveDatasets("/nonexistent/should/not/be/created"),
-      CheckResults()).foldLeft(ctx)((c, p) => p(c))
-    assert(out.aborted.contains("boom"))
+      CheckResults()))
+    reports.foreach(r => assert(r.finalCtx.aborted.contains("boom")))
     assert(!Files.exists(Paths.get("/nonexistent/should/not/be/created")))
   }
 }

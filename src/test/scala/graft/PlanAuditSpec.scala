@@ -1,13 +1,16 @@
 package graft
 
-
-
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan,
+  UnaryExecNode, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape regression tests: the scale properties the Scaladocs claim
   * are asserted here, so a refactor that silently reintroduces a shuffle,
   * loses a broadcast, or widens a scan fails the build — "the plan you'd
   * want" is part of the contract, not a one-off audit. */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def plan(name: String): String = {
     // audit each query's OWN plan: an earlier test's persist() registers
@@ -21,6 +24,57 @@ class PlanAuditSpec extends SparkSpec {
 
   private def hashExchanges(p: String): Int =
     p.linesIterator.count(_.contains("Exchange hashpartitioning"))
+
+  /** One window of an executed query's AQE final plan. `partitionKeys`
+    * are the non-constant partition expressions — empty for a
+    * single-partition window. `aggregateInput`: the shuffle stage that
+    * feeds the window holds the output of a grouped aggregate (its rows
+    * are groups, not corpus rows); `inputRows` is that stage's row count
+    * as AQE measured it. */
+  private case class WindowShape(partitionKeys: Seq[String],
+      aggregateInput: Boolean, inputRows: Option[Long])
+
+  private def windowShapes(name: String): Seq[WindowShape] = {
+    spark.sharedState.cacheManager.clearCache()
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect() // runs the adaptive plan to its final form
+    def stage(p: SparkPlan): Option[ShuffleQueryStageExec] = p match {
+      case s: ShuffleQueryStageExec => Some(s)
+      case u: UnaryExecNode => stage(u.child)
+      case _ => None
+    }
+    def grouped(p: SparkPlan): Boolean = p match {
+      case a: BaseAggregateExec => a.groupingExpressions.nonEmpty
+      case u @ (_: ProjectExec | _: FilterExec | _: WholeStageCodegenExec |
+          _: InputAdapter) => grouped(u.children.head)
+      case _ => false
+    }
+    collectWithSubqueries(df.queryExecution.executedPlan) { case w: WindowExec => w }
+      .map { w =>
+        val feed = stage(w.child)
+        WindowShape(w.partitionSpec.filterNot(_.foldable).map(_.sql),
+          feed.exists(s => grouped(s.shuffle.child)),
+          feed.flatMap(_.getRuntimeStatistics.rowCount.map(_.toLong)))
+      }
+  }
+
+  /** "No window over corpus-sized input": every window either partitions
+    * by a data key (`allowedKey`), or is a single-partition window over a
+    * grouped aggregate whose key has at most `maxGroups` values. */
+  private def assertNoCorpusWindow(name: String, allowedKey: Option[String],
+      maxGroups: Long): Unit = {
+    val shapes = windowShapes(name)
+    assert(shapes.nonEmpty, s"$name: no window in the plan")
+    shapes.foreach {
+      case WindowShape(Seq(), agg, rows) =>
+        assert(agg, s"$name: single-partition window over ungrouped (corpus) rows")
+        assert(rows.exists(_ <= maxGroups),
+          s"$name: single-partition window input $rows exceeds $maxGroups groups")
+      case WindowShape(keys, _, _) =>
+        assert(allowedKey.exists(k => keys.exists(_.contains(k))),
+          s"$name: window partitioned by unexpected keys $keys")
+    }
+  }
 
   test("q02 selective revenue: filters push into the scan, no shuffle") {
     val p = plan("q02_selective_revenue")
@@ -451,15 +505,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q116 curriculum: rank windows are block-partitioned, never corpus-wide") {
-    val p = plan("q116_curriculum")
     // the global rank must be the q96 two-phase composition: every
     // Window either partitions by the quality block (__rk_block) or runs
-    // over the ~1001-row block-offsets table (__rk_b) — a bare
-    // Window.orderBy would hold the whole corpus in one partition
-    val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(windows.nonEmpty)
-    windows.foreach(w => assert(w.contains("__rk_b"),
-      s"corpus-wide window crept in: $w"))
+    // over the block table — one row per floor(quality·1000), quality in
+    // [0, 1], so at most 1001 blocks plus a null block. The block-table
+    // windows are the offsets prefix sum and the total row count
+    // (Ranking.globalRank's totalOut). A bare Window.orderBy would hold
+    // the whole corpus in one partition.
+    assertNoCorpusWindow("q116_curriculum", Some("__rk_block"), 1002)
   }
 
   test("q121 winnowing: per-doc selection windows, cached postings, capped join") {
@@ -670,14 +723,17 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), "q137 must never cross-join")
   }
 
-  test("q140 calibration: row-kernel scoring, 10-key agg, broadcast total") {
+  test("q140 calibration: row-kernel scoring, 10-key agg, bin-table total") {
     val p = plan("q140_calibration_audit")
-    // scoring is a zero-join row kernel; the only joins are the 1-row
-    // total broadcast back onto <=10 bin rows
+    // scoring is a zero-join row kernel; the total is a sum over the
+    // <=10 bin rows, so no join at all
     assert(!p.contains("SortMergeJoin"), "q140 must not shuffle-join")
-    assert(!p.contains("Window ["), "q140 must not use a window")
+    assert(!p.contains("Join"), "q140's total must not join back")
+    // the one window is the single-partition total over the bin
+    // aggregate: bins 0..9 plus a null bin, never corpus rows
+    assertNoCorpusWindow("q140_calibration_audit", None, 11)
     assert(hashExchanges(p) <= 2,
-      "q140 should shuffle only for the bin agg (+ the 1-row total)")
+      "q140 should shuffle only for the bin agg (+ the bin-table total)")
   }
 
   test("q139 overpass sunlight: constant-size grid, single data-sized agg") {

@@ -112,7 +112,7 @@ class PluginChecksSpec extends SparkSpec {
 
   test("OrbitModel laws: unit track vectors, inclination band, swath monotonicity") {
     val rnd = new scala.util.Random(17)
-    val orb = OrbitModel()
+    val orb = CircularOrbit()
     val maxSinLat = math.abs(math.sin(math.toRadians(orb.inclinationDeg)))
     for (_ <- 1 to 200) {
       val m = rnd.nextDouble() * 300
@@ -145,7 +145,7 @@ class PluginChecksSpec extends SparkSpec {
     val areas = Map(
       "equator" -> AreaBounds(-5.0, 5.0, -5.0, 5.0),
       "far" -> AreaBounds(70.0, 80.0, 10.0, 20.0))
-    val orbit = OrbitModel(ascNodeLonDeg = 0.0)
+    val orbit = CircularOrbit(ascNodeLonDeg = 0.0)
     def run(area: String, settings: Map[String, String]) =
       SunlightCoverage(areas, orbit = orbit)(
         ctxOf(oneProductSpec(settings, area = area), Map.empty, md)).worklist

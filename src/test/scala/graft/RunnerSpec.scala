@@ -62,6 +62,23 @@ class RunnerSpec extends SparkSpec {
     assert(reports.head.results.head.abortedAfter.isDefined)
   }
 
+  test("the chain stops at the first abort: later plugins neither run nor report") {
+    var ran = false
+    val stop = new Plugin {
+      val name = "stop_plugin"
+      def apply(ctx: PipelineContext): PipelineContext = ctx.abort("stop here")
+    }
+    val after = new Plugin {
+      val name = "after_plugin"
+      def apply(ctx: PipelineContext): PipelineContext = { ran = true; ctx }
+    }
+    val report = Runner.processJobs(baseCtx(), Seq(stop, after)).head
+    assert(!ran, "a plugin ran after the abort")
+    assert(report.results.map(_.plugin) == Seq("stop_plugin"))
+    assert(report.results.head.abortedAfter.contains("stop here"))
+    assert(report.finalCtx.aborted.contains("stop here"))
+  }
+
   test("crash handlers fire and the job aborts cleanly") {
     val boom = new Plugin {
       val name = "boom_plugin"

@@ -234,8 +234,8 @@ class TiledRasterSpec extends SparkSpec {
     // cell per partition before anything crosses the network
     assert(aboveLayout(p).contains("partial_min"),
       s"no map-side partial aggregation before the target exchange:\n$p")
-    // the tall twin resolves nearest with a per-target window sort over
-    // pixel rows; the tiled form must not
+    // nearest is an argmin aggregate, never a per-target window sort
+    // over pixel rows (the tall twin's Raster.nearest has none either)
     assert(!aboveLayout(p).contains("Window"),
       "tiled resample reintroduced the window")
   }
