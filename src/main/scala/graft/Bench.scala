@@ -36,11 +36,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // dev aid: SPARK_GRAFT_ONLY=q30,q35 restricts the run to the named
-    // queries; a value matches the qNN id exactly or up to its underscore
-    // (so "q11" selects q11_big_spenders, never q110-q119)
+    // queries (matched by SparkEntry.select)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(p => n == p || n.startsWith(p + "_"))))
+    val names = SparkEntry.select(only.getOrElse(Nil))
     // route on the RUN KIND, never on pack-vs-chunk size: children and
     // ONLY-restricted dev runs time in this JVM; everything else — i.e.
     // any run whose emit would be treated as official — orchestrates, so
@@ -59,8 +57,8 @@ object Bench {
     * result, not noise to average away). */
   private def runPack(sfDir: String, names: Seq[String],
       printLine: Boolean): Seq[(String, Either[String, Double])] = {
-    // prime eagerly: warmShared analyzes postings plans (shingle_h32 et
-    // al) before any SparkEntry.queries wrapper would prime the session
+    // prime eagerly: the family warms analyze postings plans (shingle_h32
+    // et al) before any SparkEntry.queries wrapper would prime the session
     val spark = GraftSession.prime(GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
@@ -183,7 +181,7 @@ object Bench {
       fidelitySection(sfDir, guarded, cals, guardReran)
     emit(jsonLine(sfDir, finalResults,
       fidelity ++ bucketedSection(sfDir, names) ++
-        calibrationSection(cals, finalResults)))
+        calibrationSection(sfDir, cals, finalResults)))
   }
 
   /** Noise-awareness section: the round's machine-speed calibration (the
@@ -205,12 +203,12 @@ object Bench {
     * bar, so a cpuset-throttled (or load-saturated) round announces
     * itself as drift instead of reading as a ~2× plan regression. The
     * normalization arithmetic itself is spec-covered (BenchMathSpec). */
-  private def calibrationSection(cals: Seq[Double],
+  private def calibrationSection(sfDir: String, cals: Seq[Double],
       results: Seq[(String, Either[String, Double])]): Map[String, String] = {
     if (cals.isEmpty) return Map.empty
     val cal = median(cals)
     val total = results.map(_._2.getOrElse(0.0)).sum
-    val ratio = priorCal().map(p => cal / p)
+    val ratio = priorCal(sfDir).map(p => cal / p)
     // drift bar is MULTIPLICATIVELY symmetric: a host 1.25× slower and a
     // host 1.25× faster both warn — bounds (1/1.25, 1.25). Note 1/1.25
     // IS 0.8 exactly: the old 0.8 constant was already the symmetric
@@ -236,7 +234,7 @@ object Bench {
     // calibration at 4 decimals: a sub-second unit rendered at 2 decimals
     // quantizes cal_drift (and everything normalized by it) by up to ~1-2%
     Map("calibration" -> fmt4(cal),
-      "noise_normalized_total" -> fmt(normalizedTotal(total, cal, priorCal()))) ++
+      "noise_normalized_total" -> fmt(normalizedTotal(total, cal, priorCal(sfDir)))) ++
       ratio.map(r => "cal_drift" -> fmt4(r)).toMap ++ normalized
   }
 
@@ -285,20 +283,12 @@ object Bench {
     math.min(rep(), rep())
   }
 
-  /** The `_cal` row of the most recent completed round (see
-    * [[calibrationSection]]). */
-  private def priorCal(): Option[Double] = try {
-    import scala.jdk.CollectionConverters._
-    val path = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
-    if (!java.nio.file.Files.exists(path)) None
-    else {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val rows = java.nio.file.Files.readAllLines(path).asScala
-        .filter(_.nonEmpty).map(om.readTree)
-        .filter(r => r.get("query").asText == "_cal" && r.get("sec").asDouble > 0)
-        .map(r => (r.get("round").asInt, r.get("sec").asDouble))
-      if (rows.isEmpty) None else Some(rows.maxBy(_._1)._2)
-    }
+  /** The `_cal` row of the most recent completed round of this run's
+    * shape (see [[History]]; [[calibrationSection]]). */
+  private def priorCal(sfDir: String): Option[Double] = try {
+    val cals = History.rows(cpus.toInt, History.sfOf(sfDir))
+      .filter(r => r.query == "_cal" && r.sec > 0)
+    if (cals.isEmpty) None else Some(cals.maxBy(_.round).sec)
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** UNTIMED warehouse maintenance before the pack: ANALYZE every
@@ -374,10 +364,10 @@ object Bench {
       case (n, Right(_)) if queries.SharedFrames.isConsumer(n) => n
     }
     // population 2: top-N calibration-adjusted regressions vs prior round
-    val prior = priorRoundSecs()
+    val prior = priorRoundSecs(sfDir)
     val calScale = (for {
       cal <- if (cals.nonEmpty) Some(median(cals)) else None
-      p <- priorCal()
+      p <- priorCal(sfDir)
       if p > 0 && cal > 0
     } yield math.max(0.5, math.min(3.0, cal / p))).getOrElse(1.0)
     // skip queries the outlier guard ALREADY re-ran this round: its
@@ -564,10 +554,10 @@ object Bench {
       merged: Seq[(String, Either[String, Double])],
       cals: Seq[Double] = Seq.empty)
       : (Seq[(String, Either[String, Double])], Set[String]) = {
-    val prior = priorRoundSecs()
+    val prior = priorRoundSecs(sfDir)
     val calScale = (for {
       cal <- if (cals.nonEmpty) Some(median(cals)) else None
-      p <- priorCal()
+      p <- priorCal(sfDir)
       if p > 0 && cal > 0
     } yield math.max(0.5, math.min(3.0, cal / p))).getOrElse(1.0)
     val outliers = merged.collect {
@@ -592,24 +582,16 @@ object Bench {
   }
 
   /** Per-query seconds of the most recent completed round in
-    * BENCH_HISTORY.jsonl (keys are short qNN ids). Empty when no history
+    * BENCH_HISTORY.jsonl of this run's shape (keys are short qNN ids,
+    * see [[History]]). Empty when no history
     * exists — the guard then has nothing to compare against and passes
     * everything through. Failed (-1) rows are dropped. */
-  private def priorRoundSecs(): Map[String, Double] = try {
-    import scala.jdk.CollectionConverters._
-    val path = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
-    if (!java.nio.file.Files.exists(path)) Map.empty
+  private def priorRoundSecs(sfDir: String): Map[String, Double] = try {
+    val rows = History.rows(cpus.toInt, History.sfOf(sfDir))
+    if (rows.isEmpty) Map.empty
     else {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val rows = java.nio.file.Files.readAllLines(path).asScala
-        .filter(_.nonEmpty).map(om.readTree)
-        .map(r => (r.get("round").asInt, r.get("query").asText,
-          r.get("sec").asDouble))
-      if (rows.isEmpty) Map.empty
-      else {
-        val last = rows.map(_._1).max
-        rows.collect { case (r, q, s) if r == last && s > 0 => q -> s }.toMap
-      }
+      val last = rows.map(_.round).max
+      rows.collect { case r if r.round == last && r.sec > 0 => r.query -> r.sec }.toMap
     }
   } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
@@ -654,17 +636,23 @@ object Bench {
     System.out.flush()
   }
 
-  /** Append per-query rows `{"round":N,"query":"qNN","sec":S}` to
+  /** Append per-query rows `{"round":N,"query":"qNN","sec":S,...}` to
     * BENCH_HISTORY.jsonl so round-over-round diffs don't require scraping
     * the tails of differently-shaped BENCH_r*.json files. The round
     * number is [[Rounds.inProgress]] — the convention ScaleProbe shares.
-    * Failed queries record sec -1, matching the line contract.
-    * Best-effort: history must never fail a bench run. */
+    * Every row also says which run it came from (`cpus`, `sf`, `git_sha`,
+    * and `run_kind`: "official" at the default 32 cores and sf0.1, else
+    * "side"), and a re-run replaces only its own (round, cpus, sf) rows
+    * (see [[History]]). Failed queries record sec -1, matching the line
+    * contract. Best-effort: history must never fail a bench run. */
   private def appendHistory(line: String): Unit = try {
-    val cwd = java.nio.file.Paths.get(".")
     val round = Rounds.inProgress()
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     import scala.jdk.CollectionConverters._
+    val sf = History.sfOf(root.get("sf").asText)
+    val kind = if (cpus == "32" && sf == "0.1") "official" else "side"
+    val run = s""","cpus":${cpus.toInt},"sf":${History.sfJson(sf)},""" +
+      s""""git_sha":"$gitSha","run_kind":"$kind"}"""
     // per-query drift normalization in the trend file too: "norm" is the
     // query's time in the PRIOR round's machine units (sec / cal_drift),
     // so a cross-round per-query diff can read norm-vs-sec directly.
@@ -676,23 +664,20 @@ object Bench {
         val sec = e.getValue.asDouble
         val norm = drift.filter(_ => sec >= 0)
           .map(d => s""","norm":${fmt(sec / d)}""").getOrElse("")
-        s"""{"round":$round,"query":"${e.getKey}","sec":$sec$norm}"""
+        s"""{"round":$round,"query":"${e.getKey}","sec":$sec$norm$run"""
       } ++
       // the machine-speed unit rides the same trend file as the `_cal`
       // pseudo-query, so drift normalization works per query too
       Option(root.get("calibration")).map(c =>
-        s"""{"round":$round,"query":"_cal","sec":${c.asDouble}}""")
-    // idempotent per round: a re-run replaces the round's rows instead of
-    // appending a duplicate block (the file is a trend line, not a log)
-    val path = cwd.resolve("BENCH_HISTORY.jsonl")
-    val kept = if (java.nio.file.Files.exists(path))
-      java.nio.file.Files.readAllLines(path).asScala.toSeq
-        .filterNot(_.startsWith(s"""{"round":$round,"""))
-    else Seq.empty
-    java.nio.file.Files.write(path,
-      (kept ++ rows).mkString("", "\n", "\n").getBytes("UTF-8"))
-    ()
+        s"""{"round":$round,"query":"_cal","sec":${c.asDouble}$run""")
+    History.replace(round, cpus.toInt, sf, rows)
   } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** HEAD's commit id, or "unknown" outside a git checkout. */
+  private def gitSha: String = try
+    scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+  catch { case scala.util.control.NonFatal(_) => "unknown" }
 
   /** The one-line driver contract. Keys are the short qNN ids (the part
     * before the first underscore) and values are 2-decimal seconds: the

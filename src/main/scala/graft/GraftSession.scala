@@ -63,30 +63,21 @@ object GraftSession {
     s
   }
 
-  /** The library's custom expressions (same set the
-    * `spark.sql.extensions=graft.plans.GraftExtensions` entry point
-    * injects, for sessions built without it). Idempotent. */
+  /** Install [[graft.plans.GraftExtensions]]' functions and optimizer
+    * rules on a session built without the
+    * `spark.sql.extensions=graft.plans.GraftExtensions` entry point.
+    * Idempotent. */
   def registerFunctions(spark: SparkSession): Unit = {
-    graft.functions.Compose.register(spark)
-    graft.functions.VecOps.register(spark)
-    graft.functions.HashExprs.register(spark)
-    graft.functions.NGramStats.register(spark)
-    graft.functions.ShingleH32.register(spark)
-    graft.functions.RollingFp.register(spark)
-    graft.functions.WsTokens.register(spark)
-    graft.functions.NfcNormalize.register(spark)
-    graft.functions.RxCount.register(spark)
-    // plan-rewrite rules (same set GraftExtensions injects at build time);
+    val registry = spark.sessionState.functionRegistry
+    graft.plans.GraftExtensions.functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
     // extraOptimizations is the runtime hook for an existing session
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteMd5H32))
+    val missing = graft.plans.GraftExtensions.rules
+      .filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty)
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteMd5H32
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteRegexpCount))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteRegexpCount
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.StatsBroadcastJoins))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.StatsBroadcastJoins
+        spark.experimental.extraOptimizations ++ missing
   }
 
   // prime once per session: SparkEntry wraps every query invocation in

@@ -51,9 +51,8 @@ object QTime {
     val spark = GraftSession.prime(raw)
     val failed = args.toSeq match {
       case "plan" +: rest =>
-        val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-        val names = SparkEntry.queries.keys.toSeq.sorted
-          .filter(n => only.forall(_.exists(p => n == p || n.startsWith(p + "_"))))
+        val names = SparkEntry.select(
+          sys.env.get("SPARK_GRAFT_ONLY").fold(Seq.empty[String])(_.split(",").toSeq))
         writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r14"),
           rest.lift(1).getOrElse("_before"), names, "plandump")(
           _.queryExecution.explainString(ExplainMode.fromString("formatted")))

@@ -37,7 +37,7 @@ object ScaleProbe {
     val sfBig = sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/testdata/sf0.1")
     val bar = sys.env.getOrElse("SPARK_GRAFT_SCALE_BAR", "15").toDouble
     val topN = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "20").toInt
-    val names = pickQueries(topN)
+    val names = pickQueries(topN, sfBig)
     require(names.nonEmpty, "no queries selected (history missing and no override)")
     val spark = GraftSession.prime(GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate())
@@ -132,28 +132,22 @@ object ScaleProbe {
   }
 
 
-  /** Top-N most expensive queries of the latest BENCH_HISTORY round,
-    * mapped back to full names; SPARK_GRAFT_SCALE_ONLY overrides. */
-  private def pickQueries(topN: Int): Seq[String] = {
+  /** Top-N most expensive queries of the latest BENCH_HISTORY round of
+    * this probe's (cpus, sf) shape, mapped back to full names;
+    * SPARK_GRAFT_SCALE_ONLY overrides. */
+  private def pickQueries(topN: Int, sfBig: String): Seq[String] = {
     val all = SparkEntry.queries.keys.toSeq.sorted
     sys.env.get("SPARK_GRAFT_SCALE_ONLY") match {
-      case Some(csv) =>
-        val pats = csv.split(",").toSeq
-        all.filter(n => pats.exists(p => n == p || n.startsWith(p + "_")))
+      case Some(csv) => SparkEntry.select(csv.split(",").toSeq)
       case None =>
-        import scala.jdk.CollectionConverters._
-        val path = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
-        if (!java.nio.file.Files.exists(path)) Seq.empty
+        // the bench rows of this probe's shape: its cores, its big sf
+        val rows = History.rows(cpus.toInt, History.sfOf(sfBig))
+        if (rows.isEmpty) Seq.empty
         else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val rows = java.nio.file.Files.readAllLines(path).asScala
-            .filter(_.nonEmpty).map(om.readTree)
-            .map(r => (r.get("round").asInt, r.get("query").asText,
-              r.get("sec").asDouble))
-          val last = rows.map(_._1).foldLeft(0)(math.max)
+          val last = rows.map(_.round).max
           val byId = all.groupBy(_.takeWhile(_ != '_')).view.mapValues(_.head)
-          val top = rows.collect { case (r, q, s) if r == last && s > 0 => (q, s) }
-            .sortBy(-_._2).map(_._1).flatMap(byId.get).distinct.take(topN).toSeq
+          val top = rows.filter(r => r.round == last && r.sec > 0)
+            .sortBy(-_.sec).map(_.query).flatMap(byId.get).distinct.take(topN)
           // ALWAYS probe two families on top of the expensive ones:
           // (a) the shared-postings consumers — their timed cost is
           // warm-postings query cost, exactly where a hidden superlinear
@@ -167,12 +161,12 @@ object ScaleProbe {
           // would silently skip exactly the queries that most need a
           // first slope (round 13's q162 got missed this way).
           val inProgress = Rounds.inProgress()
-          val baseRound = rows.map(_._1).filter(_ < inProgress)
+          val baseRound = rows.map(_.round).filter(_ < inProgress)
             .foldLeft(0)(math.max) match {
             case 0 => last // no completed round on file: fall back
             case r => r
           }
-          val lastIds = rows.collect { case (r, q, _) if r == baseRound => q }.toSet
+          val lastIds = rows.filter(_.round == baseRound).map(_.query).toSet
           val mandatory = all.filter(n => queries.SharedFrames.isConsumer(n) ||
             !lastIds.contains(n.takeWhile(_ != '_')))
           (top ++ mandatory).distinct

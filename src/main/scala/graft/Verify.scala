@@ -7,25 +7,16 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run (and dump oracle SQL for) only these
-    // queries — dev iteration aid; the driver always passes exactly two.
-    // Same matching as Bench's SPARK_GRAFT_ONLY: a full name or its qNN
-    // id up to the underscore ("q11" selects q11_big_spenders, never
-    // q110-q119) — and an arg matching NOTHING fails loudly instead of
-    // dumping an empty run that exits 0
-    val only = args.drop(2).toSeq
-    def keep(name: String): Boolean =
-      only.isEmpty || only.exists(p => name == p || name.startsWith(p + "_"))
-    only.foreach { p =>
-      require(SparkEntry.queries.keys.exists(n => n == p || n.startsWith(p + "_")),
-        s"verify filter '$p' matches no query")
-    }
+    // queries (matched by SparkEntry.select) — dev iteration aid; a
+    // correctness run passes exactly the two dirs
+    val names = SparkEntry.select(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -47,8 +38,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = names.map(k => s"${q(k)}: ${q(SparkEntry.oracleSql(k))}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

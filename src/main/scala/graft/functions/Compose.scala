@@ -4,7 +4,6 @@ import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.MapData
@@ -85,19 +84,6 @@ object Compose {
     }
     UTF8String.fromString(compose(pattern.toString, m))
   }
-
-  /** Register `compose_tpl(pattern, map<string,string>)` on a session so it
-    * is usable from SQL and `expr(...)`. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("compose_tpl")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "compose_tpl",
-      exprs => {
-        require(exprs.length == 2, "compose_tpl(pattern, map) takes 2 arguments")
-        ComposeExpr(exprs.head, exprs(1))
-      },
-      "built-in")
 }
 
 /** Native Catalyst expression for [[Compose.compose]] over a

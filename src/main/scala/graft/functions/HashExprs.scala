@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -37,13 +36,6 @@ object HashExprs {
     require(exprs.length == 1, "h32_md5(s) takes 1 argument")
     H32Md5(exprs.head)
   }
-
-  /** Register `h32_md5` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("h32_md5")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "h32_md5", builder, "built-in")
 }
 
 /** `h32_md5(string) -> bigint`; see [[HashExprs]]. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -67,13 +66,6 @@ object NGramStats {
     require(exprs.length == 2, "ngram_stats(tokens, n) takes 2 arguments")
     NGramStatsExpr(exprs.head, exprs(1))
   }
-
-  /** Register `ngram_stats` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("ngram_stats")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "ngram_stats", builder, "built-in")
 }
 
 /** `ngram_stats(array<string>, int) -> struct`; see [[NGramStats]]. */

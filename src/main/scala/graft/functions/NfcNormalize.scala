@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -36,13 +35,6 @@ object NfcNormalize {
     require(exprs.length == 1, "nfc_normalize(text) takes 1 argument")
     NfcNormalizeExpr(exprs.head)
   }
-
-  /** Register `nfc_normalize` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nfc_normalize", builder, "built-in")
 }
 
 /** `nfc_normalize(string) -> string`; see [[NfcNormalize]]. */

@@ -1,7 +1,6 @@
 package graft.functions
 
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -50,13 +49,6 @@ object RollingFp {
     require(exprs.length == 2, "rolling_fp(toks, b) takes 2 arguments")
     RollingFpExpr(exprs.head, exprs(1))
   }
-
-  /** Register `rolling_fp` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_fp")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "rolling_fp", builder, "built-in")
 }
 
 /** `rolling_fp(array<string>, bigint) -> bigint`; see [[RollingFp]]. */

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -63,13 +62,6 @@ object RxCount {
     require(exprs.length == 2, "rx_count(s, pattern) takes 2 arguments")
     RxCountExpr(exprs.head, exprs(1))
   }
-
-  /** Register `rx_count` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("rx_count")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "rx_count", builder, "built-in")
 }
 
 /** `rx_count(string, pattern) -> int`; see [[RxCount]]. */

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -90,13 +89,6 @@ object ShingleH32 {
     require(exprs.length == 2, "shingle_h32(text, n) takes 2 arguments")
     ShingleH32Expr(exprs.head, exprs(1))
   }
-
-  /** Register `shingle_h32` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_h32")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_h32", builder, "built-in")
 }
 
 /** `shingle_h32(string, int) -> array<bigint>`; see [[ShingleH32]]. */

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -44,8 +44,8 @@ object VecOps {
     acc
   }
 
-  /** Column form; requires [[register]] (or the extensions entry point)
-    * to have installed `dot_f64` on the session. */
+  /** Column form; requires [[graft.GraftSession.registerFunctions]] (or
+    * the extensions entry point) to have installed `dot_f64`. */
   def dotCol(a: Column, b: Column): Column = call_function("dot_f64", a, b)
 
   /** Row-level kernel for [[OuterF64]]: the full n×n outer-product grid
@@ -70,7 +70,7 @@ object VecOps {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
 
-  /** Column form of the self outer product; requires [[register]]. */
+  /** Column form of the self outer product; same requirement. */
   def outerCol(a: Column): Column = call_function("outer_f64", a)
 
   def builder(exprs: Seq[Expression]): Expression = {
@@ -81,18 +81,6 @@ object VecOps {
   def outerBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, "outer_f64(a) takes 1 argument")
     OuterF64(exprs.head)
-  }
-
-  /** Register `dot_f64` / `outer_f64` on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dot_f64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_f64", builder, "built-in")
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("outer_f64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "outer_f64", outerBuilder, "built-in")
   }
 }
 

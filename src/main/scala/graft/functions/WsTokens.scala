@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -45,13 +44,6 @@ object WsTokens {
     require(exprs.length == 1, "ws_tokens(text) takes 1 argument")
     WsTokensExpr(exprs.head)
   }
-
-  /** Register `ws_tokens` on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("ws_tokens")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "ws_tokens", builder, "built-in")
 }
 
 /** `ws_tokens(string) -> array<string>`; see [[WsTokens]]. */

@@ -3,7 +3,9 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ComposeExpr, DotF64, H32Md5, HashExprs, NfcNormalize, NfcNormalizeExpr, NGramStats, NGramStatsExpr, OuterF64, RollingFp, RollingFpExpr, ShingleH32, ShingleH32Expr, VecOps, WsTokens, WsTokensExpr}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import graft.functions._
 
 /** Session-extensions entry point — makes the library installable without
   * code changes:
@@ -12,92 +14,46 @@ import graft.functions.{ComposeExpr, DotF64, H32Md5, HashExprs, NfcNormalize, Nf
   *   spark.sql.extensions=graft.plans.GraftExtensions
   * }}}
   *
-  * Injects the engine's custom expressions into every new session's
-  * function registry (currently `compose_tpl`; future custom rules /
-  * strategies — SURVEY §4 found none *required* for parity — would be
-  * injected here too via `injectOptimizerRule` / `injectPlannerStrategy`).
-  * For an already-running session, [[graft.functions.Compose.register]]
-  * does the same registration imperatively.
+  * Injects the engine's custom expressions and optimizer rules into every
+  * new session. [[GraftExtensions.functions]] and [[GraftExtensions.rules]]
+  * are the one install list: [[graft.GraftSession.registerFunctions]]
+  * installs the same list on an already-running session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.composeTpl)
-    ext.injectFunction(GraftExtensions.dotF64)
-    ext.injectFunction(GraftExtensions.outerF64)
-    ext.injectFunction(GraftExtensions.h32Md5)
-    ext.injectFunction(GraftExtensions.ngramStats)
-    ext.injectFunction(GraftExtensions.shingleH32)
-    ext.injectFunction(GraftExtensions.rollingFp)
-    ext.injectFunction(GraftExtensions.wsTokens)
-    ext.injectFunction(GraftExtensions.nfcNormalize)
-    ext.injectFunction(GraftExtensions.rxCount)
-    ext.injectOptimizerRule(_ => RewriteMd5H32)
-    ext.injectOptimizerRule(_ => RewriteRegexpCount)
-    ext.injectOptimizerRule(_ => StatsBroadcastJoins)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 
 object GraftExtensions {
-  /** (name, info, builder) triple for `compose_tpl(pattern, map)`. */
-  val composeTpl: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("compose_tpl"),
-      new ExpressionInfo(classOf[ComposeExpr].getName, "compose_tpl"),
-      exprs => {
-        require(exprs.length == 2, "compose_tpl(pattern, map) takes 2 arguments")
-        ComposeExpr(exprs.head, exprs(1))
-      })
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  /** (name, info, builder) triple for `dot_f64(a, b)`. */
-  val dotF64: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[DotF64].getName, "dot_f64"),
-      VecOps.builder _)
+  private def fn(name: String, cls: Class[_],
+      builder: Seq[Expression] => Expression): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
 
-  /** (name, info, builder) triple for `outer_f64(a)`. */
-  val outerF64: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("outer_f64"),
-      new ExpressionInfo(classOf[OuterF64].getName, "outer_f64"),
-      VecOps.outerBuilder _)
+  /** `compose_tpl(pattern, map)`. */
+  val composeTpl: FunctionDescription =
+    fn("compose_tpl", classOf[ComposeExpr], exprs => {
+      require(exprs.length == 2, "compose_tpl(pattern, map) takes 2 arguments")
+      ComposeExpr(exprs.head, exprs(1))
+    })
 
-  /** (name, info, builder) triple for `h32_md5(s)`. */
-  val h32Md5: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("h32_md5"),
-      new ExpressionInfo(classOf[H32Md5].getName, "h32_md5"),
-      HashExprs.builder _)
+  /** Every custom SQL function, as (name, info, builder). */
+  val functions: Seq[FunctionDescription] = Seq(
+    composeTpl,
+    fn("dot_f64", classOf[DotF64], VecOps.builder),
+    fn("outer_f64", classOf[OuterF64], VecOps.outerBuilder),
+    fn("h32_md5", classOf[H32Md5], HashExprs.builder),
+    fn("ngram_stats", classOf[NGramStatsExpr], NGramStats.builder),
+    fn("shingle_h32", classOf[ShingleH32Expr], ShingleH32.builder),
+    fn("rolling_fp", classOf[RollingFpExpr], RollingFp.builder),
+    fn("ws_tokens", classOf[WsTokensExpr], WsTokens.builder),
+    fn("nfc_normalize", classOf[NfcNormalizeExpr], NfcNormalize.builder),
+    fn("rx_count", classOf[RxCountExpr], RxCount.builder))
 
-  /** (name, info, builder) triple for `ngram_stats(tokens, n)`. */
-  val ngramStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ngram_stats"),
-      new ExpressionInfo(classOf[NGramStatsExpr].getName, "ngram_stats"),
-      NGramStats.builder _)
-
-  /** (name, info, builder) triple for `rolling_fp(toks, b)`. */
-  val rollingFp: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("rolling_fp"),
-      new ExpressionInfo(classOf[RollingFpExpr].getName, "rolling_fp"),
-      RollingFp.builder _)
-
-  /** (name, info, builder) triple for `ws_tokens(text)`. */
-  val wsTokens: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ws_tokens"),
-      new ExpressionInfo(classOf[WsTokensExpr].getName, "ws_tokens"),
-      WsTokens.builder _)
-
-  /** (name, info, builder) triple for `nfc_normalize(text)`. */
-  val nfcNormalize: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalizeExpr].getName, "nfc_normalize"),
-      NfcNormalize.builder _)
-
-  /** (name, info, builder) triple for `shingle_h32(text, n)`. */
-  val shingleH32: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("shingle_h32"),
-      new ExpressionInfo(classOf[ShingleH32Expr].getName, "shingle_h32"),
-      ShingleH32.builder _)
-
-  /** (name, info, builder) triple for `rx_count(s, pattern)`. */
-  val rxCount: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("rx_count"),
-      new ExpressionInfo(classOf[graft.functions.RxCountExpr].getName, "rx_count"),
-      graft.functions.RxCount.builder _)
+  /** Every custom optimizer rule. */
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(RewriteMd5H32, RewriteRegexpCount, StatsBroadcastJoins)
 }

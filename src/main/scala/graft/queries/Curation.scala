@@ -12,8 +12,7 @@ import graft.functions.VecOps.dotCol
   * RNG, so assignments are reproducible across runs, engines, and
   * cluster sizes (the property that makes a 100 TB split auditable).
   */
-object Curation {
-  type Q = (SparkSession, String) => DataFrame
+object Curation extends QueryPack {
 
   /** Shared 8-gram postings: distinct (doc_id, shingle-h32), doc_id-
     * partitioned and persisted once per session. q56 (decontamination),
@@ -41,13 +40,6 @@ object Curation {
   private[queries] def sh8Postings(spark: SparkSession, dir: String): DataFrame =
     PostingsStore.lookup(spark, dir, "sh8").getOrElse(
       SharedFrames.cached(spark, dir, "sh8") { sh8PostingsPlan(spark, dir) })
-
-  /** Materialize the 8-gram postings if not currently cached — see
-    * [[SharedFrames.warmFor]]. */
-  private[graft] def warmShared(spark: SparkSession, dir: String): Unit = {
-    sh8Postings(spark, dir).count()
-    ()
-  }
 
   /** Deterministic train/val/test split by content-independent key hash
     * (90/5/5): split = h32("split_" + doc_id) % 100. Per-split stats
@@ -2184,67 +2176,35 @@ object Curation {
       |GROUP BY method_a, method_b
       |ORDER BY method_a, method_b""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q149_decontam_agreement" -> (q149DecontamAgreement _),
-    "q148_bootstrap_ci" -> (q148BootstrapCi _),
-    "q122_dedup_by_source" -> (q122DedupBySource _),
-    "q141_label_agreement" -> (q141LabelAgreement _),
-    "q142_shuffle_uniformity" -> (q142ShuffleUniformity _),
-    "q145_padding_waste" -> (q145PaddingWaste _),
-    "q147_uncertainty_sample" -> (q147UncertaintySample _),
-    "q140_calibration_audit" -> (q140CalibrationAudit _),
-    "q52_data_split" -> (q52DataSplit _),
-    "q53_balanced_sample" -> (q53BalancedSample _),
-    "q56_contamination" -> (q56Contamination _),
-    "q60_curated_corpus" -> (q60CuratedCorpus _),
-    "q62_mix_weights" -> (q62MixWeights _),
-    "q65_sequence_packing" -> (q65SequencePacking _),
-    "q73_weighted_sample" -> (q73WeightedSample _),
-    "q75_shard_assign" -> (q75ShardAssign _),
-    "q88_importance_weights" -> (q88ImportanceWeights _),
-    "q97_winsorized_stats" -> (q97WinsorizedStats _),
-    "q98_source_overlap" -> (q98SourceOverlap _),
-    "q101_quality_blend" -> (q101QualityBlend _),
-    "q107_novelty_curve" -> (q107NoveltyCurve _),
-    "q110_logistic_step" -> (q110LogisticStep _),
-    "q113_effective_size" -> (q113EffectiveSize _),
-    "q116_curriculum" -> (q116Curriculum _),
-    "q118_epoch_alloc" -> (q118EpochAllocation _),
-    "q114_concentration" -> (q114Concentration _),
-    "q124_bloom_decontam" -> (q124BloomDecontam _),
-    "q125_chunk_sliding" -> (q125ChunkSliding _),
-    "q128_truncation_loss" -> (q128TruncationLoss _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q122_dedup_by_source" -> q122Sql,
-    "q141_label_agreement" -> q141Sql,
-    "q142_shuffle_uniformity" -> q142Sql,
-    "q145_padding_waste" -> q145Sql,
-    "q147_uncertainty_sample" -> q147Sql,
-    "q148_bootstrap_ci" -> q148Sql,
-    "q149_decontam_agreement" -> q149Sql,
-    "q140_calibration_audit" -> q140Sql,
-    "q52_data_split" -> q52Sql,
-    "q53_balanced_sample" -> q53Sql,
-    "q56_contamination" -> q56Sql,
-    "q60_curated_corpus" -> q60Sql,
-    "q62_mix_weights" -> q62Sql,
-    "q65_sequence_packing" -> q65Sql,
-    "q73_weighted_sample" -> q73Sql,
-    "q75_shard_assign" -> q75Sql,
-    "q88_importance_weights" -> q88Sql,
-    "q97_winsorized_stats" -> q97Sql,
-    "q98_source_overlap" -> q98Sql,
-    "q101_quality_blend" -> q101Sql,
-    "q107_novelty_curve" -> q107Sql,
-    "q110_logistic_step" -> q110Sql,
-    "q113_effective_size" -> q113Sql,
-    "q116_curriculum" -> q116Sql,
-    "q118_epoch_alloc" -> q118Sql,
-    "q114_concentration" -> q114Sql,
-    "q124_bloom_decontam" -> q124Sql,
-    "q125_chunk_sliding" -> q125Sql,
-    "q128_truncation_loss" -> q128Sql
+  val declared: Seq[Query] = Seq(
+    Query("q149_decontam_agreement", q149DecontamAgreement, q149Sql, SharedFrames.Postings8),
+    Query("q148_bootstrap_ci", q148BootstrapCi, q148Sql),
+    Query("q122_dedup_by_source", q122DedupBySource, q122Sql),
+    Query("q141_label_agreement", q141LabelAgreement, q141Sql),
+    Query("q142_shuffle_uniformity", q142ShuffleUniformity, q142Sql),
+    Query("q145_padding_waste", q145PaddingWaste, q145Sql),
+    Query("q147_uncertainty_sample", q147UncertaintySample, q147Sql),
+    Query("q140_calibration_audit", q140CalibrationAudit, q140Sql),
+    Query("q52_data_split", q52DataSplit, q52Sql),
+    Query("q53_balanced_sample", q53BalancedSample, q53Sql),
+    Query("q56_contamination", q56Contamination, q56Sql, SharedFrames.Postings8),
+    Query("q60_curated_corpus", q60CuratedCorpus, q60Sql),
+    Query("q62_mix_weights", q62MixWeights, q62Sql),
+    Query("q65_sequence_packing", q65SequencePacking, q65Sql),
+    Query("q73_weighted_sample", q73WeightedSample, q73Sql),
+    Query("q75_shard_assign", q75ShardAssign, q75Sql),
+    Query("q88_importance_weights", q88ImportanceWeights, q88Sql),
+    Query("q97_winsorized_stats", q97WinsorizedStats, q97Sql),
+    Query("q98_source_overlap", q98SourceOverlap, q98Sql, SharedFrames.Postings3),
+    Query("q101_quality_blend", q101QualityBlend, q101Sql, SharedFrames.BigramLm),
+    Query("q107_novelty_curve", q107NoveltyCurve, q107Sql, SharedFrames.Postings8),
+    Query("q110_logistic_step", q110LogisticStep, q110Sql),
+    Query("q113_effective_size", q113EffectiveSize, q113Sql),
+    Query("q116_curriculum", q116Curriculum, q116Sql),
+    Query("q118_epoch_alloc", q118EpochAllocation, q118Sql),
+    Query("q114_concentration", q114Concentration, q114Sql),
+    Query("q124_bloom_decontam", q124BloomDecontam, q124Sql, SharedFrames.Postings8),
+    Query("q125_chunk_sliding", q125ChunkSliding, q125Sql),
+    Query("q128_truncation_loss", q128TruncationLoss, q128Sql)
   )
 }

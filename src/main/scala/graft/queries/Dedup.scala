@@ -17,8 +17,7 @@ import graft.functions.TextFns._
   * All hashing is the cross-engine md5-h32 (see [[graft.functions.TextFns]])
   * so every query has an exact DuckDB oracle.
   */
-object Dedup {
-  type Q = (SparkSession, String) => DataFrame
+object Dedup extends QueryPack {
 
   /** MinHash permutation family (i, a, b): mh_i = min over shingles of
     * (a*h + b) % P. Constants are literal here AND interpolated into the
@@ -45,19 +44,6 @@ object Dedup {
   private def shared(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
     SharedFrames.cached(spark, dir, key)(build)
-
-  /** Materialize the 3-gram postings frames if (and only if) they are
-    * not currently cached — a fast no-op when warm. Call sites:
-    * [[SharedFrames.warmFor]] from Bench/QTime, outside the timed
-    * region. */
-  private[graft] def warmShared(spark: SparkSession, dir: String): Unit = {
-    // the capped count materializes postings + dfCounts on the way (its
-    // anti-join reads both); the postings count is then a warm no-op
-    cappedShPostings(spark, dir).count()
-    shPostings(spark, dir).count()
-    shBands(spark, dir).count()
-    ()
-  }
 
   /** Spark side of the same postings, as a PURE plan (no memoization):
     * distinct (doc_id, shingle-h32).
@@ -143,7 +129,7 @@ object Dedup {
     * instead of re-running the anti-join per use. The broadcast anti-join
     * preserves the doc_id partitioning of the raw postings, so per-doc
     * aggregations over the capped table stay exchange-free. */
-  private def cappedShPostings(spark: SparkSession, dir: String): DataFrame =
+  private[queries] def cappedShPostings(spark: SparkSession, dir: String): DataFrame =
     PostingsStore.lookup(spark, dir, "capped").getOrElse(
       shared(spark, dir, "capped") {
         shPostings(spark, dir)
@@ -183,19 +169,12 @@ object Dedup {
   /** Df-capped positional postings, persisted after the anti-join —
     * what both q83 self-join sides read. Bucketed-mode consumers get
     * the on-disk `pos8c` table straight off the h-bucketed scan. */
-  private def cappedPos8Postings(spark: SparkSession, dir: String): DataFrame =
+  private[queries] def cappedPos8Postings(spark: SparkSession, dir: String): DataFrame =
     PostingsStore.lookup(spark, dir, "pos8c").getOrElse(
       shared(spark, dir, "pos8c") {
         val post = pos8Postings(spark, dir)
         post.join(broadcast(hotPos8Over(post)), Seq("h"), "left_anti")
       })
-
-  /** Materialize the positional family if not warm (see
-    * [[SharedFrames.warmFor]]). */
-  private[graft] def warmPos8Shared(spark: SparkSession, dir: String): Unit = {
-    cappedPos8Postings(spark, dir).count()
-    ()
-  }
 
   /** Inverted-index candidate pairs over a postings frame: the h-equi
     * self-join with the `da < db` orientation that confines the quadratic
@@ -374,8 +353,8 @@ object Dedup {
     * cache (never a corpus-sized broadcast; AQE picks the join strategy),
     * and the (source, h) distinct is the same reduction a direct build
     * would pay anyway. Memoized under the [[SharedFrames]] warm-bench
-    * contract ([[SharedFrames.consumersSrc]]). */
-  private def srcPostings(spark: SparkSession, dir: String): DataFrame =
+    * contract ([[SharedFrames.SourcePostings]]). */
+  private[queries] def srcPostings(spark: SparkSession, dir: String): DataFrame =
     shared(spark, dir, "srcsh") {
       shPostings(spark, dir)
         .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")),
@@ -383,20 +362,6 @@ object Dedup {
         .select(col("source"), col("h"))
         .distinct()
     }
-
-  /** Untimed warm-up of [[srcPostings]] (warms [[shPostings]] on the
-    * way) — called by [[SharedFrames.warmFor]] from Bench/QTime. */
-  private[graft] def warmSrcShared(spark: SparkSession, dir: String): Unit = {
-    srcPostings(spark, dir).count()
-    ()
-  }
-
-  /** Untimed warm-up of [[paraInstances]] — called by
-    * [[SharedFrames.warmFor]] for the paragraph-family consumers. */
-  private[graft] def warmParaShared(spark: SparkSession, dir: String): Unit = {
-    paraInstances(spark, dir).count()
-    ()
-  }
 
   /** Band table of an arbitrary (doc_id, text) frame — the entry point a
     * batch indexing job uses to build or refresh the persisted LSH index
@@ -414,7 +379,7 @@ object Dedup {
     * memoized and warmed untimed with the postings family; the timed
     * cost of those queries is then the band equi-join + verify — the
     * work a production run actually repeats against a stored index. */
-  private def shBands(spark: SparkSession, dir: String): DataFrame =
+  private[queries] def shBands(spark: SparkSession, dir: String): DataFrame =
     PostingsStore.lookup(spark, dir, "bands").getOrElse(
       shared(spark, dir, "bands") { bandTable(shPostings(spark, dir)) })
 
@@ -2142,59 +2107,31 @@ object Dedup {
       |FROM bins
       |ORDER BY decile""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q121_winnowing" -> (q121Winnowing _),
-    "q143_jaccard_sweep" -> (q143JaccardSweep _),
-    "q137_paragraph_dedup" -> (q137ParagraphDedup _),
-    "q152_boilerplate_removal" -> (q152BoilerplateRemoval _),
-    "q28_exact_dedup" -> (q28ExactDedup _),
-    "q29_ngram_jaccard" -> (q29NgramJaccard _),
-    "q153_cluster_representative" -> (q153ClusterRepresentative _),
-    "q30_minhash_lsh" -> (q30MinhashLsh _),
-    "q31_simhash" -> (q31Simhash _),
-    "q32_embedding_neardup" -> (q32EmbeddingNeardup _),
-    "q59_dup_clusters" -> (q59DupClusters _),
-    "q135_leakage_safe_folds" -> (q135LeakageSafeFolds _),
-    "q138_curation_funnel" -> (q138CurationFunnel _),
-    "q76_cdc_chunking" -> (q76CdcChunking _),
-    "q80_semdedup" -> (q80SemDedup _),
-    "q83_dup_spans" -> (q83DupSpans _),
-    "q93_prefix_dup" -> (q93PrefixDup _),
-    "q96_sorted_neighborhood" -> (q96SortedNeighborhood _),
-    "q100_incremental_dedup" -> (q100IncrementalDedup _),
-    "q108_containment" -> (q108Containment _),
-    "q111_minhash_drift" -> (q111MinhashDrift _),
-    "q119_lsh_recall" -> (q119LshRecall _),
-    "q129_lsh_precision" -> (q129LshPrecision _),
-    "q120_cap_audit" -> (q120CapAudit _),
-    "q104_crosslang_dup" -> (q104CrossLangDup _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q121_winnowing" -> q121Sql,
-    "q143_jaccard_sweep" -> q143Sql,
-    "q137_paragraph_dedup" -> q137Sql,
-    "q153_cluster_representative" -> q153Sql,
-    "q152_boilerplate_removal" -> q152Sql,
-    "q28_exact_dedup" -> q28Sql,
-    "q29_ngram_jaccard" -> q29Sql,
-    "q30_minhash_lsh" -> q30Sql,
-    "q31_simhash" -> q31Sql,
-    "q32_embedding_neardup" -> q32Sql,
-    "q59_dup_clusters" -> q59Sql,
-    "q135_leakage_safe_folds" -> q135Sql,
-    "q138_curation_funnel" -> q138Sql,
-    "q76_cdc_chunking" -> q76Sql,
-    "q80_semdedup" -> q80Sql,
-    "q83_dup_spans" -> q83Sql,
-    "q93_prefix_dup" -> q93Sql,
-    "q96_sorted_neighborhood" -> q96Sql,
-    "q100_incremental_dedup" -> q100Sql,
-    "q108_containment" -> q108Sql,
-    "q111_minhash_drift" -> q111Sql,
-    "q119_lsh_recall" -> q119Sql,
-    "q129_lsh_precision" -> q129Sql,
-    "q120_cap_audit" -> q120Sql,
-    "q104_crosslang_dup" -> q104Sql
+  val declared: Seq[Query] = Seq(
+    Query("q121_winnowing", q121Winnowing, q121Sql),
+    Query("q143_jaccard_sweep", q143JaccardSweep, q143Sql, SharedFrames.Postings3),
+    Query("q137_paragraph_dedup", q137ParagraphDedup, q137Sql, SharedFrames.Paragraphs),
+    Query("q152_boilerplate_removal", q152BoilerplateRemoval, q152Sql, SharedFrames.Paragraphs),
+    Query("q28_exact_dedup", q28ExactDedup, q28Sql),
+    Query("q29_ngram_jaccard", q29NgramJaccard, q29Sql, SharedFrames.Postings3),
+    Query("q153_cluster_representative", q153ClusterRepresentative, q153Sql),
+    Query("q30_minhash_lsh", q30MinhashLsh, q30Sql, SharedFrames.Postings3),
+    Query("q31_simhash", q31Simhash, q31Sql, SharedFrames.Postings3),
+    Query("q32_embedding_neardup", q32EmbeddingNeardup, q32Sql),
+    Query("q59_dup_clusters", q59DupClusters, q59Sql),
+    Query("q135_leakage_safe_folds", q135LeakageSafeFolds, q135Sql),
+    Query("q138_curation_funnel", q138CurationFunnel, q138Sql),
+    Query("q76_cdc_chunking", q76CdcChunking, q76Sql),
+    Query("q80_semdedup", q80SemDedup, q80Sql),
+    Query("q83_dup_spans", q83DupSpans, q83Sql, SharedFrames.Spans8),
+    Query("q93_prefix_dup", q93PrefixDup, q93Sql),
+    Query("q96_sorted_neighborhood", q96SortedNeighborhood, q96Sql),
+    Query("q100_incremental_dedup", q100IncrementalDedup, q100Sql),
+    Query("q108_containment", q108Containment, q108Sql, SharedFrames.Postings3),
+    Query("q111_minhash_drift", q111MinhashDrift, q111Sql, SharedFrames.SourcePostings),
+    Query("q119_lsh_recall", q119LshRecall, q119Sql, SharedFrames.Postings3),
+    Query("q129_lsh_precision", q129LshPrecision, q129Sql, SharedFrames.Postings3),
+    Query("q120_cap_audit", q120CapAudit, q120Sql, SharedFrames.Postings3),
+    Query("q104_crosslang_dup", q104CrossLangDup, q104Sql)
   )
 }

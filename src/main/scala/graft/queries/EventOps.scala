@@ -10,8 +10,7 @@ import graft.operators.AsOfJoin
   * SURVEY §2.2 / §2.6, expressed as batch-checkable queries; the streaming
   * runner in graft.streaming reuses the same transformations).
   */
-object EventOps {
-  type Q = (SparkSession, String) => DataFrame
+object EventOps extends QueryPack {
 
   /** JSON metadata extraction (reference: `gen_dict_extract` /
     * `_extract_filenames` pulling keys out of message JSON,
@@ -790,43 +789,23 @@ object EventOps {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q17_event_json" -> (q17EventJson _),
-    "q18_hourly_volume" -> (q18HourlyVolume _),
-    "q19_sessionize" -> (q19Sessionize _),
-    "q20_asof_signup" -> (q20AsofSignup _),
-    "q21_admission_window" -> (q21AdmissionWindow _),
-    "q22_metadata_alias" -> (q22MetadataAlias _),
-    "q47_funnel" -> (q47Funnel _),
-    "q48_interval_join" -> (q48IntervalJoin _),
-    "q79_changelog_compact" -> (q79ChangelogCompact _),
-    "q154_scd2_intervals" -> (q154Scd2Intervals _),
-    "q157_scd2_probe" -> (q157Scd2Probe _),
-    "q159_time_to_event" -> (q159TimeToEvent _),
-    "q82_gap_fill" -> (q82GapFill _),
-    "q85_rolling_actives" -> (q85RollingActives _),
-    "q90_retention_cohorts" -> (q90RetentionCohorts _),
-    "q91_outlier_days" -> (q91OutlierDays _),
-    "q103_key_skew" -> (q103KeySkewProfile _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q17_event_json" -> q17Sql,
-    "q18_hourly_volume" -> q18Sql,
-    "q19_sessionize" -> q19Sql,
-    "q20_asof_signup" -> q20Sql,
-    "q21_admission_window" -> q21Sql,
-    "q22_metadata_alias" -> q22Sql,
-    "q47_funnel" -> q47Sql,
-    "q48_interval_join" -> q48Sql,
-    "q79_changelog_compact" -> q79Sql,
-    "q154_scd2_intervals" -> q154Sql,
-    "q157_scd2_probe" -> q157Sql,
-    "q159_time_to_event" -> q159Sql,
-    "q82_gap_fill" -> q82Sql,
-    "q85_rolling_actives" -> q85Sql,
-    "q90_retention_cohorts" -> q90Sql,
-    "q91_outlier_days" -> q91Sql,
-    "q103_key_skew" -> q103Sql
+  val declared: Seq[Query] = Seq(
+    Query("q17_event_json", q17EventJson, q17Sql),
+    Query("q18_hourly_volume", q18HourlyVolume, q18Sql),
+    Query("q19_sessionize", q19Sessionize, q19Sql),
+    Query("q20_asof_signup", q20AsofSignup, q20Sql),
+    Query("q21_admission_window", q21AdmissionWindow, q21Sql),
+    Query("q22_metadata_alias", q22MetadataAlias, q22Sql),
+    Query("q47_funnel", q47Funnel, q47Sql),
+    Query("q48_interval_join", q48IntervalJoin, q48Sql),
+    Query("q79_changelog_compact", q79ChangelogCompact, q79Sql),
+    Query("q154_scd2_intervals", q154Scd2Intervals, q154Sql),
+    Query("q157_scd2_probe", q157Scd2Probe, q157Sql),
+    Query("q159_time_to_event", q159TimeToEvent, q159Sql),
+    Query("q82_gap_fill", q82GapFill, q82Sql),
+    Query("q85_rolling_actives", q85RollingActives, q85Sql),
+    Query("q90_retention_cohorts", q90RetentionCohorts, q90Sql),
+    Query("q91_outlier_days", q91OutlierDays, q91Sql),
+    Query("q103_key_skew", q103KeySkewProfile, q103Sql)
   )
 }

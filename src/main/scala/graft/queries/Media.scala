@@ -12,8 +12,7 @@ import graft.functions.TextFns.{h32, P}
   * scale — metadata derivation over binary columns and fixed-stride frame
   * sampling — with pure built-in expressions.
   */
-object Media {
-  type Q = (SparkSession, String) => DataFrame
+object Media extends QueryPack {
 
   /** Payload metadata derivation: size, content hash, sniffed format and
     * fake dimensions (same arithmetic as Multimodal.ingest). Narrow
@@ -132,15 +131,9 @@ object Media {
       |WHERE bit_count(xor(x.sig, y.sig)) <= 10
       |ORDER BY da, db""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q37_media_metadata" -> (q37MediaMetadata _),
-    "q38_frame_checksum" -> (q38FrameChecksum _),
-    "q117_perceptual_dup" -> (q117PerceptualDup _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q37_media_metadata" -> q37Sql,
-    "q38_frame_checksum" -> q38Sql,
-    "q117_perceptual_dup" -> q117Sql
+  val declared: Seq[Query] = Seq(
+    Query("q37_media_metadata", q37MediaMetadata, q37Sql),
+    Query("q38_frame_checksum", q38FrameChecksum, q38Sql),
+    Query("q117_perceptual_dup", q117PerceptualDup, q117Sql)
   )
 }

@@ -14,8 +14,7 @@ import graft.sources.Tables
   * large joins shuffle on their natural keys, and aggregates are plain
   * hash-aggregates with map-side partials.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends QueryPack {
 
   /** TPC-H Q1-shaped pricing summary (reference: the `aggregate`/compute
     * stage of the chain, SURVEY §2.4). Single scan, map-side partial agg. */
@@ -1130,69 +1129,36 @@ object Relational {
       |  FROM orders)
       |ORDER BY table_name""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_selective_revenue" -> (q02SelectiveRevenue _),
-    "q03_segment_revenue" -> (q03SegmentRevenue _),
-    "q04_order_status_volume" -> (q04OrderStatusVolume _),
-    "q05_region_revenue" -> (q05RegionRevenue _),
-    "q06_top_orders" -> (q06TopOrders _),
-    "q07_top_orders_per_customer" -> (q07TopOrdersPerCustomer _),
-    "q08_running_qty" -> (q08RunningQty _),
-    "q09_distinct_parts" -> (q09DistinctParts _),
-    "q10_rollup" -> (q10Rollup _),
-    "q11_big_spenders" -> (q11BigSpenders _),
-    "q12_customers_without_orders" -> (q12CustomersWithoutOrders _),
-    "q13_nation_setops" -> (q13NationSetOps _),
-    "q14_part_size_classes" -> (q14PartSizeClasses _),
-    "q15_above_avg_parts" -> (q15AboveAvgParts _),
-    "q16_priority_groups" -> (q16PriorityGroups _),
-    "q49_cube" -> (q49Cube _),
-    "q50_percentiles" -> (q50Percentiles _),
-    "q51_histogram" -> (q51Histogram _),
-    "q54_order_lists" -> (q54OrderLists _),
-    "q67_salted_agg" -> (q67SaltedAgg _),
-    "q77_zorder_layout" -> (q77ZorderLayout _),
-    "q78_hll_sketch" -> (q78HllSketch _),
-    "q81_pagerank" -> (q81PageRank _),
-    "q84_quantile_sketch" -> (q84QuantileSketch _),
-    "q89_triangle_count" -> (q89TriangleCount _),
-    "q95_bloom_prune" -> (q95BloomPrune _),
-    "q115_min_cost_supplier" -> (q115MinCostSupplier _),
-    "q160_column_stats" -> (q160ColumnStats _),
-    "q161_table_profile" -> (q161TableProfile _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_selective_revenue" -> q02Sql,
-    "q03_segment_revenue" -> q03Sql,
-    "q04_order_status_volume" -> q04Sql,
-    "q05_region_revenue" -> q05Sql,
-    "q06_top_orders" -> q06Sql,
-    "q07_top_orders_per_customer" -> q07Sql,
-    "q08_running_qty" -> q08Sql,
-    "q09_distinct_parts" -> q09Sql,
-    "q10_rollup" -> q10Sql,
-    "q11_big_spenders" -> q11Sql,
-    "q12_customers_without_orders" -> q12Sql,
-    "q13_nation_setops" -> q13Sql,
-    "q14_part_size_classes" -> q14Sql,
-    "q15_above_avg_parts" -> q15Sql,
-    "q16_priority_groups" -> q16Sql,
-    "q49_cube" -> q49Sql,
-    "q50_percentiles" -> q50Sql,
-    "q51_histogram" -> q51Sql,
-    "q54_order_lists" -> q54Sql,
-    "q67_salted_agg" -> q67Sql,
-    "q77_zorder_layout" -> q77Sql,
-    "q78_hll_sketch" -> q78Sql,
-    "q81_pagerank" -> q81Sql,
-    "q84_quantile_sketch" -> q84Sql,
-    "q89_triangle_count" -> q89Sql,
-    "q95_bloom_prune" -> q95Sql,
-    "q115_min_cost_supplier" -> q115Sql,
-    "q160_column_stats" -> q160Sql,
-    "q161_table_profile" -> q161Sql
+  val declared: Seq[Query] = Seq(
+    Query("q01_pricing_summary", q01PricingSummary, q01Sql),
+    Query("q02_selective_revenue", q02SelectiveRevenue, q02Sql),
+    Query("q03_segment_revenue", q03SegmentRevenue, q03Sql),
+    Query("q04_order_status_volume", q04OrderStatusVolume, q04Sql),
+    Query("q05_region_revenue", q05RegionRevenue, q05Sql),
+    Query("q06_top_orders", q06TopOrders, q06Sql),
+    Query("q07_top_orders_per_customer", q07TopOrdersPerCustomer, q07Sql),
+    Query("q08_running_qty", q08RunningQty, q08Sql),
+    Query("q09_distinct_parts", q09DistinctParts, q09Sql),
+    Query("q10_rollup", q10Rollup, q10Sql),
+    Query("q11_big_spenders", q11BigSpenders, q11Sql),
+    Query("q12_customers_without_orders", q12CustomersWithoutOrders, q12Sql),
+    Query("q13_nation_setops", q13NationSetOps, q13Sql),
+    Query("q14_part_size_classes", q14PartSizeClasses, q14Sql),
+    Query("q15_above_avg_parts", q15AboveAvgParts, q15Sql),
+    Query("q16_priority_groups", q16PriorityGroups, q16Sql),
+    Query("q49_cube", q49Cube, q49Sql),
+    Query("q50_percentiles", q50Percentiles, q50Sql),
+    Query("q51_histogram", q51Histogram, q51Sql),
+    Query("q54_order_lists", q54OrderLists, q54Sql),
+    Query("q67_salted_agg", q67SaltedAgg, q67Sql),
+    Query("q77_zorder_layout", q77ZorderLayout, q77Sql),
+    Query("q78_hll_sketch", q78HllSketch, q78Sql),
+    Query("q81_pagerank", q81PageRank, q81Sql),
+    Query("q84_quantile_sketch", q84QuantileSketch, q84Sql),
+    Query("q89_triangle_count", q89TriangleCount, q89Sql),
+    Query("q95_bloom_prune", q95BloomPrune, q95Sql),
+    Query("q115_min_cost_supplier", q115MinCostSupplier, q115Sql),
+    Query("q160_column_stats", q160ColumnStats, q160Sql),
+    Query("q161_table_profile", q161TableProfile, q161Sql)
   )
 }

@@ -15,8 +15,7 @@ import graft.functions.TextFns.tokens
   * the classic inverted index as a DataFrame — partitioned by term hash,
   * pruned by the query's term set before any shuffle.
   */
-object Search {
-  type Q = (SparkSession, String) => DataFrame
+object Search extends QueryPack {
 
   private val k1 = 1.2
   private val b = 0.75
@@ -77,13 +76,6 @@ object Search {
       tf.join(docLen, "doc_id")
         .select(col("doc_id"), col("tok"), col("tf"), col("dl"))
     }
-
-  /** Untimed warm-up of [[bm25Index]] — called by
-    * [[SharedFrames.warmFor]] for the search consumers. */
-  private[graft] def warmBm25Shared(spark: SparkSession, dir: String): Unit = {
-    bm25Index(spark, dir).count()
-    ()
-  }
 
   val q46Sql: String =
     s"""WITH qt(term) AS (VALUES $queryTermsSqlList),
@@ -220,10 +212,8 @@ object Search {
       |ORDER BY rrf DESC, doc_id
       |LIMIT 20""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q46_bm25" -> (q46Bm25 _),
-    "q132_hybrid_rrf" -> (q132HybridRrf _))
-  val oracles: Map[String, String] = Map(
-    "q46_bm25" -> q46Sql,
-    "q132_hybrid_rrf" -> q132Sql)
+  val declared: Seq[Query] = Seq(
+    Query("q46_bm25", q46Bm25, q46Sql, SharedFrames.Bm25Index),
+    Query("q132_hybrid_rrf", q132HybridRrf, q132Sql, SharedFrames.Bm25Index)
+  )
 }

@@ -4,10 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** One Dataset object per (session, dir, key) for session-shared
-  * intermediates — seven families as of round 12: the 3-gram and 8-gram
-  * postings, the source-grain postings, the paragraph-instance table,
-  * the positional 8-gram span index, the corpus-trained bigram LM, and
-  * the BM25 inverted index. Without the
+  * intermediates, grouped in the eight [[Family]] values below. Without the
   * memo every call built a NEW Dataset over an identical plan and
   * re-`persist()`ed it; Spark's CacheManager plan-matches those into one
   * cache entry, but each re-registration raced recomputation of the same
@@ -47,80 +44,86 @@ private[graft] object SharedFrames {
         scala.util.Try(df.unpersist(blocking = false)))
     }
 
-  /** Short qNN ids of every query that reads the 3-gram postings family
-    * ([[Dedup.shPostings]] and derivatives, incl. [[Curation]]'s q98). */
-  val consumers3: Set[String] =
-    Set("q29", "q30", "q31", "q98", "q108", "q119", "q120", "q129", "q143")
-  // NOT q121: winnowing builds its own 5-gram fingerprint selection and
-  // never reads the 3-gram family — warming it there only added cache
-  // pressure to q121's own timed run
+  /** A session-shared family: the memo keys its frames live under, the
+    * untimed warm that materializes them (a fast no-op when warm), and
+    * whether [[PostingsStore]] or [[TileStore]] gives it an on-disk home.
+    * Queries name the families they read in their [[Query]] declaration. */
+  final case class Family(keys: Seq[String], onDisk: Boolean)(
+      val warm: (SparkSession, String) => Unit)
 
-  /** Short qNN ids of every query reading the 8-gram postings
-    * ([[Curation.sh8Postings]]). */
-  val consumers8: Set[String] = Set("q56", "q107", "q124", "q149")
+  /** 3-gram postings ([[Dedup.shPostings]]): raw, per-shingle df counts,
+    * df-capped, and the LSH band table. */
+  val Postings3: Family = Family(Seq("sh", "df", "capped", "bands"), onDisk = true) {
+    (spark, dir) =>
+      // the capped count materializes postings + df on the way (its
+      // anti-join reads both); the postings count is then a warm no-op
+      Dedup.cappedShPostings(spark, dir).count()
+      Dedup.shPostings(spark, dir).count()
+      Dedup.shBands(spark, dir).count()
+  }
 
-  /** Queries reading the source-grain postings derived from the 3-gram
-    * family ([[Dedup]]'s `srcsh`). */
-  val consumersSrc: Set[String] = Set("q111")
+  /** 8-gram postings ([[Curation.sh8Postings]]). */
+  val Postings8: Family = Family(Seq("sh8"), onDisk = true) {
+    (spark, dir) => Curation.sh8Postings(spark, dir).count()
+  }
 
-  /** Queries reading the paragraph-instance table
-    * ([[Dedup.paraInstances]] — paragraph dedup and boilerplate
-    * removal share one CDC segmentation + hash pass). */
-  val consumersPara: Set[String] = Set("q137", "q152")
+  /** Source-grain postings ([[Dedup.srcPostings]]). Its home is derived:
+    * in bucketed mode it is built FROM the bucketed `sh` scan. */
+  val SourcePostings: Family = Family(Seq("srcsh"), onDisk = true) {
+    (spark, dir) => Dedup.srcPostings(spark, dir).count()
+  }
 
-  /** Queries reading the positional 8-gram span index
-    * ([[Dedup]]'s `pos8`/`pos8c` — exact duplicated-span detection). */
-  val consumersPos8: Set[String] = Set("q83")
+  /** Paragraph instances ([[Dedup.paraInstances]]) — paragraph dedup and
+    * boilerplate removal share one CDC segmentation + hash pass. */
+  val Paragraphs: Family = Family(Seq("para"), onDisk = true) {
+    (spark, dir) => Dedup.paraInstances(spark, dir).count()
+  }
 
-  /** Queries scoring with the corpus-trained bigram LM
-    * ([[TextAnalysis.lmModel]] — the pre-trained-artifact analogue:
-    * trained once per corpus, loaded by every scorer). */
-  val consumersLm: Set[String] = Set("q61", "q101")
+  /** Positional 8-gram span index ([[Dedup.pos8Postings]]), raw and
+    * df-capped. */
+  val Spans8: Family = Family(Seq("pos8", "pos8c"), onDisk = true) {
+    (spark, dir) => Dedup.cappedPos8Postings(spark, dir).count()
+  }
 
-  /** Queries scoring against the BM25 inverted index
-    * ([[Search.bm25Index]] — the materialize-once search artifact). */
-  val consumersBm25: Set[String] = Set("q46", "q132")
+  /** Corpus-trained bigram LM ([[TextAnalysis.lmModel]]): trained once
+    * per corpus, loaded by every scorer. No on-disk home. */
+  val BigramLm: Family = Family(Seq("lm"), onDisk = false) {
+    (spark, dir) => TextAnalysis.lmModel(spark, dir).count()
+  }
 
-  /** Queries reading the tile-row raster layout
-    * ([[TiledRaster.tiles]] — the write-once dask-chunk analog; timed
-    * warm like every stored layout, no bucketed-table home). */
-  val consumersTiles: Set[String] = Set("q164", "q165", "q166", "q167", "q168")
+  /** BM25 inverted index ([[Search.bm25Index]]). No on-disk home. */
+  val Bm25Index: Family = Family(Seq("bm25"), onDisk = false) {
+    (spark, dir) => Search.bm25Index(spark, dir).count()
+  }
 
-  /** Does `queryName` read any shared postings family? (The bench/QTime
+  /** Tile-row raster layout ([[TiledRaster.tiles]]), whose disk home is
+    * [[TileStore]]'s parquet store. */
+  val Tiles: Family = Family(Seq("tiles"), onDisk = true) {
+    (spark, dir) => TiledRaster.tiles(spark, dir).count()
+  }
+
+  val families: Seq[Family] = Seq(Postings3, Postings8, SourcePostings,
+    Paragraphs, Spans8, BigramLm, Bm25Index, Tiles)
+
+  /** Does `queryName` read any shared family? (The bench/QTime
     * harnesses insert an untimed GC breather after warming exactly these
     * — the warm's allocation debt must not land inside the timed run.) */
-  def isConsumer(queryName: String): Boolean = {
-    val id = queryName.takeWhile(_ != '_')
-    consumers3(id) || consumers8(id) || consumersSrc(id) ||
-    consumersPara(id) || consumersPos8(id) || consumersLm(id) ||
-    consumersBm25(id) || consumersTiles(id)
-  }
+  def isConsumer(queryName: String): Boolean = Query.reads(queryName).nonEmpty
 
-  /** Does `queryName` read a family with an ON-DISK layout home —
-    * [[PostingsStore]]'s bucketed tables or [[TileStore]]'s parquet
-    * tile store? Bench's "bucketed" section times exactly these — the
-    * LM and BM25 consumers (q61/q101, q46/q132) have no on-disk home,
-    * so timing them under that key would mislabel in-memory numbers as
-    * disk-layout results. `consumersSrc` qualifies: the source-grain
-    * postings derive FROM the bucketed `sh` scan in bucketed mode. */
-  def isBucketedConsumer(queryName: String): Boolean = {
-    val id = queryName.takeWhile(_ != '_')
-    consumers3(id) || consumers8(id) || consumersSrc(id) ||
-    consumersPara(id) || consumersPos8(id) || consumersTiles(id)
-  }
+  /** Does `queryName` read a family with an ON-DISK layout home?
+    * Bench's "bucketed" section times exactly these, so in-memory-only
+    * families (the LM and BM25 index) are never reported as disk-layout
+    * results. */
+  def isBucketedConsumer(queryName: String): Boolean =
+    Query.reads(queryName).exists(_.onDisk)
 
   /** Materialize (untimed) whatever shared frames `queryName` reads — a
     * fast no-op when they are already warm, or when the query reads
     * none. */
-  def warmFor(queryName: String, spark: SparkSession, dir: String): Unit = {
-    val id = queryName.takeWhile(_ != '_')
-    if (consumers3(id)) Dedup.warmShared(spark, dir)
-    if (consumers8(id)) Curation.warmShared(spark, dir)
-    if (consumersSrc(id)) Dedup.warmSrcShared(spark, dir)
-    if (consumersPara(id)) Dedup.warmParaShared(spark, dir)
-    if (consumersPos8(id)) Dedup.warmPos8Shared(spark, dir)
-    if (consumersLm(id)) TextAnalysis.warmLmShared(spark, dir)
-    if (consumersBm25(id)) Search.warmBm25Shared(spark, dir)
-    if (consumersTiles(id)) TiledRaster.warmTilesShared(spark, dir)
-  }
+  def warmFor(queryName: String, spark: SparkSession, dir: String): Unit =
+    Query.reads(queryName).foreach(_.warm(spark, dir))
+
+  /** The memoized frames of (session, dir) by memo key. */
+  private[graft] def memoized(spark: SparkSession, dir: String): Map[String, DataFrame] =
+    memo.collect { case ((s, d, k), df) if s == spark && d == dir => k -> df }.toMap
 }

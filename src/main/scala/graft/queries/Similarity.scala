@@ -24,8 +24,7 @@ import graft.functions.VecOps.dotCol
   * cluster members, i.e. both become hash joins that shuffle only bucket-
   * sized candidate sets. The query side is always broadcast (tiny).
   */
-object Similarity {
-  type Q = (SparkSession, String) => DataFrame
+object Similarity extends QueryPack {
 
   /** vec_id, label, v: array<double>, nrm: ||v||² (native `dot_f64`
     * kernel — same left-to-right float sequence as the declarative fold,
@@ -1541,47 +1540,24 @@ object Similarity {
       |FROM can a JOIN can b ON a.source < b.source
       |ORDER BY src_a, src_b""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q156_source_affinity" -> (q156SourceAffinity _),
-    "q33_ann_bruteforce" -> (q33AnnBruteforce _),
-    "q34_ann_lsh" -> (q34AnnLsh _),
-    "q144_anisotropy_audit" -> (q144AnisotropyAudit _),
-    "q146_semantic_decontam" -> (q146SemanticDecontam _),
-    "q162_decontam_blocked" ->
-      ((s: SparkSession, d: String) => q146BlockedDecontam(s, d)),
-    "q163_decontam_routed" ->
-      ((s: SparkSession, d: String) => q146BlockedDecontam(s, d, nprobe = 2)),
-    "q35_label_centroids" -> (q35LabelCentroids _),
-    "q36_ann_ivf" -> (q36AnnIvf _),
-    "q58_quantization" -> (q58Quantization _),
-    "q68_ann_recall" -> (q68AnnRecall _),
-    "q69_kmeans_refine" -> (q69KmeansRefine _),
-    "q70_ivfpq_adc" -> (q70IvfPqAdc _),
-    "q87_contrastive_mining" -> (q87ContrastiveMining _),
-    "q99_label_errors" -> (q99LabelErrors _),
-    "q106_corr_audit" -> (q106CorrAudit _),
-    "q112_hubness" -> (q112Hubness _),
-    "q134_kcenter_coreset" -> (q134KcenterCoreset _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q33_ann_bruteforce" -> q33Sql,
-    "q156_source_affinity" -> q156Sql,
-    "q34_ann_lsh" -> q34Sql,
-    "q144_anisotropy_audit" -> q144Sql,
-    "q146_semantic_decontam" -> q146Sql,
-    "q162_decontam_blocked" -> q162Sql,
-    "q163_decontam_routed" -> q163Sql,
-    "q35_label_centroids" -> q35Sql,
-    "q36_ann_ivf" -> q36Sql,
-    "q58_quantization" -> q58Sql,
-    "q68_ann_recall" -> q68Sql,
-    "q69_kmeans_refine" -> q69Sql,
-    "q70_ivfpq_adc" -> q70Sql,
-    "q87_contrastive_mining" -> q87Sql,
-    "q99_label_errors" -> q99Sql,
-    "q106_corr_audit" -> q106Sql,
-    "q112_hubness" -> q112Sql,
-    "q134_kcenter_coreset" -> q134Sql
+  val declared: Seq[Query] = Seq(
+    Query("q156_source_affinity", q156SourceAffinity, q156Sql),
+    Query("q33_ann_bruteforce", q33AnnBruteforce, q33Sql),
+    Query("q34_ann_lsh", q34AnnLsh, q34Sql),
+    Query("q144_anisotropy_audit", q144AnisotropyAudit, q144Sql),
+    Query("q146_semantic_decontam", q146SemanticDecontam, q146Sql),
+    Query("q162_decontam_blocked", q146BlockedDecontam(_, _), q162Sql),
+    Query("q163_decontam_routed", q146BlockedDecontam(_, _, nprobe = 2), q163Sql),
+    Query("q35_label_centroids", q35LabelCentroids, q35Sql),
+    Query("q36_ann_ivf", q36AnnIvf, q36Sql),
+    Query("q58_quantization", q58Quantization, q58Sql),
+    Query("q68_ann_recall", q68AnnRecall, q68Sql),
+    Query("q69_kmeans_refine", q69KmeansRefine, q69Sql),
+    Query("q70_ivfpq_adc", q70IvfPqAdc, q70Sql),
+    Query("q87_contrastive_mining", q87ContrastiveMining, q87Sql),
+    Query("q99_label_errors", q99LabelErrors, q99Sql),
+    Query("q106_corr_audit", q106CorrAudit, q106Sql),
+    Query("q112_hubness", q112Hubness, q112Sql),
+    Query("q134_kcenter_coreset", q134KcenterCoreset, q134Sql)
   )
 }

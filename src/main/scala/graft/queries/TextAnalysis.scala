@@ -15,8 +15,7 @@ import graft.functions.TextFns._
   * + narrow projection followed by one aggregation/window — embarrassingly
   * parallel at any scale, with column pruning reaching the parquet scan.
   */
-object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
+object TextAnalysis extends QueryPack {
 
   private[queries] val stopwords = Seq("the", "a", "data", "value")
 
@@ -351,13 +350,6 @@ object TextAnalysis {
         .crossJoin(vocab)
         .select(col("b_bg"), col("cb"), col("cu"), col("v"))
     }
-
-  /** Untimed warm-up of [[lmModel]] — called by
-    * [[SharedFrames.warmFor]] for the LM-scoring consumers. */
-  private[graft] def warmLmShared(spark: SparkSession, dir: String): Unit = {
-    lmModel(spark, dir).count()
-    ()
-  }
 
   val q61Sql: String =
     """WITH d AS (
@@ -1578,59 +1570,31 @@ object TextAnalysis {
       |GROUP BY source
       |ORDER BY source""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q23_token_stats" -> (q23TokenStats _),
-    "q24_quality_score" -> (q24QualityScore _),
-    "q25_lang_id" -> (q25LangId _),
-    "q26_fingerprint" -> (q26Fingerprint _),
-    "q27_vocab_stats" -> (q27VocabStats _),
-    "q57_repetition" -> (q57Repetition _),
-    "q61_lm_score" -> (q61LmScore _),
-    "q64_kmv_sketch" -> (q64KmvSketch _),
-    "q66_bpe_first_merge" -> (q66BpeFirstMerge _),
-    "q155_bpe_merges" -> (q155BpeMerges _),
-    "q158_bpe_apply" -> (q158BpeApply _),
-    "q71_boilerplate" -> (q71Boilerplate _),
-    "q72_tfidf" -> (q72Tfidf _),
-    "q74_vocab_coverage" -> (q74VocabCoverage _),
-    "q86_lang_vocab_hll" -> (q86LangVocabHll _),
-    "q92_context_chunks" -> (q92ContextChunks _),
-    "q94_token_entropy" -> (q94TokenEntropy _),
-    "q102_countmin_hitters" -> (q102CountMinHitters _),
-    "q105_zipf_audit" -> (q105ZipfAudit _),
-    "q109_pmi_collocations" -> (q109PmiCollocations _),
-    "q126_pii_scrub" -> (q126PiiScrub _),
-    "q127_blocklist_filter" -> (q127BlocklistFilter _),
-    "q130_domain_kl" -> (q130DomainKl _),
-    "q133_encoding_hygiene" -> (q133EncodingHygiene _),
-    "q136_unicode_nfc" -> (q136UnicodeNfc _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q23_token_stats" -> q23Sql,
-    "q24_quality_score" -> q24Sql,
-    "q25_lang_id" -> q25Sql,
-    "q26_fingerprint" -> q26Sql,
-    "q27_vocab_stats" -> q27Sql,
-    "q57_repetition" -> q57Sql,
-    "q61_lm_score" -> q61Sql,
-    "q64_kmv_sketch" -> q64Sql,
-    "q66_bpe_first_merge" -> q66Sql,
-    "q155_bpe_merges" -> q155Sql,
-    "q158_bpe_apply" -> q158Sql,
-    "q71_boilerplate" -> q71Sql,
-    "q72_tfidf" -> q72Sql,
-    "q74_vocab_coverage" -> q74Sql,
-    "q86_lang_vocab_hll" -> q86Sql,
-    "q92_context_chunks" -> q92Sql,
-    "q94_token_entropy" -> q94Sql,
-    "q102_countmin_hitters" -> q102Sql,
-    "q105_zipf_audit" -> q105Sql,
-    "q109_pmi_collocations" -> q109Sql,
-    "q126_pii_scrub" -> q126Sql,
-    "q127_blocklist_filter" -> q127Sql,
-    "q130_domain_kl" -> q130Sql,
-    "q133_encoding_hygiene" -> q133Sql,
-    "q136_unicode_nfc" -> q136Sql
+  val declared: Seq[Query] = Seq(
+    Query("q23_token_stats", q23TokenStats, q23Sql),
+    Query("q24_quality_score", q24QualityScore, q24Sql),
+    Query("q25_lang_id", q25LangId, q25Sql),
+    Query("q26_fingerprint", q26Fingerprint, q26Sql),
+    Query("q27_vocab_stats", q27VocabStats, q27Sql),
+    Query("q57_repetition", q57Repetition, q57Sql),
+    Query("q61_lm_score", q61LmScore, q61Sql, SharedFrames.BigramLm),
+    Query("q64_kmv_sketch", q64KmvSketch, q64Sql),
+    Query("q66_bpe_first_merge", q66BpeFirstMerge, q66Sql),
+    Query("q155_bpe_merges", q155BpeMerges, q155Sql),
+    Query("q158_bpe_apply", q158BpeApply, q158Sql),
+    Query("q71_boilerplate", q71Boilerplate, q71Sql),
+    Query("q72_tfidf", q72Tfidf, q72Sql),
+    Query("q74_vocab_coverage", q74VocabCoverage, q74Sql),
+    Query("q86_lang_vocab_hll", q86LangVocabHll, q86Sql),
+    Query("q92_context_chunks", q92ContextChunks, q92Sql),
+    Query("q94_token_entropy", q94TokenEntropy, q94Sql),
+    Query("q102_countmin_hitters", q102CountMinHitters, q102Sql),
+    Query("q105_zipf_audit", q105ZipfAudit, q105Sql),
+    Query("q109_pmi_collocations", q109PmiCollocations, q109Sql),
+    Query("q126_pii_scrub", q126PiiScrub, q126Sql),
+    Query("q127_blocklist_filter", q127BlocklistFilter, q127Sql),
+    Query("q130_domain_kl", q130DomainKl, q130Sql),
+    Query("q133_encoding_hygiene", q133EncodingHygiene, q133Sql),
+    Query("q136_unicode_nfc", q136UnicodeNfc, q136Sql)
   )
 }

@@ -45,8 +45,7 @@ import graft.operators.Raster
   * array-at-a-time form wins; compare Dedup q121's docstring where the
   * same rewrite LOST because the window's shuffle stayed either way).
   */
-object TiledRaster {
-  type Q = (SparkSession, String) => DataFrame
+object TiledRaster extends QueryPack {
 
   /** Tile edge in pixels. 32 on the 256×256 fixture grid (64 tiles per
     * product raster — enough parallelism at test scale); a production
@@ -106,12 +105,6 @@ object TiledRaster {
   def tiles(spark: SparkSession, dir: String): DataFrame =
     TileStore.lookup(spark, dir).getOrElse(
       SharedFrames.cached(spark, dir, "tiles")(tilesPlan(spark, dir)))
-
-  /** Materialize the shared tile frame untimed (Bench/QTime warm-up). */
-  private[graft] def warmTilesShared(spark: SparkSession, dir: String): Unit = {
-    tiles(spark, dir).count()
-    ()
-  }
 
   /** T1 `aggregate` over TILES (q39's block-mean semantics at
     * per-product grain): 8×8 block means computed INSIDE each tile's
@@ -524,19 +517,11 @@ object TiledRaster {
     Trollflow.shaped(Raster.nearest(Trollflow.croppedCells(spark, dir, pk), pk, Trollflow.areaGrid),
       pk, "nearest", None)
 
-  val defs: Map[String, Q] = Map(
-    "q164_tiled_block_aggregate" -> (q164TiledBlockAggregate _),
-    "q165_tiled_resample_nearest" -> (q165TiledResampleNearest _),
-    "q166_tiled_valid_fraction" -> (q166TiledValidFraction _),
-    "q167_tiled_resample_bilinear" -> (q167TiledResampleBilinear _),
-    "q168_tiled_resample_ewa" -> (q168TiledResampleEwa _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q164_tiled_block_aggregate" -> q164Sql,
-    "q165_tiled_resample_nearest" -> q165Sql,
-    "q166_tiled_valid_fraction" -> q166Sql,
-    "q167_tiled_resample_bilinear" -> q167Sql,
-    "q168_tiled_resample_ewa" -> q168Sql
+  val declared: Seq[Query] = Seq(
+    Query("q164_tiled_block_aggregate", q164TiledBlockAggregate, q164Sql, SharedFrames.Tiles),
+    Query("q165_tiled_resample_nearest", q165TiledResampleNearest, q165Sql, SharedFrames.Tiles),
+    Query("q166_tiled_valid_fraction", q166TiledValidFraction, q166Sql, SharedFrames.Tiles),
+    Query("q167_tiled_resample_bilinear", q167TiledResampleBilinear, q167Sql, SharedFrames.Tiles),
+    Query("q168_tiled_resample_ewa", q168TiledResampleEwa, q168Sql, SharedFrames.Tiles)
   )
 }

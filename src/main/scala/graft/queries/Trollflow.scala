@@ -16,8 +16,7 @@ import graft.sources.Tables
   * (aggregate, resample, valid-fraction) is exercised with a DuckDB oracle
   * on real fixture data.
   */
-object Trollflow {
-  type Q = (SparkSession, String) => DataFrame
+object Trollflow extends QueryPack {
 
   /** Tall raster derivation shared by q39–q41 (and [[TiledRaster]]'s
     * tile assembly). One narrow projection; the grid keys are pure
@@ -970,37 +969,20 @@ object Trollflow {
       |ORDER BY win.area_name, win.pass_idx""".stripMargin
   }
 
-  val defs: Map[String, Q] = Map(
-    "q39_block_aggregate" -> (q39BlockAggregate _),
-    "q139_overpass_sunlight" -> (q139OverpassSunlight _),
-    "q150_sgp4_overpass" -> (q150Sgp4Overpass _),
-    "q151_pass_schedule" -> (q151PassSchedule _),
-    "q40_resample" -> (q40Resample _),
-    "q41_valid_fraction" -> (q41ValidFraction _),
-    "q42_sza_check" -> (q42SzaCheck _),
-    "q43_coverage_filter" -> (q43CoverageFilter _),
-    "q44_worklist_expand" -> (q44WorklistExpand _),
-    "q45_sunlight_coverage" -> (q45SunlightCoverage _),
-    "q55_resample_nearest" -> (q55ResampleNearest _),
-    "q63_resample_bilinear" -> (q63ResampleBilinear _),
-    "q123_resample_ewa" -> (q123ResampleEwa _),
-    "q131_resample_ewa_swath" -> (q131ResampleEwaSwath _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q39_block_aggregate" -> q39Sql,
-    "q139_overpass_sunlight" -> q139Sql,
-    "q150_sgp4_overpass" -> q150Sql,
-    "q151_pass_schedule" -> q151Sql,
-    "q40_resample" -> q40Sql,
-    "q41_valid_fraction" -> q41Sql,
-    "q42_sza_check" -> q42Sql,
-    "q43_coverage_filter" -> q43Sql,
-    "q44_worklist_expand" -> q44Sql,
-    "q45_sunlight_coverage" -> q45Sql,
-    "q55_resample_nearest" -> q55Sql,
-    "q63_resample_bilinear" -> q63Sql,
-    "q123_resample_ewa" -> q123Sql,
-    "q131_resample_ewa_swath" -> q131Sql
+  val declared: Seq[Query] = Seq(
+    Query("q39_block_aggregate", q39BlockAggregate, q39Sql),
+    Query("q139_overpass_sunlight", q139OverpassSunlight, q139Sql),
+    Query("q150_sgp4_overpass", q150Sgp4Overpass, q150Sql),
+    Query("q151_pass_schedule", q151PassSchedule, q151Sql),
+    Query("q40_resample", q40Resample, q40Sql),
+    Query("q41_valid_fraction", q41ValidFraction, q41Sql),
+    Query("q42_sza_check", q42SzaCheck, q42Sql),
+    Query("q43_coverage_filter", q43CoverageFilter, q43Sql),
+    Query("q44_worklist_expand", q44WorklistExpand, q44Sql),
+    Query("q45_sunlight_coverage", q45SunlightCoverage, q45Sql),
+    Query("q55_resample_nearest", q55ResampleNearest, q55Sql),
+    Query("q63_resample_bilinear", q63ResampleBilinear, q63Sql),
+    Query("q123_resample_ewa", q123ResampleEwa, q123Sql),
+    Query("q131_resample_ewa_swath", q131ResampleEwaSwath, q131Sql)
   )
 }

@@ -40,4 +40,26 @@ class BenchMathSpec extends AnyFunSuite {
     val cals = Seq.fill(13)(0.5) :+ 30.0
     assert(Bench.median(cals) == 0.5)
   }
+
+  test("history rows compare only within one (cpus, sf) shape") {
+    val f = java.nio.file.Files.createTempFile("bench_history", ".jsonl")
+    try {
+      java.nio.file.Files.write(f, Seq(
+        """{"round":15,"query":"q01","sec":0.51}""",
+        """{"round":15,"query":"q01","sec":0.5,"cpus":8,"sf":0.1}""",
+        """{"round":15,"query":"q01","sec":0.2,"cpus":32,"sf":0.01}"""
+      ).mkString("", "\n", "\n").getBytes("UTF-8"))
+      assert(History.sfOf("/data/sf0.1") == "0.1")
+      assert(History.sfOf("/data/sf0.10/") == "0.1")
+      // a row without cpus/sf is the 32-core sf0.1 default
+      assert(History.rows(32, "0.1", f) == Seq(History.Row(15, "q01", 0.51)))
+      assert(History.rows(8, "0.1", f) == Seq(History.Row(15, "q01", 0.5)))
+      // a side run's re-run replaces only its own block
+      History.replace(15, 8, "0.1",
+        Seq("""{"round":15,"query":"q01","sec":0.4,"cpus":8,"sf":0.1}"""), f)
+      assert(History.rows(8, "0.1", f) == Seq(History.Row(15, "q01", 0.4)))
+      assert(History.rows(32, "0.1", f) == Seq(History.Row(15, "q01", 0.51)))
+      assert(History.rows(32, "0.01", f) == Seq(History.Row(15, "q01", 0.2)))
+    } finally java.nio.file.Files.delete(f)
+  }
 }

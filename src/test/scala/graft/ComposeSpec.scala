@@ -6,7 +6,7 @@ import graft.functions.Compose
 class ComposeSpec extends SparkSpec {
 
   test("compose_tpl expression matches the Scala implementation per row") {
-    Compose.register(spark)
+    GraftSession.registerFunctions(spark)
     import spark.implicits._
     val df = Seq(
       ("sat1", "2026-08-12T06:30:00Z", "overview"),
@@ -28,7 +28,7 @@ class ComposeSpec extends SparkSpec {
   }
 
   test("compose_tpl stays inside whole-stage codegen") {
-    Compose.register(spark)
+    GraftSession.registerFunctions(spark)
     import spark.implicits._
     // a real scan (not a constant-foldable local relation) so the projection
     // actually lands in a WholeStageCodegen stage
@@ -48,7 +48,7 @@ class ComposeSpec extends SparkSpec {
   }
 
   test("null map yields null output; missing key raises") {
-    Compose.register(spark)
+    GraftSession.registerFunctions(spark)
     import spark.implicits._
     val df = Seq(Tuple1("x")).toDF("k")
       .withColumn("out",
