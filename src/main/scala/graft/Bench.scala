@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR.
@@ -85,7 +86,7 @@ object Bench {
     names.headOption.foreach { name =>
       queries.SharedFrames.warmFor(name, spark, sfDir)
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () } // a failure re-surfaces when timed
+      catch { case NonFatal(_) => () } // a failure re-surfaces when timed
       spark.sharedState.cacheManager.clearCache()
       System.gc()
     }
@@ -101,7 +102,7 @@ object Bench {
     // 13's first cut overflowed ANSI long-sum and took all 162 queries'
     // numbers down with it) — the queries are the payload, the unit is
     // garnish.
-    val cal = try calibrate(spark) catch { case e: Throwable =>
+    val cal = try calibrate(spark) catch { case NonFatal(e) =>
       System.err.println(s"bench calibration failed: ${err(e)}")
       -1.0
     }
@@ -137,7 +138,7 @@ object Bench {
         if (queries.SharedFrames.isConsumer(name)) System.gc()
         val t0 = System.nanoTime()
         val out = try { fn(spark, sfDir).count(); Right(()) } catch {
-          case e: Throwable => Left(err(e))
+          case NonFatal(e) => Left(err(e))
         }
         val sec = (System.nanoTime() - t0) / 1e9
         // drop persisted intermediates after EVERY timed run (see above)
@@ -159,9 +160,9 @@ object Bench {
         if (cal > 0) Map("calibration" -> fmt4(cal)) else Map.empty))
     if (sys.env.contains("SPARK_GRAFT_BUCKETED")) {
       try queries.PostingsStore.drop(spark, sfDir)
-      catch { case _: Throwable => () } // cleanup is best-effort
+      catch { case NonFatal(_) => () } // cleanup is best-effort
       try queries.TileStore.drop(spark, sfDir)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     spark.stop()
     results
@@ -289,7 +290,7 @@ object Bench {
     val cals = History.rows(cpus.toInt, History.sfOf(sfDir))
       .filter(r => r.query == "_cal" && r.sec > 0)
     if (cals.isEmpty) None else Some(cals.maxBy(_.round).sec)
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case NonFatal(_) => None }
 
   /** UNTIMED warehouse maintenance before the pack: ANALYZE every
     * fixture table once in the parent, persisting measured stats
@@ -312,7 +313,7 @@ object Bench {
       graft.plans.StatsStore.ProfiledTables)
     finally spark.stop()
     ()
-  } catch { case scala.util.control.NonFatal(e) =>
+  } catch { case NonFatal(e) =>
     System.err.println(s"bench analyze skipped: ${e.getMessage}")
   }
 
@@ -354,8 +355,8 @@ object Bench {
     * SPARK_GRAFT_FIDELITY=0 skips the section (dev aid). */
   private def fidelitySection(sfDir: String,
       merged: Seq[(String, Either[String, Double])],
-      cals: Seq[Double] = Seq.empty,
-      alreadyReran: Set[String] = Set.empty)
+      cals: Seq[Double],
+      alreadyReran: Set[String])
       : (Seq[(String, Either[String, Double])], Map[String, String]) = {
     if (sys.env.get("SPARK_GRAFT_FIDELITY").contains("0")) return (merged, Map.empty)
     def f(v: Double): String =
@@ -552,7 +553,7 @@ object Bench {
     * disable the guard entirely. */
   private def guardOutliers(sfDir: String,
       merged: Seq[(String, Either[String, Double])],
-      cals: Seq[Double] = Seq.empty)
+      cals: Seq[Double])
       : (Seq[(String, Either[String, Double])], Set[String]) = {
     val prior = priorRoundSecs(sfDir)
     val calScale = (for {
@@ -593,7 +594,7 @@ object Bench {
       val last = rows.map(_.round).max
       rows.collect { case r if r.round == last && r.sec > 0 => r.query -> r.sec }.toMap
     }
-  } catch { case scala.util.control.NonFatal(_) => Map.empty }
+  } catch { case NonFatal(_) => Map.empty }
 
   /** Locale-stable 2-decimal render (the default-locale formatter writes
     * comma decimals on e.g. de_DE JVMs — unparseable contract line). */
@@ -671,13 +672,13 @@ object Bench {
       Option(root.get("calibration")).map(c =>
         s"""{"round":$round,"query":"_cal","sec":${c.asDouble}$run""")
     History.replace(round, cpus.toInt, sf, rows)
-  } catch { case scala.util.control.NonFatal(_) => () }
+  } catch { case NonFatal(_) => () }
 
   /** HEAD's commit id, or "unknown" outside a git checkout. */
   private def gitSha: String = try
     scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
       .!!(scala.sys.process.ProcessLogger(_ => ())).trim
-  catch { case scala.util.control.NonFatal(_) => "unknown" }
+  catch { case NonFatal(_) => "unknown" }
 
   /** The one-line driver contract. Keys are the short qNN ids (the part
     * before the first underscore) and values are 2-decimal seconds: the
@@ -687,7 +688,7 @@ object Bench {
     * under "errors" (omitted when everything passed). */
   private def jsonLine(sfDir: String,
       results: Seq[(String, Either[String, Double])],
-      extras: Map[String, String] = Map.empty): String = {
+      extras: Map[String, String]): String = {
     // Locale.ROOT: the default-locale formatter renders comma decimals
     // on e.g. de_DE JVMs, producing an unparseable contract line
     def f(v: Double): String =

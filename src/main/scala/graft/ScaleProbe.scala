@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Scaling-slope probe: times the most expensive queries at two scale
   * factors (default sf0.01 vs sf0.1 — 10× the data) and reports the
@@ -94,7 +95,7 @@ object ScaleProbe {
     names.headOption.foreach { name =>
       queries.SharedFrames.warmFor(name, spark, sfDir)
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       spark.sharedState.cacheManager.clearCache()
       System.gc()
     }
@@ -113,7 +114,7 @@ object ScaleProbe {
         // artifact at all — and the mandatory new-this-round queries are
         // exactly the ones most likely to throw
         val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[scale] $name failed at $sfDir: " +
               Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n'))
             false

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Element-wise vector-fold aggregators (sum / min / max) over
@@ -13,8 +13,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * reassemble the array afterwards with a sort-by-position collect. At
   * 100 TB the explode is the dominant cost of every Lloyd iteration;
   * this buffer keeps the input at vector grain with map-side partials
-  * and a dim-width state (the same reasoning as [[ValidFraction]]'s
-  * pair-of-longs, scaled to a primitive array).
+  * and a dim-width state (a primitive array of running sums).
   *
   * Ragged AND zero-length inputs throw (embeddings are fixed-width,
   * non-empty by contract — same strictness as `dot_f64`): an empty row

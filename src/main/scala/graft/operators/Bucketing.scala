@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table co-located joins — the storage-layout half of the 100 TB
   * join strategy.
@@ -48,21 +48,5 @@ object Bucketing {
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
     (if (sorted) w.sortBy(keys.head, keys.tail: _*) else w).saveAsTable(table)
-  }
-
-  /** Join two co-bucketed tables on their bucket keys. With matching
-    * bucket counts the physical plan has ZERO Exchange operators; with
-    * sorted single-file buckets AND
-    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true` the
-    * join-side Sorts disappear too (Spark ≥3.1 stopped propagating bucket
-    * sort order by default). Verified by BucketingSpec. */
-  def colocatedJoin(spark: SparkSession, leftTable: String, leftKey: String,
-      rightTable: String, rightKey: String): DataFrame = {
-    // dataset-qualified key refs: bare col(key) === col(key) throws
-    // AMBIGUOUS_REFERENCE whenever both tables carry the key NAME — the
-    // normal co-bucketed case (same key bucketed on both sides)
-    val l = spark.table(leftTable)
-    val r = spark.table(rightTable)
-    l.join(r, l(leftKey) === r(rightKey))
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * holding >50% of a 100 TB fact table, or skewed high-cardinality
   * aggregations feeding a downstream join).
   *
-  * Both operators are result-identical to their unsalted forms; only the
-  * partitioning changes: a hot key's rows spread over `buckets` partitions
+  * The salted aggregate is result-identical to its unsalted form; only
+  * the partitioning changes: a hot key's rows spread over `buckets` partitions
   * instead of hammering one straggler task.
   */
 object Salting {
@@ -47,21 +47,6 @@ object Salting {
     * break task-retry determinism). */
   private def salt(df: DataFrame, buckets: Int): Column =
     pmod(xxhash64(struct(df.columns.map(col): _*)), lit(buckets))
-
-  /** Salted inner equi-join: the big/skewed side gets a row salt, the
-    * small side is replicated once per bucket, and the join key becomes
-    * (key, salt). Replication costs `buckets` × |small| — use when small
-    * is broadcast-sized but the *key distribution* on big defeats a plain
-    * shuffle join. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 buckets: Int): DataFrame = {
-    require(buckets > 0, s"buckets=$buckets must be positive")
-    val saltCol = "_graft_salt"
-    val bigS = big.withColumn(saltCol, salt(big, buckets))
-    val smallS = small
-      .withColumn(saltCol, explode(sequence(lit(0L), lit(buckets - 1L))))
-    bigS.join(smallS, Seq(key, saltCol)).drop(saltCol)
-  }
 
   /** Two-phase salted aggregation: partial aggregate on (keys, salt) —
     * spreading a hot group over `buckets` tasks — then merge partials on

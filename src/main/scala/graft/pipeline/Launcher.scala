@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -101,7 +102,7 @@ object Launcher {
           val in = proc.getOutputStream
           in.write(msg.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           in.close()
-        } catch { case _: Exception => () } // broken pipe = MTA died; fine
+        } catch { case NonFatal(_) => () } // broken pipe = MTA died; fine
       })
       writer.setDaemon(true)
       writer.start()
@@ -120,7 +121,7 @@ object Launcher {
         Console.err.println(
           s"sendmail transport '$binary' exited ${proc.exitValue()}")
     } catch {
-      case e: Exception =>
+      case NonFatal(e) =>
         Console.err.println(s"sendmail transport '$binary' failed: $e")
     }
   }
@@ -158,7 +159,7 @@ object Launcher {
       sun.misc.Signal.handle(new sun.misc.Signal(signalName),
         (_: sun.misc.Signal) => printTraces(out))
       true
-    } catch { case scala.util.control.NonFatal(_) => false }
+    } catch { case NonFatal(_) => false }
 
   /** One message (the `--test-message` path, launcher.py:259-266):
     * build the chain for the message's files and run every priority
@@ -334,7 +335,7 @@ object Launcher {
             // wraps YAML/level/datefmt errors in ConfigException itself,
             // but ANY other failure on the operator's -c input is still
             // an argument error, never a stack trace (ADVICE r13)
-            case scala.util.control.NonFatal(e) =>
+            case NonFatal(e) =>
               Console.err.println(s"error: bad log config: $e"); return 2
           }
         val spark = sparkFor()

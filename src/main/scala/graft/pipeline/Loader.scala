@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.yaml.snakeyaml.{LoaderOptions, Yaml}
@@ -93,7 +94,7 @@ object ProductListLoader {
     val root =
       try new ObjectMapper().readValue(text, classOf[Object])
       catch {
-        case e: Exception =>
+        case NonFatal(e) =>
           throw ConfigException(s"invalid JSON config: ${e.getMessage}", e)
       }
     build(root)

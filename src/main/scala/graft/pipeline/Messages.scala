@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
@@ -46,7 +47,7 @@ object Messages {
   private[pipeline] def parseIso(s: String): Option[java.time.Instant] = {
     import java.time._
     def attempt[A](f: => A): Option[A] =
-      try Some(f) catch { case _: Exception => None }
+      try Some(f) catch { case NonFatal(_) => None }
     attempt(Instant.parse(s))
       .orElse(attempt(OffsetDateTime.parse(s).toInstant))
       .orElse(attempt(LocalDateTime.parse(s).toInstant(ZoneOffset.UTC)))

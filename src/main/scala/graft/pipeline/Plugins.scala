@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
+import scala.util.control.NonFatal
 
 import graft.operators.Raster
 
@@ -98,7 +99,7 @@ object Plugins {
         val df = ctx.spark.read.format(reader).options(options).load(srcs: _*)
         ctx.copy(frames = ctx.frames + (None -> df))
       } catch {
-        case e: Exception => ctx.abort(s"create_scene failed: ${e.getMessage}")
+        case NonFatal(e) => ctx.abort(s"create_scene failed: ${e.getMessage}")
       }
   }
 
@@ -150,7 +151,7 @@ object Plugins {
         }
         ctx.copy(inputs = cached)
       } catch {
-        case e: Exception => ctx.abort(s"use_fsspec_cache failed: ${e.getMessage}")
+        case NonFatal(e) => ctx.abort(s"use_fsspec_cache failed: ${e.getMessage}")
       }
   }
 
@@ -390,10 +391,9 @@ object Plugins {
   /** `check_valid_data_fraction` (plugins/__init__.py:955-1079): compute
     * per-product valid fractions of every resampled area in ONE aggregate
     * pass and drop the failing work-list items. A null or NaN value is
-    * fill, as the reference's `notnull()` on a float array counts it
-    * (see [[graft.functions.ValidFraction]]). Data-dependent pruning —
-    * the only plugin that triggers compute before save, exactly like the
-    * reference. */
+    * fill, as the reference's `notnull()` on a float array counts it.
+    * Data-dependent pruning — the only plugin that triggers compute
+    * before save, exactly like the reference. */
   final case class CheckValidDataFraction(minFraction: Double) extends Plugin {
     val name = "check_valid_data_fraction"
     def apply(ctx: PipelineContext): PipelineContext = {
@@ -569,7 +569,7 @@ object Plugins {
           Some(Staged(stagedPath, sink, rows))
         }
       } catch {
-        case e: Exception =>
+        case NonFatal(e) =>
           deleteRecursively(tmpPath)
           throw new RuntimeException(
             s"save_datasets failed for ${sink.item.product}: ${e.getMessage}", e)
@@ -1032,7 +1032,7 @@ object Plugins {
         }
         ctx.copy(manifest = uploaded)
       } catch {
-        case e: Exception => ctx.abort(s"s3.uploader failed: ${e.getMessage}")
+        case NonFatal(e) => ctx.abort(s"s3.uploader failed: ${e.getMessage}")
       }
   }
 
@@ -1059,7 +1059,7 @@ object Plugins {
             s"outputs: ${bad.map(_.path).mkString(", ")}")
         else ctx
       } catch {
-        case e: Exception => ctx.abort(s"check_s3_file failed: ${e.getMessage}")
+        case NonFatal(e) => ctx.abort(s"check_s3_file failed: ${e.getMessage}")
       }
   }
 

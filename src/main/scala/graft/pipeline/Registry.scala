@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -69,7 +70,7 @@ object PluginRegistry {
     def json(key: String): Option[JsonNode] = str(key).map { raw =>
       try new ObjectMapper().readTree(raw)
       catch {
-        case e: Exception =>
+        case NonFatal(e) =>
           throw ConfigException(
             s"${worker.fun}: setting '$key' is not valid JSON: $raw", e)
       }

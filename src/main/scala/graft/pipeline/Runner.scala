@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.ExecutionException
 import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
 import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** `process_jobs` (launcher.py:432-457): run the plugin chain over the
   * context, priority group by priority group (lower number first,
@@ -89,12 +91,18 @@ object Runner {
                   case _: TimeoutException =>
                     ctx.spark.sparkContext.cancelJobGroup(jobGroup)
                     ctx.abort(s"${plugin.name}: timed out after $timeout")
+                  // a Future boxes a fatal error in an ExecutionException;
+                  // rethrow the error itself so it propagates like it does
+                  // without a timeout
+                  case e: ExecutionException
+                      if e.getCause != null && !NonFatal(e.getCause) =>
+                    throw e.getCause
                 }
               } else plugin(ctx)
             } catch {
-              case e: Exception =>
+              case NonFatal(e) =>
                 crashHandlers.foreach { h =>
-                  try h(plugin.name, e) catch { case _: Exception => () }
+                  try h(plugin.name, e) catch { case NonFatal(_) => () }
                 }
                 ctx.abort(s"${plugin.name} crashed: ${e.getMessage}")
             }
@@ -102,8 +110,9 @@ object Runner {
           run(next, tail, acc :+ PluginResult(plugin.name, secs, next.aborted))
         case _ => (ctx, acc)
       }
-    val (finalCtx, results) = run(start, plugins, Vector.empty)
-    start.spark.sparkContext.clearJobGroup()
+    val (finalCtx, results) =
+      try run(start, plugins, Vector.empty)
+      finally start.spark.sparkContext.clearJobGroup()
     JobReport(prio, results, finalCtx)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.functions.TextFns.{fpSum, h32, shingleH32, shingles, tokens, P}
+import graft.functions.TextFns.{fpSum, h32, shingleH32, tokens, P}
 import graft.functions.VecOps.dotCol
 
 /** Corpus-curation pack: the selection/splitting stage of a training-data

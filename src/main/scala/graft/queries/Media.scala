@@ -5,17 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.TextFns.{h32, P}
 
-/** Multimodal-column pack: the oracle-checkable face of
-  * [[graft.operators.Multimodal]]. The fixture corpus has no real media
+/** Multimodal-column pack. The fixture corpus has no real media
   * payloads, so the UTF-8 bytes of `documents.text` stand in as the opaque
   * payload; the queries exercise exactly the plumbing that matters at
-  * scale — metadata derivation over binary columns and fixed-stride frame
-  * sampling — with pure built-in expressions.
+  * scale — metadata derivation over binary columns, fixed-stride frame
+  * sampling and perceptual near-duplicate hashing — with pure built-in
+  * expressions.
   */
 object Media extends QueryPack {
 
   /** Payload metadata derivation: size, content hash, sniffed format and
-    * fake dimensions (same arithmetic as Multimodal.ingest). Narrow
+    * stand-in dimensions, all derived from the payload hash. Narrow
     * per-row projection — no shuffle at any scale. */
   def q37MediaMetadata(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -43,8 +43,8 @@ object Media extends QueryPack {
       |ORDER BY doc_id""".stripMargin
 
   /** Fixed-stride frame sampling (stride 16, frame length 8) + per-doc
-    * frame-set checksum — the relational mirror of
-    * Multimodal.sampleFrames/FakeDecoder. Explode is per-row local;
+    * frame-set checksum: each frame is an 8-character slice of the
+    * payload, hashed to a 32-bit value. Explode is per-row local;
     * the aggregate collapses it right back, so the shuffle carries one
     * row per document. */
   def q38FrameChecksum(spark: SparkSession, dir: String): DataFrame =

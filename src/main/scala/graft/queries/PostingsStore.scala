@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.security.MessageDigest
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
@@ -152,8 +153,8 @@ object PostingsStore {
     * atomic-or-absent). */
   private def buildOrDrop(spark: SparkSession, dir: String)(build: => Unit): Unit = {
     drop(spark, dir)
-    try build catch { case e: Throwable =>
-      try drop(spark, dir) catch { case _: Throwable => () }
+    try build catch { case NonFatal(e) =>
+      try drop(spark, dir) catch { case NonFatal(_) => () }
       throw e
     }
   }
@@ -214,10 +215,10 @@ object PostingsStore {
     SharedFrames.invalidate(spark, dir)
     rebuildCapped(spark, dir, buckets)
     rebuildPos8Capped(spark, dir, buckets)
-  } catch { case e: Throwable =>
+  } catch { case NonFatal(e) =>
     // a half-applied append (sh rows without their bands twin) is a
     // corrupt index — see buildOrDrop's contract: drop and rethrow
-    try drop(spark, dir) catch { case _: Throwable => () }
+    try drop(spark, dir) catch { case NonFatal(_) => () }
     throw e
   }
 

@@ -2,9 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.functions.TextFns.h32
 import graft.functions.VecOps.dotCol
 
 /** Similarity-search pack over the `embeddings` fixture: brute-force cosine
@@ -34,17 +32,6 @@ object Similarity extends QueryPack {
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", dotCol(col("v"), col("v")))
-
-  /** Per-group centroid-ARRAY assembly from (group, `posCol`, c)
-    * component rows: sort-by-position struct list, then project the
-    * value — the fold-order invariant that keeps every downstream dot
-    * product bit-identical with the oracle's list_transform over an
-    * ORDER BY pos list. Single-sourced (q35/q36/q69/q70/q144/q156 all
-    * aggregate with this expression) so a future determinism change
-    * cannot desynchronize one copy from the rest. */
-  private def centroidArray(posCol: String): Column =
-    transform(array_sort(collect_list(struct(col(posCol), col("c")))),
-      s => s.getField("c"))
 
   /** Untyped handle on the element-wise vector-sum aggregator — the
     * centroid kernel (see [[graft.functions.VecSum]]). */

@@ -458,7 +458,6 @@ object Trollflow extends QueryPack {
     * effective settings are coalesce chains (format > product > area >
     * root), priorities default 999 (launcher.py:59). */
   def q44WorklistExpand(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val areas = Tables.region(spark, dir).select(
       col("r_regionkey").as("areakey"),
       col("r_name").as("area"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 import graft.pipeline.{Messages, Plugin, ProductList, Runner}
 
@@ -1001,9 +1002,8 @@ object StreamRunner {
       .drop(s"${key}_r")
   }
 
-  /** Event-time session windows via the built-in `session_window`: the
-    * declarative face of [[StatefulSessionize]] — dynamic-gap windows
-    * merge as events arrive, watermark closes (and emits) sessions whose
+  /** Event-time session windows via the built-in `session_window`:
+    * dynamic-gap windows merge as events arrive, watermark closes (and emits) sessions whose
     * gap has provably expired, and state is O(open sessions). */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "2 hours"): DataFrame =
@@ -1093,8 +1093,8 @@ object StreamRunner {
     val deadlineNs = System.nanoTime() + timeoutMs * 1000000L
     val drained = new java.util.concurrent.CountDownLatch(1)
     val drainer = new Thread(() => {
-      try q.processAllAvailable() catch { case _: Exception => () }
-      drained.countDown()
+      try q.processAllAvailable() catch { case NonFatal(_) => () }
+      finally drained.countDown()
     })
     drainer.setDaemon(true)
     drainer.start()

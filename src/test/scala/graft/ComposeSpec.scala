@@ -29,7 +29,6 @@ class ComposeSpec extends SparkSpec {
 
   test("compose_tpl stays inside whole-stage codegen") {
     GraftSession.registerFunctions(spark)
-    import spark.implicits._
     // a real scan (not a constant-foldable local relation) so the projection
     // actually lands in a WholeStageCodegen stage
     val df = spark.read.parquet(s"$sf/documents.parquet")

@@ -447,7 +447,6 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q154 SCD2: intervals partition events, versions chain, one open per user") {
-    import org.apache.spark.sql.functions._
     val rows = run("q154_scd2_intervals").collect()
     assert(rows.nonEmpty)
     // event closure: version event counts sum to the whole events table

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(8)

@@ -1,291 +1,7 @@
 package graft
 
-import graft.operators.Multimodal
-import graft.operators.Multimodal._
-
+// The multimodal queries of queries/Media.scala, run through SparkEntry.queries.
 class MultimodalSpec extends SparkSpec {
-
-  private def records() =
-    Multimodal.ingest(
-      spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text")
-
-  test("ingest produces typed media records with populated metadata") {
-    val recs = records().limit(10).collect()
-    assert(recs.nonEmpty)
-    recs.foreach { r =>
-      assert(r.media.nonEmpty)
-      assert(r.meta.nBytes == r.media.length.toLong)
-      // ingest's stand-in tags are all FakeDecoder codecs: arbitrary
-      // payloads tagged with a real decoder's format would crash the
-      // ingest -> extractFeaturesAuto path on decode
-      assert(Set("webm", "aac", "heic", "avif").contains(r.meta.format))
-      assert(r.meta.widthPx >= 320 && r.meta.widthPx < 640)
-      assert(r.meta.heightPx >= 240 && r.meta.heightPx < 480)
-    }
-  }
-
-  test("resizeNearest maps pixels by integer nearest pick, both directions") {
-    // 4x4 single-channel with distinct values
-    val src = (0 until 4).map(y => Array.tabulate[Byte](4)(x => (y * 4 + x).toByte))
-    // downscale 2x: picks (0,0),(0,2),(2,0),(2,2)
-    val down = Multimodal.resizeNearest(src, channels = 1, dstW = 2, dstH = 2)
-    assert(down.map(_.toSeq) == Seq(Seq[Byte](0, 2), Seq[Byte](8, 10)))
-    // upscale 2x: replication
-    val up = Multimodal.resizeNearest(down, channels = 1, dstW = 4, dstH = 4)
-    assert(up.map(_.toSeq) == Seq(
-      Seq[Byte](0, 0, 2, 2), Seq[Byte](0, 0, 2, 2),
-      Seq[Byte](8, 8, 10, 10), Seq[Byte](8, 8, 10, 10)))
-    // 1x1 thumbnail of an RGB raster is the top-left pixel
-    val rgb = Seq(Array[Byte](1, 2, 3, 4, 5, 6), Array[Byte](7, 8, 9, 10, 11, 12))
-    val thumb = Multimodal.resizeNearest(rgb, channels = 3, dstW = 1, dstH = 1)
-    assert(thumb.head.toSeq == Seq[Byte](1, 2, 3))
-    // non-integer ratio: 3 -> 2 picks floor(x*3/2) = cols 0,1 rows 0,1
-    val odd = (0 until 3).map(y => Array.tabulate[Byte](3)(x => (y * 3 + x).toByte))
-    val o2 = Multimodal.resizeNearest(odd, 1, 2, 2)
-    assert(o2.map(_.toSeq) == Seq(Seq[Byte](0, 1), Seq[Byte](3, 4)))
-    // geometry violations throw
-    intercept[IllegalArgumentException] { Multimodal.resizeNearest(Seq.empty, 1, 2, 2) }
-    intercept[IllegalArgumentException] { Multimodal.resizeNearest(rgb, 3, 0, 1) }
-    intercept[IllegalArgumentException] {
-      Multimodal.resizeNearest(Seq(Array[Byte](1, 2), Array[Byte](1)), 1, 1, 1) }
-  }
-
-  test("sampleFrames honors stride/frameLen and never overruns") {
-    val bytes = Array.tabulate[Byte](100)(_.toByte)
-    val frames = Multimodal.sampleFrames(bytes, stride = 16, frameLen = 8)
-    assert(frames.length == 6) // starts 0,16,...,80; 96+8 > 100 excluded
-    assert(frames.forall(_.length == 8))
-    assert(frames.head.toSeq == (0 until 8).map(_.toByte))
-    assert(frames.last.toSeq == (80 until 88).map(_.toByte))
-    // payload shorter than a frame -> no frames, no crash
-    assert(Multimodal.sampleFrames(Array[Byte](1, 2), 16, 8).isEmpty)
-  }
-
-  test("extractFeatures is deterministic, batched, and shuffle-free") {
-    val ds = records()
-    val decoder = new FakeDecoder(frameStride = 16, frameLen = 8)
-    val feats = Multimodal.extractFeatures(ds, decoder, batchSize = 7)
-    // narrow op: partitioning preserved
-    assert(feats.rdd.getNumPartitions == ds.rdd.getNumPartitions)
-    val byId = feats.collect().map(f => f.id -> f).toMap
-    assert(byId.nonEmpty)
-    // re-running yields identical features (pure decoder)
-    val again = Multimodal.extractFeatures(ds, decoder, batchSize = 64)
-      .collect().map(f => f.id -> f).toMap
-    assert(byId == again)
-    // features agree with a direct single-record decode
-    val one = records().orderBy("id").limit(1).collect().head
-    assert(byId(one.id) == decoder.decode(one))
-  }
-
-  test("PpmDecoder decodes a hand-built P6 image through the batched path") {
-    import spark.implicits._
-    // 4x3 P6, maxval 255, with a header comment; pixel (r,c) has
-    // RGB = (10r+c, 100+c, 200+r) — every byte value is known by hand
-    val w = 4; val h = 3
-    val header = s"P6\n# hand-built test image\n$w $h\n255\n".getBytes("US-ASCII")
-    val raster = (for {
-      r <- 0 until h; c <- 0 until w
-      b <- Seq(10 * r + c, 100 + c, 200 + r)
-    } yield b.toByte).toArray
-    val img = header ++ raster
-    val rec = MediaRecord(7L, img, MediaMeta("ppm", w, h, img.length.toLong))
-    val decoder = new PpmDecoder
-    val feats = decoder.decode(rec)
-    assert(feats.format == "ppm")
-    assert(feats.nFrames == h) // one frame per pixel row
-    assert(feats.thumbFirstByte == 0) // pixel (0,0) red channel = 10*0+0
-    // checksum against an independent re-computation of the spec'd hash
-    val rows = raster.grouped(w * 3).toSeq
-    val expected = rows.foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-    assert(feats.checksum == expected)
-    // same features through the distributed batched mapPartitions path
-    val ds = Seq(rec, rec.copy(id = 8L)).toDS()
-    val out = Multimodal.extractFeatures(ds, decoder, batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(7L, 8L))
-    assert(out.forall(f => f.nFrames == h && f.checksum == expected))
-    // header comments and multi-digit dims parse; truncated raster throws
-    val bad = rec.copy(media = img.dropRight(1))
-    intercept[IllegalArgumentException] { decoder.decode(bad) }
-    val notPpm = rec.copy(media = "RIFF1234".getBytes("US-ASCII"))
-    intercept[IllegalArgumentException] { decoder.decode(notPpm) }
-  }
-
-  test("BmpDecoder decodes a hand-built 24-bit BMP through the batched path") {
-    import spark.implicits._
-    // 2x2 24-bit bottom-up BMP: rowLen 6 pads to stride 8. Visual pixels
-    // (BGR): top row (1,2,3)(4,5,6), bottom row (7,8,9)(10,11,12) —
-    // stored bottom-up, so the file carries the bottom row FIRST.
-    val w = 2; val h = 2
-    val stride = 8
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    val topRow = Array[Byte](1, 2, 3, 4, 5, 6)
-    val bottomRow = Array[Byte](7, 8, 9, 10, 11, 12)
-    val pad = Array[Byte](0, 0)
-    val raster = bottomRow ++ pad ++ topRow ++ pad
-    val fileSize = 54 + raster.length
-    def bmp(height: Int) =
-      "BM".getBytes("US-ASCII") ++ le32(fileSize) ++ le32(0) ++ le32(54) ++
-        le32(40) ++ le32(w) ++ le32(height) ++ le16(1) ++ le16(24) ++
-        le32(0) ++ le32(raster.length) ++ le32(2835) ++ le32(2835) ++
-        le32(0) ++ le32(0) ++ raster
-    val img = bmp(h)
-    val rec = MediaRecord(9L, img, MediaMeta("bmp", w, h, img.length.toLong))
-    val decoder = new BmpDecoder
-    val feats = decoder.decode(rec)
-    assert(feats.format == "bmp")
-    assert(feats.nFrames == h)
-    assert(feats.thumbFirstByte == 3) // top-left pixel's RED channel (BGR)
-    // checksum over VISUAL-order rows with padding stripped
-    val expected = Seq(topRow, bottomRow).foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-    assert(feats.checksum == expected)
-    // a TOP-DOWN file (negative height) with rows in visual order decodes
-    // to the identical features
-    val topDown = "BM".getBytes("US-ASCII") ++ le32(fileSize) ++ le32(0) ++
-      le32(54) ++ le32(40) ++ le32(w) ++ le32(-h) ++ le16(1) ++ le16(24) ++
-      le32(0) ++ le32(raster.length) ++ le32(2835) ++ le32(2835) ++
-      le32(0) ++ le32(0) ++ (topRow ++ pad ++ bottomRow ++ pad)
-    val tdFeats = decoder.decode(rec.copy(media = topDown))
-    assert(tdFeats.copy(id = 9L) == feats)
-    // same features through the distributed batched mapPartitions path
-    val ds = Seq(rec, rec.copy(id = 10L)).toDS()
-    val out = Multimodal.extractFeatures(ds, decoder, batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(9L, 10L))
-    assert(out.forall(f => f.nFrames == h && f.checksum == expected))
-    // malformed payloads surface per-record: truncated raster, wrong
-    // bpp, wrong magic
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = img.dropRight(1))) }
-    val bpp8 = img.clone(); bpp8(28) = 8
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = bpp8)) }
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = "P6 1 1 255 xyz".getBytes("US-ASCII"))) }
-    // crafted header whose strideL*h product overflows Long and wraps
-    // NEGATIVE (w=0x7FFFFFFF -> strideL~6.44e9, h=0x60000000): a
-    // product-form bound would pass and attempt a ~1.6-billion-row
-    // materialization; the division-form bound must throw instead
-    val crafted = img.clone()
-    crafted(18) = -1; crafted(19) = -1; crafted(20) = -1; crafted(21) = 0x7f
-    crafted(22) = 0; crafted(23) = 0; crafted(24) = 0; crafted(25) = 0x60
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = crafted)) }
-  }
-
-  test("BmpDecoder round-trips seeded random images (bottom-up == top-down)") {
-    val rnd = new scala.util.Random(13)
-    val decoder = new BmpDecoder
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def header(w: Int, h: Int, rasterLen: Int) =
-      "BM".getBytes("US-ASCII") ++ le32(54 + rasterLen) ++ le32(0) ++ le32(54) ++
-        le32(40) ++ le32(w) ++ le32(h) ++ le16(1) ++ le16(24) ++
-        le32(0) ++ le32(rasterLen) ++ le32(2835) ++ le32(2835) ++ le32(0) ++ le32(0)
-    for (_ <- 1 to 40) {
-      val w = 1 + rnd.nextInt(9); val h = 1 + rnd.nextInt(9)
-      val stride = (w * 3 + 3) & ~3
-      // visual rows, then serialize both ways
-      val rows = Array.fill(h) {
-        val r = new Array[Byte](stride); rnd.nextBytes(r)
-        java.util.Arrays.fill(r, w * 3, stride, 0.toByte); r
-      }
-      val bottomUp = header(w, h, stride * h) ++ rows.reverse.flatten
-      val topDown = header(w, -h, stride * h) ++ rows.flatten
-      val rec = MediaRecord(1L, bottomUp, MediaMeta("bmp", w, h, 0L))
-      val a = decoder.decode(rec)
-      val b = decoder.decode(rec.copy(media = topDown))
-      assert(a == b, s"bottom-up and top-down decode disagree at ${w}x$h")
-      assert(a.nFrames == h)
-      assert(a.thumbFirstByte == (rows.head(2) & 0xff))
-      // checksum matches an independent recomputation over visual rows
-      val expected = rows.map(_.take(w * 3)).foldLeft(0L) { (acc, f) =>
-        (acc * 131 + f.foldLeft(0L)((x, y) => (x * 31 + (y & 0xff)) % 1000000007L)) % 1000000007L
-      }
-      assert(a.checksum == expected)
-    }
-  }
-
-  test("WavDecoder decodes hand-built PCM WAVs, skipping foreign chunks") {
-    import spark.implicits._
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def fmtChunk(channels: Int, bits: Int, rate: Int) =
-      "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++ le16(channels) ++
-        le32(rate) ++ le32(rate * channels * bits / 8) ++
-        le16(channels * bits / 8) ++ le16(bits)
-    def wav(chunks: Array[Byte]*) = {
-      val body = "WAVE".getBytes("US-ASCII") ++ chunks.flatten
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    // stereo 16-bit: 600 sample frames = 2400 data bytes -> 3 blocks of
-    // 256 frames (256, 256, 88). Samples are a known ramp.
-    val data = Array.tabulate[Byte](2400)(i => (i * 7 % 251).toByte)
-    val dataChunk = "data".getBytes("US-ASCII") ++ le32(data.length) ++ data
-    // an odd-sized LIST chunk BEFORE fmt exercises skip + even-padding
-    val listChunk = "LIST".getBytes("US-ASCII") ++ le32(5) ++
-      Array[Byte]('I', 'N', 'F', 'O', 'x') ++ Array[Byte](0)
-    val img = wav(listChunk, fmtChunk(2, 16, 8000), dataChunk)
-    val rec = MediaRecord(11L, img, MediaMeta("wav", 0, 0, img.length.toLong))
-    val decoder = new WavDecoder
-    val feats = decoder.decode(rec)
-    assert(feats.format == "wav")
-    assert(feats.nFrames == 3) // ceil(600 / 256) blocks
-    assert(feats.thumbFirstByte == (data(0) & 0xff))
-    val blockBytes = 4 * 256
-    val blocks = data.grouped(blockBytes).toSeq
-    val expected = blocks.foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-    assert(feats.checksum == expected)
-    // same features through the distributed batched mapPartitions path
-    val out = Multimodal.extractFeatures(
-        Seq(rec, rec.copy(id = 12L)).toDS(), decoder, batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(11L, 12L))
-    assert(out.forall(f => f.nFrames == 3 && f.checksum == expected))
-    // malformed payloads surface per-record: non-PCM format, ragged data
-    // length, chunk overrun, wrong magic
-    val float32 = img.clone()
-    val fmtOff = 12 + listChunk.length + 8
-    float32(fmtOff) = 3 // IEEE float audioFormat
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = float32)) }
-    val ragged = wav(fmtChunk(2, 16, 8000),
-      "data".getBytes("US-ASCII") ++ le32(7) ++ data.take(7))
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = ragged)) }
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = img.dropRight(1))) }
-    intercept[IllegalArgumentException] { decoder.decode(rec.copy(media = "BM123456".getBytes("US-ASCII"))) }
-  }
-
-  test("WavDecoder round-trips seeded random PCM payloads") {
-    val rnd = new scala.util.Random(29)
-    val decoder = new WavDecoder
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    for (_ <- 1 to 40) {
-      val channels = 1 + rnd.nextInt(2)
-      val bits = if (rnd.nextBoolean()) 8 else 16
-      val blockAlign = channels * bits / 8
-      val nFrames = 1 + rnd.nextInt(700)
-      val data = new Array[Byte](nFrames * blockAlign); rnd.nextBytes(data)
-      val body = "WAVE".getBytes("US-ASCII") ++
-        ("fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++ le16(channels) ++
-          le32(8000) ++ le32(8000 * blockAlign) ++ le16(blockAlign) ++ le16(bits)) ++
-        ("data".getBytes("US-ASCII") ++ le32(data.length) ++ data) ++
-        (if (data.length % 2 == 1) Array[Byte](0) else Array.empty[Byte])
-      val payload = "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-      val f = decoder.decode(MediaRecord(1L, payload, MediaMeta("wav", 0, 0, 0L)))
-      assert(f.nFrames == (nFrames + 255) / 256,
-        s"$channels ch ${bits}b $nFrames frames -> ${f.nFrames} blocks")
-      assert(f.thumbFirstByte == (data(0) & 0xff))
-      val expected = data.grouped(blockAlign * 256).foldLeft(0L) { (acc, blk) =>
-        (acc * 131 + blk.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-      }
-      assert(f.checksum == expected)
-    }
-  }
 
   test("q117 perceptual near-dup: exact duplicates collide at hamming 0") {
     import org.apache.spark.sql.functions._
@@ -309,1116 +25,5 @@ class MultimodalSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
     assert(exactPairs.subsetOf(zero),
       s"missing exact-dup pairs: ${exactPairs -- zero}")
-  }
-
-  // ---- PNG: hand-built serializer used by the PngDecoder tests ----
-  // Serializes raw (unfiltered) rows into a spec-compliant PNG, applying
-  // the CHOSEN forward filter per scanline — so a decode must run the
-  // matching inverse filter to round-trip.
-  private object PngWriter {
-    def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-      (v >>> 8).toByte, v.toByte)
-    def chunk(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val crc = new java.util.zip.CRC32()
-      val t = typ.getBytes("US-ASCII")
-      crc.update(t); crc.update(payload)
-      be32(payload.length) ++ t ++ payload ++ be32(crc.getValue.toInt)
-    }
-    def colorType(channels: Int): Int = channels match {
-      case 1 => 0; case 2 => 4; case 3 => 2; case 4 => 6
-    }
-    def write(w: Int, h: Int, channels: Int, rows: Array[Array[Byte]],
-        filters: Array[Int]): Array[Byte] = {
-      val bpp = channels
-      val stride = w * channels
-      val filtered = new java.io.ByteArrayOutputStream()
-      for (r <- 0 until h) {
-        val cur = rows(r); val prev = if (r == 0) null else rows(r - 1)
-        def up(i: Int) = if (prev == null) 0 else prev(i) & 0xff
-        def left(i: Int) = if (i < bpp) 0 else cur(i - bpp) & 0xff
-        def upLeft(i: Int) = if (prev == null || i < bpp) 0 else prev(i - bpp) & 0xff
-        def paeth(i: Int) = {
-          val a = left(i); val b = up(i); val c = upLeft(i)
-          val p = a + b - c
-          val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-          if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-        }
-        filtered.write(filters(r))
-        for (i <- 0 until stride) {
-          val raw = cur(i) & 0xff
-          val pred = filters(r) match {
-            case 0 => 0
-            case 1 => left(i)
-            case 2 => up(i)
-            case 3 => (left(i) + up(i)) / 2
-            case 4 => paeth(i)
-          }
-          filtered.write((raw - pred) & 0xff)
-        }
-      }
-      val d = new java.util.zip.Deflater()
-      d.setInput(filtered.toByteArray); d.finish()
-      val z = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](512)
-      while (!d.finished()) z.write(buf, 0, d.deflate(buf))
-      d.end()
-      val ihdr = be32(w) ++ be32(h) ++
-        Array[Byte](8, colorType(channels).toByte, 0, 0, 0)
-      Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
-        chunk("IHDR", ihdr) ++
-        // a skippable ancillary chunk between IHDR and IDAT
-        chunk("tEXt", "k v".getBytes("US-ASCII")) ++
-        chunk("IDAT", z.toByteArray) ++ chunk("IEND", Array.empty[Byte])
-    }
-  }
-
-  private def rowHash(rows: Seq[Array[Byte]]): Long =
-    rows.foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-
-  test("PngDecoder inverts all five scanline filters on a hand-built PNG") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(41)
-    val (w, h, ch) = (6, 5, 3)
-    val rows = Array.fill(h) { val r = new Array[Byte](w * ch); rnd.nextBytes(r); r }
-    // one row per filter type: None, Sub, Up, Average, Paeth
-    val img = PngWriter.write(w, h, ch, rows, Array(0, 1, 2, 3, 4))
-    val rec = MediaRecord(21L, img, MediaMeta("png", w, h, img.length.toLong))
-    val decoder = new PngDecoder
-    val feats = decoder.decode(rec)
-    assert(feats.format == "png")
-    assert(feats.nFrames == h)
-    assert(feats.thumbFirstByte == (rows.head(0) & 0xff)) // top-left red
-    assert(feats.checksum == rowHash(rows.toSeq))
-    // same features through the distributed batched mapPartitions path
-    val out = Multimodal.extractFeatures(
-        Seq(rec, rec.copy(id = 22L)).toDS(), decoder, batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(21L, 22L))
-    assert(out.forall(f => f.nFrames == h && f.checksum == feats.checksum))
-  }
-
-  test("PngDecoder round-trips seeded random images across color types") {
-    val rnd = new scala.util.Random(47)
-    val decoder = new PngDecoder
-    for (_ <- 1 to 40) {
-      val w = 1 + rnd.nextInt(9); val h = 1 + rnd.nextInt(9)
-      val ch = 1 + rnd.nextInt(4) // gray / gray+alpha / RGB / RGBA
-      val rows = Array.fill(h) { val r = new Array[Byte](w * ch); rnd.nextBytes(r); r }
-      val filters = Array.fill(h)(rnd.nextInt(5))
-      val img = PngWriter.write(w, h, ch, rows, filters)
-      val feats = decoder.decode(
-        MediaRecord(1L, img, MediaMeta("png", w, h, img.length.toLong)))
-      assert(feats.nFrames == h, s"${w}x$h ch=$ch filters=${filters.toSeq}")
-      assert(feats.checksum == rowHash(rows.toSeq),
-        s"checksum mismatch at ${w}x$h ch=$ch filters=${filters.toSeq}")
-      assert(feats.thumbFirstByte == (rows.head(0) & 0xff))
-    }
-  }
-
-  test("PngDecoder agrees with the JDK's own ImageIO PNG writer") {
-    // independent oracle: javax.imageio (JDK-only) encodes a BufferedImage
-    // to PNG with ITS choice of scanline filters; our decoder must
-    // reconstruct the exact pixel bytes ImageIO was given
-    val rnd = new scala.util.Random(53)
-    val (w, h) = (17, 11)
-    val bi = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w)
-      bi.setRGB(x, y, rnd.nextInt(1 << 24))
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(bi, "png", bos))
-    val img = bos.toByteArray
-    val rows = (0 until h).map { y =>
-      val r = new Array[Byte](w * 3)
-      for (x <- 0 until w) {
-        val px = bi.getRGB(x, y)
-        r(x * 3) = ((px >> 16) & 0xff).toByte
-        r(x * 3 + 1) = ((px >> 8) & 0xff).toByte
-        r(x * 3 + 2) = (px & 0xff).toByte
-      }
-      r
-    }
-    val feats = (new PngDecoder).decode(
-      MediaRecord(31L, img, MediaMeta("png", w, h, img.length.toLong)))
-    assert(feats.nFrames == h)
-    assert(feats.checksum == rowHash(rows))
-    assert(feats.thumbFirstByte == (rows.head(0) & 0xff))
-  }
-
-  test("GifDecoder agrees with the JDK's own ImageIO GIF writer") {
-    import spark.implicits._
-    // independent oracle: javax.imageio encodes an indexed BufferedImage
-    // to GIF with ITS palette and LZW stream; our decoder must
-    // reconstruct the exact RGB pixels
-    val rnd = new scala.util.Random(61)
-    val (w, h) = (23, 13)
-    val bi = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED)
-    for (y <- 0 until h; x <- 0 until w)
-      bi.setRGB(x, y, rnd.nextInt(1 << 24))
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(bi, "gif", bos))
-    val img = bos.toByteArray
-    val rows = (0 until h).map { y =>
-      val r = new Array[Byte](w * 3)
-      for (x <- 0 until w) {
-        val px = bi.getRGB(x, y) // palette-quantized RGB — what the GIF stores
-        r(x * 3) = ((px >> 16) & 0xff).toByte
-        r(x * 3 + 1) = ((px >> 8) & 0xff).toByte
-        r(x * 3 + 2) = (px & 0xff).toByte
-      }
-      r
-    }
-    val expected = rows.foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-    val decoder = new GifDecoder
-    val rec = MediaRecord(41L, img, MediaMeta("gif", w, h, img.length.toLong))
-    val feats = decoder.decode(rec)
-    assert(feats.format == "gif")
-    assert(feats.nFrames == h)
-    assert(feats.checksum == expected)
-    assert(feats.thumbFirstByte == (rows.head(0) & 0xff))
-    // same features through the distributed batched mapPartitions path
-    val out = Multimodal.extractFeatures(
-        Seq(rec, rec.copy(id = 42L)).toDS(), decoder, batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(41L, 42L))
-    assert(out.forall(f => f.nFrames == h && f.checksum == expected))
-    // a grayscale image exercises a different writer palette path. NOTE:
-    // TYPE_BYTE_GRAY.getRGB runs a linear-gray -> sRGB conversion, so
-    // the pre-write pixels are NOT what the GIF palette stores — compare
-    // against the JDK's own GIF DECODER on the same bytes instead
-    val gray = new java.awt.image.BufferedImage(
-      9, 7, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until 7; x <- 0 until 9) {
-      val v = rnd.nextInt(256); gray.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val gos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(gray, "gif", gos))
-    val gbytes = gos.toByteArray
-    val gfeats = decoder.decode(rec.copy(media = gbytes))
-    val gback = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(gbytes))
-    val gexp = (0 until 7).map { y =>
-      val r = new Array[Byte](9 * 3)
-      for (x <- 0 until 9) {
-        val px = gback.getRGB(x, y)
-        r(x * 3) = ((px >> 16) & 0xff).toByte
-        r(x * 3 + 1) = ((px >> 8) & 0xff).toByte
-        r(x * 3 + 2) = (px & 0xff).toByte
-      }
-      r
-    }.foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-    assert(gfeats.checksum == gexp)
-    // malformed payloads: wrong magic, truncated data, truncated header
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = "NOTAGIF!89a".getBytes("US-ASCII"))) }
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = img.dropRight(8))) }
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = img.take(10))) }
-  }
-
-  test("TiffDecoder agrees with the JDK's TIFF writer and reads both byte orders") {
-    import spark.implicits._
-    // big-endian: the JDK's writer emits uncompressed MM-order RGB
-    val rnd = new scala.util.Random(67)
-    val (w, h) = (19, 11)
-    val bi = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until h; x <- 0 until w)
-      bi.setRGB(x, y, rnd.nextInt(1 << 24))
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(bi, "tiff", bos))
-    val img = bos.toByteArray
-    assert(img(0) == 'M' && img(1) == 'M') // the two-endianness claim needs both
-    val rows = (0 until h).map { y =>
-      val r = new Array[Byte](w * 3)
-      for (x <- 0 until w) {
-        val px = bi.getRGB(x, y)
-        r(x * 3) = ((px >> 16) & 0xff).toByte
-        r(x * 3 + 1) = ((px >> 8) & 0xff).toByte
-        r(x * 3 + 2) = (px & 0xff).toByte
-      }
-      r
-    }
-    def hash(rs: Seq[Array[Byte]]): Long = rs.foldLeft(0L) { (acc, f) =>
-      (acc * 131 + f.foldLeft(0L)((a, x) => (a * 31 + (x & 0xff)) % 1000000007L)) % 1000000007L
-    }
-    val decoder = new TiffDecoder
-    val rec = MediaRecord(51L, img, MediaMeta("tiff", w, h, img.length.toLong))
-    val feats = decoder.decode(rec)
-    assert(feats.format == "tiff")
-    assert(feats.nFrames == h)
-    assert(feats.checksum == hash(rows))
-    assert(feats.thumbFirstByte == (rows.head(0) & 0xff))
-    // same features through the distributed batched mapPartitions path
-    val out = Multimodal.extractFeatures(
-        Seq(rec, rec.copy(id = 52L)).toDS(), decoder, batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(51L, 52L))
-    assert(out.forall(f => f.checksum == feats.checksum))
-    // little-endian: a hand-built II-order grayscale file with the
-    // raster split across TWO strips
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    val (gw, gh) = (6, 4)
-    val gray = Array.tabulate[Byte](gw * gh)(i => ((i * 37) % 251).toByte)
-    // entry(tag, type, count, inline value bytes padded to 4)
-    def entry(tag: Int, typ: Int, count: Int, value: Array[Byte]) =
-      le16(tag) ++ le16(typ) ++ le32(count) ++ value.padTo(4, 0.toByte)
-    val nE = 9
-    val rasterAt = 8 + 2 + nE * 12 + 4
-    val strip1Len = gw * 3 // first 3 rows
-    val ifd = le16(nE) ++
-      entry(256, 3, 1, le16(gw)) ++
-      entry(257, 3, 1, le16(gh)) ++
-      entry(258, 3, 1, le16(8)) ++
-      entry(259, 3, 1, le16(1)) ++
-      entry(262, 3, 1, le16(1)) ++
-      entry(273, 4, 2, le32(rasterAt)) ++ // 2 LONGs don't fit: offset...
-      entry(277, 3, 1, le16(1)) ++
-      entry(278, 3, 1, le16(3)) ++
-      entry(279, 4, 2, le32(rasterAt)) ++ // ...patched below
-      le32(0)
-    // place the two offset/count arrays AFTER the raster
-    val arraysAt = rasterAt + gw * gh
-    val tiff = "II".getBytes("US-ASCII") ++ le16(42).take(2) ++ le32(8) ++
-      ifd ++ gray ++
-      le32(rasterAt) ++ le32(rasterAt + strip1Len) ++ // strip offsets
-      le32(strip1Len) ++ le32(gw * gh - strip1Len) // strip byte counts
-    // patch tag 273/279 value fields to point at the arrays
-    System.arraycopy(le32(arraysAt), 0, tiff, 8 + 2 + 5 * 12 + 8, 4)
-    System.arraycopy(le32(arraysAt + 8), 0, tiff, 8 + 2 + 8 * 12 + 8, 4)
-    val gfeats = decoder.decode(rec.copy(media = tiff))
-    assert(gfeats.nFrames == gh)
-    assert(gfeats.checksum == hash(gray.grouped(gw).toSeq))
-    assert(gfeats.thumbFirstByte == (gray(0) & 0xff))
-    // malformed: wrong magic, truncated payload, strip overrun
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = "XX* abcd".getBytes("US-ASCII"))) }
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = img.dropRight(10))) }
-    val overrun = tiff.clone()
-    System.arraycopy(le32(tiff.length + 100), 0, overrun, arraysAt, 4)
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = overrun)) }
-    // planar (PlanarConfiguration=2) layout would silently mis-interleave:
-    // must throw, not decode. Rebuild the grayscale file with a 10th
-    // entry tag 284 = 2 (all offsets shift by one 12-byte entry).
-    val nE2 = 10
-    val rasterAt2 = 8 + 2 + nE2 * 12 + 4
-    val arraysAt2 = rasterAt2 + gw * gh
-    val ifd2 = le16(nE2) ++
-      entry(256, 3, 1, le16(gw)) ++
-      entry(257, 3, 1, le16(gh)) ++
-      entry(258, 3, 1, le16(8)) ++
-      entry(259, 3, 1, le16(1)) ++
-      entry(262, 3, 1, le16(1)) ++
-      entry(273, 4, 2, le32(arraysAt2)) ++
-      entry(277, 3, 1, le16(1)) ++
-      entry(278, 3, 1, le16(3)) ++
-      entry(279, 4, 2, le32(arraysAt2 + 8)) ++
-      entry(284, 3, 1, le16(2)) ++ // planar: contract says throw
-      le32(0)
-    val planar = "II".getBytes("US-ASCII") ++ le16(42).take(2) ++ le32(8) ++
-      ifd2 ++ gray ++
-      le32(rasterAt2) ++ le32(rasterAt2 + strip1Len) ++
-      le32(strip1Len) ++ le32(gw * gh - strip1Len)
-    val ep = intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = planar)) }
-    assert(ep.getMessage.contains("planar"))
-  }
-
-  test("JpegDecoder agrees with ImageIO within lossy-codec tolerance") {
-    import java.awt.image.BufferedImage
-    val decoder = new JpegDecoder
-    def jpegBytes(bi: BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(bi, "jpg", bos))
-      bos.toByteArray
-    }
-    // --- grayscale, non-multiple-of-8 dims (edge MCUs) ---
-    val (w, h) = (37, 23)
-    val gray = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until h; x <- 0 until w)
-      gray.getRaster.setSample(x, y, 0,
-        (128 + 100 * math.sin(x * 0.3) * math.cos(y * 0.2)).toInt)
-    val gImg = jpegBytes(gray)
-    val (gw, gh, gc, gPix) = decoder.decodeRaster(gImg)
-    assert((gw, gh, gc) == (w, h, 1))
-    val gRef = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(gImg))
-    var maxD = 0
-    for (y <- 0 until h; x <- 0 until w) {
-      val d = math.abs((gPix(y * w + x) & 0xff) - gRef.getRaster.getSample(x, y, 0))
-      maxD = math.max(maxD, d)
-    }
-    // no chroma, no upsampling: only IDCT rounding differs between
-    // conformant decoders
-    assert(maxD <= 2, s"grayscale max per-pixel diff $maxD vs ImageIO")
-    // --- color with CONSTANT chroma (R=G=B): 4:2:0 upsampling filters
-    // agree exactly on constant planes, so tight tolerance again ---
-    val flat = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until h; x <- 0 until w) {
-      val v = (x * 7 + y * 3) % 256
-      flat.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val fImg = jpegBytes(flat)
-    val (fw, fh, fc, fPix) = decoder.decodeRaster(fImg)
-    assert((fw, fh, fc) == (w, h, 3))
-    val fRef = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(fImg))
-    var maxF = 0
-    for (y <- 0 until h; x <- 0 until w) {
-      val px = fRef.getRGB(x, y)
-      val o = (y * w + x) * 3
-      maxF = Seq(maxF,
-        math.abs((fPix(o) & 0xff) - ((px >> 16) & 0xff)),
-        math.abs((fPix(o + 1) & 0xff) - ((px >> 8) & 0xff)),
-        math.abs((fPix(o + 2) & 0xff) - (px & 0xff))).max
-    }
-    assert(maxF <= 3, s"flat-chroma color max per-pixel diff $maxF vs ImageIO")
-    // --- color with SLOW chroma gradients: nearest vs fancy chroma
-    // upsampling differ by about half the per-pixel chroma step ---
-    val grad = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until h; x <- 0 until w) {
-      val r = (128 + 80 * math.sin(x * 0.05)).toInt
-      val g = (128 + 80 * math.sin(y * 0.05)).toInt
-      val bb = (128 + 80 * math.cos((x + y) * 0.04)).toInt
-      grad.setRGB(x, y, (r << 16) | (g << 8) | bb)
-    }
-    val cImg = jpegBytes(grad)
-    val (cw2, ch2, cc2, cPix) = decoder.decodeRaster(cImg)
-    assert((cw2, ch2, cc2) == (w, h, 3))
-    val cRef = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(cImg))
-    var maxC = 0; var sumC = 0L; var nC = 0L
-    for (y <- 0 until h; x <- 0 until w) {
-      val px = cRef.getRGB(x, y)
-      val o = (y * w + x) * 3
-      val ds = Seq(
-        math.abs((cPix(o) & 0xff) - ((px >> 16) & 0xff)),
-        math.abs((cPix(o + 1) & 0xff) - ((px >> 8) & 0xff)),
-        math.abs((cPix(o + 2) & 0xff) - (px & 0xff)))
-      maxC = math.max(maxC, ds.max); sumC += ds.sum; nC += 3
-    }
-    assert(maxC <= 12, s"gradient color max per-pixel diff $maxC vs ImageIO")
-    assert(sumC.toDouble / nC <= 3.0,
-      s"gradient color mean diff ${sumC.toDouble / nC} vs ImageIO")
-    // --- MediaFeatures surface + the distributed batched path ---
-    import spark.implicits._
-    val rec = MediaRecord(71L, gImg, MediaMeta("jpeg", w, h, gImg.length.toLong))
-    val feats = decoder.decode(rec)
-    assert(feats.format == "jpeg" && feats.nFrames == h)
-    assert(feats.thumbFirstByte == (gPix(0) & 0xff))
-    val out = Multimodal.extractFeaturesAuto(
-        Seq(rec, rec.copy(id = 72L,
-          meta = rec.meta.copy(format = "jpg"))).toDS(), batchSize = 1)
-      .collect().sortBy(_.id)
-    assert(out.map(_.id).toSeq == Seq(71L, 72L))
-    assert(out.forall(_.checksum == feats.checksum))
-  }
-
-  test("JpegDecoder rejects non-baseline and malformed payloads with the contractual IAE") {
-    import java.awt.image.BufferedImage
-    val decoder = new JpegDecoder
-    val bi = new BufferedImage(24, 16, BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until 16; x <- 0 until 24)
-      bi.getRaster.setSample(x, y, 0, (x * 11 + y * 5) % 256)
-    // progressive (SOF2) must throw, not mis-decode
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    val param = writer.getDefaultWriteParam
-    param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-    writer.write(null, new javax.imageio.IIOImage(bi, null, null), param)
-    writer.dispose(); ios.close()
-    val prog = bos.toByteArray
-    // sanity: the writer did emit SOF2
-    assert((0 until prog.length - 1).exists(i =>
-      (prog(i) & 0xff) == 0xff && (prog(i + 1) & 0xff) == 0xc2))
-    val e1 = intercept[IllegalArgumentException] { decoder.decodeRaster(prog) }
-    assert(e1.getMessage.contains("SOF2"))
-    // baseline bytes for the malformed cases
-    val ok = { val b2 = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(bi, "jpg", b2); b2.toByteArray }
-    assert(decoder.decodeRaster(ok)._1 == 24) // control: decodes fine
-    // wrong magic
-    intercept[IllegalArgumentException] {
-      decoder.decodeRaster("notajpeg".getBytes("US-ASCII")) }
-    // truncated entropy-coded data
-    intercept[IllegalArgumentException] { decoder.decodeRaster(ok.dropRight(12)) }
-    // 16-bit quantization table (flip Pq nibble in the DQT segment)
-    val dqtAt = (0 until ok.length - 1).find(i =>
-      (ok(i) & 0xff) == 0xff && (ok(i + 1) & 0xff) == 0xdb).get
-    val crafted = ok.clone()
-    crafted(dqtAt + 4) = (crafted(dqtAt + 4) | 0x10).toByte
-    val e2 = intercept[IllegalArgumentException] { decoder.decodeRaster(crafted) }
-    assert(e2.getMessage.contains("quantization"))
-  }
-
-  test("JpegDecoder honors restart intervals (DRI + RSTn)") {
-    import java.awt.image.BufferedImage
-    val decoder = new JpegDecoder
-    val (w, h) = (48, 32) // 6x4 = 24 MCUs at 8x8 grayscale
-    val bi = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until h; x <- 0 until w)
-      bi.getRaster.setSample(x, y, 0,
-        (128 + 90 * math.sin(x * 0.2 + y * 0.1)).toInt)
-    // ask the JDK writer for a restart interval via its native metadata
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    val param = writer.getDefaultWriteParam
-    val meta = writer.getDefaultImageMetadata(
-      new javax.imageio.ImageTypeSpecifier(bi), param)
-    val fmt = "javax_imageio_jpeg_image_1.0"
-    val tree = meta.getAsTree(fmt)
-    val ms = tree.asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-      .getElementsByTagName("markerSequence").item(0)
-    val dri = new javax.imageio.metadata.IIOMetadataNode("dri")
-    dri.setAttribute("interval", "3")
-    ms.insertBefore(dri, ms.getFirstChild)
-    meta.setFromTree(fmt, tree)
-    writer.write(null, new javax.imageio.IIOImage(bi, null, meta), param)
-    writer.dispose(); ios.close()
-    val img = bos.toByteArray
-    // sanity: DRI segment present and at least one RST marker in the scan
-    assert((0 until img.length - 1).exists(i =>
-      (img(i) & 0xff) == 0xff && (img(i + 1) & 0xff) == 0xdd),
-      "JDK writer emitted no DRI — restart coverage lost")
-    assert((0 until img.length - 1).exists(i =>
-      (img(i) & 0xff) == 0xff && {
-        val m = img(i + 1) & 0xff; m >= 0xd0 && m <= 0xd7 }),
-      "no RST markers in the scan")
-    val (dw, dh, dc, pix) = decoder.decodeRaster(img)
-    assert((dw, dh, dc) == (w, h, 1))
-    val ref = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(img))
-    var maxD = 0
-    for (y <- 0 until h; x <- 0 until w)
-      maxD = math.max(maxD,
-        math.abs((pix(y * w + x) & 0xff) - ref.getRaster.getSample(x, y, 0)))
-    assert(maxD <= 2, s"restart-interval decode max diff $maxD vs ImageIO")
-    // a payload truncated at a restart boundary and padded with 0xFF
-    // fill bytes must throw the contractual IAE, not walk off the array
-    val rstAt = (2 until img.length - 1).find(i =>
-      (img(i) & 0xff) == 0xff && {
-        val m = img(i + 1) & 0xff; m >= 0xd0 && m <= 0xd7 }).get
-    val cut = img.take(rstAt + 1) ++ Array.fill[Byte](6)(0xff.toByte)
-    val et = intercept[IllegalArgumentException] { decoder.decodeRaster(cut) }
-    assert(et.getMessage.contains("truncated") ||
-      et.getMessage.contains("marker"), et.getMessage)
-  }
-
-  test("Mp3Decoder walks MPEG frame headers: count, duration, bitrate — no synthesis") {
-    val rnd = new scala.util.Random(83)
-    val kbpsV1 = Array(-1, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, -1)
-    val kbpsV2 = Array(-1, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160, -1)
-    val rateV1 = Array(44100, 48000, 32000)
-    def frame(v1: Boolean, bi: Int, ri: Int, pad: Int): Array[Byte] = {
-      val sr = if (v1) rateV1(ri) else rateV1(ri) / 2
-      val spf = if (v1) 1152 else 576
-      val flen = spf / 8 * ((if (v1) kbpsV1 else kbpsV2)(bi) * 1000) / sr + pad
-      val h = (0x7ff << 21) | ((if (v1) 3 else 2) << 19) | (1 << 17) |
-        (1 << 16) /* no CRC */ | (bi << 12) | (ri << 10) | (pad << 9)
-      val out = new Array[Byte](flen)
-      out(0) = (h >>> 24).toByte; out(1) = (h >>> 16).toByte
-      out(2) = (h >>> 8).toByte; out(3) = h.toByte
-      for (i <- 4 until flen) out(i) = rnd.nextInt(256).toByte
-      out
-    }
-    // VBR MPEG-1 stream at 44100: ID3v2 prefix + 4 frames + ID3v1 tail
-    val id3v2Body = Array.tabulate[Byte](17)(i => (i * 5).toByte)
-    val id3v2 = "ID3".getBytes("US-ASCII") ++ Array[Byte](3, 0, 0) ++
-      Array[Byte](0, 0, 0, id3v2Body.length.toByte) ++ id3v2Body
-    val id3v1 = "TAG".getBytes("US-ASCII") ++ new Array[Byte](125)
-    val frames = Seq(frame(true, 9, 0, 0), frame(true, 11, 0, 1),
-      frame(true, 9, 0, 0), frame(true, 14, 0, 0))
-    val stream = id3v2 ++ frames.flatten ++ id3v1
-    val info = Multimodal.Mp3Decoder.walk(stream)
-    assert(info.nFrames == 4 && info.sampleRateHz == 44100)
-    assert(info.totalSamples == 4L * 1152)
-    assert(info.durationMs == 4L * 1152 * 1000 / 44100)
-    val bits = frames.map(_.length.toLong * 8).sum
-    assert(info.avgBitrateBps == bits * 1000 / info.durationMs)
-    // the MediaDecoder face: frame count rides nFrames, deterministic
-    val feats = new Multimodal.Mp3Decoder().decode(MediaRecord(7L, stream,
-      MediaMeta("mp3", 0, 0, stream.length.toLong)))
-    assert(feats.nFrames == 4 && feats.format == "mp3")
-    assert(feats.checksum == info.checksum && info.checksum > 0)
-    assert(feats.thumbFirstByte == (stream(id3v2.length + 4) & 0xff))
-    // MPEG-2 stream: 576 samples per frame at the halved rate
-    val s2 = Seq(frame(false, 8, 1, 0), frame(false, 8, 1, 1)).flatten.toArray
-    val i2 = Multimodal.Mp3Decoder.walk(s2)
-    assert(i2.nFrames == 2 && i2.sampleRateHz == 24000 &&
-      i2.totalSamples == 2L * 576)
-    // ID3v2.4 footer flag (0x10): the 10-byte '3DI' footer is NOT
-    // counted in the syncsafe size — the walk must skip it too
-    val footered = "ID3".getBytes("US-ASCII") ++
-      Array[Byte](4, 0, 0x10.toByte) ++
-      Array[Byte](0, 0, 0, id3v2Body.length.toByte) ++ id3v2Body ++
-      ("3DI".getBytes("US-ASCII") ++ new Array[Byte](7)) ++ frames.flatten
-    assert(Multimodal.Mp3Decoder.walk(footered).nFrames == 4,
-      "ID3v2.4 footer not skipped")
-    // contract violations throw the IAE, never escape or mis-decode
-    def bad(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException] { Multimodal.Mp3Decoder.walk(b) }
-      assert(e.getMessage.contains(needle), s"'${e.getMessage}' !~ $needle")
-    }
-    bad(frames.head.dropRight(1), "overruns")          // truncated frame
-    bad(frames.head ++ Array[Byte](1, 2, 3), "truncated frame header")
-    bad(frame(true, 9, 0, 0) ++ frame(true, 9, 1, 0), "changed mid-stream")
-    val free = frame(true, 9, 0, 0); free(2) = (free(2) & 0x0f).toByte
-    bad(free, "free-format")
-    bad(Array[Byte](0x12, 0x34, 0x56, 0x78), "lost sync")
-    bad("ID3".getBytes("US-ASCII") ++ Array[Byte](3, 0, 0,
-      0, 0, 0, 0x7f.toByte), "overruns")               // ID3v2 size past end
-  }
-
-  test("FlacDecoder walks STREAMINFO + metadata blocks; Mp4Decoder walks the box tree") {
-    // --- FLAC: fLaC magic, STREAMINFO (44100 Hz, 2 ch, 16 bps, 88200
-    // samples), one Vorbis-comment block flagged last, then a frame sync
-    def be24(v: Int) = Array[Byte]((v >> 16).toByte, (v >> 8).toByte, v.toByte)
-    val si = new Array[Byte](34)
-    si(0) = 0x10; si(2) = 0x10 // min/max blocksize 4096
-    val (rate, ch, bps) = (44100, 2, 16); val samples = 88200L
-    si(10) = ((rate >> 12) & 0xff).toByte
-    si(11) = ((rate >> 4) & 0xff).toByte
-    si(12) = (((rate & 0xf) << 4) | ((ch - 1) << 1) | ((bps - 1) >> 4)).toByte
-    si(13) = ((((bps - 1) & 0xf) << 4) | ((samples >> 32) & 0xf).toInt).toByte
-    si(14) = ((samples >> 24) & 0xff).toByte
-    si(15) = ((samples >> 16) & 0xff).toByte
-    si(16) = ((samples >> 8) & 0xff).toByte
-    si(17) = (samples & 0xff).toByte
-    for (i <- 18 until 34) si(i) = (i * 3).toByte // MD5 stand-in
-    val vorbis = Array.tabulate[Byte](12)(i => (i * 5).toByte)
-    val flac = "fLaC".getBytes("US-ASCII") ++
-      Array[Byte](0x00) ++ be24(34) ++ si ++
-      Array[Byte]((0x80 | 4).toByte) ++ be24(vorbis.length) ++ vorbis ++
-      Array[Byte](0xff.toByte, 0xf8.toByte, 0x69, 0x10)
-    val fi = Multimodal.FlacDecoder.walk(flac)
-    assert(fi.nBlocks == 2 && fi.sampleRateHz == 44100 && fi.channels == 2)
-    assert(fi.bitsPerSample == 16 && fi.totalSamples == 88200L)
-    assert(fi.durationMs == 2000L && fi.checksum > 0)
-    val ff = new Multimodal.FlacDecoder().decode(MediaRecord(9L, flac,
-      MediaMeta("flac", 0, 0, flac.length.toLong)))
-    assert(ff.nFrames == 2 && ff.format == "flac" && ff.checksum == fi.checksum)
-    def badFlac(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException] { Multimodal.FlacDecoder.walk(b) }
-      assert(e.getMessage.contains(needle), s"'${e.getMessage}' !~ $needle")
-    }
-    badFlac("fLaX".getBytes("US-ASCII") ++ flac.drop(4), "bad magic")
-    badFlac(flac.take(20), "shorter than fLaC")
-    badFlac(flac.take(44), "overruns payload") // truncated second block
-    val notFirst = flac.clone(); notFirst(4) = 0x04 // re-type STREAMINFO
-    badFlac(notFirst, "not STREAMINFO")
-    val badSync = flac.clone(); badSync(flac.length - 4) = 0x00
-    badFlac(badSync, "lost FLAC frame sync")
-    // --- MP4: ftyp(isom) + moov(mvhd v0 ts=1000 dur=5000, 2 traks) + mdat
-    def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-      (v >>> 8).toByte, v.toByte)
-    def mbox(typ: String, body: Array[Byte]): Array[Byte] =
-      be32(8 + body.length) ++ typ.getBytes("US-ASCII") ++ body
-    val ftyp = mbox("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(512) ++ "isomiso2".getBytes("US-ASCII"))
-    val mvhd = mbox("mvhd", Array[Byte](0, 0, 0, 0) ++ be32(7) ++ be32(8) ++
-      be32(1000) ++ be32(5000) ++ new Array[Byte](80))
-    def hdlr(h: String) = mbox("hdlr",
-      Array[Byte](0, 0, 0, 0) ++ be32(0) ++ h.getBytes("US-ASCII") ++
-        new Array[Byte](13))
-    def trak(h: String) = mbox("trak", mbox("mdia", hdlr(h)))
-    val moov = mbox("moov", mvhd ++ trak("vide") ++ trak("soun"))
-    val mdat = mbox("mdat", Array.tabulate[Byte](32)(i => (i * 9).toByte))
-    val mp4 = ftyp ++ moov ++ mdat
-    val mi = Multimodal.Mp4Decoder.walk(mp4)
-    assert(mi.brand == "isom" && mi.timescaleHz == 1000L)
-    assert(mi.durationMs == 5000L && mi.nTracks == 2)
-    assert(mi.handlers == Seq("vide", "soun") && mi.checksum > 0)
-    val mf = new Multimodal.Mp4Decoder().decode(MediaRecord(11L, mp4,
-      MediaMeta("mp4", 0, 0, mp4.length.toLong)))
-    assert(mf.nFrames == 2 && mf.format == "mp4" && mf.checksum == mi.checksum)
-    def badMp4(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException] { Multimodal.Mp4Decoder.walk(b) }
-      assert(e.getMessage.contains(needle), s"'${e.getMessage}' !~ $needle")
-    }
-    badMp4(moov ++ mdat, "not ftyp")
-    badMp4(ftyp ++ mdat, "no moov")
-    badMp4(mp4.take(mp4.length - 20), "overruns parent")
-    badMp4(mbox("ftyp", "isom".getBytes("US-ASCII") ++ be32(0)) ++
-      mbox("moov", trak("vide")), "no mvhd")
-  }
-
-  test("AviDecoder walks RIFF hdrl: frames, period, streams, dimensions") {
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-      val padded = if (body.length % 2 == 1) body :+ 0.toByte else body
-      id.getBytes("US-ASCII") ++ le32(body.length) ++ padded
-    }
-    def list(listType: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", listType.getBytes("US-ASCII") ++ body)
-    // avih: µs/frame=40000 (25 fps), maxBps, padding, flags,
-    // totalFrames=250, initial, streams=2, bufSize, 320x240, reserved[4]
-    val avih = chunk("avih", le32(40000) ++ le32(0) ++ le32(0) ++ le32(0) ++
-      le32(250) ++ le32(0) ++ le32(2) ++ le32(0) ++ le32(320) ++ le32(240) ++
-      new Array[Byte](16))
-    def strl(fcc: String) = list("strl",
-      chunk("strh", fcc.getBytes("US-ASCII") ++ new Array[Byte](52)))
-    val hdrl = list("hdrl", avih ++ strl("vids") ++ strl("auds"))
-    val movi = list("movi",
-      chunk("00dc", Array.tabulate[Byte](21)(i => (i * 7).toByte)))
-    val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
-    val avi = "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    val ai = Multimodal.AviDecoder.walk(avi)
-    assert(ai.usPerFrame == 40000L && ai.totalFrames == 250 && ai.nStreams == 2)
-    assert(ai.widthPx == 320 && ai.heightPx == 240)
-    assert(ai.streamTypes == Seq("vids", "auds"))
-    assert(ai.durationMs == 10000L && ai.checksum > 0)
-    val af = new Multimodal.AviDecoder().decode(MediaRecord(13L, avi,
-      MediaMeta("avi", 320, 240, avi.length.toLong)))
-    assert(af.nFrames == 250 && af.format == "avi" && af.checksum == ai.checksum)
-    def badAvi(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException] { Multimodal.AviDecoder.walk(b) }
-      assert(e.getMessage.contains(needle), s"'${e.getMessage}' !~ $needle")
-    }
-    badAvi("RIFX".getBytes("US-ASCII") ++ avi.drop(4), "not a RIFF AVI")
-    badAvi(avi.take(avi.length - 10), "overruns")
-    badAvi("RIFF".getBytes("US-ASCII") ++ le32(4 + movi.length) ++
-      "AVI ".getBytes("US-ASCII") ++ movi, "no LIST hdrl")
-    // avih claiming 3 streams over a 2-strl header list
-    val lied = avi.clone()
-    val streamsOff = avi.indexOfSlice("avih".getBytes("US-ASCII")) + 8 + 24
-    lied(streamsOff) = 3
-    badAvi(lied, "says 3 streams")
-  }
-
-  test("WebpDecoder walks the RIFF container: variant, dimensions, animation") {
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def le24(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-      val padded = if (body.length % 2 == 1) body :+ 0.toByte else body
-      id.getBytes("US-ASCII") ++ le32(body.length) ++ padded
-    }
-    def webp(chunks: Array[Byte]): Array[Byte] = {
-      val body = "WEBP".getBytes("US-ASCII") ++ chunks
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    // lossless still: VP8L signature 0x2F + packed 14-bit (w-1, h-1)
-    val bits = (100 - 1) | ((60 - 1) << 14)
-    val lossless = webp(chunk("VP8L", Array[Byte](0x2f) ++ le32(bits) ++
-      Array.tabulate[Byte](9)(i => (i * 3).toByte)))
-    val li = Multimodal.WebpDecoder.walk(lossless)
-    assert(li.variant == "VP8L" && li.widthPx == 100 && li.heightPx == 60)
-    assert(!li.animated && li.nFrames == 1 && li.checksum > 0)
-    // lossy still: VP8 keyframe tag + 0x9D012A start code + 14-bit dims
-    val vp8 = webp(chunk("VP8 ", Array[Byte](0x50, 0x00, 0x00, 0x9d.toByte,
-      0x01, 0x2a) ++ le16(320) ++ le16(240) ++
-      Array.tabulate[Byte](11)(i => (i * 5).toByte)))
-    val vi = Multimodal.WebpDecoder.walk(vp8)
-    assert(vi.variant == "VP8" && vi.widthPx == 320 && vi.heightPx == 240)
-    assert(vi.nFrames == 1)
-    // extended animated: VP8X canvas 64x32, ANIM + two ANMF frames
-    val vp8x = chunk("VP8X", Array[Byte](0x02, 0, 0, 0) ++
-      le24(64 - 1) ++ le24(32 - 1))
-    val anim = chunk("ANIM", new Array[Byte](6))
-    def anmf(seed: Int) = chunk("ANMF",
-      Array.tabulate[Byte](24)(i => (i * seed).toByte))
-    val animated = webp(vp8x ++ anim ++ anmf(3) ++ anmf(7))
-    val ai = Multimodal.WebpDecoder.walk(animated)
-    assert(ai.variant == "VP8X" && ai.widthPx == 64 && ai.heightPx == 32)
-    assert(ai.animated && ai.nFrames == 2)
-    // the batched decode path agrees
-    val f = new Multimodal.WebpDecoder().decode(MediaRecord(5L, animated,
-      MediaMeta("webp", 64, 32, animated.length.toLong)))
-    assert(f.format == "webp" && f.nFrames == 2 && f.checksum == ai.checksum)
-    def bad(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException] { Multimodal.WebpDecoder.walk(b) }
-      assert(e.getMessage.contains(needle), s"'${e.getMessage}' !~ $needle")
-    }
-    bad("RIFX".getBytes("US-ASCII") ++ lossless.drop(4), "not a RIFF WEBP")
-    bad(lossless.take(lossless.length - 4), "overruns")
-    bad(webp(chunk("VP8L", Array[Byte](0x30) ++ le32(bits))), "VP8L signature")
-    bad(webp(chunk("VP8 ", Array[Byte](0x51, 0, 0, 0x9d.toByte, 0x01, 0x2a) ++
-      le16(320) ++ le16(240))), "non-keyframe")
-    bad(webp(chunk("ICCP", new Array[Byte](8))), "no VP8 /VP8L/VP8X")
-    bad(webp(vp8x ++ anim), "no ANMF")
-  }
-
-  test("OggDecoder walks pages: streams, codecs, rate, granule duration") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def le64(v: Long) = le32(v & 0xffffffffL) ++ le32(v >>> 32)
-    var seq = 0
-    def page(htype: Int, granule: Long, serial: Long,
-        body: Array[Byte]): Array[Byte] = {
-      val lacing = Array.fill(body.length / 255)(255.toByte) :+
-        (body.length % 255).toByte
-      seq += 1
-      "OggS".getBytes("US-ASCII") ++ Array[Byte](0, htype.toByte) ++
-        le64(granule) ++ le32(serial) ++ le32(seq.toLong) ++ le32(0L) ++
-        Array[Byte](lacing.length.toByte) ++ lacing ++ body
-    }
-    // Vorbis stream (serial 7): id header BOS, one data page at 2 s
-    val vorbisId = Array[Byte](0x01) ++ "vorbis".getBytes("US-ASCII") ++
-      le32(0L) ++ Array[Byte](2) ++ le32(44100L) ++ new Array[Byte](13)
-    // Opus stream (serial 9): OpusHead BOS (pre-skip 312), EOS at 96312
-    val opusId = "OpusHead".getBytes("US-ASCII") ++ Array[Byte](1, 1) ++
-      le16(312) ++ le32(48000L) ++ new Array[Byte](3)
-    val ogg = page(0x02, 0, 7, vorbisId) ++ page(0x02, 0, 9, opusId) ++
-      page(0, 88200, 7, Array.tabulate[Byte](300)(i => (i * 3).toByte)) ++
-      page(0x04, 96312, 9, Array.tabulate[Byte](40)(i => (i * 7).toByte))
-    val oi = Multimodal.OggDecoder.walk(ogg)
-    assert(oi.nStreams == 2 && oi.nPages == 4)
-    assert(oi.codecs == Seq("vorbis", "opus"))
-    assert(oi.sampleRateHz == 44100 && oi.channels == 2)
-    // max(88200/44.1 kHz, (96312-312)/48 kHz) = max(2000, 2000) = 2000 ms
-    assert(oi.durationMs == 2000L, s"duration ${oi.durationMs}")
-    val f = new Multimodal.OggDecoder().decode(MediaRecord(6L, ogg,
-      MediaMeta("ogg", 0, 0, ogg.length.toLong)))
-    assert(f.format == "ogg" && f.nFrames == 4 && f.checksum == oi.checksum)
-    def bad(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException] { Multimodal.OggDecoder.walk(b) }
-      assert(e.getMessage.contains(needle), s"'${e.getMessage}' !~ $needle")
-    }
-    bad("OgsS".getBytes("US-ASCII") ++ ogg.drop(4), "capture pattern")
-    val v1 = ogg.clone(); v1(4) = 1
-    bad(v1, "unsupported Ogg version")
-    bad(ogg.take(ogg.length - 20), "overruns")
-    // a stream with no BOS page anywhere is not well-formed
-    bad(page(0, 1000, 7, new Array[Byte](10)), "no BOS page")
-  }
-
-  test("decoder fuzz: seeded byte mutations throw the contractual IAE, never escape") {
-    // the per-record error contract: a corrupted payload must either
-    // decode (mutation hit a don't-care byte) or throw
-    // IllegalArgumentException — an AIOOBE/NegativeArraySize escaping a
-    // decoder would kill the whole mapPartitions TASK instead of
-    // surfacing as one record's error (this fuzz found exactly that in
-    // the JPEG SOS table selectors: length-4 Huffman arrays indexed by
-    // unchecked 0-15 nibbles)
-    val rnd0 = new scala.util.Random(7)
-    def jpegBytes(): Array[Byte] = {
-      val bi = new java.awt.image.BufferedImage(32, 24,
-        java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      for (y <- 0 until 24; x <- 0 until 32) bi.setRGB(x, y, rnd0.nextInt(1 << 24))
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(bi, "jpg", bos); bos.toByteArray
-    }
-    def imgBytes(fmt: String): Array[Byte] = {
-      val bi = new java.awt.image.BufferedImage(17, 11,
-        java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      for (y <- 0 until 11; x <- 0 until 17) bi.setRGB(x, y, rnd0.nextInt(1 << 24))
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(bi, fmt, bos)); bos.toByteArray
-    }
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    val pcm = Array.tabulate[Byte](64)(i => (i * 3).toByte)
-    val wav = "RIFF".getBytes("US-ASCII") ++ le32(4 + 24 + 8 + pcm.length) ++
-      "WAVE".getBytes("US-ASCII") ++ "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-      le16(1) ++ le16(1) ++ le32(8000) ++ le32(8000) ++ le16(1) ++ le16(8) ++
-      "data".getBytes("US-ASCII") ++ le32(pcm.length) ++ pcm
-    val ppm = "P6\n5 3\n255\n".getBytes("US-ASCII") ++
-      Array.tabulate[Byte](45)(i => (i * 7).toByte)
-    def driJpegBytes(): Array[Byte] = {
-      // restart-interval variant: the RSTn resync path is the one that
-      // carried the latent fill-byte AIOOBE, so it fuzzes separately
-      val bi = new java.awt.image.BufferedImage(32, 24,
-        java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-      for (y <- 0 until 24; x <- 0 until 32)
-        bi.getRaster.setSample(x, y, 0, rnd0.nextInt(256))
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      writer.setOutput(ios)
-      val param = writer.getDefaultWriteParam
-      val meta = writer.getDefaultImageMetadata(
-        new javax.imageio.ImageTypeSpecifier(bi), param)
-      val fmt = "javax_imageio_jpeg_image_1.0"
-      val tree = meta.getAsTree(fmt)
-      val ms = tree.asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-        .getElementsByTagName("markerSequence").item(0)
-      val dri = new javax.imageio.metadata.IIOMetadataNode("dri")
-      dri.setAttribute("interval", "2")
-      ms.insertBefore(dri, ms.getFirstChild)
-      meta.setFromTree(fmt, tree)
-      writer.write(null, new javax.imageio.IIOImage(bi, null, meta), param)
-      writer.dispose(); ios.close()
-      bos.toByteArray
-    }
-    def mp3Bytes(): Array[Byte] = {
-      // three MPEG-1 Layer III 128 kbps 44100 Hz frames (417/418 bytes)
-      val out = new java.io.ByteArrayOutputStream()
-      Seq(0, 1, 0).foreach { pad =>
-        val flen = 144 * 128000 / 44100 + pad
-        val h = (0x7ff << 21) | (3 << 19) | (1 << 17) | (1 << 16) |
-          (9 << 12) | (0 << 10) | (pad << 9)
-        out.write(Array[Byte]((h >>> 24).toByte, (h >>> 16).toByte,
-          (h >>> 8).toByte, h.toByte))
-        val body = new Array[Byte](flen - 4); rnd0.nextBytes(body); out.write(body)
-      }
-      out.toByteArray
-    }
-    def flacBytes(): Array[Byte] = {
-      def be24(v: Int) = Array[Byte]((v >> 16).toByte, (v >> 8).toByte, v.toByte)
-      val si = new Array[Byte](34)
-      si(0) = 0x10; si(2) = 0x10
-      val rate = 22050
-      si(10) = ((rate >> 12) & 0xff).toByte
-      si(11) = ((rate >> 4) & 0xff).toByte
-      si(12) = (((rate & 0xf) << 4) | (0 << 1) | 0).toByte // 1 ch, ...
-      si(13) = (((8 - 1) & 0xf) << 4).toByte               // 8 bps, 0 samples hi
-      si(17) = 100 // 100 samples
-      for (i <- 18 until 34) si(i) = (i * 3).toByte
-      val pad = new Array[Byte](9)
-      "fLaC".getBytes("US-ASCII") ++ Array[Byte](0x00) ++ be24(34) ++ si ++
-        Array[Byte]((0x80 | 1).toByte) ++ be24(pad.length) ++ pad ++
-        Array[Byte](0xff.toByte, 0xf8.toByte, 0x55, 0x11)
-    }
-    def mp4Bytes(): Array[Byte] = {
-      def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-        (v >>> 8).toByte, v.toByte)
-      def mbox(typ: String, body: Array[Byte]): Array[Byte] =
-        be32(8 + body.length) ++ typ.getBytes("US-ASCII") ++ body
-      val hdlr = mbox("hdlr", Array[Byte](0, 0, 0, 0) ++ be32(0) ++
-        "vide".getBytes("US-ASCII") ++ new Array[Byte](13))
-      mbox("ftyp", "isom".getBytes("US-ASCII") ++ be32(0)) ++
-        mbox("moov",
-          mbox("mvhd", Array[Byte](0, 0, 0, 0) ++ be32(1) ++ be32(2) ++
-            be32(600) ++ be32(1200) ++ new Array[Byte](80)) ++
-          mbox("trak", mbox("mdia", hdlr))) ++
-        mbox("mdat", Array.tabulate[Byte](24)(i => (i * 13).toByte))
-    }
-    def aviBytes(): Array[Byte] = {
-      def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-        (v >> 16).toByte, (v >> 24).toByte)
-      def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-        val padded = if (body.length % 2 == 1) body :+ 0.toByte else body
-        id.getBytes("US-ASCII") ++ le32(body.length) ++ padded
-      }
-      def list(lt: String, body: Array[Byte]): Array[Byte] =
-        chunk("LIST", lt.getBytes("US-ASCII") ++ body)
-      val avih = chunk("avih", le32(33367) ++ le32(0) ++ le32(0) ++ le32(0) ++
-        le32(90) ++ le32(0) ++ le32(1) ++ le32(0) ++ le32(160) ++ le32(120) ++
-        new Array[Byte](16))
-      val hdrl = list("hdrl", avih ++ list("strl",
-        chunk("strh", "vids".getBytes("US-ASCII") ++ new Array[Byte](52))))
-      val movi = list("movi",
-        chunk("00dc", Array.tabulate[Byte](18)(i => (i * 5).toByte)))
-      val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    def webpBytes(): Array[Byte] = {
-      def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-        val padded = if (body.length % 2 == 1) body :+ 0.toByte else body
-        id.getBytes("US-ASCII") ++ le32(body.length) ++ padded
-      }
-      val vp8x = chunk("VP8X", Array[Byte](0x02, 0, 0, 0, 63, 0, 0, 31, 0, 0))
-      val frames = chunk("ANMF", Array.tabulate[Byte](24)(i => (i * 3).toByte)) ++
-        chunk("ANMF", Array.tabulate[Byte](20)(i => (i * 11).toByte))
-      val body = "WEBP".getBytes("US-ASCII") ++ vp8x ++
-        chunk("ANIM", new Array[Byte](6)) ++ frames
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    def oggBytes(): Array[Byte] = {
-      def le64(v: Long) = le32((v & 0xffffffffL).toInt) ++ le32((v >>> 32).toInt)
-      def page(htype: Int, granule: Long, serial: Int, sq: Int,
-          body: Array[Byte]): Array[Byte] =
-        "OggS".getBytes("US-ASCII") ++ Array[Byte](0, htype.toByte) ++
-          le64(granule) ++ le32(serial) ++ le32(sq) ++ le32(0) ++
-          Array[Byte](1, body.length.toByte) ++ body
-      val vorbisId = Array[Byte](0x01) ++ "vorbis".getBytes("US-ASCII") ++
-        le32(0) ++ Array[Byte](2) ++ le32(44100) ++ new Array[Byte](13)
-      page(0x02, 0, 7, 1, vorbisId) ++
-        page(0x04, 88200, 7, 2, Array.tabulate[Byte](60)(i => (i * 3).toByte))
-    }
-    val cases: Seq[(String, MediaDecoder, Array[Byte])] = Seq(
-      ("jpeg", new JpegDecoder, jpegBytes()),
-      ("jpeg", new JpegDecoder, driJpegBytes()),
-      ("mp3", new Multimodal.Mp3Decoder, mp3Bytes()),
-      ("flac", new Multimodal.FlacDecoder, flacBytes()),
-      ("mp4", new Multimodal.Mp4Decoder, mp4Bytes()),
-      ("avi", new Multimodal.AviDecoder, aviBytes()),
-      ("webp", new Multimodal.WebpDecoder, webpBytes()),
-      ("ogg", new Multimodal.OggDecoder, oggBytes()),
-      ("png", new PngDecoder, imgBytes("png")),
-      ("gif", new GifDecoder, imgBytes("gif")),
-      ("tiff", new TiffDecoder, imgBytes("tiff")),
-      ("bmp", new BmpDecoder, imgBytes("bmp")),
-      ("wav", new WavDecoder(), wav),
-      ("ppm", new PpmDecoder, ppm))
-    cases.foreach { case (fmt, dec, base) =>
-      val rnd = new scala.util.Random(13 + fmt.hashCode)
-      var decoded = 0; var rejected = 0
-      for (_ <- 0 until 400) {
-        val m = base.clone()
-        for (_ <- 0 to rnd.nextInt(4))
-          m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-        // truncations exercise every length check too
-        val payload = if (rnd.nextInt(8) == 0) m.take(rnd.nextInt(m.length)) else m
-        try {
-          dec.decode(MediaRecord(1L, payload,
-            MediaMeta(fmt, 0, 0, payload.length.toLong)))
-          decoded += 1
-        } catch {
-          case _: IllegalArgumentException => rejected += 1
-          case e: Throwable =>
-            fail(s"$fmt decoder let ${e.getClass.getSimpleName} escape: ${e.getMessage}")
-        }
-      }
-      // both paths must actually be exercised for the fuzz to mean much
-      assert(rejected > 0, s"$fmt fuzz never rejected — mutations too weak")
-    }
-  }
-
-  test("extractFeaturesAuto decodes a mixed-format partition by metadata tag") {
-    import spark.implicits._
-    // one PPM, one WAV, one unknown-codec payload in ONE dataset: each
-    // must route to its real decoder (or FakeDecoder) per its format tag
-    val ppm = ("P6\n2 1\n255\n".getBytes("US-ASCII") ++
-      Array[Byte](1, 2, 3, 4, 5, 6))
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    val pcm = Array.tabulate[Byte](64)(i => (i * 3).toByte)
-    val wav = "RIFF".getBytes("US-ASCII") ++ le32(4 + 24 + 8 + pcm.length) ++
-      "WAVE".getBytes("US-ASCII") ++
-      "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++ le16(1) ++
-      le32(8000) ++ le32(8000) ++ le16(1) ++ le16(8) ++
-      "data".getBytes("US-ASCII") ++ le32(pcm.length) ++ pcm
-    val blob = Array.tabulate[Byte](48)(i => (i * 7).toByte)
-    // one real MPEG-1 Layer III frame (128 kbps, 44100 Hz, no padding)
-    val mp3h = (0x7ff << 21) | (3 << 19) | (1 << 17) | (1 << 16) | (9 << 12)
-    val mp3 = Array[Byte]((mp3h >>> 24).toByte, (mp3h >>> 16).toByte,
-      (mp3h >>> 8).toByte, mp3h.toByte) ++
-      Array.tabulate[Byte](144 * 128000 / 44100 - 4)(i => (i * 11).toByte)
-    val recs = Seq(
-      MediaRecord(61L, ppm, MediaMeta("ppm", 2, 1, ppm.length.toLong)),
-      MediaRecord(62L, wav, MediaMeta("wav", 0, 0, wav.length.toLong)),
-      MediaRecord(63L, blob, MediaMeta("webm", 0, 0, blob.length.toLong)),
-      MediaRecord(64L, mp3, MediaMeta("mp3", 0, 0, mp3.length.toLong)))
-    val out = Multimodal.extractFeaturesAuto(recs.toDS().coalesce(1), batchSize = 2)
-      .collect().map(f => f.id -> f).toMap
-    assert(out(61L) == (new PpmDecoder).decode(recs(0)))
-    assert(out(62L) == (new WavDecoder()).decode(recs(1)))
-    assert(out(63L) == (new FakeDecoder()).decode(recs(2)))
-    assert(out(64L) == (new Multimodal.Mp3Decoder).decode(recs(3)))
-    assert(out(61L).format == "ppm" && out(62L).format == "wav" &&
-      out(63L).format == "webm" && out(64L).format == "mp3" &&
-      out(64L).nFrames == 1)
-  }
-
-  test("crafted huge-raster headers throw before allocating (PNG zlib / GIF LZW bounds)") {
-    // PNG: a ~100-byte payload whose valid-CRC IHDR claims a ~2.1 GB
-    // raster (w=699050 RGB, h=1023 -> (stride+1)*h just under
-    // Int.MaxValue) must die on the inflate-expansion bound, not OOM
-    val ihdr = PngWriter.be32(699050) ++ PngWriter.be32(1023) ++
-      Array[Byte](8, 2, 0, 0, 0)
-    val png = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
-      PngWriter.chunk("IHDR", ihdr) ++
-      PngWriter.chunk("IDAT", Array[Byte](1, 2, 3)) ++
-      PngWriter.chunk("IEND", Array.empty[Byte])
-    val rec = MediaRecord(1L, png, MediaMeta("png", 0, 0, png.length.toLong))
-    val e1 = intercept[IllegalArgumentException] { (new PngDecoder).decode(rec) }
-    assert(e1.getMessage.contains("could inflate"))
-    // GIF: a ~40-byte payload whose descriptor claims a 716M-pixel
-    // raster must die on the LZW-expansion bound, not OOM
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    val gif = "GIF89a".getBytes("US-ASCII") ++
-      le16(65535) ++ le16(10922) ++ Array[Byte](0x80.toByte, 0, 0) ++
-      Array[Byte](1, 2, 3, 4, 5, 6) ++ // 2-entry global color table
-      Array[Byte](0x2c) ++ le16(0) ++ le16(0) ++ le16(65535) ++ le16(10922) ++
-      Array[Byte](0) ++ // not interlaced, no local table
-      Array[Byte](8) ++ // LZW min code size
-      Array[Byte](3, 1, 2, 3, 0) ++ // one 3-byte sub-block + terminator
-      Array[Byte](0x3b)
-    val e2 = intercept[IllegalArgumentException] {
-      (new GifDecoder).decode(rec.copy(media = gif)) }
-    assert(e2.getMessage.contains("could decode"))
-  }
-
-  test("decoderFor dispatches real decoders by format tag, FakeDecoder for lossy codecs") {
-    assert(Multimodal.decoderFor("ppm").isInstanceOf[PpmDecoder])
-    assert(Multimodal.decoderFor("BMP").isInstanceOf[BmpDecoder])
-    assert(Multimodal.decoderFor("wav").isInstanceOf[WavDecoder])
-    assert(Multimodal.decoderFor("png").isInstanceOf[PngDecoder])
-    assert(Multimodal.decoderFor("gif").isInstanceOf[GifDecoder])
-    assert(Multimodal.decoderFor("tiff").isInstanceOf[TiffDecoder])
-    assert(Multimodal.decoderFor("tif").isInstanceOf[TiffDecoder])
-    assert(Multimodal.decoderFor("jpeg").isInstanceOf[JpegDecoder])
-    assert(Multimodal.decoderFor("jpg").isInstanceOf[JpegDecoder])
-    assert(Multimodal.decoderFor("mp3").isInstanceOf[Multimodal.Mp3Decoder])
-    assert(Multimodal.decoderFor("flac").isInstanceOf[Multimodal.FlacDecoder])
-    assert(Multimodal.decoderFor("mp4").isInstanceOf[Multimodal.Mp4Decoder])
-    assert(Multimodal.decoderFor("mov").isInstanceOf[Multimodal.Mp4Decoder])
-    assert(Multimodal.decoderFor("avi").isInstanceOf[Multimodal.AviDecoder])
-    assert(Multimodal.decoderFor("webp").isInstanceOf[Multimodal.WebpDecoder])
-    assert(Multimodal.decoderFor("ogg").isInstanceOf[Multimodal.OggDecoder])
-    assert(Multimodal.decoderFor("ogv").isInstanceOf[Multimodal.OggDecoder])
-    assert(Multimodal.decoderFor("webm").isInstanceOf[FakeDecoder])
-    assert(Multimodal.decoderFor("aac").isInstanceOf[FakeDecoder])
-    // an unknown tag (typo or unlisted format) must surface, not
-    // silently fake-decode into pseudo-features
-    val eu = intercept[IllegalArgumentException] { Multimodal.decoderFor("tiif") }
-    assert(eu.getMessage.contains("unknown media format"))
-    intercept[IllegalArgumentException] { Multimodal.decoderFor("pgm") }
-  }
-
-  test("PngDecoder rejects malformed payloads with the contractual IAE") {
-    val rnd = new scala.util.Random(59)
-    val (w, h, ch) = (4, 3, 3)
-    val rows = Array.fill(h) { val r = new Array[Byte](w * ch); rnd.nextBytes(r); r }
-    val img = PngWriter.write(w, h, ch, rows, Array(0, 1, 2))
-    val decoder = new PngDecoder
-    val rec = MediaRecord(1L, img, MediaMeta("png", w, h, img.length.toLong))
-    // corrupt a byte inside the IDAT payload -> CRC catches it
-    val corrupted = img.clone()
-    def chunkLen(p: Int): Int =
-      ((img(p) & 0xff) << 24) | ((img(p + 1) & 0xff) << 16) |
-        ((img(p + 2) & 0xff) << 8) | (img(p + 3) & 0xff)
-    val idatOff = {
-      var p = 8
-      while (new String(img, p + 4, 4, "US-ASCII") != "IDAT")
-        p += 12 + chunkLen(p)
-      p
-    }
-    corrupted(idatOff + 8) = (corrupted(idatOff + 8) ^ 0x55).toByte
-    val e1 = intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = corrupted)) }
-    assert(e1.getMessage.contains("CRC"))
-    // truncated payload -> chunk overrun
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = img.dropRight(5))) }
-    // wrong magic
-    intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = "BM000000".getBytes("US-ASCII"))) }
-    // palette color type (3) is unsupported; patch IHDR and re-CRC it
-    val palette = img.clone()
-    palette(8 + 8 + 9) = 3
-    val crc = new java.util.zip.CRC32()
-    crc.update(palette, 12, 4 + 13)
-    System.arraycopy(PngWriter.be32(crc.getValue.toInt), 0, palette, 12 + 4 + 13, 4)
-    val e2 = intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = palette)) }
-    assert(e2.getMessage.contains("color type"))
-    // crafted giant dimensions must throw, not attempt allocation:
-    // w = h = 0x40000000 with a re-CRC'd IHDR
-    val giant = img.clone()
-    System.arraycopy(PngWriter.be32(0x40000000), 0, giant, 16, 4)
-    System.arraycopy(PngWriter.be32(0x40000000), 0, giant, 20, 4)
-    val crc2 = new java.util.zip.CRC32()
-    crc2.update(giant, 12, 4 + 13)
-    System.arraycopy(PngWriter.be32(crc2.getValue.toInt), 0, giant, 12 + 4 + 13, 4)
-    val e3 = intercept[IllegalArgumentException] {
-      decoder.decode(rec.copy(media = giant)) }
-    assert(e3.getMessage.contains("too large"))
   }
 }

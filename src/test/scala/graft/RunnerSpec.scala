@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.concurrent.duration._
-import org.apache.spark.sql.functions._
 import graft.pipeline._
 import graft.pipeline.Plugins._
 
@@ -94,6 +93,24 @@ class RunnerSpec extends SparkSpec {
     val reports2 = Runner.processJobs(baseCtx(), Seq(boom),
       crashHandlers = Seq((_, _) => throw new RuntimeException("handler died")))
     assert(reports2.head.finalCtx.aborted.exists(_.contains("kaboom")))
+  }
+
+  test("a fatal error in a plugin propagates instead of becoming a crash abort") {
+    val interrupted = new Plugin {
+      val name = "interrupted_plugin"
+      def apply(ctx: PipelineContext): PipelineContext =
+        throw new InterruptedException("shutting down")
+    }
+    // with a timeout the plugin runs in a Future, which boxes the error
+    for (timeout <- Seq(Duration.Inf, 30.seconds)) {
+      var handled = false
+      val e = intercept[InterruptedException] {
+        Runner.processJobs(baseCtx(), Seq(interrupted), timeoutPerPlugin = timeout,
+          crashHandlers = Seq((_, _) => handled = true))
+      }
+      assert(e.getMessage == "shutting down", s"timeout $timeout")
+      assert(!handled, s"a crash handler saw a fatal error (timeout $timeout)")
+    }
   }
 
   test("plugins are stopped exactly once after processing, even on crash") {

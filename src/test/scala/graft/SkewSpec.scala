@@ -193,7 +193,6 @@ class SkewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("Salting spreads the 50%-mass key: per-task group size drops by the bucket factor") {
-    import spark.implicits._
     val n = 200000
     val kv = spark.range(n.toLong)
       .select(when(col("id") % 2 === 0, lit("HOT")).otherwise(

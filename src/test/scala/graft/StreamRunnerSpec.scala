@@ -473,7 +473,6 @@ class StreamRunnerSpec extends SparkSpec {
   }
 
   test("decontam gate admits the same set under any micro-batch slicing") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // the gate is row-local, so ONE file vs one-file-per-doc must admit
     // identically (the scaladoc's slicing-independence claim, pinned)
@@ -958,209 +957,6 @@ class StreamRunnerSpec extends SparkSpec {
         assert(est > exact(k) * 0.5 && est < exact(k) * 2.0,
           s"window $k: est $est vs exact ${exact(k)}")
     }
-  }
-
-  test("rate limiter admits the same events under any micro-batch slicing") {
-    import spark.implicits._
-    import graft.streaming.RateLimiter
-    // reference simulation over the globally-sorted event stream
-    val all = graft.sources.Tables.events(spark, sf)
-      .select(col("user_id"), col("ts_ns"), col("event_id"))
-      .as[(Long, Long, Long)].collect()
-    def simulate(evs: Seq[(Long, Long, Long)]): Set[Long] = {
-      val admitted = scala.collection.mutable.Set.empty[Long]
-      evs.groupBy(_._1).foreach { case (_, g) =>
-        val sorted = g.sortBy(e => (e._2, e._3))
-        var tokens = 2.0
-        var last = sorted.head._2
-        sorted.foreach { case (_, ts, eid) =>
-          tokens = (tokens + (ts - last).max(0L) / 1e9 * 2e-5).min(2.0)
-          last = ts
-          if (tokens >= 1.0) { tokens -= 1.0; admitted += eid }
-        }
-      }
-      admitted.toSet
-    }
-    val expected = simulate(all.toSeq)
-    assert(expected.nonEmpty && expected.size < all.length,
-      "throttle degenerate: nothing or everything admitted")
-    // batch mode (one big group pass)
-    val batchAdmitted = RateLimiter.rateLimitFrame(
-      graft.sources.Tables.events(spark, sf),
-      capacity = 2.0, perSecond = 2e-5)
-      .select("event_id").as[Long].collect().toSet
-    assert(batchAdmitted == expected)
-    // streaming mode: two micro-batches must admit the SAME set (state
-    // carries tokens/last across batches; event-time refill makes the
-    // decision independent of batch slicing)
-    val (src, ckp) = stageMessages(1)
-    // second file: same events shifted +30 days (the fixture spans ~17
-    // days, so the shift must exceed that for the second batch to be
-    // strictly later in EVENT time - the invariance claim needs batch
-    // order to agree with event order)
-    val shift = 30L * 86400L * 1000000000L
-    val shiftedNs = graft.sources.Tables.events(spark, sf)
-      .select((col("ts_ns") + shift).as("ts_ns"),
-        (col("event_id") + 1000000L).as("event_id"),
-        col("user_id"), col("event_type"), col("value"), col("props"))
-    // stage the second file with `ts` in the FIXTURE's own encoding (int64
-    // nanos or timestamp): one stream schema must describe both files
-    val tsOut = eventsSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => col("ts_ns")
-      case dt => timestamp_micros(expr("ts_ns div 1000")).cast(dt)
-    }
-    val shifted = shiftedNs
-      .select(tsOut.as("ts"), col("event_id"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-    // the file source lists FILES, not directories: write to a scratch
-    // dir and stage the single part-file as src/msg_2.parquet
-    val scratch = Files.createTempDirectory("graft_rl_scratch")
-    shifted.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    val part = Files.list(scratch).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get()
-    Files.copy(part, Paths.get(s"$src/msg_2.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val stream = StreamRunner.fileStream(spark, src, eventsSchema)
-      .withColumnRenamed("ts", "ts_ns")
-    val q = RateLimiter.rateLimitFrame(stream, capacity = 2.0,
-      perSecond = 2e-5)
-      .writeStream.queryName("rl_test").outputMode("append").format("memory")
-      .option("checkpointLocation", ckp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("rl_test")
-      .select("event_id").as[Long].collect().toSet
-    val shiftedEvs = shiftedNs
-      .select(col("user_id"), col("ts_ns"), col("event_id"))
-      .as[(Long, Long, Long)].collect()
-    val expectedAll = simulate((all ++ shiftedEvs).toSeq)
-    assert(streamed == expectedAll,
-      s"streamed ${streamed.size} vs expected ${expectedAll.size}")
-  }
-
-  test("dropLate discards cross-batch stragglers instead of rewinding the clock") {
-    import spark.implicits._
-    import graft.streaming.RateLimiter
-    val src = Files.createTempDirectory("graft_rl_late_src")
-    def stage(name: String, evs: Seq[(Long, Long, Long)]): Unit = {
-      val scratch = Files.createTempDirectory("graft_rl_late_scratch")
-      evs.toDF("user_id", "ts", "event_id").coalesce(1)
-        .write.mode("overwrite").parquet(scratch.toString)
-      val part = Files.list(scratch).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, Paths.get(s"$src/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val G = 1000000000L
-    // batch 1: e1 at t=100s (drains the single token, lastNs=100s);
-    // batch 2: e2 at t=90s is LATE (before lastNs) and e3 at t=290s
-    stage("msg_1.parquet", Seq((1L, 100L * G, 1L)))
-    Thread.sleep(50) // file source orders batches by modification time
-    stage("msg_2.parquet", Seq((1L, 90L * G, 2L), (1L, 290L * G, 3L)))
-    val schema = spark.read.parquet(s"$src/msg_1.parquet").schema
-    def run(name: String, dropLate: Boolean): Set[Long] = {
-      val ckp = Files.createTempDirectory(s"graft_rl_late_ckp_$name")
-      val stream = StreamRunner.fileStream(spark, src.toString, schema)
-        .withColumnRenamed("ts", "ts_ns")
-      val q = RateLimiter.rateLimitFrame(stream,
-          capacity = 1.0, perSecond = 0.005, dropLate = dropLate)
-        .writeStream.queryName(name).outputMode("append").format("memory")
-        .option("checkpointLocation", ckp.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      spark.table(name).select("event_id").as[Long].collect().toSet
-    }
-    // guarded: e2 is discarded, so e3 accrues from lastNs=100s
-    // (190 s * 0.005/s = 0.95 tokens < 1) and is NOT admitted — exactly
-    // the straggler-free outcome
-    assert(run("rl_late_guarded", dropLate = true) == Set(1L))
-    // unguarded: folding e2 rewinds lastNs to 90s, so e3 sees
-    // 200 s * 0.005/s = 1.0 tokens and is wrongly admitted
-    assert(run("rl_late_unguarded", dropLate = false) == Set(1L, 3L))
-  }
-
-  test("dropLate orders equal-timestamp stragglers by event id, like the in-batch sort") {
-    import spark.implicits._
-    import graft.streaming.RateLimiter
-    val src = Files.createTempDirectory("graft_rl_tie_src")
-    def stage(name: String, evs: Seq[(Long, Long, Long)]): Unit = {
-      val scratch = Files.createTempDirectory("graft_rl_tie_scratch")
-      evs.toDF("user_id", "ts", "event_id").coalesce(1)
-        .write.mode("overwrite").parquet(scratch.toString)
-      val part = Files.list(scratch).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, Paths.get(s"$src/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val G = 1000000000L
-    // same instant, ids out of order across batches: e2 folds first
-    // (admitted, one token left), then the straggler e1 arrives
-    stage("msg_1.parquet", Seq((1L, 100L * G, 2L)))
-    Thread.sleep(50)
-    stage("msg_2.parquet", Seq((1L, 100L * G, 1L)))
-    val schema = spark.read.parquet(s"$src/msg_1.parquet").schema
-    def run(name: String, dropLate: Boolean): Set[Long] = {
-      val ckp = Files.createTempDirectory(s"graft_rl_tie_ckp_$name")
-      val stream = StreamRunner.fileStream(spark, src.toString, schema)
-        .withColumnRenamed("ts", "ts_ns")
-      val q = RateLimiter.rateLimitFrame(stream,
-          capacity = 2.0, perSecond = 1e-9, dropLate = dropLate)
-        .writeStream.queryName(name).outputMode("append").format("memory")
-        .option("checkpointLocation", ckp.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      spark.table(name).select("event_id").as[Long].collect().toSet
-    }
-    // a bare lastNs guard (ts < lastNs) would let e1 fold and take the
-    // second token; the (ts, event_id) guard discards it — the
-    // straggler-free outcome
-    assert(run("rl_tie_guarded", dropLate = true) == Set(2L))
-    assert(run("rl_tie_unguarded", dropLate = false) == Set(1L, 2L))
-  }
-
-  test("dropLate discards an EXACT redelivery (same ts AND same event id)") {
-    import spark.implicits._
-    import graft.streaming.RateLimiter
-    val src = Files.createTempDirectory("graft_rl_rd_src")
-    def stage(name: String, evs: Seq[(Long, Long, Long)]): Unit = {
-      val scratch = Files.createTempDirectory("graft_rl_rd_scratch")
-      evs.toDF("user_id", "ts", "event_id").coalesce(1)
-        .write.mode("overwrite").parquet(scratch.toString)
-      val part = Files.list(scratch).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, Paths.get(s"$src/$name"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val G = 1000000000L
-    // the classic at-least-once replay: the IDENTICAL event in two batches
-    stage("msg_1.parquet", Seq((1L, 100L * G, 7L)))
-    Thread.sleep(50)
-    stage("msg_2.parquet", Seq((1L, 100L * G, 7L)))
-    val schema = spark.read.parquet(s"$src/msg_1.parquet").schema
-    // collect a LIST, not a set — the bug is a duplicate admission of the
-    // same id, which a set comparison would silently collapse
-    def run(name: String, dropLate: Boolean): Seq[Long] = {
-      val ckp = Files.createTempDirectory(s"graft_rl_rd_ckp_$name")
-      val stream = StreamRunner.fileStream(spark, src.toString, schema)
-        .withColumnRenamed("ts", "ts_ns")
-      val q = RateLimiter.rateLimitFrame(stream,
-          capacity = 2.0, perSecond = 1e-9, dropLate = dropLate)
-        .writeStream.queryName(name).outputMode("append").format("memory")
-        .option("checkpointLocation", ckp.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      spark.table(name).select("event_id").as[Long].collect().toSeq
-    }
-    // a strict eid < lastEid guard folds the replica again (refill 0, one
-    // token left -> a SECOND admission of the same event); <= drops it
-    assert(run("rl_rd_guarded", dropLate = true) == Seq(7L),
-      "exact redelivery was folded (and admitted) a second time")
-    assert(run("rl_rd_unguarded", dropLate = false) == Seq(7L, 7L),
-      "control: without the guard the replica double-spends")
   }
 
   test("streaming dedup drops a re-delivery whose timestamp was re-stamped") {
