@@ -70,7 +70,7 @@ object ConnectedComponents {
     // with one cheap aggregate per round instead of a diff join. Decimal
     // sum: 10^10 nodes × 10^9 ids would wrap an int64.
     def checksum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0)
+      df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
     var prev = checksum(labels)
     var round = 0
     while (round < maxIters) {

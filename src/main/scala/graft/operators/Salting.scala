@@ -46,7 +46,7 @@ object Salting {
     * and retries land rows in the same bucket (no rand(), which would
     * break task-retry determinism). */
   private def salt(df: DataFrame, buckets: Int): Column =
-    pmod(xxhash64(struct(df.columns.map(col): _*)), lit(buckets))
+    pmod(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)), lit(buckets))
 
   /** Two-phase salted aggregation: partial aggregate on (keys, salt) —
     * spreading a hot group over `buckets` tasks — then merge partials on

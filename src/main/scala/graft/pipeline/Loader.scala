@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.yaml.snakeyaml.{LoaderOptions, Yaml}
@@ -83,19 +82,6 @@ object ProductListLoader {
                 "`fun: create_scene`)"
             else ""
           throw ConfigException(s"invalid or unsafe YAML: $msg$hint", e)
-      }
-    build(root)
-  }
-
-  /** Parse the same document shape from JSON (YAML and JSON documents
-    * build through the identical tree walk, so the two forms are
-    * interchangeable). */
-  def fromJson(text: String): LoadedConfig = {
-    val root =
-      try new ObjectMapper().readValue(text, classOf[Object])
-      catch {
-        case NonFatal(e) =>
-          throw ConfigException(s"invalid JSON config: ${e.getMessage}", e)
       }
     build(root)
   }

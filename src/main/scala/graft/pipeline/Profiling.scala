@@ -21,8 +21,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - [[AuditListener]] (a `QueryExecutionListener`): one
   *     [[ActionAudit]] per completed ACTION (sink write, collect) with
   *     the action name, wall time, and the executed plan's exchange count
-  *     — its `logLine` is the per-sink dashboard line an operator tails
-  *     in production.
+  *     — its `jsonLine` is the per-action line of the run's audit report.
   *
   * (The Spark UI covers interactive profiling; these hooks exist for
   * headless runs — GraftSession disables the UI — and for asserting job
@@ -97,14 +96,9 @@ object Profiling {
 
   /** One completed (or failed) Spark ACTION, structured: the unit of the
     * per-run audit report ([[graft.pipeline.Launcher.runOnce]]'s
-    * `auditReport`) and of the human-readable log line. */
+    * `auditReport`). */
   final case class ActionAudit(action: String, wallMs: Long, exchanges: Int,
       rowsOut: Option[Long], error: Option[String] = None) {
-    def logLine: String = error match {
-      case Some(msg) => s"action=$action FAILED: $msg"
-      case None => s"action=$action wall_ms=$wallMs exchanges=$exchanges" +
-        rowsOut.map(r => s" rows_out=$r").getOrElse("")
-    }
     def jsonLine: String = {
       val m = ActionAudit.mapper // shared: one audit line per action is a hot path
       val node = m.createObjectNode()

@@ -52,6 +52,14 @@ object Runner {
     } finally plugins.foreach(_.stop()) // lifecycle teardown (launcher.py:417-429)
   }
 
+  /** Call every handler with `e`; a handler that throws does not stop
+    * the others or the caller. */
+  def notifyCrash(handlers: Seq[CrashHandler], plugin: String,
+                  e: Throwable): Unit =
+    handlers.foreach { h =>
+      try h(plugin, e) catch { case NonFatal(_) => () }
+    }
+
   private def runChain(start: PipelineContext, plugins: Seq[Plugin], prio: Int,
                        timeout: Duration,
                        crashHandlers: Seq[CrashHandler]): JobReport = {
@@ -101,9 +109,7 @@ object Runner {
               } else plugin(ctx)
             } catch {
               case NonFatal(e) =>
-                crashHandlers.foreach { h =>
-                  try h(plugin.name, e) catch { case NonFatal(_) => () }
-                }
+                notifyCrash(crashHandlers, plugin.name, e)
                 ctx.abort(s"${plugin.name} crashed: ${e.getMessage}")
             }
           val secs = (System.nanoTime() - t0) / 1e9

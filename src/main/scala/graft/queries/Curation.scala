@@ -116,6 +116,23 @@ object Curation extends QueryPack {
       |FROM ranked WHERE rk <= 5
       |ORDER BY lang, rk""".stripMargin
 
+  /** q56's split protocol over the shared 8-gram postings — the
+    * doc_id-hash bucket every decontam method shares (train < 90,
+    * test ≥ 95). ONE definition, consumed by q56/q124/q149 so the
+    * agreement matrix (q149) judges the production rules, not copies. */
+  private def bucketedSh8(spark: SparkSession, dir: String): DataFrame =
+    sh8Postings(spark, dir)
+      .withColumn("bucket", h32(concat(lit("split_"), col("doc_id"))) % 100)
+
+  /** q124's Bloom geometry (k = 3 seeded positions, m = 2²⁰ bits):
+    * pos = h32("b<seed>_" ∥ h) % m — re-hashes the 32-bit shingle hash,
+    * never the text. Shared with q149. */
+  private val bloomM = 1 << 20
+  private def bloomPositions(df: DataFrame): DataFrame = df
+    .withColumn("seed", explode(sequence(lit(0), lit(2))))
+    .withColumn("pos",
+      h32(concat(lit("b"), col("seed"), lit("_"), col("h"))) % bloomM)
+
   /** Train/test decontamination: a test document is contaminated if it
     * shares ANY 8-token shingle with ANY train document (the n-gram
     * overlap scan run before every eval; split = q52's hash buckets, so
@@ -128,56 +145,6 @@ object Curation extends QueryPack {
     * document pairing ever materializes. At 100 TB the train set is the
     * big side and the join partitions by `h` exactly as a persisted
     * inverted index would. */
-  /** q56's split protocol over the shared 8-gram postings — the
-    * doc_id-hash bucket every decontam method shares (train < 90,
-    * test ≥ 95). ONE definition, consumed by q56/q124/q149 so the
-    * agreement matrix (q149) judges the production rules, not copies. */
-  private def bucketedSh8(spark: SparkSession, dir: String): DataFrame =
-    sh8Postings(spark, dir)
-      .withColumn("bucket", h32(concat(lit("split_"), col("doc_id"))) % 100)
-
-  /** q124's Bloom geometry (k = 3 seeded positions, m = 2²⁰ bits):
-    * pos = h32("b<seed>_" ∥ h) % m — re-hashes the 32-bit shingle hash,
-    * never the text. Shared with q149 and the streaming decontam gate. */
-  private val bloomM = 1 << 20
-  private def bloomPositions(df: DataFrame): DataFrame = df
-    .withColumn("seed", explode(sequence(lit(0), lit(2))))
-    .withColumn("pos",
-      h32(concat(lit("b"), col("seed"), lit("_"), col("h"))) % bloomM)
-
-  /** The occupied-position BITSET of a protected document set's 8-gram
-    * Bloom filter (q124's geometry), materialized as m/64 = 16384 longs
-    * (128 KiB) — the artifact a streaming ingest gate ships to every
-    * executor. Bounded by the plan constant m regardless of how large
-    * the protected set grows (the whole point of q124's design), so the
-    * driver-side collect here is O(m), never O(corpus). */
-  private[graft] def bloomBitsOf(docs: DataFrame,
-      textCol: String = "text"): Array[Long] = {
-    val hashes = docs
-      .select(explode(shingleH32(col(textCol), 8)).as("h")).distinct()
-    val occupied = bloomPositions(hashes).select(col("pos")).distinct()
-      .collect().map(_.getLong(0))
-    val bits = new Array[Long](bloomM / 64)
-    occupied.foreach(p => bits((p >> 6).toInt) |= 1L << (p & 63).toInt)
-    bits
-  }
-
-  /** Row-local Bloom membership of one shingle hash `h` against a bitset
-    * literal (array<long> column, [[bloomBitsOf]]'s layout): member iff
-    * ALL k = 3 seeded positions are occupied — numerically identical to
-    * [[bloomPositions]]'s join form (same "b<seed>_∥h" re-hash, same m),
-    * but a pure codegen expression: zero joins, zero shuffles, zero
-    * stream state. StreamRunnerSpec pins stream-bounced ≡ q124's batch
-    * flagged set on the same split protocol. */
-  private[graft] def bloomMember(h: Column, bits: Column): Column =
-    (0 to 2).map { seed =>
-      val pos = h32(concat(lit("b"), lit(seed), lit("_"), h)) % bloomM
-      call_function("shiftright",
-          element_at(bits, (pos / 64).cast("int") + 1),
-          (pos % 64).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-
   def q56Contamination(spark: SparkSession, dir: String): DataFrame = {
     // shared 8-gram postings + the doc_id-derived split bucket (narrow)
     val sh = bucketedSh8(spark, dir)
@@ -1581,15 +1548,10 @@ object Curation extends QueryPack {
     * exact feature definitions with the registry weights (-3, 2, 8, 2),
     * every intermediate rounded exactly once, so all consumers (and
     * their SQL twins via [[registrySql]]) score identical
-    * probabilities from ONE definition. Zero-shuffle codegen row
-    * kernel over the documents scan. */
-  /** The frozen registry classifier as pure COLUMN expressions over a
-    * text column — the one definition behind [[registryScored]]
-    * (batch: q140/q141/q147) and
-    * [[graft.streaming.StreamRunner.qualityGate]] (stream), so a
-    * stream-admitted and a batch-curated corpus are consistent by
-    * construction. Row-local codegen throughout. */
-  private[graft] def registryCols(text: Column): Map[String, Column] = {
+    * probabilities from ONE definition: pure COLUMN expressions over a
+    * text column, which [[registryScored]] applies. Zero-shuffle codegen
+    * row kernel over the documents scan. */
+  private def registryCols(text: Column): Map[String, Column] = {
     val toks = tokens(text)
     val nWords = size(toks)
     val wordChars = length(regexp_replace(text, " ", ""))

@@ -294,40 +294,13 @@ object Dedup extends QueryPack {
       |WHERE round(1e-9 + CAST(inter AS DOUBLE) / (ca.n_sh + cb.n_sh - inter), 5) >= 0.6
       |ORDER BY da, db""".stripMargin
 
-  /** MinHash + LSH: 16-permutation signature over shingle hashes, 4 bands
-    * of 4 rows, bucket-join on (band, band fingerprint) for candidates,
-    * exact Jaccard verification of candidates only. This is the 100 TB
-    * path: signature cost is linear, candidate generation is an equi-join
-    * on the band key, and the quadratic verify touches only collisions. */
-  /** Row-local MinHash band fingerprints of a text column — numerically
-    * identical to [[mhCands]]' per-doc aggregation (min over a multiset
-    * equals min over the distinct set, and the band fold is the same
-    * (acc·131 + mh) % P over the same [[perms]] constants), but computed
-    * entirely inside one row: no explode, no shuffle, no state. This is
-    * the signature path a STREAMING admission gate needs — per-document
-    * cost is O(|shingles|), stream state stays zero. Returns one column
-    * per band (null when the document has < 3 tokens, i.e. no shingles —
-    * no signature, no near-dup evidence). */
-  private[graft] def rowBandFps(text: Column): Seq[Column] = {
-    val sh = shingleH32(text, 3)
-    val mh = perms.map { case (_, a, b) =>
-      array_min(transform(sh, h => (h * a + b) % P))
-    }
-    (0 until 4).map { bnd =>
-      (0 until 4).foldLeft(lit(0L)) { (acc, j) =>
-        (acc * 131 + mh(bnd * 4 + j)) % P
-      }
-    }
-  }
-
   /** The corpus-side (doc_id, band, bfp) fingerprint table of
     * [[mhCands]]' candidate stage — the artifact a batch LSH dedup pass
-    * persists and the streaming near-dup gate anti-joins against. Band
-    * fingerprints as projections over the 16 parallel signature minima:
-    * ONE shuffle for the whole signature (no postings × 16 explode). At
-    * production scale this is the stored LSH index, O(4·|docs|) keyed
-    * rows, never the raw corpus. */
-  private[graft] def bandTable(sh: DataFrame): DataFrame = {
+    * persists. Band fingerprints as projections over the 16 parallel
+    * signature minima: ONE shuffle for the whole signature (no postings ×
+    * 16 explode). At production scale this is the stored LSH index,
+    * O(4·|docs|) keyed rows, never the raw corpus. */
+  private def bandTable(sh: DataFrame): DataFrame = {
     val mhCols = perms.map { case (i, a, b) =>
       min((col("h") * a + b) % P).as(s"mh$i")
     }
@@ -341,10 +314,6 @@ object Dedup extends QueryPack {
           struct(lit(b).as("band"), bandFp(b).as("bfp"))): _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bfp").as("bfp"))
   }
-
-  /** Convenience overload over the session-shared postings. */
-  private[graft] def bandTable(spark: SparkSession, dir: String): DataFrame =
-    bandTable(shPostings(spark, dir))
 
   /** Source-grain postings (source, h) DERIVED from the session-shared
     * doc-grain postings: the md5+explode expansion (profiled at ~4× the
@@ -363,16 +332,6 @@ object Dedup extends QueryPack {
         .distinct()
     }
 
-  /** Band table of an arbitrary (doc_id, text) frame — the entry point a
-    * batch indexing job uses to build or refresh the persisted LSH index
-    * that [[graft.streaming.StreamRunner.nearDupGate]] anti-joins
-    * against (e.g. index only the curated corpus slice, not the raw
-    * crawl). Same distinct-shingle postings shape as [[shPostings]]. */
-  private[graft] def bandTableOf(docs: DataFrame): DataFrame =
-    bandTable(docs
-      .select(col("doc_id"), explode(shingleH32(col("text"), 3)).as("h"))
-      .distinct())
-
   /** Session-shared band table over the shared postings — the artifact
     * a production LSH pass PERSISTS (the stored index: O(4·|docs|) keyed
     * rows, never the raw corpus). q30/q119/q129 all read it, so it is
@@ -390,8 +349,13 @@ object Dedup extends QueryPack {
   private[queries] def bandsPlanOver(postings: DataFrame): DataFrame =
     bandTable(postings)
 
-  /** q30's candidate stage, shared with the q119 recall audit:
-    * candidates = band-fingerprint equi-join over [[shBands]]. */
+  /** q30's candidate stage, shared with the q119 recall audit.
+    * MinHash + LSH: a 16-permutation signature over shingle hashes, 4
+    * bands of 4 rows, candidates = band-fingerprint equi-join over
+    * [[shBands]], then exact Jaccard verification of candidates only.
+    * This is the 100 TB path: signature cost is linear, candidate
+    * generation is an equi-join on the band key, and the quadratic verify
+    * touches only collisions. */
   private def mhCands(spark: SparkSession, dir: String): DataFrame = {
     val bands = shBands(spark, dir)
     bands.as("x")

@@ -7,8 +7,7 @@ import graft.sources.Tables
 import graft.operators.AsOfJoin
 
 /** Event-stream operator pack (the reference's message/metadata surface,
-  * SURVEY §2.2 / §2.6, expressed as batch-checkable queries; the streaming
-  * runner in graft.streaming reuses the same transformations).
+  * SURVEY §2.2 / §2.6, expressed as batch-checkable queries).
   */
 object EventOps extends QueryPack {
 
@@ -216,9 +215,7 @@ object EventOps extends QueryPack {
 
   /** Point-in-interval range join (see [[graft.operators.RangeJoin]]):
     * events against six 3-hour campaign windows anchored at the stream
-    * start. Dimension-sized intervals → the broadcast path; the bucketed
-    * equi-join path is the big×big variant (RangeJoinSpec proves them
-    * equal). */
+    * start. Dimension-sized intervals → the broadcast path. */
   def q48IntervalJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val mn = ev.agg(min(col("ts_ns")).as("m"))

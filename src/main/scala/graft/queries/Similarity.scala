@@ -1296,8 +1296,7 @@ object Similarity extends QueryPack {
     * parameterized so the subset law (routed flags ⊆ exact flags at
     * every nprobe) is testable on RANDOM suite slices, not just the
     * registered one. The registered query aggregates this to label
-    * grain; [[graft.streaming.StreamRunner.semanticDecontamGate]]'s
-    * parity spec compares its admissions against these flags. */
+    * grain. */
   private[graft] def blockedDecontamFlags(spark: SparkSession, dir: String,
       nprobe: Int = 0, suite: Column = DefaultSuite): DataFrame = {
     val e = vecs(spark, dir)
@@ -1362,48 +1361,6 @@ object Similarity extends QueryPack {
       .groupBy(col("cell"))
       .agg(array_sort(collect_list(
         struct(col("vec_id").as("eid"), col("ev"), col("enrm")))).as("evs"))
-
-  /** One coarse cell of the decontam suite artifact: centroid (with its
-    * precomputed self-dot) plus the suite members assigned to the cell
-    * (each with ITS precomputed self-dot) — everything
-    * [[graft.streaming.StreamRunner.semanticDecontamGate]] needs to
-    * score a document row-locally. */
-  case class DecontamCell(cell: Int, cv: Seq[Double], cnrm: Double,
-      evs: Seq[(Seq[Double], Double)])
-
-  /** The decontam suite as a BOUNDED driver-side artifact — the semantic
-    * analog of q124's Bloom bitset: computed once at gate setup from the
-    * protected suite (k cell rows; total payload = the suite itself,
-    * which is protected-benchmark-sized by definition — control-plane,
-    * never corpus-sized), then shipped to executors as a plan literal.
-    * Same centroids, same cell assignment, same member arrays as
-    * [[blockedDecontamFlags]] — parity is by shared derivation, pinned
-    * in StreamRunnerSpec. */
-  def decontamCells(spark: SparkSession, dir: String,
-      suite: Column = DefaultSuite): Seq[DecontamCell] = {
-    val e = vecs(spark, dir)
-    val centA = centroidsOver(e, col("label"), "c_label")
-      .withColumn("cnrm", dotCol(col("cv"), col("cv")))
-    val scored = e.filter(suite).crossJoin(broadcast(centA))
-      .select(col("vec_id"), col("label"), col("v"), col("nrm"),
-        col("c_label").as("cell"),
-        (col("nrm") - lit(2.0) * dotCol(col("v"), col("cv"))
-          + col("cnrm")).as("d2"))
-    // centroid-driven LEFT join: a cell with no suite members still rides
-    // the artifact (empty member list) — the batch ROUTED mode spends its
-    // nprobe probes across ALL k centroid cells, memberless ones
-    // included, and the gate must rank the same candidate set or it
-    // would score cells the batch twin skipped
-    centA.join(evalCellsOver(scored), col("c_label") === col("cell"), "left")
-      .select(col("c_label"), col("cv"), col("cnrm"), col("evs"))
-      .collect().toSeq.map { r =>
-        DecontamCell(
-          r.getAs[Number](0).intValue(), r.getSeq[Double](1), r.getDouble(2),
-          if (r.isNullAt(3)) Seq.empty
-          else r.getSeq[org.apache.spark.sql.Row](3)
-            .map(m => (m.getSeq[Double](1), m.getDouble(2))))
-      }.sortBy(_.cell)
-  }
 
   /** Oracle for the registered EXACT mode: semantically identical to
     * broadcast-q146 (same pairs, same kernel, same rounding — the

@@ -76,11 +76,8 @@ object TiledRaster extends QueryPack {
     tilesOf(Trollflow.raster(spark, dir))
 
   /** Tile assembly over ANY tall pixel frame (area, product, y, x,
-    * value) — the fixture derivation above and the streaming scene
-    * ingest ([[graft.streaming.StreamRunner.tileIngest]]) share this
-    * one definition, so batch-built and stream-built tiles agree by
-    * construction. */
-  private[graft] def tilesOf(tall: DataFrame): DataFrame = {
+    * value) — the one definition behind the fixture derivation above. */
+  private def tilesOf(tall: DataFrame): DataFrame = {
     val n = TileSize
     tall
       .groupBy(col("area"), col("product"), col("y"), col("x"))

@@ -24,21 +24,9 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
-  /** Register every fixture table as a temp view so `spark.sql` works
-    * directly against the star schema (the SQL front door: a user can
-    * paste any of the oracle queries' FROM clauses). `events` registers
-    * the normalized two-column time form the engine's own queries read.
-    * Idempotent — re-registration replaces the views. */
-  def registerViews(spark: SparkSession, dir: String): Unit = {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings")
-      .foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
-    events(spark, dir).createOrReplaceTempView("events")
-  }
-
   /** `events` exposes two time columns regardless of how the fixture
     * physically encodes its timestamp: `ts_ns` int64 epoch-nanos (lossless,
-    * used for gap arithmetic by the event/stream operators) and `ts`, a
+    * used for gap arithmetic by the event operators) and `ts`, a
     * micro-precision session-tz TimestampType (what DuckDB's
     * CAST(ts AS TIMESTAMP) yields under UTC).
     *

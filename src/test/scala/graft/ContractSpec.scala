@@ -1,14 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.queries._
 
 /** Driver-contract consistency: every query must carry an oracle, names
   * must be globally unique (the merged Map would silently shadow a
   * duplicate), and the naming convention must hold. Metadata-only except
   * the fixture-schema tripwire, which does one schema-only parquet read
-  * per table. */
-class ContractSpec extends AnyFunSuite {
+  * per table, and the events-schema check. */
+class ContractSpec extends SparkSpec {
 
   private val packs: Seq[(String, Map[String, _], Map[String, String])] = Seq(
     ("Relational", Relational.defs, Relational.oracles),
@@ -126,24 +125,9 @@ class ContractSpec extends AnyFunSuite {
         drifted.mkString("\n  "))
   }
 
-  test("registerViews opens the SQL front door over the star schema") {
-    val spark = SparkSpec.spark
-    val sf = "/root/testdata/sf0.001"
-    graft.sources.Tables.registerViews(spark, sf)
-    // a join across three views, written as raw Spark SQL
-    val n = spark.sql(
-      """SELECT count(*) AS n
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey""".stripMargin)
-      .collect()(0).getLong(0)
-    assert(n == spark.sql("SELECT count(*) FROM lineitem").collect()(0).getLong(0),
-      "every lineitem row must join through orders to a customer")
-    // events registers the normalized two-column time form
-    val ev = spark.sql("SELECT ts_ns, ts FROM events LIMIT 1").schema
+  test("events exposes ts_ns as Long and ts as Timestamp") {
+    val ev = graft.sources.Tables.events(spark, sf).schema
     assert(ev("ts_ns").dataType == org.apache.spark.sql.types.LongType)
     assert(ev("ts").dataType == org.apache.spark.sql.types.TimestampType)
-    // idempotent
-    graft.sources.Tables.registerViews(spark, sf)
   }
 }

@@ -350,32 +350,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(flagged < total, "threshold must not flag everything")
   }
 
-  test("row-local MinHash band fingerprints equal the batch bandTable exactly") {
-    import org.apache.spark.sql.functions._
-    import graft.queries.Dedup
-    // the streaming nearDupGate's whole correctness story rests on
-    // rowBandFps(text) being numerically identical to the aggregated
-    // batch signature — prove it fingerprint-for-fingerprint
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val fps = Dedup.rowBandFps(col("text"))
-    val rowSide = docs
-      .select(col("doc_id") +: fps.zipWithIndex.map {
-        case (c, b) => c.as(s"b$b")
-      }: _*)
-      .select(col("doc_id"), posexplode(
-        array((0 until 4).map(b => col(s"b$b")): _*)).as(Seq("band", "bfp")))
-    val batchSide = Dedup.bandTableOf(docs)
-    val n = docs.count()
-    // no sub-3-token docs in the fixture, so both sides cover all docs
-    assert(rowSide.filter(col("bfp").isNull).count() == 0)
-    assert(rowSide.count() == 4 * n && batchSide.count() == 4 * n)
-    val mismatches = rowSide.as("r")
-      .join(batchSide.as("g"),
-        col("r.doc_id") === col("g.doc_id") && col("r.band") === col("g.band"))
-      .filter(col("r.bfp") =!= col("g.bfp")).count()
-    assert(mismatches == 0, s"$mismatches row-local fps diverge from batch")
-  }
-
   test("q95 Bloom filter: no false negatives, bounded false-positive leakage") {
     val rows = run("q95_bloom_prune").collect()
     val urgent = rows.find(_.getAs[String]("o_orderpriority") == "1-URGENT").get

@@ -25,7 +25,7 @@ class CurationSpec extends SparkSpec {
     val total = graft.sources.Tables.documents(spark, sf).count()
     val killed = flagged.union(dupKill).distinct().count()
     val survived = Curation.q60CuratedCorpus(spark, sf)
-      .agg(sum(col("n_docs"))).head.getLong(0)
+      .agg(sum(col("n_docs"))).head().getLong(0)
     assert(survived == total - killed)
     assert(survived > 0 && killed > 0)
   }
@@ -46,12 +46,12 @@ class CurationSpec extends SparkSpec {
     val packed = Curation.q65SequencePacking(spark, sf).cache()
     val corpusTokens = graft.sources.Tables.documents(spark, sf)
       .select(org.apache.spark.sql.functions.size(tokens(col("text"))).cast("long").as("n"))
-      .agg(fsum(col("n"))).head.getLong(0)
-    assert(packed.agg(fsum(col("n_tokens"))).head.getLong(0) == corpusTokens)
+      .agg(fsum(col("n"))).head().getLong(0)
+    assert(packed.agg(fsum(col("n_tokens"))).head().getLong(0) == corpusTokens)
     // every example but the last starts within its 2048-token window:
     // example_id is dense from 0
     val n = packed.count()
-    assert(packed.agg(fmax(col("example_id"))).head.getLong(0) == n - 1)
+    assert(packed.agg(fmax(col("example_id"))).head().getLong(0) == n - 1)
     packed.unpersist()
   }
 }

@@ -299,7 +299,7 @@ class LoaderSpec extends AnyFunSuite {
     assert(cfg.workers.map(_.fun) == Seq("create_scene", "load_composites", "resample"))
     assert(cfg.workers.last.options == Map("radius_of_influence" -> "5000"))
     val e = intercept[ConfigException] {
-      ProductListLoader.fromJson(
+      ProductListLoader.fromYaml(
         """{"product_list": {"areas": {}},
           |  "workers": [{"fun": "!!python/name:trollflow2.plugins.create_scene"}]}""".stripMargin)
     }
@@ -322,7 +322,7 @@ class LoaderSpec extends AnyFunSuite {
         |            {"format": "jpg", "writer": "simple_image", "fill_value": 0}],
         |          "fname_pattern": "{platform_name:s}_{start_time:%Y%m%d_%H%M}_{areaname:s}_ctth_static.{format}"
         |}}}}}}""".stripMargin
-    val viaJson = Worklist.expand(ProductListLoader.fromJson(json).productList)
+    val viaJson = Worklist.expand(ProductListLoader.fromYaml(json).productList)
     val viaYaml = Worklist.expand(ProductListLoader.fromYaml(yamlTest1).productList)
     assert(viaJson == viaYaml.take(2))
   }
@@ -372,6 +372,6 @@ class LoaderSpec extends AnyFunSuite {
     intercept[ConfigException](ProductListLoader.fromYaml("areas: {}")) // no product_list
     intercept[ConfigException](ProductListLoader.fromYaml(
       "product_list:\n  areas:\n    a:\n      priority: high\n"))
-    intercept[ConfigException](ProductListLoader.fromJson("{not json"))
+    intercept[ConfigException](ProductListLoader.fromYaml("{not json"))
   }
 }

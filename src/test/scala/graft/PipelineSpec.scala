@@ -257,9 +257,10 @@ class PipelineSpec extends SparkSpec {
       }
     } finally spark.listenerManager.unregister(l)
     val audits = lines.synchronized(lines.toList)
-    val got = audits.map(_.logLine)
+    val got = audits.map(_.jsonLine)
     assert(got.nonEmpty, "no audit line arrived")
-    assert(got.exists(s => s.contains("action=") && s.contains("exchanges=")), got.mkString("; "))
+    assert(got.exists(s => s.contains("\"action\":") && s.contains("\"exchanges\":")),
+      got.mkString("; "))
     // one groupBy = one shuffle: counted on the typed plan, not on the
     // adaptive plan's string form (which prints final and initial trees)
     assert(audits.exists(a => a.action == "collect" && a.exchanges == 1), got.mkString("; "))

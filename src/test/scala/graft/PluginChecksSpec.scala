@@ -249,7 +249,7 @@ class PluginChecksSpec extends SparkSpec {
     assert(cA == Seq(2.5, 4.5, 10.5, 12.5))
     assert(cFrame.filter($"product" === "B").count() == 4) // untouched grid
     // every product now shares the 2x2 grid
-    assert(cFrame.agg(org.apache.spark.sql.functions.max($"y")).as[Long].head == 1L)
+    assert(cFrame.agg(org.apache.spark.sql.functions.max($"y")).as[Long].head() == 1L)
 
     // finest: target = A's 4x4 grid; B replicates each cell 2x2
     val fine = Resample(Seq.empty, nativeMode = Some("finest"))(base)

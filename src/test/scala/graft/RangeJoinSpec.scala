@@ -1,44 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.RangeJoin
 
 class RangeJoinSpec extends SparkSpec {
-
-  private def fixtures() = {
-    import spark.implicits._
-    val points = graft.sources.Tables.events(spark, sf)
-      .select(col("event_id"), col("user_id"), col("ts_ns"))
-    val mn = points.agg(min("ts_ns")).collect().head.getLong(0)
-    val h = 3600L * 1000 * 1000 * 1000
-    val intervals = (0 until 48).map { k =>
-      (k.toLong, mn + k * 2 * h, mn + k * 2 * h + 3 * h) // overlapping windows
-    }.toDF("k", "start_ns", "end_ns")
-    (points, intervals)
-  }
-
-  test("bucketed range join equals the broadcast range join") {
-    val (points, intervals) = fixtures()
-    val viaBroadcast = RangeJoin
-      .broadcastJoin(points, "ts_ns", intervals, "start_ns", "end_ns")
-      .select("event_id", "k")
-    val viaBuckets = RangeJoin
-      .bucketed(points, "ts_ns", intervals, "start_ns", "end_ns",
-        bucketWidth = 1800L * 1000 * 1000 * 1000)
-      .select("event_id", "k")
-    val a = viaBroadcast.orderBy("event_id", "k").collect().toSeq
-    val b = viaBuckets.orderBy("event_id", "k").collect().toSeq
-    assert(a.nonEmpty)
-    assert(a == b)
-    // overlapping windows: some events land in 2 intervals
-    assert(a.size > viaBroadcast.select("event_id").distinct().count())
-  }
 
   test("interval end is exclusive in both paths") {
     import spark.implicits._
     val pts = Seq((1L, 100L), (2L, 200L)).toDF("id", "v")
     val iv = Seq((10L, 50L, 200L)).toDF("k", "s", "e") // 200 excluded
     assert(RangeJoin.broadcastJoin(pts, "v", iv, "s", "e").count() == 1)
-    assert(RangeJoin.bucketed(pts, "v", iv, "s", "e", 64).count() == 1)
   }
 }

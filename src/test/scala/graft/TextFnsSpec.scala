@@ -21,19 +21,19 @@ class TextFnsSpec extends SparkSpec {
     import spark.implicits._
     val big = (1 to 40).map(i => (1L << 58) + i) // Σ > 2^63: long wraps
     val df = big.toDF("h")
-    val viaFpSum = df.select(fpSum(col("h"))).head.getLong(0)
+    val viaFpSum = df.select(fpSum(col("h"))).head().getLong(0)
     val expected = (big.map(BigInt(_)).sum mod BigInt(P)).toLong
     assert(viaFpSum == expected, s"fpSum $viaFpSum != exact $expected")
     // the pre-round-13 idiom demonstrably diverges past the boundary
     // (try_sum instead of sum: ANSI mode makes the raw overflow THROW —
     // either behavior, error or wrap, breaks oracle parity)
     val wrapped = df.select(
-      (expr("try_sum(h)") % P).as("fp")).head
+      (expr("try_sum(h)") % P).as("fp")).head()
     assert(wrapped.isNullAt(0) || wrapped.getLong(0) != expected,
       "bigint sum unexpectedly survived the boundary — boundary too low?")
     // order/partitioning independence: the decimal sum is commutative
     val shuffled = scala.util.Random.shuffle(big).toDF("h").repartition(7)
-    assert(shuffled.select(fpSum(col("h"))).head.getLong(0) == expected)
+    assert(shuffled.select(fpSum(col("h"))).head().getLong(0) == expected)
   }
 
   test("h32 matches the first 8 md5 hex chars as an unsigned value") {
