@@ -46,7 +46,7 @@ object Bench {
     // a SPARK_GRAFT_CHUNK override >= the pack size can no longer push a
     // full official pack through a single JVM (re-inheriting the
     // allocator-debt inflation chunking exists to prevent, and silently
-    // dropping the fidelity/bucketed/outlier-guard sections)
+    // dropping the fidelity/outlier-guard sections)
     if (sys.env.contains("SPARK_GRAFT_CHILD") || only.isDefined)
       runPack(sfDir, names, printLine = true)
     else
@@ -66,15 +66,6 @@ object Bench {
     // warmup: a scan+agg touches the parquet footer cache, codegen, and
     // shuffle machinery once before anything is timed
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    // on-disk-layout mode (SPARK_GRAFT_BUCKETED=1): materialize the
-    // postings family as bucketed tables AND the tile table as its
-    // parquet store, UNTIMED, then time the consumers reading from
-    // disk — the 100 TB path's numbers, reported beside the in-memory
-    // pack under the "bucketed" key
-    if (sys.env.contains("SPARK_GRAFT_BUCKETED")) {
-      queries.PostingsStore.materialize(spark, sfDir)
-      queries.TileStore.materialize(spark, sfDir)
-    }
     // sacrificial UNTIMED run of the chunk's first query: the first real
     // query in a fresh JVM otherwise absorbs the Janino/JIT/whole-stage-
     // codegen warmup that every later query gets for free (profiled:
@@ -158,31 +149,35 @@ object Bench {
     if (printLine)
       emit(jsonLine(sfDir, results,
         if (cal > 0) Map("calibration" -> fmt4(cal)) else Map.empty))
-    if (sys.env.contains("SPARK_GRAFT_BUCKETED")) {
-      try queries.PostingsStore.drop(spark, sfDir)
-      catch { case NonFatal(_) => () } // cleanup is best-effort
-      try queries.TileStore.drop(spark, sfDir)
-      catch { case NonFatal(_) => () }
-    }
     spark.stop()
     results
   }
 
   /** Parent mode: run the pack as ChunkSize-query child JVMs (fresh heap,
     * fresh code cache, fresh Spark session each), merge their lines,
-    * re-run any transient outlier, then attach the calibration, fidelity
-    * and bucketed-layout sections before emitting. */
+    * re-run any transient outlier, then attach the calibration and
+    * fidelity sections before emitting. */
   private def orchestrate(sfDir: String, names: Seq[String]): Unit = {
     analyzeOnce(sfDir)
     val chunks = names.grouped(chunkSize).toSeq.map(runChildLine(sfDir, _))
     val merged = chunks.flatMap(_._1)
     val cals = chunks.flatMap(_._2)
-    val (guarded, guardReran) = guardOutliers(sfDir, merged, cals)
+    val prior = priorRoundSecs(sfDir)
+    // the prior round's seconds re-expressed in THIS round's machine
+    // units: this round's calibration over the prior round's, clamped to
+    // [0.5, 3] (a wilder swing means the calibration itself is suspect,
+    // and an unbounded scale would let a broken unit disable the
+    // outlier guard entirely); 1 when either calibration is missing
+    val calScale = (for {
+      cal <- if (cals.nonEmpty) Some(median(cals)) else None
+      p <- priorCal(sfDir)
+      if p > 0 && cal > 0
+    } yield math.max(0.5, math.min(3.0, cal / p))).getOrElse(1.0)
+    val (guarded, guardReran) = guardOutliers(sfDir, merged, prior, calScale)
     val (finalResults, fidelity) =
-      fidelitySection(sfDir, guarded, cals, guardReran)
+      fidelitySection(sfDir, guarded, prior, calScale, guardReran)
     emit(jsonLine(sfDir, finalResults,
-      fidelity ++ bucketedSection(sfDir, names) ++
-        calibrationSection(sfDir, cals, finalResults)))
+      fidelity ++ calibrationSection(sfDir, cals, finalResults)))
   }
 
   /** Noise-awareness section: the round's machine-speed calibration (the
@@ -257,7 +252,7 @@ object Bench {
     * Do not change its shape or size: cross-round drift detection
     * compares this round's time against prior rounds' `_cal` history
     * rows, and a changed workload breaks that comparability. */
-  private[graft] def calibrationWorkload(spark: SparkSession): Unit = {
+  private def calibrationWorkload(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions.{col, shiftright, sum, xxhash64}
     // shiftright(h, 32) keeps every summand under 2^32 so the 64M-row
     // sum stays far inside long range — a raw sum(xxhash64) overflows
@@ -298,13 +293,12 @@ object Bench {
     * GraftSession.prime then hydrates the profile and turns
     * [[graft.plans.StatsBroadcastJoins]] on — the official pack runs
     * with stats-driven planning active, priced from THIS sf's measured
-    * rows × widths. ANALYZE cost is deliberately outside the timings,
-    * same as the bucketed-store materialization: it is amortized
-    * warehouse upkeep, not query cost. Best-effort at TWO grains: a
-    * single bad table is skipped inside StatsStore.analyze (the nine
-    * that profiled still persist), and a session-level failure here
-    * must never kill the bench (children then run with the rule off,
-    * the round-over-round trend stays comparable). */
+    * rows × widths. ANALYZE cost is deliberately outside the timings:
+    * it is amortized warehouse upkeep, not query cost. Best-effort at
+    * TWO grains: a single bad table is skipped inside StatsStore.analyze
+    * (the nine that profiled still persist), and a session-level
+    * failure here must never kill the bench (children then run with the
+    * rule off, the round-over-round trend stays comparable). */
   private def analyzeOnce(sfDir: String): Unit = try {
     val spark = GraftSession.prime(GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate())
@@ -355,7 +349,7 @@ object Bench {
     * SPARK_GRAFT_FIDELITY=0 skips the section (dev aid). */
   private def fidelitySection(sfDir: String,
       merged: Seq[(String, Either[String, Double])],
-      cals: Seq[Double],
+      prior: Map[String, Double], calScale: Double,
       alreadyReran: Set[String])
       : (Seq[(String, Either[String, Double])], Map[String, String]) = {
     if (sys.env.get("SPARK_GRAFT_FIDELITY").contains("0")) return (merged, Map.empty)
@@ -365,12 +359,6 @@ object Bench {
       case (n, Right(_)) if queries.SharedFrames.isConsumer(n) => n
     }
     // population 2: top-N calibration-adjusted regressions vs prior round
-    val prior = priorRoundSecs(sfDir)
-    val calScale = (for {
-      cal <- if (cals.nonEmpty) Some(median(cals)) else None
-      p <- priorCal(sfDir)
-      if p > 0 && cal > 0
-    } yield math.max(0.5, math.min(3.0, cal / p))).getOrElse(1.0)
     // skip queries the outlier guard ALREADY re-ran this round: its
     // fresh best-of-2 took the same measurement a third child JVM would
     // repeat (a genuine regression reproduces there and min() keeps it)
@@ -423,62 +411,16 @@ object Bench {
     (repaired, extras)
   }
 
-  /** Time the postings-family consumers against the ON-DISK bucketed
-    * layout ([[queries.PostingsStore]]): one child JVM materializes the
-    * family as doc_id-bucketed warehouse tables untimed, then times the
-    * consumers reading straight from disk. Reported under `"bucketed"`
-    * beside the in-memory pack — the number that predicts behavior when
-    * the postings no longer fit in cluster memory (the 100 TB case).
-    * SPARK_GRAFT_FIDELITY=0 skips this too (same dev aid). */
-  private def bucketedSection(sfDir: String,
-      names: Seq[String]): Map[String, String] = {
-    if (sys.env.get("SPARK_GRAFT_FIDELITY").contains("0")) return Map.empty
-    def f(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // only families with a PostingsStore on-disk home: timing the LM/BM25
-    // consumers here would label in-memory numbers as bucketed-layout ones
-    val consumers = names.filter(queries.SharedFrames.isBucketedConsumer)
-    if (consumers.isEmpty) return Map.empty
-    val timed = runChild(sfDir, consumers,
-      Map("SPARK_GRAFT_BUCKETED" -> "1"))
-    // failures surface as -1 entries (never silently missing): a dead
-    // bucketed child or a consumer that breaks on the disk layout is a
-    // result the artifact must carry, same as the pack's own errors map
-    val entries = timed.map {
-      case (n, Right(sec)) => s"\"${n.takeWhile(_ != '_')}\":${f(sec)}"
-      case (n, Left(msg)) =>
-        System.err.println(s"bench bucketed: $n FAILED on the disk layout: $msg")
-        s"\"${n.takeWhile(_ != '_')}\":-1"
-    }
-    // round-13 lesson: the whole section died on LOCATION_ALREADY_EXISTS
-    // and the artifact carried seventeen bare -1s with the cause only on
-    // stderr. The error text (already sanitized to a JSON-safe string by
-    // the child's err(), or the parent's own "bench child died" line) now
-    // rides the artifact as "bucketed_errors", with a "bucketed_failed"
-    // count so a dead layout diagnoses itself from the JSON line alone.
-    val errEntries = timed.collect { case (n, Left(msg)) =>
-      s"\"${n.takeWhile(_ != '_')}\":\"$msg\""
-    }
-    if (entries.isEmpty) Map.empty
-    else Map("bucketed" -> entries.mkString("{", ",", "}")) ++
-      (if (errEntries.isEmpty) Map.empty
-       else Map(
-         "bucketed_errors" -> errEntries.mkString("{", ",", "}"),
-         "bucketed_failed" -> errEntries.size.toString))
-  }
-
   /** Run one chunk of queries in a fresh child JVM (this JVM's exact
     * args + classpath) and parse its contract line back into per-query
-    * results (calibration discarded — for the fidelity/bucketed/outlier
-    * re-runs, which never feed the calibration median). */
-  private def runChild(sfDir: String, chunk: Seq[String],
-      extraEnv: Map[String, String] = Map.empty)
+    * results (calibration discarded — for the fidelity/outlier re-runs,
+    * which never feed the calibration median). */
+  private def runChild(sfDir: String, chunk: Seq[String])
       : Seq[(String, Either[String, Double])] =
-    runChildLine(sfDir, chunk, extraEnv)._1
+    runChildLine(sfDir, chunk)._1
 
   /** [[runChild]] plus the child's own machine-speed calibration. */
-  private def runChildLine(sfDir: String, chunk: Seq[String],
-      extraEnv: Map[String, String] = Map.empty)
+  private def runChildLine(sfDir: String, chunk: Seq[String])
       : (Seq[(String, Either[String, Double])], Option[Double]) = {
     import scala.jdk.CollectionConverters._
     val javaBin = sys.props("java.home") + "/bin/java"
@@ -491,14 +433,6 @@ object Bench {
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
     pb.environment().put("SPARK_GRAFT_ONLY", chunk.mkString(","))
     pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-    // never inherit the bucketed-mode switch from the PARENT's
-    // environment: an operator exporting SPARK_GRAFT_BUCKETED=1 would
-    // otherwise silently turn every chunk child's "in-memory pack"
-    // numbers into bucketed-layout numbers and corrupt the
-    // round-over-round trend; only an explicit extraEnv entry (the
-    // bucketedSection child) opts a child in
-    pb.environment().remove("SPARK_GRAFT_BUCKETED")
-    extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
     // Spark logs stay on stderr like a direct run; only the JSON line
     // travels through the captured stdout
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
@@ -544,23 +478,15 @@ object Bench {
     * number: the re-run reproduces it, and min() changes nothing.
     *
     * Drift-aware (round 13): the prior value is first re-expressed in
-    * THIS round's machine units via the calibration ratio — on a host
-    * running 1.7× slower, comparing raw seconds against last round's
-    * would flag (and pointlessly re-run) a third of the pack, while on
-    * a faster host a real regression could hide under the slack. The
-    * ratio is clamped to [0.5, 3]: a wilder swing means the calibration
-    * itself is suspect, and an unbounded scale would let a broken unit
-    * disable the guard entirely. */
+    * THIS round's machine units via `calScale` (see [[orchestrate]]) —
+    * on a host running 1.7× slower, comparing raw seconds against last
+    * round's would flag (and pointlessly re-run) a third of the pack,
+    * while on a faster host a real regression could hide under the
+    * slack. */
   private def guardOutliers(sfDir: String,
       merged: Seq[(String, Either[String, Double])],
-      cals: Seq[Double])
+      prior: Map[String, Double], calScale: Double)
       : (Seq[(String, Either[String, Double])], Set[String]) = {
-    val prior = priorRoundSecs(sfDir)
-    val calScale = (for {
-      cal <- if (cals.nonEmpty) Some(median(cals)) else None
-      p <- priorCal(sfDir)
-      if p > 0 && cal > 0
-    } yield math.max(0.5, math.min(3.0, cal / p))).getOrElse(1.0)
     val outliers = merged.collect {
       case (n, Right(sec)) if prior.get(n.takeWhile(_ != '_'))
           .exists(p => p > 0 && sec > p * calScale * 2.5 + 0.25) => n
@@ -712,7 +638,7 @@ object Bench {
       if (errs.isEmpty) ""
       else errs.mkString(""","errors":{""", ",", "}") + s""","failed":${errs.size}"""
     val total = results.map(_._2.getOrElse(0.0)).sum
-    // extras carry pre-rendered JSON values (fidelity / bucketed maps)
+    // extras carry pre-rendered JSON values (fidelity maps)
     val extraFields = extras.toSeq.sortBy(_._1)
       .map { case (k, v) => s""","$k":$v""" }.mkString
     s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs$errField$extraFields,"sf":"$sfDir"}"""

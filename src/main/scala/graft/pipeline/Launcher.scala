@@ -41,11 +41,13 @@ object Launcher {
     * `transport` (default stderr) carries it — tests inject a capture,
     * and a box with no MTA still logs the composed mail instead of
     * failing the drain. `log` writes the plugin name and error through
-    * the injected transport. Unknown names are a config error at build
-    * time, not at crash time. */
+    * the injected transport. A config without the section gets one
+    * `log` handler, so a crash is never silent. Unknown names are a
+    * config error at build time, not at crash time. */
   def crashChain(config: LoadedConfig,
       transport: String => Unit = s => Console.err.println(s)): Seq[Runner.CrashHandler] =
-    config.crashHandlers.map { h =>
+    (if (config.crashHandlers.isEmpty) Seq(WorkerSpec("log"))
+     else config.crashHandlers).map { h =>
       val conf = config.crashConfig ++ h.options
       h.fun match {
         case "sendmail" =>
@@ -244,7 +246,7 @@ object Launcher {
       testMessage: Option[String] = None, auditReport: Option[String] = None,
       logConfig: Option[String] = None, files: Seq[String] = Seq.empty)
 
-  private[graft] val cliUsage: String =
+  private val cliUsage: String =
     """usage: graft.pipeline.Launcher -p PRODUCT_LIST [-m METADATA_JSON]
       |         [-c LOG_CONFIG_YAML] [--test-message MSG_FILE]
       |         [--audit-report OUT_JSONL] [files ...]

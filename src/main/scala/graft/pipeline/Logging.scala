@@ -214,7 +214,7 @@ object Logging {
       .ofPattern(datefmtToJava(config.datefmt))
       .withZone(java.time.ZoneOffset.UTC)
 
-    private[pipeline] def render(r: LogRecord): String =
+    private def render(r: LogRecord): String =
       config.format
         .replace("%(levelname)s", r.level)
         .replace("%(asctime)s", tsFmt.format(java.time.Instant.ofEpochMilli(r.epochMs)))
@@ -223,7 +223,7 @@ object Logging {
 
     /** python's effective-level rule: the most specific dotted-prefix
       * logger with an explicit level wins; else the root level. */
-    private[pipeline] def effectiveLevel(name: String): String = {
+    private def effectiveLevel(name: String): String = {
       var n = name
       while (n.nonEmpty) {
         config.loggerLevels.get(n) match {

@@ -1106,7 +1106,6 @@ object Plugins {
   final case class FilePublisher(topicPattern: String = "/file/{product}")
       extends Plugin {
     val name = "file_publisher"
-    @volatile private[pipeline] var stopped = false
 
     private val DispatchPath = """dispatch\.(\d+)\.path""".r
 
@@ -1148,6 +1147,5 @@ object Plugins {
       messageSeq(ctx).toDF()
     }
     def apply(ctx: PipelineContext): PipelineContext = ctx
-    override def stop(): Unit = { stopped = true }
   }
 }

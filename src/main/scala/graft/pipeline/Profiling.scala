@@ -35,10 +35,10 @@ object Profiling {
     * listener bus), so readers must drain before trusting totals —
     * [[Profiling.measure]] handles that. */
   final class JobCounter extends SparkListener {
-    private[Profiling] val jobs = new AtomicInteger
-    private[Profiling] val stages = new AtomicInteger
-    private[Profiling] val shuffleWrite = new AtomicLong
-    private[Profiling] val shuffleRead = new AtomicLong
+    private val jobs = new AtomicInteger
+    private val stages = new AtomicInteger
+    private val shuffleWrite = new AtomicLong
+    private val shuffleRead = new AtomicLong
 
     override def onJobStart(job: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
@@ -114,7 +114,7 @@ object Profiling {
   object ActionAudit {
     /** ObjectMapper construction is heavyweight; writes are thread-safe,
       * so one shared instance serves every audit line. */
-    private[Profiling] val mapper =
+    private val mapper =
       new com.fasterxml.jackson.databind.ObjectMapper()
   }
 

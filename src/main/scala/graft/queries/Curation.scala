@@ -25,21 +25,13 @@ object Curation extends QueryPack {
     * per-doc grouping; the InMemoryRelation keeps that partitioning).
     * Split buckets are a pure function of doc_id, so consumers that need
     * them derive the column on top of the cache — narrow, shuffle-free. */
-  private[queries] def sh8PostingsPlan(spark: SparkSession, dir: String): DataFrame =
-    sh8PostingsPlanFor(spark, Tables.documents(spark, dir))
-
-  /** Same plan over an arbitrary (doc_id, text) frame — see
-    * [[graft.queries.Dedup.shPostingsPlanFor]]. */
-  private[queries] def sh8PostingsPlanFor(spark: SparkSession,
-      docs: DataFrame): DataFrame =
-    docs
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), explode(shingleH32(col("text"), 8)).as("h"))
-      .distinct()
-
   private[queries] def sh8Postings(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "sh8").getOrElse(
-      SharedFrames.cached(spark, dir, "sh8") { sh8PostingsPlan(spark, dir) })
+    SharedFrames.cached(spark, dir, "sh8") {
+      Tables.documents(spark, dir)
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"), explode(shingleH32(col("text"), 8)).as("h"))
+        .distinct()
+    }
 
   /** Deterministic train/val/test split by content-independent key hash
     * (90/5/5): split = h32("split_" + doc_id) % 100. Per-split stats

@@ -45,52 +45,37 @@ object Dedup extends QueryPack {
       build: => DataFrame): DataFrame =
     SharedFrames.cached(spark, dir, key)(build)
 
-  /** Spark side of the same postings, as a PURE plan (no memoization):
-    * distinct (doc_id, shingle-h32).
+  /** The postings every consumer reads: distinct (doc_id, shingle-h32),
+    * memoized per session.
     *
     * The repartition BEFORE the explode is load-bearing twice over: it
     * spreads the CPU-heavy shingle+md5 expansion across all cores even
     * when the input is a single parquet split, and because the
     * partitioning key (doc_id) is a prefix of every downstream per-doc
     * grouping — distinct(doc_id, h), signature mins, postings counts —
-    * Catalyst satisfies all of them with ZERO further shuffles. */
-  private[queries] def shPostingsPlan(spark: SparkSession, dir: String): DataFrame =
-    shPostingsPlanFor(spark, Tables.documents(spark, dir))
-
-  /** The same postings plan over an ARBITRARY (doc_id, text) frame —
-    * the unit [[PostingsStore.append]] runs over just-arrived documents
-    * for incremental index maintenance. */
-  private[queries] def shPostingsPlanFor(spark: SparkSession,
-      docs: DataFrame): DataFrame =
-    docs
-      // explicit count: a bare repartition(col) is AQE-coalescable and the
-      // tiny pre-explode byte size would collapse it to ~1 partition,
-      // serializing the expansion it exists to parallelize
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        explode(shingleH32(col("text"), 3)).as("h"))
-      .distinct()
-
-  /** The postings every consumer reads — [[PostingsStore]] bucketed
-    * table when the session runs in bucketed mode (the 100 TB layout:
-    * the scan itself carries `HashPartitioning(doc_id, n)`, so per-doc
-    * groupings stay exchange-free straight off disk), else the
-    * session-memoized in-memory frame.
+    * Catalyst satisfies all of them with ZERO further shuffles.
     *
-    * The memory path materializes via shared(): every dedup query
-    * self-joins these postings (and the shuffle-free per-doc pipeline
-    * above leaves no exchange for Spark's ReusedExchange to latch
-    * onto), so without the persist each join side re-runs the
-    * explode+md5 expansion — profiled at 4× the query cost. At cluster
-    * scale this is "write the postings/signature table once, then join
-    * it" — which is literally what the bucketed mode does. persist(),
-    * not localCheckpoint(): the checkpoint RDD scan forgets
+    * The frame materializes via shared(): every dedup query self-joins
+    * these postings (and the shuffle-free per-doc pipeline leaves no
+    * exchange for Spark's ReusedExchange to latch onto), so without the
+    * persist each join side re-runs the explode+md5 expansion — profiled
+    * at 4× the query cost. At cluster scale this is "write the
+    * postings/signature table once, then join it". persist(), not
+    * localCheckpoint(): the checkpoint RDD scan forgets
     * outputPartitioning in Spark 4, re-shuffling every per-doc
     * aggregation downstream; the InMemoryRelation keeps the doc_id
     * partitioning, so those stay exchange-free. */
   private[queries] def shPostings(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "sh").getOrElse(
-      shared(spark, dir, "sh") { shPostingsPlan(spark, dir) })
+    shared(spark, dir, "sh") {
+      Tables.documents(spark, dir)
+        // explicit count: a bare repartition(col) is AQE-coalescable and
+        // the tiny pre-explode byte size would collapse it to ~1
+        // partition, serializing the expansion it exists to parallelize
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"),
+          explode(shingleH32(col("text"), 3)).as("h"))
+        .distinct()
+    }
 
   /** Per-shingle document frequencies (h, df) of the raw postings,
     * persisted: the df-cap's hot-set (q29/q108), and the q120 cap audit
@@ -106,20 +91,10 @@ object Dedup extends QueryPack {
 
   /** Stop-shingles over the df cap — tiny by construction (≤ 1/cap of
     * shingle mass can exceed the cap), hence always broadcastable. */
-  private[queries] def hotShingles(spark: SparkSession, dir: String): DataFrame =
-    hotShinglesOver(shDfCounts(spark, dir),
-      Tables.documents(spark, dir).agg(count(lit(1)).as("ndocs")))
-
-  /** The cap rule itself, parameterized over the df-count and
-    * corpus-size frames — ONE definition shared by the session path
-    * above and [[PostingsStore]]'s rebuild (whose corpus is the INDEXED
-    * document count, which under incremental builds can differ from
-    * `dir`'s on-disk corpus). `ndocs` must be a 1-row frame with an
-    * `ndocs` column. */
-  private[queries] def hotShinglesOver(dfCounts: DataFrame,
-      ndocs: DataFrame): DataFrame =
-    dfCounts
-      .crossJoin(broadcast(ndocs))
+  private def hotShingles(spark: SparkSession, dir: String): DataFrame =
+    shDfCounts(spark, dir)
+      .crossJoin(broadcast(
+        Tables.documents(spark, dir).agg(count(lit(1)).as("ndocs"))))
       .filter(col("df") * 100 > greatest(lit(2500L), col("ndocs")))
       .select(col("h"))
 
@@ -130,51 +105,35 @@ object Dedup extends QueryPack {
     * preserves the doc_id partitioning of the raw postings, so per-doc
     * aggregations over the capped table stay exchange-free. */
   private[queries] def cappedShPostings(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "capped").getOrElse(
-      shared(spark, dir, "capped") {
-        shPostings(spark, dir)
-          .join(broadcast(hotShingles(spark, dir)), Seq("h"), "left_anti")
-      })
+    shared(spark, dir, "capped") {
+      shPostings(spark, dir)
+        .join(broadcast(hotShingles(spark, dir)), Seq("h"), "left_anti")
+    }
 
-  /** Positional 8-gram postings plan (doc_id, pos, h) — q83's span
-    * index, as a PURE plan over an arbitrary (doc_id, text) frame (the
-    * unit [[PostingsStore.append]] runs over new arrivals). Positions
-    * matter here (anti-diagonal run-length), so no distinct. */
-  private[queries] def pos8PostingsPlanFor(spark: SparkSession,
-      docs: DataFrame): DataFrame =
-    docs
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        posexplode(shingleH32(col("text"), 8)).as(Seq("pos", "h")))
-
-  /** The positional postings q83 consumes — [[PostingsStore]] bucketed
-    * table (bucketed by `h`: the candidate self-join key, so both join
-    * sides read pre-clustered data with zero Exchange) in bucketed
-    * mode, else the session-memoized in-memory frame. */
-  private[queries] def pos8Postings(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "pos8").getOrElse(
-      shared(spark, dir, "pos8") {
-        pos8PostingsPlanFor(spark, Tables.documents(spark, dir)) })
-
-  /** q83's stop-8-gram rule over a positional postings frame: shingles
-    * seen in more than 32 distinct documents are dropped before the
-    * self-join (the k² guard). Tiny by construction — broadcastable.
-    * ONE definition shared by the session path and [[PostingsStore]]'s
-    * capped rebuild. */
-  private[queries] def hotPos8Over(post: DataFrame): DataFrame =
-    post.groupBy(col("h"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") > 32).select(col("h"))
+  /** The positional 8-gram postings (doc_id, pos, h) q83 consumes,
+    * memoized per session. Positions matter here (anti-diagonal
+    * run-length), so no distinct. */
+  private def pos8Postings(spark: SparkSession, dir: String): DataFrame =
+    shared(spark, dir, "pos8") {
+      Tables.documents(spark, dir)
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"),
+          posexplode(shingleH32(col("text"), 8)).as(Seq("pos", "h")))
+    }
 
   /** Df-capped positional postings, persisted after the anti-join —
-    * what both q83 self-join sides read. Bucketed-mode consumers get
-    * the on-disk `pos8c` table straight off the h-bucketed scan. */
+    * what both q83 self-join sides read. q83's stop-8-gram rule:
+    * shingles seen in more than 32 distinct documents are dropped before
+    * the self-join (the k² guard); the hot set is tiny by construction,
+    * hence broadcastable. */
   private[queries] def cappedPos8Postings(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "pos8c").getOrElse(
-      shared(spark, dir, "pos8c") {
-        val post = pos8Postings(spark, dir)
-        post.join(broadcast(hotPos8Over(post)), Seq("h"), "left_anti")
-      })
+    shared(spark, dir, "pos8c") {
+      val post = pos8Postings(spark, dir)
+      val hot = post.groupBy(col("h"))
+        .agg(countDistinct(col("doc_id")).as("df"))
+        .filter(col("df") > 32).select(col("h"))
+      post.join(broadcast(hot), Seq("h"), "left_anti")
+    }
 
   /** Inverted-index candidate pairs over a postings frame: the h-equi
     * self-join with the `da < db` orientation that confines the quadratic
@@ -339,15 +298,7 @@ object Dedup extends QueryPack {
     * cost of those queries is then the band equi-join + verify — the
     * work a production run actually repeats against a stored index. */
   private[queries] def shBands(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "bands").getOrElse(
-      shared(spark, dir, "bands") { bandTable(shPostings(spark, dir)) })
-
-  /** Band table over an already-built postings frame — the unit
-    * [[PostingsStore]] derives from its ONE materialization of the
-    * 3-gram expansion (band signatures are per-document, so incremental
-    * build ≡ full build). */
-  private[queries] def bandsPlanOver(postings: DataFrame): DataFrame =
-    bandTable(postings)
+    shared(spark, dir, "bands") { bandTable(shPostings(spark, dir)) }
 
   /** q30's candidate stage, shared with the q119 recall audit.
     * MinHash + LSH: a 16-permutation signature over shingle hashes, 4
@@ -1039,10 +990,8 @@ object Dedup extends QueryPack {
     * Scale design: candidate generation is the positional inverted index
     * with a df-cap (shingles in >32 docs are dropped before the self-join
     * — the stop-shingle k² guard q29 uses); the capped positional
-    * postings are a [[SharedFrames]]/[[PostingsStore]] family
-    * ([[cappedPos8Postings]]): session-persisted in memory, or an
-    * h-bucketed on-disk table whose self-join runs with zero Exchange of
-    * the index. The run-length windows partition by (pair, diagonal) —
+    * postings are a [[SharedFrames]] family ([[cappedPos8Postings]]),
+    * session-persisted in memory. The run-length windows partition by (pair, diagonal) —
     * fine-grained keys, no skew pile-up. */
   def q83DupSpans(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1817,45 +1766,34 @@ object Dedup extends QueryPack {
     *
     * Storage: a member of the shared-frames family (both q137 and q152
     * rebuild the identical table otherwise — "the paragraph table is
-    * written once, then joined", same contract as the postings). Memory
-    * path memoizes per session; [[PostingsStore]] bucketed mode serves
-    * the on-disk table bucketed by `ph` — the key every consumer
-    * aggregates and joins on, so the canonical-instance aggregation and
-    * the instance join run with ZERO Exchange on this side. */
+    * written once, then joined", same contract as the postings),
+    * memoized per session. */
   private[graft] def paraInstances(spark: SparkSession, dir: String): DataFrame =
-    PostingsStore.lookup(spark, dir, "para").getOrElse(
-      shared(spark, dir, "para") {
-        paraInstancesPlanFor(spark, Tables.documents(spark, dir))
-      })
-
-  /** [[paraInstances]] as a PURE plan over an arbitrary documents frame —
-    * the unit [[PostingsStore]] writes (and appends) the bucketed table
-    * from. */
-  private[graft] def paraInstancesPlanFor(spark: SparkSession,
-      docs: DataFrame): DataFrame =
-    docs
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"),
-        shingleH32(col("text"), 3).as("sh"))
-      // 0-based paragraph start offsets: 0, then (shingle index i)+3 for
-      // every boundary shingle (its last token ends the paragraph), then
-      // n; array_distinct drops the duplicate when the final token is
-      // itself a boundary. Ascending by construction.
-      .select(col("doc_id"), col("source"), col("toks"),
-        array_distinct(concat(
-          array(lit(0)),
-          filter(transform(col("sh"), (x, i) => when(x % 16 === 0, i + 3)),
-            c => c.isNotNull),
-          array(size(col("toks"))))).as("cuts"))
-      .select(col("doc_id"), col("source"),
-        zip_with(
-          slice(col("cuts"), lit(1), size(col("cuts")) - 1),
-          slice(col("cuts"), lit(2), size(col("cuts")) - 1),
-          (s, e) => array_join(slice(col("toks"), s + 1, e - s), " "))
-          .as("paras"))
-      .select(col("doc_id"), col("source"), posexplode(col("paras")))
-      .select(col("doc_id"), col("source"), col("pos").cast("long").as("pidx"),
-        h32(col("col")).as("ph"))
+    shared(spark, dir, "para") {
+      Tables.documents(spark, dir)
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"),
+          shingleH32(col("text"), 3).as("sh"))
+        // 0-based paragraph start offsets: 0, then (shingle index i)+3 for
+        // every boundary shingle (its last token ends the paragraph), then
+        // n; array_distinct drops the duplicate when the final token is
+        // itself a boundary. Ascending by construction.
+        .select(col("doc_id"), col("source"), col("toks"),
+          array_distinct(concat(
+            array(lit(0)),
+            filter(transform(col("sh"), (x, i) => when(x % 16 === 0, i + 3)),
+              c => c.isNotNull),
+            array(size(col("toks"))))).as("cuts"))
+        .select(col("doc_id"), col("source"),
+          zip_with(
+            slice(col("cuts"), lit(1), size(col("cuts")) - 1),
+            slice(col("cuts"), lit(2), size(col("cuts")) - 1),
+            (s, e) => array_join(slice(col("toks"), s + 1, e - s), " "))
+            .as("paras"))
+        .select(col("doc_id"), col("source"), posexplode(col("paras")))
+        .select(col("doc_id"), col("source"), col("pos").cast("long").as("pidx"),
+          h32(col("col")).as("ph"))
+    }
 
   /** Paragraph-level exact dedup — the CCNet/RefinedWeb pre-pass that
     * runs BEFORE document-level MinHash: identical paragraphs across the

@@ -307,7 +307,7 @@ object EventOps extends QueryPack {
     * probe consumes (the as-of union re-sorts per user anyway, so the
     * global range exchange would be pure waste in the middle of the
     * probe plan). */
-  private[queries] def scd2Dim(spark: SparkSession, dir: String): DataFrame = {
+  private def scd2Dim(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_ns"), col("event_id"))
     val versioned = Tables.events(spark, dir)

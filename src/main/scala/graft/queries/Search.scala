@@ -60,10 +60,8 @@ object Search extends QueryPack {
     * score against it; corpus stats and per-term document frequencies
     * derive from it at probe time). Built in ONE corpus pass: token
     * explode → (doc, tok) count, doc lengths re-aggregated from the
-    * counts (Σ tf per doc IS the token count). No bucketed
-    * [[PostingsStore]] home on purpose: the probe prunes to the query's
-    * term set via a broadcast join BEFORE any shuffle, so there is no
-    * postings-side exchange for a `tok` bucketing to eliminate; at
+    * counts (Σ tf per doc IS the token count). The probe prunes to the
+    * query's term set via a broadcast join BEFORE any shuffle; at
     * cluster scale this table is the term-sharded index service, not a
     * co-partitioned join table. */
   private[graft] def bm25Index(spark: SparkSession, dir: String): DataFrame =

@@ -34,26 +34,15 @@ private[graft] object SharedFrames {
     df
   }
 
-  /** Drop every memo entry for (session, dir) — required when the
-    * underlying layout changes (e.g. [[PostingsStore.materialize]]/
-    * [[PostingsStore.drop]] rewrites or removes the bucketed tables a
-    * derived frame may have been built over). */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    memo.keys.filter(k => k._1 == spark && k._2 == dir).foreach { k =>
-      memo.remove(k).foreach(df =>
-        scala.util.Try(df.unpersist(blocking = false)))
-    }
-
-  /** A session-shared family: the memo keys its frames live under, the
-    * untimed warm that materializes them (a fast no-op when warm), and
-    * whether [[PostingsStore]] or [[TileStore]] gives it an on-disk home.
+  /** A session-shared family: the memo keys its frames live under and
+    * the untimed warm that materializes them (a fast no-op when warm).
     * Queries name the families they read in their [[Query]] declaration. */
-  final case class Family(keys: Seq[String], onDisk: Boolean)(
+  final case class Family(keys: Seq[String])(
       val warm: (SparkSession, String) => Unit)
 
   /** 3-gram postings ([[Dedup.shPostings]]): raw, per-shingle df counts,
     * df-capped, and the LSH band table. */
-  val Postings3: Family = Family(Seq("sh", "df", "capped", "bands"), onDisk = true) {
+  val Postings3: Family = Family(Seq("sh", "df", "capped", "bands")) {
     (spark, dir) =>
       // the capped count materializes postings + df on the way (its
       // anti-join reads both); the postings count is then a warm no-op
@@ -63,42 +52,41 @@ private[graft] object SharedFrames {
   }
 
   /** 8-gram postings ([[Curation.sh8Postings]]). */
-  val Postings8: Family = Family(Seq("sh8"), onDisk = true) {
+  val Postings8: Family = Family(Seq("sh8")) {
     (spark, dir) => Curation.sh8Postings(spark, dir).count()
   }
 
-  /** Source-grain postings ([[Dedup.srcPostings]]). Its home is derived:
-    * in bucketed mode it is built FROM the bucketed `sh` scan. */
-  val SourcePostings: Family = Family(Seq("srcsh"), onDisk = true) {
+  /** Source-grain postings ([[Dedup.srcPostings]]), derived from the
+    * `sh` postings. */
+  val SourcePostings: Family = Family(Seq("srcsh")) {
     (spark, dir) => Dedup.srcPostings(spark, dir).count()
   }
 
   /** Paragraph instances ([[Dedup.paraInstances]]) — paragraph dedup and
     * boilerplate removal share one CDC segmentation + hash pass. */
-  val Paragraphs: Family = Family(Seq("para"), onDisk = true) {
+  val Paragraphs: Family = Family(Seq("para")) {
     (spark, dir) => Dedup.paraInstances(spark, dir).count()
   }
 
-  /** Positional 8-gram span index ([[Dedup.pos8Postings]]), raw and
+  /** Positional 8-gram span index ([[Dedup.cappedPos8Postings]]), raw and
     * df-capped. */
-  val Spans8: Family = Family(Seq("pos8", "pos8c"), onDisk = true) {
+  val Spans8: Family = Family(Seq("pos8", "pos8c")) {
     (spark, dir) => Dedup.cappedPos8Postings(spark, dir).count()
   }
 
   /** Corpus-trained bigram LM ([[TextAnalysis.lmModel]]): trained once
-    * per corpus, loaded by every scorer. No on-disk home. */
-  val BigramLm: Family = Family(Seq("lm"), onDisk = false) {
+    * per corpus, loaded by every scorer. */
+  val BigramLm: Family = Family(Seq("lm")) {
     (spark, dir) => TextAnalysis.lmModel(spark, dir).count()
   }
 
-  /** BM25 inverted index ([[Search.bm25Index]]). No on-disk home. */
-  val Bm25Index: Family = Family(Seq("bm25"), onDisk = false) {
+  /** BM25 inverted index ([[Search.bm25Index]]). */
+  val Bm25Index: Family = Family(Seq("bm25")) {
     (spark, dir) => Search.bm25Index(spark, dir).count()
   }
 
-  /** Tile-row raster layout ([[TiledRaster.tiles]]), whose disk home is
-    * [[TileStore]]'s parquet store. */
-  val Tiles: Family = Family(Seq("tiles"), onDisk = true) {
+  /** Tile-row raster layout ([[TiledRaster.tiles]]). */
+  val Tiles: Family = Family(Seq("tiles")) {
     (spark, dir) => TiledRaster.tiles(spark, dir).count()
   }
 
@@ -109,13 +97,6 @@ private[graft] object SharedFrames {
     * harnesses insert an untimed GC breather after warming exactly these
     * — the warm's allocation debt must not land inside the timed run.) */
   def isConsumer(queryName: String): Boolean = Query.reads(queryName).nonEmpty
-
-  /** Does `queryName` read a family with an ON-DISK layout home?
-    * Bench's "bucketed" section times exactly these, so in-memory-only
-    * families (the LM and BM25 index) are never reported as disk-layout
-    * results. */
-  def isBucketedConsumer(queryName: String): Boolean =
-    Query.reads(queryName).exists(_.onDisk)
 
   /** Materialize (untimed) whatever shared frames `queryName` reads — a
     * fast no-op when they are already warm, or when the query reads

@@ -1289,7 +1289,7 @@ object Similarity extends QueryPack {
 
   /** The registered default eval-suite slice (q146/q162/q163): every
     * 50th vector is the protected suite. */
-  private[graft] val DefaultSuite: Column = col("vec_id") % 50 === 0
+  private val DefaultSuite: Column = col("vec_id") % 50 === 0
 
   /** [[q146BlockedDecontam]]'s per-VECTOR decision table — (vec_id,
     * label, flag) for every corpus vector — with the suite slice

@@ -333,10 +333,9 @@ object TextAnalysis extends QueryPack {
     * size. Shared by q61 and q101 under [[SharedFrames]]' warm contract:
     * the production analogue is a PRE-TRAINED LM loaded once per job
     * (CCNet ships KenLM artifacts; FineWeb ships classifier weights),
-    * not a model re-fit inside every scoring query. Deliberately NO
-    * bucketed [[PostingsStore]] home: the table is vocab²-grain — a
-    * model-registry artifact the scorer broadcasts or shuffle-joins on
-    * bg, never a corpus-sized join table. */
+    * not a model re-fit inside every scoring query. The table is
+    * vocab²-grain — a model-registry artifact the scorer broadcasts or
+    * shuffle-joins on bg, never a corpus-sized join table. */
   private[graft] def lmModel(spark: SparkSession, dir: String): DataFrame =
     SharedFrames.cached(spark, dir, "lm") {
       val bi = lmPairs(spark, dir)

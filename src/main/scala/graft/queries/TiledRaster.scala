@@ -59,9 +59,8 @@ object TiledRaster extends QueryPack {
   private val B = 8
   private val BlocksPerSide = TileSize / B
 
-  /** Tile assembly — the write-once LAYOUT step (the analogue of
-    * [[PostingsStore.materialize]] for rasters: at 100 TB this table is
-    * written once and every raster operator reads it; in the fixture
+  /** Tile assembly — the write-once LAYOUT step (at 100 TB this table
+    * is written once and every raster operator reads it; in the fixture
     * queries it is built in-line from the tall parquet derivation).
     * Two shuffles, both at assembly time only: pixel-grain cell means
     * (the reference's one-value-per-pixel Scene contract), then
@@ -72,14 +71,9 @@ object TiledRaster extends QueryPack {
     * [[SharedFrames]] warm-layout contract every stored family uses:
     * consumers are timed against the layout, not its build); this is
     * the raw assembly plan the layout-shape spec pins. */
-  private[graft] def tilesPlan(spark: SparkSession, dir: String): DataFrame =
-    tilesOf(Trollflow.raster(spark, dir))
-
-  /** Tile assembly over ANY tall pixel frame (area, product, y, x,
-    * value) — the one definition behind the fixture derivation above. */
-  private def tilesOf(tall: DataFrame): DataFrame = {
+  private[graft] def tilesPlan(spark: SparkSession, dir: String): DataFrame = {
     val n = TileSize
-    tall
+    Trollflow.raster(spark, dir)
       .groupBy(col("area"), col("product"), col("y"), col("x"))
       .agg(avg(col("value")).as("cell"))
       .withColumn("tile_y", expr(s"y div $n"))
@@ -93,15 +87,12 @@ object TiledRaster extends QueryPack {
           .as("cells"))
   }
 
-  /** The tile table every tiled operator reads: the on-disk store when
-    * [[TileStore]] is in disk mode (the 100 TB path — tiles scan off
-    * parquet, they don't fit in memory), else the session-shared
+  /** The tile table every tiled operator reads: the session-shared
     * persisted frame (one per (session, dir) — mirroring how a
     * deployment reads the stored layout instead of re-assembling per
-    * query). Consumers are mode-unaware. */
+    * query). */
   def tiles(spark: SparkSession, dir: String): DataFrame =
-    TileStore.lookup(spark, dir).getOrElse(
-      SharedFrames.cached(spark, dir, "tiles")(tilesPlan(spark, dir)))
+    SharedFrames.cached(spark, dir, "tiles")(tilesPlan(spark, dir))
 
   /** T1 `aggregate` over TILES (q39's block-mean semantics at
     * per-product grain): 8×8 block means computed INSIDE each tile's

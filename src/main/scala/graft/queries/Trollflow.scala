@@ -731,7 +731,7 @@ object Trollflow extends QueryPack {
     }
   }
 
-  private[graft] lazy val q150Track: Seq[(Int, Double, Double)] =
+  private lazy val q150Track: Seq[(Int, Double, Double)] =
     sgp4TrackPoints(46)
 
   /** F5 with REAL TLE propagation (plugins/__init__.py:823-846 via
@@ -837,7 +837,7 @@ object Trollflow extends QueryPack {
       |ORDER BY area_name""".stripMargin
   }
 
-  private[graft] lazy val q151Track: Seq[(Int, Double, Double)] =
+  private lazy val q151Track: Seq[(Int, Double, Double)] =
     sgp4TrackPoints(720)
 
   /** Pass-schedule base epoch: the fixture TLE's epoch rounded to the

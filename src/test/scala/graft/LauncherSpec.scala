@@ -202,6 +202,22 @@ class LauncherSpec extends SparkSpec {
     intercept[ConfigException](Launcher.crashChain(bad))
   }
 
+  test("crashChain without a crash_handlers section: one log handler on the transport") {
+    val cfg = Launcher.load(
+      """product_list:
+        |  areas:
+        |    euro:
+        |      products: {N: {productname: N}}
+        |workers:
+        |  - fun: create_scene
+        |""".stripMargin)
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val chain = Launcher.crashChain(cfg, lines += _)
+    assert(chain.size == 1)
+    chain.head("message_to_jobs", new IllegalArgumentException("bad message"))
+    assert(lines.toList == List("crash in message_to_jobs: bad message"))
+  }
+
   test("sendmail: a configured binary receives the message on stdin") {
     // stand-in MTA: a script that appends stdin to a capture file —
     // proves the real process transport (spawn, -t -oi args, stdin pipe,

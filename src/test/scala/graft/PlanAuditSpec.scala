@@ -1196,120 +1196,6 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("bucketed postings store: zero-Exchange consumers off the on-disk layout") {
-    // The 100 TB face of the SharedFrames warm-bench story: the postings
-    // family is WRITTEN once as doc_id-bucketed tables, and every
-    // consumer join/aggregation runs against the scan with no Exchange
-    // on the postings side. Three pins per judge mandate:
-    //  (a) per-doc aggregation and doc_id co-bucketed join over the
-    //      bucketed postings plan ZERO shuffles;
-    //  (b) q29/q30/q98 (3-gram family) and q56/q124 (8-gram family)
-    //      keep EXACTLY their memory-mode shuffle structure (the layout
-    //      flip introduces no new Exchange) while reading bucketed
-    //      scans;
-    //  (c) answers are identical in both modes.
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.functions.{col, count, lit}
-    import graft.queries.PostingsStore
-    val consumers = Seq("q29_ngram_jaccard", "q30_minhash_lsh",
-      "q98_source_overlap", "q56_contamination", "q124_bloom_decontam",
-      "q137_paragraph_dedup", "q152_boilerplate_removal", "q83_dup_spans")
-    def rows(name: String): Set[Seq[Any]] =
-      SparkEntry.queries(name)(spark, sf).collect().map(_.toSeq.map {
-        case d: Double => math.rint(d * 1e6) / 1e6 // ULP-stable across scan orders
-        case x => x
-      }.toSeq).toSet
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // AQE off for the audit: the pins are static plan properties, and
-    // the un-executed adaptive wrapper hides final stage shapes
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      graft.queries.SharedFrames.invalidate(spark, sf)
-      val memRows = consumers.map(n => n -> rows(n)).toMap
-      val memShuffles = consumers.map(n => n -> hashExchanges(plan(n))).toMap
-      PostingsStore.materialize(spark, sf)
-      // (a) the postings-side guarantees, stated directly on the store
-      val sh = spark.table(PostingsStore.tableName(sf, "sh"))
-      val capped = spark.table(PostingsStore.tableName(sf, "capped"))
-      val perDoc = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      assert(perDoc.queryExecution.executedPlan
-        .collect { case e: Exchange => e }.isEmpty,
-        "per-doc aggregation over the bucketed postings must not shuffle")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val coJoin = sh.join(capped, Seq("doc_id"))
-      assert(coJoin.queryExecution.executedPlan
-        .collect { case e: Exchange => e }.isEmpty,
-        "doc_id co-bucketed postings join must not shuffle")
-      // the stored LSH index: bfp-bucketed, so the candidate self-join
-      // on (band, bfp) is clustered straight off the scan — the q30
-      // shuffle that dominates at corpus scale, gone from the disk path
-      val bands = spark.table(PostingsStore.tableName(sf, "bands"))
-      val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bfp") === col("y.bfp") &&
-          col("x.doc_id") < col("y.doc_id"))
-      assert(cand.queryExecution.executedPlan
-        .collect { case e: Exchange => e }.isEmpty,
-        "bfp-bucketed band self-join must not shuffle the index")
-      // the paragraph table: ph-bucketed, so q137's canonical-instance
-      // aggregation and q152's document-frequency aggregation + the
-      // instance join all read pre-partitioned data
-      val para = spark.table(PostingsStore.tableName(sf, "para"))
-      val perPh = para.groupBy(col("ph")).agg(count(lit(1)).as("n"))
-      assert(perPh.queryExecution.executedPlan
-        .collect { case e: Exchange => e }.isEmpty,
-        "per-ph aggregation over the bucketed paragraph table must not shuffle")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val phJoin = para.join(perPh, Seq("ph"))
-      assert(phJoin.queryExecution.executedPlan
-        .collect { case e: Exchange => e }.isEmpty,
-        "ph co-bucketed instance join must not shuffle")
-      // the positional span index: h-bucketed, so q83's candidate
-      // self-join reads both sides pre-clustered on the shingle hash —
-      // the Bucketed: true pin on BOTH scan sides, plus zero Exchange
-      val pos8c = spark.table(PostingsStore.tableName(sf, "pos8c"))
-      val spanCand = pos8c.as("x").join(pos8c.as("y"),
-        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
-      val spanPlan = spanCand.queryExecution.executedPlan
-      assert(spanPlan.collect { case e: Exchange => e }.isEmpty,
-        "h-bucketed positional self-join must not shuffle the index")
-      val spanScans = spanPlan.collect {
-        case f: FileSourceScanExec if f.bucketedScan => f }
-      assert(spanScans.size == 2,
-        s"q83's self-join must read TWO bucketed pos8c scans, got ${spanScans.size}")
-      // restored via the finally below, so a failed assertion above
-      // cannot leak threshold=-1 into the rest of the shared session
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc0)
-      // (b) + (c) per consumer
-      // bucketed scans may sit inside a derived frame's InMemoryRelation
-      // (e.g. q98's source-grain postings are memoized OVER the bucketed
-      // sh table) — descend into cached build plans when collecting
-      def bucketedScansOf(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[FileSourceScanExec] =
-        p.collect {
-          case f: FileSourceScanExec if f.bucketedScan => Seq(f)
-          case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-            bucketedScansOf(im.relation.cachedPlan)
-        }.flatten
-      consumers.foreach { n =>
-        val df = SparkEntry.queries(n)(spark, sf)
-        val ep = df.queryExecution.executedPlan
-        val bucketScans = bucketedScansOf(ep)
-        assert(bucketScans.nonEmpty,
-          s"$n reads no bucketed postings scan in bucketed mode:\n${ep.toString.take(2000)}")
-        val got = hashExchanges(ep.toString)
-        assert(got <= memShuffles(n),
-          s"$n grew shuffles on the bucketed layout: $got vs memory ${memShuffles(n)}")
-        assert(rows(n) == memRows(n), s"$n diverged between layouts")
-      }
-    } finally {
-      PostingsStore.drop(spark, sf)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc0)
-      graft.queries.SharedFrames.invalidate(spark, sf)
-    }
-  }
   test("stale stats re-profile incrementally: one regenerated table, nine untouched hints") {
     // round-14 incremental ANALYZE: a stale fingerprint used to drop its
     // table to no-stats planning for the whole session; load() now

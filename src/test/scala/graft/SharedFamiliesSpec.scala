@@ -41,8 +41,6 @@ class SharedFamiliesSpec extends SparkSpec {
         val read = familiesRead(plan, families)
         val declared = q.reads.toSet
         assert(SharedFrames.isConsumer(q.name) == declared.nonEmpty)
-        assert(SharedFrames.isBucketedConsumer(q.name) == declared.exists(_.onDisk),
-          s"${q.name}: isBucketedConsumer disagrees with its families' on-disk homes")
         if (read == declared) None
         else Some(s"${q.name}: declared ${declared.map(_.keys.head)}, " +
           s"reads ${read.map(_.keys.head)}")

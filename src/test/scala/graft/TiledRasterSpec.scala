@@ -118,40 +118,6 @@ class TiledRasterSpec extends SparkSpec {
       "sparse fixture lost no targets — the hole missed the crop region")
   }
 
-  test("TileStore disk mode: consumers scan parquet, results identical, stale dirs harmless") {
-    import graft.queries.TileStore
-    val p = TileStore.storePath(spark, sf)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      // memory-mode baseline
-      val memRows = rows(SparkEntry.queries("q164_tiled_block_aggregate")(spark, sf))
-      // pre-seed a dead JVM's droppings: path-addressed parquet must
-      // overwrite from ANY warehouse state (the PostingsStore lesson —
-      // no catalog entry exists to go stale here by construction)
-      fs.mkdirs(p)
-      val junk = new org.apache.hadoop.fs.Path(p, "part-stale.parquet")
-      val out = fs.create(junk)
-      out.write(Array[Byte](9, 9, 9)); out.close()
-      TileStore.materialize(spark, sf)
-      assert(TileStore.diskMode(spark), "materialize must flip the mode")
-      assert(!fs.exists(junk), "stale junk survived the overwrite")
-      // consumers now read the on-disk layout (no InMemoryRelation)
-      val tp = graft.queries.TiledRaster.tiles(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(tp.contains("graft_tiles_") && tp.contains("parquet"),
-        s"tiles() is not scanning the disk store:\n$tp")
-      // and answer identically, for the per-row kernel AND the halo form
-      assert(rows(SparkEntry.queries("q164_tiled_block_aggregate")(spark, sf))
-        == memRows, "disk layout diverged from the memory frame")
-      assert(rows(SparkEntry.queries("q167_tiled_resample_bilinear")(spark, sf))
-        == rows(TiledRaster.tallResampleBilinear(spark, sf)),
-        "halo form diverged on the disk layout")
-    } finally {
-      TileStore.drop(spark, sf)
-      assert(!fs.exists(p), "drop left the store on disk")
-    }
-  }
-
   test("q167 plan: ONE halo shuffle, zero joins — the map_overlap shape") {
     val p = SparkEntry.queries("q167_tiled_resample_bilinear")(spark, sf)
       .queryExecution.executedPlan.toString
@@ -192,10 +158,9 @@ class TiledRasterSpec extends SparkSpec {
   }
 
   test("tile assembly plan: exactly the two layout-build shuffles") {
-    // cold view: drop the shared frame so CacheManager can't plan-match
+    // cold view: empty the CacheManager so it can't plan-match
     // the assembly into an InMemoryRelation — this pin is about the
     // BUILD's shape, which the cached path would hide
-    queries.SharedFrames.invalidate(spark, sf)
     spark.sharedState.cacheManager.clearCache()
     val p = TiledRaster.tilesPlan(spark, sf)
       .queryExecution.executedPlan.toString
