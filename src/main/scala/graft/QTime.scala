@@ -10,11 +10,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *   sbt "runMain graft.QTime q30_minhash_lsh [reps] [explain]"
   *
-  * Times each named query cold (cache cleared between reps, like Bench —
-  * with Bench's one exception: the shared postings family is re-warmed
-  * UNTIMED before each rep of its consumers, so isolated and pack numbers
-  * measure the same warm-postings cost) and optionally prints the
-  * formatted physical plan.
+  * Times each named query with Bench's protocol ([[Measure]]: the same
+  * warm-up, warm shared families, cold cache per rep), so isolated and
+  * pack numbers measure the same cost, and optionally prints the
+  * formatted physical plan. A failing query prints `QTIME <name> FAILED:
+  * <error>`; the other names are still timed and the run exits 1.
   *
   *   sbt "runMain graft.QTime plan plans/r14 _before"
   *
@@ -32,29 +32,22 @@ import org.apache.spark.sql.execution.ExplainMode
   * before execution).
   *
   * Both plan modes write `<dir>/<qNN><suffix>.txt`, never touch bench
-  * artifacts, and exit nonzero if any query failed. SPARK_GRAFT_ANALYZE=1
-  * (timing and final modes) refreshes the persisted ANALYZE profile before
-  * priming, so the plan is the stats-hydrated one Bench's children run
-  * (the parent's analyzeOnce writes graft_table_stats, every child
-  * hydrates it). Without this an isolated number can measure a DIFFERENT
-  * plan than the pack's. */
+  * artifacts, and exit nonzero if any query failed, like timing mode.
+  * SPARK_GRAFT_ANALYZE=1 (timing and final modes) refreshes the persisted
+  * ANALYZE profile before priming, so the plan is the stats-hydrated one
+  * Bench's children run (the bench parent writes graft_table_stats, every
+  * child hydrates it). Without this an isolated number can measure a
+  * DIFFERENT plan than the pack's. */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val raw = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    raw.sparkContext.setLogLevel("WARN")
-    if (!args.headOption.contains("plan") && sys.env.get("SPARK_GRAFT_ANALYZE").contains("1"))
-      graft.plans.StatsStore.analyze(raw, sfDir,
-        graft.plans.StatsStore.ProfiledTables)
-    val spark = GraftSession.prime(raw)
+    val analyze = !args.headOption.contains("plan") &&
+      sys.env.get("SPARK_GRAFT_ANALYZE").contains("1")
+    val spark = Measure.session(Option.when(analyze)(sfDir))
     val failed = args.toSeq match {
       case "plan" +: rest =>
-        val names = SparkEntry.select(
-          sys.env.get("SPARK_GRAFT_ONLY").fold(Seq.empty[String])(_.split(",").toSeq))
         writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r14"),
-          rest.lift(1).getOrElse("_before"), names, "plandump")(
+          rest.lift(1).getOrElse("_before"), Measure.selected, "plandump")(
           _.queryExecution.explainString(ExplainMode.fromString("formatted")))
       case "final" +: rest =>
         writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r15"),
@@ -64,34 +57,30 @@ object QTime {
           // renders its final physical plan including AQEShuffleRead nodes
           df.queryExecution.toRdd.foreach(_ => ())
           val plan = df.queryExecution.executedPlan.toString
-          spark.sharedState.cacheManager.clearCache()
+          Measure.release(spark)
           plan
         }
-      case _ => time(spark, sfDir, args); 0
+      case _ => time(spark, sfDir, args)
     }
     spark.stop()
     if (failed > 0) sys.exit(1)
   }
 
-  private def time(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
-    val names = args.filter(a => !a.forall(_.isDigit) && a != "explain")
+  /** Prints one QTIME line per named query; returns the number that
+    * failed. */
+  private def time(spark: SparkSession, sfDir: String, args: Array[String]): Int = {
+    val names = args.filter(a => !a.forall(_.isDigit) && a != "explain").toSeq
     val reps = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
-      val ts = (1 to reps).map { _ =>
-        queries.SharedFrames.warmFor(name, spark, sfDir)
-        // same untimed post-warm GC breather as Bench.runPack — pack and
-        // isolated numbers must pay (or skip) the same costs
-        if (queries.SharedFrames.isConsumer(name)) System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.sharedState.cacheManager.clearCache()
-        sec
+    Measure.warmUp(spark, sfDir, names)
+    names.count { name =>
+      // a plan that fails to build fails the timing below
+      if (args.contains("explain"))
+        try SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+        catch { case NonFatal(_) => () }
+      Measure.best(spark, name, sfDir, reps) match {
+        case Right(sec) => println(f"QTIME $name min=$sec%.3f"); false
+        case Left(e) => println(s"QTIME $name FAILED: $e"); true
       }
-      println(f"QTIME $name min=${ts.min}%.3f runs=${ts.map(t => f"$t%.3f").mkString(",")}")
     }
   }
 

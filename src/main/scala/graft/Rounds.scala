@@ -74,6 +74,15 @@ private[graft] object History {
     lines(path).map(om.readTree).filter(r => keyOf(r)._2 == ((cpus, sf)))
       .map(r => Row(r.get("round").asInt, r.get("query").asText, r.get("sec").asDouble))
 
+  /** Rows of the (cpus, sf) shape's most recent round before `before`;
+    * empty when there is none. */
+  def latest(cpus: Int, sf: String, before: Int = Int.MaxValue,
+      path: java.nio.file.Path = File): Seq[Row] = {
+    val earlier = rows(cpus, sf, path).filter(_.round < before)
+    val last = earlier.map(_.round).foldLeft(0)(math.max)
+    earlier.filter(_.round == last)
+  }
+
   /** Replace the rows of (round, cpus, sf) with `rows`, keeping every
     * other line as it is: a re-run of a round replaces its block
     * instead of appending a duplicate (the file is a trend line, not a

@@ -13,7 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * churn. Entries hold only logical plans; stale entries for stopped
   * test sessions are bytes.
   *
-  * Warm-up contract: Bench and QTime call [[warmFor]] UNTIMED before
+  * Warm-up contract: [[graft.Measure]] (the timed loop of Bench, QTime
+  * and ScaleProbe) calls [[warmFor]] UNTIMED before
   * timing a consumer of a shared family, so pack and isolated numbers
   * both report warm-postings cost — the number that matters at scale,
   * where the postings/signature table is written once and joined many
@@ -24,8 +25,8 @@ private[graft] object SharedFrames {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
   /** Memoized, persisted frame. Re-arms after any
-    * `cacheManager.clearCache()` (Bench/QTime drop all caches between
-    * timed runs): persist() is lazy and idempotent here — storageLevel
+    * `cacheManager.clearCache()` (Measure drops all caches after every
+    * timed run): persist() is lazy and idempotent here — storageLevel
     * reads NONE exactly when the cache entry is gone. */
   def cached(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame = {
@@ -93,8 +94,8 @@ private[graft] object SharedFrames {
   val families: Seq[Family] = Seq(Postings3, Postings8, SourcePostings,
     Paragraphs, Spans8, BigramLm, Bm25Index, Tiles)
 
-  /** Does `queryName` read any shared family? (The bench/QTime
-    * harnesses insert an untimed GC breather after warming exactly these
+  /** Does `queryName` read any shared family? ([[graft.Measure]]
+    * inserts an untimed GC breather after warming exactly these
     * — the warm's allocation debt must not land inside the timed run.) */
   def isConsumer(queryName: String): Boolean = Query.reads(queryName).nonEmpty
 
