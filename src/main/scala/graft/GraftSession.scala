@@ -83,8 +83,8 @@ object GraftSession {
   // prime once per session: SparkEntry wraps every query invocation in
   // prime(), so without the marker each TIMED bench/probe run would re-do
   // 9 function registrations + 3 optimizer-list scans + the conf sets.
-  // Weak keys: stopped sessions must not be retained for the process
-  // lifetime (the bpeMemo lesson).
+  // Weak keys: a marker holds no frame that references its session, so
+  // a stopped session must not be retained for the process lifetime.
   private val primed = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 

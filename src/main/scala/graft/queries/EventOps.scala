@@ -650,7 +650,7 @@ object EventOps extends QueryPack {
       // lookup recomputes the whole weekly→cohort→cell subtree (the
       // pushed-down `offset = 0` predicate changes the plan enough that
       // exchange reuse can't latch on)
-      .persist()
+      .localCheckpoint(eager = false)
     val size = cell.filter(col("offset_wk") === 0)
       .select(col("cohort_week").as("sz_wk"), col("n_users").as("cohort_size"))
     cell.join(broadcast(size), col("cohort_week") === col("sz_wk"))
@@ -740,7 +740,8 @@ object EventOps extends QueryPack {
     val perKey = Tables.events(spark, dir)
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("c"))
-      .persist() // keys-sized; feeds the totals agg AND the hot-key pass
+    // keys-sized; the totals agg and the hot-key pass share its shuffle
+    // (exchange reuse), so it is computed once
     val totals = perKey.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_keys"),
         sum(col("c")).as("n_rows"),

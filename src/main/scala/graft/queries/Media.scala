@@ -105,7 +105,7 @@ object Media extends QueryPack {
       // div/% (whose negative-operand behavior the engines need not share)
       .withColumn("hi", shiftrightunsigned(col("sig"), 32))
       .withColumn("lo", col("sig").bitwiseAND(lit(4294967295L)))
-      .persist() // both sides of the band self-join
+      .localCheckpoint(eager = false) // both sides of the band self-join
     // candidate generation = the exact q31 scaffold, single-sourced
     Dedup.halfBandPairs(d, "sig", maxHamming = 10)
   }

@@ -630,8 +630,8 @@ object Relational extends QueryPack {
     * ever revisited.
     *
     * Scale design: dimension sides of the edge build are broadcast; the
-    * transition matrix is persisted and reused by all three iterations
-    * (at web scale you'd also checkpoint the rank vector per iteration to
+    * transition matrix is computed once and reused by all three
+    * iterations through exchange reuse of its window shuffle (at web scale you'd also checkpoint the rank vector per iteration to
     * truncate lineage). Determinism: transition probabilities are exact
     * integer ratios; each iteration's ranks are rounded to 7 decimals in
     * both engines, so order-dependent float summation can never compound
@@ -653,7 +653,6 @@ object Relational extends QueryPack {
       .withColumn("outw", sum(col("w")).over(Window.partitionBy(col("src"))))
       .select(col("src"), col("dst"),
         (col("w").cast("double") / col("outw")).as("p"))
-      .persist()
     val nation = Tables.nation(spark, dir)
     val nodes = nation.select(col("n_nationkey").as("node"))
     var r = nodes.withColumn("pr", lit(1.0 / 25))
@@ -662,7 +661,7 @@ object Relational extends QueryPack {
     // aggregate/derived frame, so neither the static file-size heuristic
     // nor the measured-stats rule can see that bound — without the
     // explicit hints all six iteration joins planned as SortMergeJoin
-    // over the persisted transition matrix (round-14 before-plan: 10 SMJ
+    // over the transition matrix (round-14 before-plan: 10 SMJ
     // + 12 Sort; after: every iteration join a BroadcastHashJoin, the
     // only SMJ left is the corpus-sized lineitem⋈orders edge build)
     for (_ <- 1 to 3) {
@@ -724,20 +723,20 @@ object Relational extends QueryPack {
     val qs = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
     val li = Tables.lineitem(spark, dir).select(col("l_extendedprice").as("x"))
     // ONE-ROW frame from a full corpus pass, consumed by the binning
-    // scan and (via qext below) the est/needs paths; persisted because
+    // scan and (via qext below) the est/needs paths; checkpointed because
     // column pruning gives each consumer a differently-projected copy of
     // the aggregate subtree — exchange reuse never unifies them, so the
-    // extent pass ran once PER CONSUMER (r14 plan: 4 lineitem scans; the
-    // r14 persist trap does not apply to a 1-row cache — no heap
-    // pressure, no columnar build cost)
+    // extent pass ran once PER CONSUMER (r14 plan: 4 lineitem scans). A
+    // lazy local checkpoint materializes it once and registers no cache
+    // entry
     val ext = li.agg(min(col("x")).as("mn"), max(col("x")).as("mx"),
-      count(lit(1)).as("n")).persist()
+      count(lit(1)).as("n")).localCheckpoint(eager = false)
     // one binning pass shared by the sketch and the exact-selection path
     val binned = li.crossJoin(broadcast(ext))
       .select(col("x"),
         least(floor((col("x") - col("mn")) * 256.0 / (col("mx") - col("mn"))),
           lit(255.0)).cast("int").as("bin"))
-      .persist()
+      .localCheckpoint(eager = false)
     val hist = binned.groupBy(col("bin")).agg(count(lit(1)).as("cnt"))
     // runs over the ≤ 256-bin histogram: constant partition key =
     // deliberately-bounded single-partition window
@@ -835,7 +834,8 @@ object Relational extends QueryPack {
     * production refinement is orienting edges by degree instead of by
     * name (same join, wedge count drops to O(m^1.5)); ordering here is
     * lexicographic so the oracle can mirror it. The edge list is built
-    * once (persist) and reused by all three join sides plus the degree
+    * once (a lazy local checkpoint) and reused by all three join sides
+    * plus the degree
     * pass; every join is a plain hash equi-join on edge endpoints. */
   def q89TriangleCount(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFns.{tokens, shingles}
@@ -848,7 +848,7 @@ object Relational extends QueryPack {
       .select(least(col("t1"), col("t2")).as("src"),
         greatest(col("t1"), col("t2")).as("dst"))
       .distinct()
-      .persist()
+      .localCheckpoint(eager = false)
     val tri = edges.as("e1")
       .join(edges.as("e2"), col("e2.src") === col("e1.dst"))
       .join(edges.as("e3"),
@@ -925,9 +925,8 @@ object Relational extends QueryPack {
       .select(expr("pos div 62").as("lane"), (col("pos") % 62).as("bit"))
       .groupBy(col("lane"))
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT)))").as("mask"))
-      // 67 rows feeding THREE broadcast builds — without this each probe
-      // join re-scans and re-aggregates the urgent keys
-      .persist()
+      // 67 rows feeding THREE broadcast builds: exchange reuse computes
+      // the lane aggregation once and broadcasts it to every probe join
     val probed = orders.select(
       Seq(col("o_orderkey"), col("o_orderpriority")) ++
         (0 until k).map(j => pos(j, col("o_orderkey")).as(s"pos$j")): _*)

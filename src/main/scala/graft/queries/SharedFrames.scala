@@ -1,17 +1,29 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** One Dataset object per (session, dir, key) for session-shared
-  * intermediates, grouped in the eight [[Family]] values below. Without the
-  * memo every call built a NEW Dataset over an identical plan and
-  * re-`persist()`ed it; Spark's CacheManager plan-matches those into one
-  * cache entry, but each re-registration raced recomputation of the same
-  * cached partitions ("Block rdd_N already exists" churn all over the
-  * round-7 bench tail). One object per key means one registration, zero
-  * churn. Entries hold only logical plans; stale entries for stopped
-  * test sessions are bytes.
+/** The one session memo: one value per (session, dir, key) for
+  * session-shared frames and values. Query plan builders keep nothing of
+  * their own across runs (BuilderCacheSpec names the few persists kept
+  * on measurement); what outlives one run lives here:
+  *
+  *   - persisted frames ([[cached]]), grouped in the [[Family]] values
+  *     below. Without the memo every call built a NEW Dataset over an
+  *     identical plan and re-`persist()`ed it; Spark's CacheManager
+  *     plan-matches those into one cache entry, but each re-registration
+  *     raced recomputation of the same cached partitions ("Block rdd_N
+  *     already exists" churn all over the round-7 bench tail). One object
+  *     per key means one registration, zero churn;
+  *   - the duplicate-cluster labels ([[DupLabels]]), a local checkpoint
+  *     the component loop leaves behind, so no cache entry;
+  *   - driver-side values: the corpus vector count
+  *     ([[Similarity.nVecs]]) and the BPE merge table q158 applies
+  *     ([[TextAnalysis.q158BpeApply]]).
+  *
+  * Keys hold the session strongly: a memoized frame references its
+  * session anyway, and the entries of a stopped test session are its
+  * logical plans and a few values.
   *
   * Warm-up contract: [[graft.Measure]] (the timed loop of Bench, QTime
   * and ScaleProbe) calls [[warmFor]] UNTIMED before
@@ -21,8 +33,18 @@ import org.apache.spark.storage.StorageLevel
   * times, not rebuilt inside every query.
   */
 private[graft] object SharedFrames {
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private val entries =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Any]
+
+  /** The value of `key` for (session, dir), built on first use. `build`
+    * runs outside any lock: two racing first uses may both build, and
+    * the first to finish wins. */
+  def memo[T](spark: SparkSession, dir: String, key: String)(build: => T): T =
+    entries.getOrElseUpdate((spark, dir, key), build).asInstanceOf[T]
+
+  /** Replaces the value of `key` for (session, dir). */
+  def update(spark: SparkSession, dir: String, key: String, value: Any): Unit =
+    entries((spark, dir, key)) = value
 
   /** Memoized, persisted frame. Re-arms after any
     * `cacheManager.clearCache()` (Measure drops all caches after every
@@ -30,7 +52,7 @@ private[graft] object SharedFrames {
     * reads NONE exactly when the cache entry is gone. */
   def cached(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame = {
-    val df = memo.getOrElseUpdate((spark, dir, key), build)
+    val df = memo(spark, dir, key)(build)
     if (df.storageLevel == StorageLevel.NONE) df.persist()
     df
   }
@@ -91,8 +113,15 @@ private[graft] object SharedFrames {
     (spark, dir) => TiledRaster.tiles(spark, dir).count()
   }
 
+  /** Duplicate-cluster labels ([[Dedup.dupLabels]]). The component loop
+    * ends in a local checkpoint, so the labels are materialized when the
+    * memo fills and survive `clearCache()`; the warm only fills it. */
+  val DupLabels: Family = Family(Seq("dupLabels")) {
+    (spark, dir) => Dedup.dupLabels(spark, dir).count()
+  }
+
   val families: Seq[Family] = Seq(Postings3, Postings8, SourcePostings,
-    Paragraphs, Spans8, BigramLm, Bm25Index, Tiles)
+    Paragraphs, Spans8, BigramLm, Bm25Index, Tiles, DupLabels)
 
   /** Does `queryName` read any shared family? ([[graft.Measure]]
     * inserts an untimed GC breather after warming exactly these
@@ -107,5 +136,6 @@ private[graft] object SharedFrames {
 
   /** The memoized frames of (session, dir) by memo key. */
   private[graft] def memoized(spark: SparkSession, dir: String): Map[String, DataFrame] =
-    memo.collect { case ((s, d, k), df) if s == spark && d == dir => k -> df }.toMap
+    entries.collect { case ((s, d, k), df: Dataset[_]) if s == spark && d == dir =>
+      k -> df.asInstanceOf[DataFrame] }.toMap
 }

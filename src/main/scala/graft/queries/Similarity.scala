@@ -58,33 +58,12 @@ object Similarity extends QueryPack {
         transform(col("sv"), s => round(lit(1e-9) + s / col("nv"), 6)).as("cv"),
         col("nv"))
 
-  /** Corpus vector count, memoized per (session, corpus): [[sigBits]]
-    * needs it at plan time in four queries — one metadata-cheap count
-    * per session, not one per query. Weakly keyed by the session
-    * instance (an identity-hash key would collide across sessions and
-    * pin stopped ones). */
-  private val nVecsMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
-
-  private[queries] def nVecs(spark: SparkSession, dir: String): Long = {
-    val perDir = nVecsMemo.synchronized {
-      var m = nVecsMemo.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, Long]
-        nVecsMemo.put(spark, m)
-      }
-      m
-    }
-    // count() outside the lock (same rule as Dedup.dupLabels' memo): a
-    // Spark action under a session-wide lock serializes every concurrent
-    // consumer; a racing duplicate count is one wasted metadata job
-    perDir.synchronized(perDir.get(dir)) match {
-      case Some(n) => n
-      case None =>
-        val n = Tables.embeddings(spark, dir).count()
-        perDir.synchronized(perDir.getOrElseUpdate(dir, n))
-    }
-  }
+  /** Corpus vector count, memoized per (session, corpus) in
+    * [[SharedFrames]]' memo: [[sigBits]] sizes the LSH signatures by it at
+    * plan time, q80 its seed set and q106 its moments — one
+    * metadata-cheap count per session, not one per query. */
+  private[queries] def nVecs(spark: SparkSession, dir: String): Long =
+    SharedFrames.memo(spark, dir, "nVecs")(Tables.embeddings(spark, dir).count())
 
   private[queries] val vecsSql: String =
     """e AS (
@@ -325,7 +304,7 @@ object Similarity extends QueryPack {
       .select(col("vec_id").as("a_vec"), col("m.c_label").as("cluster"))
       // one row per vector, consumed by BOTH the corpus and query sides -
       // without materialization the whole assignment subtree plans twice
-      .persist()
+      .localCheckpoint(eager = false)
     val withCl = e.join(assigned, col("vec_id") === col("a_vec")).drop("a_vec")
     val q = withCl.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
@@ -516,12 +495,12 @@ object Similarity extends QueryPack {
   def q69KmeansRefine(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .persist() // both assignment passes + the member join read this
+      .localCheckpoint(eager = false) // both assignment passes + the member join read this
     def centArraysOver(members: DataFrame, label: Column): DataFrame =
       centroidsOver(members, label, "c_label")
         .withColumn("cnrm", dotCol(col("cv"), col("cv")))
     val cent0 = centArraysOver(e, col("label"))
-      .persist() // assignment pass 0 AND the movement join
+      .localCheckpoint(eager = false) // assignment pass 0 AND the movement join
     // argmin via min(struct(d2, c_label)): lexicographic struct-min IS
     // "smallest d2, ties by cluster id", computed as ONE hash aggregation
     // with map-side partials — no N×k window sort
@@ -540,7 +519,7 @@ object Similarity extends QueryPack {
       e.join(assign(cent0).select(col("a_vec"), col("cluster")),
         col("vec_id") === col("a_vec")),
       col("cluster"))
-      .persist() // consumed by the reassignment AND the movement join
+      .localCheckpoint(eager = false) // consumed by the reassignment AND the movement join
     // movement at k rows: element-wise |new − old| over the two arrays
     val shift = cent0.select(col("c_label").as("s_cluster"), col("cv").as("ocv"))
       .join(cent1.select(col("c_label").as("s_cluster"), col("cv").as("ncv")),
@@ -624,7 +603,7 @@ object Similarity extends QueryPack {
     *
     * Scale design: the codebook (k×64) and each query's ADC table (8×k
     * per query) are broadcast; `sub` — the (vec, subspace, code) partial
-    * distances — is computed once, persisted, and reused for encoding,
+    * distances — is computed once, checkpointed, and reused for encoding,
     * coarse assignment, and the query tables; per-candidate work after
     * the broadcast join is an 8-row sum, and the bounded TopK aggregation
     * keeps the shuffle at O(queries·k·partitions). */
@@ -651,7 +630,7 @@ object Similarity extends QueryPack {
         val cs = slice(col("cv"), sp * 8 + 1, 8)
         dotCol(cs, cs)
       }: _*))
-      .persist() // k×64 rows; read by the corpus pass AND the query pass
+      .localCheckpoint(eager = false) // k×64 rows; read by the corpus pass AND the query pass
     def subOver(vs: DataFrame): DataFrame = vs
       .withColumn("vn8", array((0 until 8).map { sp =>
         val s = slice(col("v"), sp * 8 + 1, 8)
@@ -683,7 +662,7 @@ object Similarity extends QueryPack {
             col("code"))).as(s"m$sp")): _*)
       .select(col("vec_id"), col("mc.code").as("cluster"),
         array((0 until 8).map(sp => col(s"m$sp.code")): _*).as("enc"))
-      .persist() // read by the query-side build AND candidate scoring
+      .localCheckpoint(eager = false) // read by the query-side build AND candidate scoring
     // query-side ADC tables: the query's own partials to EVERY codebook
     // entry, as a code→d28 map (built from the 1%-filtered vector scan —
     // N/100 × k rows, never the corpus); qcluster rides in from perVec
@@ -772,7 +751,7 @@ object Similarity extends QueryPack {
     * other-class neighbor is closer than its nearest same-class one (the
     * pairs a metric-learning loss learns the most from).
     *
-    * Scale design: one scored pass (broadcast query side), persisted and
+    * Scale design: one scored pass (broadcast query side), checkpointed and
     * consumed by TWO bounded TopK aggregations — the label filter rides
     * the aggregation input, so neither branch re-scores; no window sort
     * anywhere. In production the scored pass would be the ANN candidate
@@ -787,7 +766,7 @@ object Similarity extends QueryPack {
         dotCol(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
       .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
         col("cos_raw"))
-      .persist()
+      .localCheckpoint(eager = false)
     def top1(cond: org.apache.spark.sql.Column) = scored.filter(cond)
       .groupBy(col("qid"))
       .agg(graft.operators.TopK.topk(1)(col("cos_raw"), col("vec_id")).as("t"))
@@ -852,7 +831,7 @@ object Similarity extends QueryPack {
     val e = vecs(spark, dir)
     val withSig = e.withColumn("sig", sigCol(col("v"), sigBits(nVecs(spark, dir))))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("sig"))
-      .persist() // both sides of the bucket self-join
+      .localCheckpoint(eager = false) // both sides of the bucket self-join
     withSig.as("x").join(withSig.as("y"),
         col("x.sig") === col("y.sig") && col("x.vec_id") =!= col("y.vec_id"))
       .withColumn("cos_raw",
@@ -918,7 +897,7 @@ object Similarity extends QueryPack {
     * corpus-size-independent. VecSum wins when it REMOVES a corpus-sized
     * shuffle at modest (≤ d) width; here it would only add boxing. */
   def q106CorrAudit(spark: SparkSession, dir: String): DataFrame = {
-    val n = Tables.embeddings(spark, dir).count()
+    val n = nVecs(spark, dir)
     val mom = vecs(spark, dir)
       .select(posexplode(graft.functions.VecOps.outerCol(col("v")))
         .as(Seq("pos", "xy")))
@@ -926,7 +905,7 @@ object Similarity extends QueryPack {
       .groupBy(expr("cast(pos div 64 as int)").as("i"),
         (col("pos") % 64).cast("int").as("j"))
       .agg(sum(col("xy")).as("sxy"))
-      .persist() // 2080 rows; diagonal feeds the mean/var lookup below
+      .localCheckpoint(eager = false) // 2080 rows; diagonal feeds the mean/var lookup below
     val m1 = Tables.embeddings(spark, dir)
       .select(posexplode(col("embedding").cast("array<double>")).as(Seq("d", "x")))
       .groupBy(col("d")).agg(sum(col("x")).as("sx"))
@@ -990,7 +969,7 @@ object Similarity extends QueryPack {
     val e = vecs(spark, dir)
     val withSig = e.withColumn("sig", sigCol(col("v"), sigBits(nVecs(spark, dir))))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("sig"))
-      .persist() // both bucket-join sides + the label lookup
+      .localCheckpoint(eager = false) // both bucket-join sides + the label lookup
     val top1 = withSig.as("x").join(withSig.as("y"),
         col("x.sig") === col("y.sig") && col("x.vec_id") =!= col("y.vec_id"))
       .withColumn("cos_raw",
@@ -1053,7 +1032,7 @@ object Similarity extends QueryPack {
     * the narrow chain — the shuffle count stays ZERO either way. */
   def q134KcenterCoreset(spark: SparkSession, dir: String): DataFrame = {
     val k = 8
-    val e = vecs(spark, dir).persist() // (vec_id, label, v, nrm)
+    val e = vecs(spark, dir).localCheckpoint(eager = false) // (vec_id, label, v, nrm)
     def d2To(cv: Seq[Double], cNrm: Double): Column =
       round(lit(1e-9) + col("nrm") - lit(2.0) * dotCol(col("v"), typedLit(cv))
         + lit(cNrm), 4)
