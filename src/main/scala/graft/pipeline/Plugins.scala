@@ -18,8 +18,11 @@ import graft.operators.Raster
   * dask holds the delayed graph — and SaveDatasets' write actions are the
   * only compute triggers, apart from [[CheckValidDataFraction]]'s one
   * data-dependent aggregate (the reference's dask.persist there,
-  * plugins/__init__.py:1014-1032). Shared upstream frames are computed
-  * once per action that reads them.
+  * plugins/__init__.py:1014-1032). That check persists the area frames it
+  * measures through the job's [[JobScope]], so under [[Runner]] each
+  * resampled area is computed once per job and the writes read the
+  * cache; a frame no check persisted is computed once per action that
+  * reads it.
   *
   * Abort contract: a plugin aborts with [[PipelineContext.abort]] and
   * [[Runner]] stops the chain there, so no plugin tests `ctx.aborted`
@@ -48,7 +51,11 @@ final case class PipelineContext(
     /** Set by an aborting plugin (`AbortProcessing`, launcher.py:456-457).
       * [[Runner]] stops the chain at the first aborted context: the
       * plugins after it are not run. */
-    aborted: Option[String] = None) {
+    aborted: Option[String] = None,
+    /** Where plugins cache frames for the length of the job: [[Runner]]
+      * opens one per priority slice and releases it when the slice ends.
+      * A context built outside the Runner caches nothing. */
+    scope: JobScope = JobScope.none) {
   def abort(reason: String): PipelineContext = copy(aborted = Some(reason))
 }
 
@@ -393,20 +400,25 @@ object Plugins {
     * pass and drop the failing work-list items. A null or NaN value is
     * fill, as the reference's `notnull()` on a float array counts it.
     * Data-dependent pruning — the only plugin that triggers compute
-    * before save, exactly like the reference. */
+    * before save, exactly like the reference.
+    *
+    * The checked area frames are persisted through the job's
+    * [[JobScope]] and returned in `ctx.frames`, the reference's
+    * `dask.persist` of what it measured (plugins/__init__.py:1014-1032):
+    * the aggregate fills the cache, and [[SaveDatasets]] reads it instead
+    * of re-running scan → aggregate → resample per write. */
   final case class CheckValidDataFraction(minFraction: Double) extends Plugin {
     val name = "check_valid_data_fraction"
     def apply(ctx: PipelineContext): PipelineContext = {
       val checked = ctx.frames.toSeq.collect {
-        case (Some(name), df) => name -> df
+        case (Some(name), df) => name -> ctx.scope.persist(df)
       }
       if (checked.isEmpty) ctx
       else {
         // ALL areas in ONE aggregation over one unioned plan — the
         // reference checks every product at once (plugins/__init__.py:
-        // 1014-1032) so shared inputs compute together. The union feeds
-        // exactly this one action, so it is not persisted. The collect()
-        // is config-sized: one row per (area, product).
+        // 1014-1032) so shared inputs compute together. The collect() is
+        // config-sized: one row per (area, product).
         val tagged = checked.map { case (name, df) =>
           df.select(lit(name).as("__cvdf_area"),
             col("product").cast("string").as("__cvdf_product"),
@@ -424,7 +436,8 @@ object Plugins {
           item.area.isEmpty ||
             fractions.get((item.area, item.product)).forall(_ >= minFraction)
         }
-        ctx.copy(worklist = pruned)
+        ctx.copy(frames = ctx.frames ++ checked.map { case (n, df) => Option(n) -> df },
+          worklist = pruned)
       }
     }
   }
@@ -441,28 +454,41 @@ object Plugins {
     * 207-255): for every work-list item, write the product slice of its
     * area frame with the named writer to a *temporary* directory, then
     * atomically rename into place after a successful write (tmp + rename
-    * commit, W3) and record it in the manifest. Writers: parquet / csv /
-    * json (format-specific options via item settings `writer_opt.*`).
+    * commit, W3) and record it in the manifest. Writers: any Spark sink
+    * format, named by the item's `writer` setting or derived from its
+    * format (parquet / csv / json).
     *
-    * Batching (default, the reference's `compute_writer_results`,
-    * plugins/__init__.py:392-395): every sink's plan is BUILT before any
-    * is executed — an analysis error in the last sink surfaces before a
-    * single byte of the first is written — then the write actions run
-    * back-to-back on shared persisted upstreams if the caller persisted
-    * them. `eagerWriting=true` (doc/source/plugins.rst:162-167) instead
-    * builds and executes each file's plan before the next one is even
-    * constructed, trading that all-or-nothing analysis for earlier output.
+    * Batching (default, the reference's one `compute_writer_results`
+    * over every writer's delayed result, plugins/__init__.py:392-395):
+    * every sink's plan is BUILT before any is executed — an analysis
+    * error in the last sink surfaces before a single byte of the first is
+    * written. Sinks with the same writer and the same output columns
+    * (names and types, in order) then form one group, written by ONE
+    * Spark action: each sink is tagged with an integer `__sink` id, the
+    * group is unioned and written once with `partitionBy("__sink")` into
+    * a tmp dir, and each `__sink=i` directory is renamed to its sink's
+    * file name (the partition column is not in the data files, so every
+    * file keeps exactly its columns and their order). Groups run in the
+    * order each first appears in the work list; the area frames they
+    * read are the ones [[CheckValidDataFraction]] persisted for the job.
+    * `eagerWriting=true` (doc/source/plugins.rst:162-167) instead builds
+    * and executes each file's plan, one write per file, before the next
+    * one is even constructed, trading that all-or-nothing analysis for
+    * earlier output.
     *
-    * Single action per sink: the row count rides the write itself via
-    * `Dataset.observe` — never a separate `count()` pass — and the
-    * product-missing-from-scene skip (P1, plugins/__init__.py:398-410) is
-    * the zero-observed-rows case: the empty tmp dir is discarded instead
-    * of renamed, so the skip costs no extra job either.
+    * Row counts ride the write itself via `Dataset.observe` — never a
+    * separate `count()` pass; a group observes one `count_if(__sink = i)`
+    * per sink. The product-missing-from-scene skip (P1,
+    * plugins/__init__.py:398-410) is the zero-row case: a sink with no
+    * rows has no partition directory (eagerly, its empty tmp dir is
+    * discarded), so the skip costs no extra job either.
     *
     * `callbacks` (`call_on_done`, plugins/__init__.py:350-464,
     * 1082-1138): hooks invoked in order for every committed file, after
     * the final rename — the close→move→log chain of the reference; a
-    * hook sees the manifest entry of the file it was called for.
+    * hook sees the manifest entry of the file it was called for. Files
+    * are published in work-list order in both modes, so callbacks fire
+    * in the same order batched as eagerly.
     *
     * `stagingZone` (plugins/__init__.py:223-255, 317-327): when set, files
     * are written (tmp + rename) inside the staging directory and moved to
@@ -470,13 +496,18 @@ object Plugins {
     * commit for sinks where the final location is slow/remote. Publication
     * timing follows `renamed_files` (plugins/__init__.py:318-327): by
     * default every staged file moves to `outDir` together, AFTER the last
-    * sink's write — all-or-nothing publication, so a consumer watching
-    * `outDir` never sees a partial batch. `earlyMoving=true`
-    * (`early_moving`, plugins/__init__.py:377-381, the reference's
-    * `callback_move` contract) instead moves each file the moment its own
-    * write commits. On a mid-batch failure in deferred mode, already-
-    * written files stay in the staging zone — same as the reference's
-    * un-renamed tmp names — for inspection or re-run. Divergence: the
+    * write — all-or-nothing publication, so a consumer watching `outDir`
+    * never sees a partial batch. `earlyMoving=true` (`early_moving`,
+    * plugins/__init__.py:377-381, the reference's `callback_move`
+    * contract) instead moves each file as soon as its own write and those
+    * of every file before it in the work list committed: eagerly that is
+    * the moment its own write commits, batched the end of the first
+    * group write that leaves no earlier file unwritten. On a failure in
+    * deferred mode, files of groups that already committed stay in the
+    * staging zone — same as the reference's un-renamed tmp names — for
+    * inspection or re-run, and the failing write's tmp dir is removed;
+    * batched, a group's files are renamed only after its one write
+    * succeeded. Divergence: the
     * reference's `early_moving` without `callback_move` leaves files in
     * staging forever; here the move is native, so they always reach
     * `outDir` on success.
@@ -502,22 +533,81 @@ object Plugins {
       // for the two-hop staged path
       val immediate = earlyMoving || stagingZone.isEmpty
       val pending = scala.collection.mutable.ArrayBuffer.empty[Staged]
-      def commit(sink: Sink): Option[WrittenFile] =
-        writeStaged(sink).flatMap { st =>
-          if (immediate) Some(publish(st)) else { pending += st; None }
-        }
+      def commit(st: Staged): Option[WrittenFile] =
+        if (immediate) Some(publish(st)) else { pending += st; None }
       val written =
         if (eagerWriting)
-          ctx.worklist.flatMap(item => planOne(ctx, item).flatMap(commit))
+          ctx.worklist.flatMap(item =>
+            planOne(ctx, item).flatMap(sink => writeStaged(sink).flatMap(commit)))
         else {
           // force every plan before the first action (see class doc)
           val sinks = ctx.worklist.flatMap(item => planOne(ctx, item))
-          sinks.flatMap(commit)
+          writeGroups(sinks, commit)
         }
       // renamed_files (plugins/__init__.py:318-327): publish the whole
       // batch only after every write committed
       val manifest = if (immediate) written else pending.map(publish).toSeq
       ctx.copy(manifest = ctx.manifest ++ manifest)
+    }
+
+    /** Batched mode: one write per (writer, ordered columns) group, the
+      * groups in the order each first appears in `sinks`. Every group's
+      * union is built before the first write. Files commit in `sinks`
+      * order: after each group, every sink up to the first one not yet
+      * written. */
+    private def writeGroups(sinks: Seq[Sink],
+        commit: Staged => Option[WrittenFile]): Seq[WrittenFile] = {
+      val groups = sinks.zipWithIndex
+        .groupBy { case (sink, _) =>
+          // names and types in order; nullability may differ (the
+          // bilinear kernel's y/x are non-null), the union widens it
+          (sink.writer, sink.df.schema.map(f => (f.name, f.dataType))) }
+        .values
+        .toSeq.sortBy(_.head._2)
+        .map(members => members -> members.map { case (sink, i) =>
+          sink.df.withColumn(SinkCol, lit(i)) }.reduce(_.unionByName(_)))
+      val done = scala.collection.mutable.Map.empty[Int, Option[Staged]]
+      var next = 0
+      groups.flatMap { case (members, union) =>
+        done ++= writeGroup(members, union)
+        val ready = Iterator.from(next).takeWhile(done.contains).toSeq
+        next += ready.size
+        ready.flatMap(i => done(i).flatMap(commit))
+      }
+    }
+
+    /** One group's write: ONE Spark action for every sink in it, rows
+      * per sink observed on the write. Returns each sink's staged
+      * location, or None for the zero-row skip. */
+    private def writeGroup(members: Seq[(Sink, Int)],
+        union: DataFrame): Seq[(Int, Option[Staged])] = {
+      val stageDir = stagingZone.getOrElse(outDir)
+      val tmpPath = Paths.get(stageDir, s".tmp_${System.nanoTime()}_${members.head._2}")
+      try {
+        val obs = org.apache.spark.sql.Observation()
+        val counts = members.map { case (_, i) =>
+          count_if(col(SinkCol) === i).as(s"rows_$i") }
+        union.observe(obs, counts.head, counts.tail: _*)
+          .write.mode("overwrite").format(members.head._1.writer)
+          .partitionBy(SinkCol).save(tmpPath.toString)
+        val rows = obs.get
+        val staged = members.map { case (sink, i) =>
+          val part = tmpPath.resolve(s"$SinkCol=$i")
+          i -> (if (!Files.isDirectory(part)) None else {
+            val stagedPath = Paths.get(stageDir, sink.fname)
+            atomicRename(part, stagedPath)
+            Some(Staged(stagedPath, sink, rows(s"rows_$i").asInstanceOf[Long]))
+          })
+        }
+        deleteRecursively(tmpPath)
+        staged
+      } catch {
+        case NonFatal(e) =>
+          deleteRecursively(tmpPath)
+          throw new RuntimeException("save_datasets failed for " +
+            members.map(_._1.item.product).distinct.mkString(", ") +
+            s": ${e.getMessage}", e)
+      }
     }
 
     /** Build the sink plans for one work item: the product slice plus any
@@ -548,10 +638,11 @@ object Plugins {
 
     private case class Staged(path: Path, sink: Sink, rows: Long)
 
-    /** Execute one sink's write: tmp dir + atomic rename inside the stage
-      * directory (staging zone if set, else `outDir`); returns the staged
-      * location, or None for the zero-row (product missing) skip. Exactly
-      * ONE Spark action — the row count is observed on the write itself. */
+    /** Eager mode: execute one sink's write: tmp dir + atomic rename
+      * inside the stage directory (staging zone if set, else `outDir`);
+      * returns the staged location, or None for the zero-row (product
+      * missing) skip. Exactly ONE Spark action — the row count is
+      * observed on the write itself. */
     private def writeStaged(sink: Sink): Option[Staged] = {
       val stageDir = stagingZone.getOrElse(outDir)
       val stagedPath = Paths.get(stageDir, sink.fname)
@@ -989,6 +1080,9 @@ object Plugins {
           ctx.copy(worklist = pruned)
       }
   }
+
+  /** The sink-id column of a batched [[SaveDatasets]] group write. */
+  private val SinkCol = "__sink"
 
   /** One fully-built sink plan: everything about the file except the
     * write action itself (see [[SaveDatasets]]). */

@@ -38,7 +38,9 @@ object Runner {
 
   /** Run `plugins` over each priority slice of the work-list in order.
     * Each slice sees only its own work items (the reference forks one
-    * job per priority, launcher.py:269-300); frames/metadata are shared. */
+    * job per priority, launcher.py:269-300); frames/metadata are shared.
+    * Each slice runs in a [[JobScope]] of its own, released when the
+    * slice ends. */
   def processJobs(ctx: PipelineContext, plugins: Seq[Plugin],
                   timeoutPerPlugin: Duration = Duration.Inf,
                   crashHandlers: Seq[CrashHandler] = Seq.empty): Seq[JobReport] = {
@@ -116,9 +118,15 @@ object Runner {
           run(next, tail, acc :+ PluginResult(plugin.name, secs, next.aborted))
         case _ => (ctx, acc)
       }
+    // the job's cache, released however the chain ends; what a
+    // timed-out plugin's thread persists later is not cached (JobScope)
+    val scope = JobScope.open()
     val (finalCtx, results) =
-      try run(start, plugins, Vector.empty)
-      finally start.spark.sparkContext.clearJobGroup()
+      try run(start.copy(scope = scope), plugins, Vector.empty)
+      finally {
+        start.spark.sparkContext.clearJobGroup()
+        scope.close()
+      }
     JobReport(prio, results, finalCtx)
   }
 }

@@ -65,7 +65,9 @@ object StreamRunner {
     * [[Runner.processJobs]]. `onReport` receives each message's job
     * reports (publish/audit hook — the tests' capture point). A message
     * that cannot become a job reaches `crashHandlers` as plugin
-    * `message_to_jobs` and gets no report.
+    * `message_to_jobs` and gets no report. The chain runs in the
+    * query's own session (Spark's clone of the caller's), with AQE off;
+    * the caller's session keeps its settings.
     *
     * Scale note: the per-batch `collect()` pulls MESSAGES to the driver,
     * not data — messages are control-plane JSON (the reference holds each
@@ -83,6 +85,12 @@ object StreamRunner {
                  (onReport: (String, Seq[Runner.JobReport]) => Unit): StreamingQuery =
     runPerMessage(messages, checkpointDir, availableNow) { (batch, _) =>
       val spark = batch.sparkSession
+      // the query's own clone of the caller's session: AQE off here
+      // leaves the caller's on. A message's chain is a few small shuffles
+      // over the job's cached areas, and AQE runs each query stage as a
+      // Spark job of its own, so the chain would be bound by the cost per
+      // job (measured faster without it on granule_chain)
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
       // guard the control-plane contract: the collect below is bounded
       // ONLY because the message source delivers a handful of JSON
       // messages per trigger (maxFilesPerTrigger=1 in messageStream). A

@@ -83,4 +83,23 @@ class BuilderCacheSpec extends SparkSpec {
     assert(found.map { case (f, o, _) => (f, o) }.toSet == keptSites,
       "a kept site is gone: drop it from keptSites")
   }
+
+  test("pipeline and streaming code caches only through the job scope") {
+    import SourceText._
+    // a plugin's `ctx.scope.persist(df)` is the scope; JobScope.scala
+    // holds the one persist behind it
+    val site = """(?<!\bscope)\.persist\(|\.cache\(\)""".r
+    val found = Seq("src/main/scala/graft/pipeline", "src/main/scala/graft/streaming")
+      .flatMap(scalaFiles)
+      .filterNot(_.getFileName.toString == "JobScope.scala")
+      .flatMap { path =>
+        val code = strip(Files.readString(path))
+        site.findAllMatchIn(code).map { m =>
+          val line = code.substring(0, m.start).count(_ == '\n') + 1
+          s"${path.getFileName}:$line: ${m.matched}"
+        }
+      }
+    assert(found.isEmpty, "cache through the job's JobScope (ctx.scope.persist):\n" +
+      found.mkString("\n"))
+  }
 }

@@ -61,6 +61,28 @@ class RunnerSpec extends SparkSpec {
     assert(reports.head.results.head.abortedAfter.isDefined)
   }
 
+  test("a timed-out plugin's persists leave no cache entry, before or after the timeout") {
+    spark.sharedState.cacheManager.clearCache()
+    val persistedLate = new java.util.concurrent.CountDownLatch(1)
+    val slow = new Plugin {
+      val name = "slow_persisting_plugin"
+      def apply(ctx: PipelineContext): PipelineContext = {
+        val early = ctx.scope.persist(ctx.frames(Some("euro")))
+        early.count()
+        Thread.sleep(4000) // the Runner times out and ends the job meanwhile
+        val late = ctx.scope.persist(early.filter("value > 1"))
+        persistedLate.countDown()
+        ctx.copy(frames = ctx.frames + (Option("euro") -> late))
+      }
+    }
+    val reports = Runner.processJobs(baseCtx(), Seq(slow),
+      timeoutPerPlugin = 2.seconds)
+    assert(reports.head.finalCtx.aborted.exists(_.contains("timed out")))
+    assert(Cache.entries(spark) == 0, "the job ended with a cache entry")
+    assert(persistedLate.await(30, SECONDS), "the plugin never reached its late persist")
+    assert(Cache.entries(spark) == 0, "a persist after the timeout left a cache entry")
+  }
+
   test("the chain stops at the first abort: later plugins neither run nor report") {
     var ran = false
     val stop = new Plugin {
