@@ -45,6 +45,34 @@ object Raster {
     /** The target row/column covering a source cell. */
     def ty: Column = expr(s"((y - $srcYMin) * $height) div $ry")
     def tx: Column = expr(s"((x - $srcXMin) * $width) div $rx")
+
+    /** The [[bilinear]] axes: target center t sits at source coordinate
+      * srcMin + (t + ½)·r/size − ½ = (2r·t + 2·srcMin·size + r − size) /
+      * (2·size). */
+    def yAxis: Axis = Axis(2 * ry, 2 * srcYMin * height + ry - height, 2L * height, height)
+    def xAxis: Axis = Axis(2 * rx, 2 * srcXMin * width + rx - width, 2L * width, width)
+  }
+
+  /** One axis of a [[bilinear]] target mapping: target t ∈ [0, n) sits
+    * at source coordinate (a·t + b)/d, with a, d > 0. Its upper-left
+    * corner is floorDiv(a·t + b, d) and its fraction the exact-integer
+    * remainder over d, one correctly rounded division. All index math is
+    * exact integer arithmetic, floorDiv(e, a) = (e − pmod(e, a)) div a. */
+  final case class Axis(a: Long, b: Long, d: Long, n: Long) {
+    require(a > 0 && d > 0 && n > 0, s"bilinear axis needs a, d, n > 0: $this")
+
+    private def floorDiv(e: String, by: Long): String = s"(($e) - pmod($e, ${by}L)) div ${by}L"
+
+    /** SQL for the first and last target (before clamping to [0, n))
+      * whose corner `k` (0 or 1) is source cell `c`: the t with
+      * d·(c−k) ≤ a·t + b < d·(c−k+1). */
+    def targets(c: String, k: String): (String, String) = {
+      val base = s"${d}L * ($c - $k)"
+      (floorDiv(s"$base + (${a - 1 - b}L)", a), floorDiv(s"$base + (${d - 1 - b}L)", a))
+    }
+
+    /** The fraction of target column `t` past its corner. */
+    def fraction(t: String): Column = expr(s"pmod(${a}L * $t + (${b}L), ${d}L)") / lit(d.toDouble)
   }
 
   /** The EWA knobs, with the reference's RESAMPLER_DEFAULT_OPTIONS["ewa"]
@@ -99,47 +127,37 @@ object Raster {
         col("__best.value").as("value"): _*)
   }
 
-  /** Every (keys, __ty, __tx) cell of a height × width target grid, for
-    * each key combination in `keyFrame`. */
-  def targetCells(keyFrame: DataFrame, height: Long, width: Long): DataFrame =
-    keyFrame.distinct()
-      .crossJoin(keyFrame.sparkSession.range(height).toDF("__ty"))
-      .crossJoin(keyFrame.sparkSession.range(width).toDF("__tx"))
-
-  /** The [[bilinear]] mapping of a [[Grid]]: each target center's
-    * continuous source coordinate, split into its upper-left corner
-    * (__y0, __x0) via floor (exact: ny/(2h) is double-exact whenever it
-    * is an integer) and the fractions (__fy, __fx) via an exact-integer
-    * numerator. */
-  def bilinearTargets(keyFrame: DataFrame, g: Grid): DataFrame = {
-    val h = g.height.toLong; val w = g.width.toLong
-    val ny = lit(2 * g.srcYMin * h) + (col("__ty") * 2 + 1) * g.ry - h
-    val nx = lit(2 * g.srcXMin * w) + (col("__tx") * 2 + 1) * g.rx - w
-    targetCells(keyFrame, h, w)
-      .withColumn("__y0", floor(ny / (2.0 * h)).cast("long"))
-      .withColumn("__x0", floor(nx / (2.0 * w)).cast("long"))
-      .withColumn("__fy", (ny - col("__y0") * 2 * h) / (2.0 * h))
-      .withColumn("__fx", (nx - col("__x0") * 2 * w) / (2.0 * w))
-  }
-
-  /** Mask-aware bilinear: each target of `targets` — (keys, __ty, __tx,
-    * __y0, __x0, __fy, __fx), see [[bilinearTargets]] — blends the ≤ 4 cells of
-    * `cells` (one row per (keys, y, x)) around its corner, renormalized
-    * over the corners that exist (the reference's NaN-fill behaviour).
-    * Four corner LEFT equi-joins, no window; the blend is one fixed-order
-    * expression, so every caller computes bit-identical doubles. */
-  def bilinear(cells: DataFrame, keys: Seq[String], targets: DataFrame): DataFrame = {
-    val corners = Seq(("00", 0, 0), ("01", 0, 1), ("10", 1, 0), ("11", 1, 1))
-    val joined = corners.foldLeft(targets) { case (df, (tag, dy, dx)) =>
-      df.join(
-        cells.select((keys.map(k => col(k).as(s"__k${tag}_$k")) :+
-          col("y").as(s"__y_$tag") :+ col("x").as(s"__x_$tag") :+
-          col("value").as(s"__v_$tag")): _*),
-        keys.map(k => col(k) === col(s"__k${tag}_$k"))
-          .foldLeft((col("__y0") + dy === col(s"__y_$tag")) &&
-                    (col("__x0") + dx === col(s"__x_$tag")))(_ && _),
-        "left")
+  /** Mask-aware bilinear over `cells` (one row per (keys, y, x)): each
+    * target cell (ty, tx) blends the ≤ 4 cells around its source
+    * coordinate (ys(ty), xs(tx)), renormalized over the corners that
+    * exist with a non-null value (the reference's NaN-fill behaviour).
+    *
+    * Plan: SCATTER, as [[ewa]]. Each cell is corner k ∈ {0, 1} of a
+    * contiguous range of targets on each axis ([[Axis.targets]]); the
+    * cell explodes over those (k, t) pairs on both axes and ONE hash
+    * aggregate on (keys, ty, tx) gathers each target's corners. A
+    * (target, corner) pair has at most one cell, so each corner's value
+    * is a `max(when(corner, value))`. No join, no broadcast, no
+    * `distinct`. The blend is one fixed-order expression, so every caller
+    * computes bit-identical doubles. */
+  def bilinear(cells: DataFrame, keys: Seq[String], ys: Axis, xs: Axis): DataFrame = {
+    def scatter(df: DataFrame, c: String, m: Axis, k: String, t: String): DataFrame = {
+      val (lo, hi) = m.targets(c, k)
+      df.withColumn(k, explode(array(lit(0L), lit(1L))))
+        .withColumn("__lo", greatest(lit(0L), expr(lo)))
+        .withColumn("__hi", least(lit(m.n - 1), expr(hi)))
+        .filter(col("__lo") <= col("__hi"))
+        .withColumn(t, explode(sequence(col("__lo"), col("__hi"))))
     }
+    val corners = Seq(("00", 0, 0), ("01", 0, 1), ("10", 1, 0), ("11", 1, 1))
+    val values = corners.map { case (tag, ky, kx) =>
+      max(when(col("__ky") === ky && col("__kx") === kx, col("value"))).as(s"__v_$tag")
+    }
+    val gathered = scatter(scatter(cells, "y", ys, "__ky", "__ty"), "x", xs, "__kx", "__tx")
+      .groupBy(keys.map(col) :+ col("__ty") :+ col("__tx"): _*)
+      .agg(values.head, values.tail: _*)
+      .withColumn("__fy", ys.fraction("__ty"))
+      .withColumn("__fx", xs.fraction("__tx"))
     def wgt(tag: String): Column = tag match {
       case "00" => (lit(1.0) - col("__fy")) * (lit(1.0) - col("__fx"))
       case "01" => (lit(1.0) - col("__fy")) * col("__fx")
@@ -152,7 +170,7 @@ object Raster {
     val num = tags.map(t => wgt(t) * coalesce(col(s"__v_$t"), lit(0.0))).reduce(_ + _)
     val den = tags.map(t => wgt(t) * present(t)).reduce(_ + _)
     val n = tags.map(present).reduce(_ + _).cast("int")
-    joined.withColumn("__den", den)
+    gathered.withColumn("__den", den)
       .filter(col("__den") > 0)
       .select(keys.map(col) :+ col("__ty").as("y") :+ col("__tx").as("x") :+
         (num / col("__den")).as("value") :+ n.as("__n"): _*)

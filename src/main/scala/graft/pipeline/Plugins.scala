@@ -371,9 +371,7 @@ object Plugins {
           case "average" => Raster.average(cropped, keys, t.grid)
           case "nearest" => Raster.nearest(cropped, keys, t.grid)
           case "bilinear" =>
-            val cells = Raster.cellMeans(cropped, keys)
-            Raster.bilinear(cells, keys,
-              Raster.bilinearTargets(cells.select(keys.map(col): _*), t.grid))
+            Raster.bilinear(Raster.cellMeans(cropped, keys), keys, t.grid.yAxis, t.grid.xAxis)
           case "ewa" => Raster.ewa(Raster.cellMeans(cropped, keys), keys, t.grid, t.ewa)
           case other =>
             throw new IllegalArgumentException(s"unknown resample mode: $other")

@@ -233,8 +233,9 @@ object TiledRaster extends QueryPack {
     * 65 doubles total), and each target is computed exactly once in the
     * tile that owns its (y0, x0) corner.
     *
-    * Scale shape vs the tall q63: the tall form pays FOUR shuffle
-    * equi-joins of targets × corners; this pays ONE tile-grain shuffle
+    * Scale shape vs the tall q63: the tall form scatters every pixel
+    * to the targets it is a corner of and shuffles those pixel-grain
+    * rows; this pays ONE tile-grain shuffle
     * (the halo assembly — payload O(tiles × TileSize), not O(pixels))
     * and the blend itself is a per-row array kernel. No joins at all
     * (pinned in TiledRasterSpec). The blend is the identical fixed-order
@@ -483,18 +484,14 @@ object TiledRaster extends QueryPack {
     Trollflow.shaped(Raster.blockMean(Raster.cellMeans(Trollflow.raster(spark, dir), pk),
       pk, Seq("y" -> 8L, "x" -> 8L)), pk, "block_mean", Some("n_cells"), "by", "bx")
 
-  /** Bilinear at any target-mapping offset: y0 = (128·t + off) div 100,
-    * fy = ((128·t + off) % 100) / 100 — the mapping q167's tile kernel
+  /** Bilinear at any target-mapping offset: source coordinate
+    * (128·t + off)/100 on both axes — the mapping q167's tile kernel
     * uses, which no integer [[Raster.Grid]] states for off ≠ 14. */
   private[graft] def tallResampleBilinear(spark: SparkSession, dir: String,
       off: Int = 14): DataFrame = {
-    val cells = Trollflow.croppedCells(spark, dir, pk)
-    val targets = Raster.targetCells(cells.select(pk.map(col): _*), 100, 100)
-      .withColumn("__y0", expr(s"(128 * __ty + $off) div 100"))
-      .withColumn("__x0", expr(s"(128 * __tx + $off) div 100"))
-      .withColumn("__fy", expr(s"((128 * __ty + $off) % 100) / 100.0"))
-      .withColumn("__fx", expr(s"((128 * __tx + $off) % 100) / 100.0"))
-    Trollflow.shaped(Raster.bilinear(cells, pk, targets), pk, "bilinear", Some("n_nb"))
+    val axis = Raster.Axis(128, off, 100, 100)
+    Trollflow.shaped(Raster.bilinear(Trollflow.croppedCells(spark, dir, pk), pk, axis, axis),
+      pk, "bilinear", Some("n_nb"))
   }
 
   private[graft] def tallResampleEwa(spark: SparkSession, dir: String): DataFrame =

@@ -148,20 +148,19 @@ object Trollflow extends QueryPack {
     * exist (mask-aware bilinear, the NaN-fill behavior of the reference's
     * resamplers; [[Raster.bilinear]]). Corner indices and fractions are
     * exact rational arithmetic — source index = (128·t + 14)/100, which
-    * the kernel's (ny − 2h·y0)/(2h) states as the same rational, so both
-    * engines round the fraction to the same double — and the blend is a
-    * fixed-order expression over four LEFT-joined corners, so both
+    * the kernel's axis map (256·t + 28)/200 states as the same rational,
+    * so both engines round the fraction to the same double — and the
+    * blend is one fixed-order expression over the four corners, so both
     * engines compute bit-identical doubles before rounding.
     *
-    * Scale: targets × 4 corner lookups = four shuffle equi-joins on the
-    * (area, y, x) cell key (broadcast when the grid side is small); no
-    * window, no explode, output one row per covered target cell. */
-  def q63ResampleBilinear(spark: SparkSession, dir: String): DataFrame = {
-    val cells = croppedCells(spark, dir, areaKey)
-    shaped(Raster.bilinear(cells, areaKey,
-      Raster.bilinearTargets(cells.select(col("area")), cropGrid)),
-      areaKey, "bilinear", Some("n_nb"))
-  }
+    * Scale: each cell scatters to the ≤ 4 (target, corner) pairs it
+    * belongs to (a down-sampling: at most one target per corner and
+    * axis), and one hash aggregate on (area, ty, tx) gathers the corners:
+    * one shuffle above the cell means, no join, no broadcast, no window;
+    * output one row per covered target cell. */
+  def q63ResampleBilinear(spark: SparkSession, dir: String): DataFrame =
+    shaped(Raster.bilinear(croppedCells(spark, dir, areaKey), areaKey,
+      cropGrid.yAxis, cropGrid.xAxis), areaKey, "bilinear", Some("n_nb"))
 
   val q63Sql: String =
     s"""WITH $rasterSql,
