@@ -139,7 +139,8 @@ object Raster {
     * (target, corner) pair has at most one cell, so each corner's value
     * is a `max(when(corner, value))`. No join, no broadcast, no
     * `distinct`. The blend is one fixed-order expression, so every caller
-    * computes bit-identical doubles. */
+    * computes bit-identical doubles. A null key groups like any other
+    * key, as in [[average]], [[nearest]] and [[ewa]]. */
   def bilinear(cells: DataFrame, keys: Seq[String], ys: Axis, xs: Axis): DataFrame = {
     def scatter(df: DataFrame, c: String, m: Axis, k: String, t: String): DataFrame = {
       val (lo, hi) = m.targets(c, k)

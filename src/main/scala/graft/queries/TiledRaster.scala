@@ -322,8 +322,8 @@ object TiledRaster extends QueryPack {
          |    u -> element_at(transform(array(named_struct(
          |        'ly', (128 * t + $off) div 100 - tile_y * $n,
          |        'lx', (128 * u + $off) div 100 - tile_x * $n,
-         |        'fy', ((128 * t + $off) % 100) / 100.0,
-         |        'fx', ((128 * u + $off) % 100) / 100.0)),
+         |        'fy', ((128 * t + $off) % 100) / 100D,
+         |        'fx', ((128 * u + $off) % 100) / 100D)),
          |      e -> element_at(transform(array(named_struct(
          |          'v00', c[CAST(e.ly * $n + e.lx AS INT)],
          |          'v01', if(e.lx < ${n - 1},
@@ -339,13 +339,13 @@ object TiledRaster extends QueryPack {
          |                       br[0]))))),
          |        v -> named_struct(
          |          'ty', t, 'tx', u,
-         |          'num', (1.0 - e.fy) * (1.0 - e.fx) * coalesce(v.v00, 0D)
-         |            + (1.0 - e.fy) * e.fx * coalesce(v.v01, 0D)
-         |            + e.fy * (1.0 - e.fx) * coalesce(v.v10, 0D)
+         |          'num', (1D - e.fy) * (1D - e.fx) * coalesce(v.v00, 0D)
+         |            + (1D - e.fy) * e.fx * coalesce(v.v01, 0D)
+         |            + e.fy * (1D - e.fx) * coalesce(v.v10, 0D)
          |            + e.fy * e.fx * coalesce(v.v11, 0D),
-         |          'den', (1.0 - e.fy) * (1.0 - e.fx) * if(v.v00 is null, 0D, 1D)
-         |            + (1.0 - e.fy) * e.fx * if(v.v01 is null, 0D, 1D)
-         |            + e.fy * (1.0 - e.fx) * if(v.v10 is null, 0D, 1D)
+         |          'den', (1D - e.fy) * (1D - e.fx) * if(v.v00 is null, 0D, 1D)
+         |            + (1D - e.fy) * e.fx * if(v.v01 is null, 0D, 1D)
+         |            + e.fy * (1D - e.fx) * if(v.v10 is null, 0D, 1D)
          |            + e.fy * e.fx * if(v.v11 is null, 0D, 1D),
          |          'n_nb', if(v.v00 is null, 0, 1) + if(v.v01 is null, 0, 1)
          |            + if(v.v10 is null, 0, 1) + if(v.v11 is null, 0, 1))

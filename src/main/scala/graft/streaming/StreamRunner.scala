@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.util.control.NonFatal
 
@@ -68,9 +66,8 @@ object StreamRunner {
     * reports (publish/audit hook — the tests' capture point). A message
     * that cannot become a job reaches `crashHandlers` as plugin
     * `message_to_jobs` and gets no report. The chain runs in the
-    * query's own session (Spark's clone of the caller's), with AQE off
-    * and its shuffles sized to the message ([[shufflePartitions]]); the
-    * caller's session keeps its settings.
+    * query's own session (Spark's clone of the caller's), with AQE off;
+    * the caller's session keeps its settings.
     *
     * Scale note: the per-batch `collect()` pulls MESSAGES to the driver,
     * not data — messages are control-plane JSON (the reference holds each
@@ -115,46 +112,19 @@ object StreamRunner {
           val job =
             try {
               val (ctx, paths) = Messages.toContext(spark, spec, json)
-              Some((ctx, paths, mkChain(paths)))
+              Some((ctx, mkChain(paths)))
             } catch {
               case NonFatal(e) =>
                 Runner.notifyCrash(crashHandlers, "message_to_jobs", e)
                 None
             }
-          job.foreach { case (ctx, paths, chain) =>
-            spark.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
-              shufflePartitions(messages.sparkSession, paths).toLong)
+          job.foreach { case (ctx, chain) =>
             val reports = Runner.processJobs(ctx, chain,
               timeoutPerPlugin, crashHandlers)
             onReport(json, reports)
           }
         }
     }
-
-  /** The shuffle partitions for one message's chain: the input's bytes
-    * over Spark's advisory partition size
-    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), rounded up and
-    * clamped to [1, P], where P is `caller`'s `spark.sql.shuffle.partitions`.
-    * This is the coalescing AQE would do, decided up front from one
-    * metadata call per input, not a Spark job: a granule of a few hundred
-    * KB then shuffles into one task per stage instead of P (with AQE off,
-    * each task over a few thousand rows costs more than its rows). An
-    * input that cannot be stat'ed keeps P, and `create_scene` reports it. */
-  private def shufflePartitions(caller: SparkSession, paths: Seq[String]): Int = {
-    val conf = caller.sessionState.conf
-    val p = conf.getConf(SQLConf.SHUFFLE_PARTITIONS)
-    try {
-      val hadoop = caller.sparkContext.hadoopConfiguration
-      val bytes = paths.map { s =>
-        val path = new Path(s)
-        path.getFileSystem(hadoop).getContentSummary(path).getLength
-      }.sum
-      val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-      math.min(p.toLong, math.max(1L, (bytes + advisory - 1) / advisory)).toInt
-    } catch {
-      case NonFatal(_) => p
-    }
-  }
 
   /** Graceful drain: finish the in-flight work, then stop — the SIGTERM
     * contract (launcher.py:151-157). `stop()` alone would INTERRUPT the

@@ -57,13 +57,13 @@ class RasterSpec extends SparkSpec {
     }.toMap
   }
 
-  /** A random raster over [y0, y1) × [x0, x1) for two keys: about 15 %
+  /** A random raster over [y0, y1) × [x0, x1) for `keys`: about 15 %
     * of cells missing, 20 % null values and one NaN. */
-  private def raster(seed: Long, y0: Long, y1: Long, x0: Long,
+  private def raster(seed: Long, keys: Seq[String], y0: Long, y1: Long, x0: Long,
       x1: Long): Map[Cell, Option[Double]] = {
     val rnd = new Random(seed)
     val cells = for {
-      key <- Seq("a", "b")
+      key <- keys
       y <- y0 until y1
       x <- x0 until x1
       if rnd.nextDouble() >= 0.15
@@ -88,7 +88,9 @@ class RasterSpec extends SparkSpec {
       // a raw axis map with a negative offset, as the tall twin states it
       ((Axis(3, -7, 5, 9), Axis(128, 50, 100, 12), (-3L, 12L, 0L, 16L)))
     axes.zipWithIndex.foreach { case ((ys, xs, (y0, y1, x0, x1)), i) =>
-      val cells = raster(i.toLong, y0, y1, x0, x1)
+      // one case has a null key, which resamples like any other key
+      val keys = if (i == 2) Seq("a", null) else Seq("a", "b")
+      val cells = raster(i.toLong, keys, y0, y1, x0, x1)
       val frame = cells.toSeq.map { case ((k, y, x), v) => (k, y, x, v) }
         .toDF("key", "y", "x", "value")
       val got = Raster.bilinear(frame, Seq("key"), ys, xs).collect().map { r =>
@@ -97,6 +99,7 @@ class RasterSpec extends SparkSpec {
       }.toMap
       val want = reference(cells, ys, xs)
       assert(want.size > 10 && want.values.exists(_._2 < 4), s"case $i is too easy")
+      assert(keys.forall(k => want.keys.exists(_._1 == k)), s"case $i lost a key")
       assert(got.size == want.size, s"case $i: ${got.size} targets, want ${want.size}")
       val wrong = want.filter { case (t, w) => !got.get(t).contains(w) }
       assert(wrong.isEmpty, s"case $i: ${wrong.size} targets differ, e.g. " +

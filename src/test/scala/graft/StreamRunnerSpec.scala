@@ -111,61 +111,6 @@ class StreamRunnerSpec extends SparkSpec {
     assert(seen.map(_._1) == Seq("message_to_jobs"))
   }
 
-  /** Run one message through [[StreamRunner.runMessages]] from `caller`'s
-    * stream: the chain records its session's shuffle partitions, then
-    * opens the message's inputs. (partitions seen, abort reason, crashed
-    * plugins). */
-  private def sizedRun(caller: org.apache.spark.sql.SparkSession,
-      message: String): (Seq[Int], Option[String], Seq[String]) = {
-    import graft.pipeline._
-    val (src, ckp) = stageMessages(Seq(message))
-    val seen = new ConcurrentLinkedQueue[Integer]()
-    val crashes = new ConcurrentLinkedQueue[String]()
-    val aborts = new ConcurrentLinkedQueue[String]()
-    val capture = new Plugin {
-      val name = "capture_partitions"
-      def apply(ctx: PipelineContext): PipelineContext = {
-        seen.add(ctx.spark.conf.get("spark.sql.shuffle.partitions").toInt)
-        ctx
-      }
-    }
-    val q = StreamRunner.runMessages(StreamRunner.messageStream(caller, src),
-      ProductList(areas = Seq.empty), ckp,
-      paths => Seq(capture, Plugins.CreateScene(paths)),
-      crashHandlers = Seq((plugin, _) => { crashes.add(plugin); () })) {
-      (_, reports) => reports.flatMap(_.finalCtx.aborted).foreach(aborts.add)
-    }
-    assert(q.awaitTermination(120000), "query did not finish its backlog")
-    assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-    import scala.jdk.CollectionConverters._
-    (seen.asScala.toSeq.map(_.intValue), aborts.asScala.headOption, crashes.asScala.toSeq)
-  }
-
-  test("runMessages sizes the chain's shuffle partitions from the message's input") {
-    import scala.jdk.CollectionConverters._
-    // a session of its own, so the settings below stay in this test
-    val caller = spark.newSession()
-    caller.conf.set("spark.sql.shuffle.partitions", "3")
-    caller.conf.set("spark.sql.adaptive.enabled", "true")
-    val granule = Granule.write(spark)
-    val bytes = Files.list(java.nio.file.Paths.get(granule)).toList.asScala
-      .map(Files.size).sum
-    assert(bytes > 2 * 1024 && bytes < 64L * 1024 * 1024, s"granule is $bytes B")
-    // a granule is far below the 64 MB advisory size: one partition
-    assert(sizedRun(caller, Granule.message(granule)) == ((Seq(1), None, Seq.empty)))
-    // at a 1 KB advisory size it needs more than the caller's 3: capped
-    caller.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
-    assert(sizedRun(caller, Granule.message(granule)) == ((Seq(3), None, Seq.empty)))
-    // an input that cannot be stat'ed keeps P; create_scene aborts the job
-    // and no crash handler fires
-    val (seen, aborted, crashed) = sizedRun(caller, Granule.message("/nonexistent/g.parquet"))
-    assert(seen == Seq(3) && crashed.isEmpty, s"$seen, crashes: $crashed")
-    assert(aborted.exists(_.startsWith("create_scene failed")), s"aborted: $aborted")
-    // the caller's session keeps its own settings
-    assert(caller.conf.get("spark.sql.shuffle.partitions") == "3")
-    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
-  }
-
   test("graceful stop terminates a continuous query") {
     val (src, ckp) = stageMessages(Seq(fileMessage("region", "noaa15")))
     val stream = StreamRunner.messageStream(spark, src)

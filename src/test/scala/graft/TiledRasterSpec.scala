@@ -92,7 +92,7 @@ class TiledRasterSpec extends SparkSpec {
     // br from the neighbors), targets deep inside the hole lose all four
     // corners (den=0, dropped), and targets at the hole's edges blend
     // mask-aware from the fragments that DO exist — and the result must
-    // still equal the tall 4-left-join form bit for bit.
+    // still equal the tall corner-scatter form bit for bit.
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft_tiles_sparse")
     val n = TiledRaster.TileSize
@@ -122,8 +122,8 @@ class TiledRasterSpec extends SparkSpec {
     val p = SparkEntry.queries("q167_tiled_resample_bilinear")(spark, sf)
       .queryExecution.executedPlan.toString
     val above = aboveLayout(p)
-    // the tall form pays FOUR corner equi-joins; the halo form pays one
-    // tile-grain exchange (halo assembly) and the blend is row-local
+    // the tall form shuffles pixel-grain corner rows; the halo form pays
+    // one tile-grain exchange (halo assembly) and the blend is row-local
     assert(hashExchanges(above) == 1, s"halo form grew extra shuffles:\n$p")
     assert(!above.contains("SortMergeJoin") && !above.contains("BroadcastHashJoin")
       && !above.contains("ShuffledHashJoin"),
