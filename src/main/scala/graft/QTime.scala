@@ -16,14 +16,14 @@ import org.apache.spark.sql.execution.ExplainMode
   * formatted physical plan. A failing query prints `QTIME <name> FAILED:
   * <error>`; the other names are still timed and the run exits 1.
   *
-  *   sbt "runMain graft.QTime plan plans/r14 _before"
+  *   sbt "runMain graft.QTime plan <out-dir> [suffix]"
   *
   * Writes `explain("formatted")` for every declared query — or the
   * SPARK_GRAFT_ONLY subset — captured from the exact Dataset the bench
   * times (shared frames warmed first, so consumer plans read the warm
   * layout, not a rebuild).
   *
-  *   sbt "runMain graft.QTime final plans/r15 _final q96_sorted_neighborhood"
+  *   sbt "runMain graft.QTime final <out-dir> [suffix] q96_sorted_neighborhood"
   *
   * Executes each named query and writes the AQE FINAL executed plan — the
   * plan the bench actually pays for, after runtime re-optimization
@@ -31,8 +31,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * `explain("formatted")` cannot show (it prints `isFinalPlan=false`
   * before execution).
   *
-  * Both plan modes write `<dir>/<qNN><suffix>.txt`, never touch bench
-  * artifacts, and exit nonzero if any query failed, like timing mode.
+  * Both plan modes write `<out-dir>/<qNN><suffix>.txt` (suffix `_before`
+  * and `_final` by default), never touch bench artifacts, and exit
+  * nonzero if any query failed, like timing mode. The output directory
+  * is required: without it they print a usage line and exit 2.
   * SPARK_GRAFT_ANALYZE=1 (timing and final modes) refreshes the persisted
   * ANALYZE profile before priming, so the plan is the stats-hydrated one
   * Bench's children run (the bench parent writes graft_table_stats, every
@@ -40,17 +42,21 @@ import org.apache.spark.sql.execution.ExplainMode
   * DIFFERENT plan than the pack's. */
 object QTime {
   def main(args: Array[String]): Unit = {
+    if (Set("plan", "final").exists(args.headOption.contains) && args.length < 2) {
+      System.err.println(s"usage: QTime ${args.head} <out-dir> [suffix] [query ...]")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val analyze = !args.headOption.contains("plan") &&
       sys.env.get("SPARK_GRAFT_ANALYZE").contains("1")
     val spark = Measure.session(Option.when(analyze)(sfDir))
     val failed = args.toSeq match {
       case "plan" +: rest =>
-        writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r14"),
+        writePlans(spark, sfDir, rest.head,
           rest.lift(1).getOrElse("_before"), Measure.selected, "plandump")(
           _.queryExecution.explainString(ExplainMode.fromString("formatted")))
       case "final" +: rest =>
-        writePlans(spark, sfDir, rest.lift(0).getOrElse("plans/r15"),
+        writePlans(spark, sfDir, rest.head,
           rest.lift(1).getOrElse("_final"), rest.drop(2), "finalplan") { df =>
           // run df's OWN plan (count() would plan and run a new one, leaving
           // this one at isFinalPlan=false): AdaptiveSparkPlanExec then

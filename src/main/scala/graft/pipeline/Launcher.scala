@@ -191,13 +191,15 @@ object Launcher {
           buf.synchronized { buf += a })
         try go()
         finally {
-          // the execution-listener bus is async: wait for the line count
-          // to stabilize, then write whatever lines arrived either way
-          Profiling.awaitStable(buf.synchronized(buf.size))
-          spark.listenerManager.unregister(listener)
-          val lines = buf.synchronized(buf.map(_.jsonLine).toSeq)
-          java.nio.file.Files.write(java.nio.file.Paths.get(path),
-            lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+          // the execution-listener bus is async: drain it, then write
+          // whatever lines arrived either way
+          try Profiling.drain(spark)
+          finally {
+            spark.listenerManager.unregister(listener)
+            val lines = buf.synchronized(buf.map(_.jsonLine).toSeq)
+            java.nio.file.Files.write(java.nio.file.Paths.get(path),
+              lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+          }
         }
     }
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -32,8 +33,8 @@ object Profiling {
       shuffleWriteBytes: Long, shuffleReadBytes: Long)
 
   /** Job/stage/shuffle counter. Listener callbacks are async (the
-    * listener bus), so readers must drain before trusting totals —
-    * [[Profiling.measure]] handles that. */
+    * listener bus), so readers must [[drain]] before trusting totals —
+    * [[Profiling.measure]] does. */
   final class JobCounter extends SparkListener {
     private val jobs = new AtomicInteger
     private val stages = new AtomicInteger
@@ -57,42 +58,24 @@ object Profiling {
   }
 
   /** Run `body` under a fresh [[JobCounter]] and return its result with
-    * the jobs/stages/shuffle-bytes the block cost. Waits for the async
-    * listener bus to drain (two consecutive identical snapshots) before
-    * reporting, so counts are exact, not racy. */
+    * the jobs/stages/shuffle-bytes the block cost, read after the
+    * listener bus has [[drain]]ed, so counts are exact, not racy. */
   def measure[T](spark: SparkSession)(body: => T): (T, Snapshot) = {
     val counter = new JobCounter
     spark.sparkContext.addSparkListener(counter)
     try {
       val result = body
-      val (last, stable) = awaitStable(counter.snapshot)
-      // an unstabilized snapshot is a measurement failure, not a smaller
-      // measurement — surfacing it beats returning an undercount that
-      // reads as a product regression
-      if (!stable)
-        throw new IllegalStateException(
-          s"listener bus did not stabilize within 5s; last snapshot: $last")
-      (result, last)
+      drain(spark)
+      (result, counter.snapshot)
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 
-  /** Drain wait for state an async listener bus feeds: poll `read` every
-    * 100 ms until two consecutive reads are equal, at most 50 times.
-    * Returns the last read and whether it settled; what an unsettled read
-    * means is the caller's policy. */
-  private[pipeline] def awaitStable[S](read: => S): (S, Boolean) = {
-    var prev = read
-    var stable = false
-    var tries = 0
-    while (!stable && tries < 50) {
-      Thread.sleep(100)
-      val cur = read
-      stable = cur == prev
-      prev = cur
-      tries += 1
-    }
-    (prev, stable)
-  }
+  /** Wait until every listener event posted so far has been delivered:
+    * the jobs and stages of finished actions, and the execution-listener
+    * callbacks ([[AuditListener]]) of finished queries. A bus that does
+    * not drain within Spark's own timeout throws, so a stuck bus is a
+    * failure, never an undercount. */
+  def drain(spark: SparkSession): Unit = ListenerBusDrain(spark.sparkContext)
 
   /** One completed (or failed) Spark ACTION, structured: the unit of the
     * per-run audit report ([[graft.pipeline.Launcher.runOnce]]'s

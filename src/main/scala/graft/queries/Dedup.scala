@@ -1114,8 +1114,8 @@ object Dedup extends QueryPack {
     // expression alone, so the OLD form paid tokenize + distinct + FULL
     // SORT + whole-document string JOIN per row in BOTH corpus passes;
     // the min-token form drops the sort and the string build from the
-    // counting pass (plan: pass A now projects array_min(array_distinct)
-    // only — see plans/r15/q96_after.txt).
+    // counting pass (its formatted plan projects only the block, from
+    // array_min(array_distinct(…)), with no array_sort or array_join).
     val blk = when(size(dt) >= 2,
         substring(concat(array_min(dt), lit(" ")), 1, 2))
       .otherwise(substring(array_min(dt), 1, 2))

@@ -25,25 +25,23 @@ import graft.operators.Raster
   *    block | tile) become PER-ROW array kernels — zero exchange beyond
   *    the layout build, embarrassingly tile-parallel exactly like the
   *    reference's dask block map (`coarsen` runs per chunk);
-  *  - operators that cross tile edges (resample) explode WITHIN the
-  *    tile row and rely on partial aggregation: the hash aggregate
-  *    combines per-target candidates map-side BEFORE the exchange, so
-  *    the shuffle carries target-grain rows, never pixel-grain ones.
+  *  - operators that cross tile edges (the resamplers q165, q167, q168)
+  *    explode WITHIN the tile row and run the shared [[Raster]] kernel:
+  *    its hash aggregate combines per-target candidates map-side BEFORE
+  *    the exchange, so the shuffle carries target-grain rows, never
+  *    pixel-grain ones.
   *
-  * The two operators the VERDICT asked for are re-expressed here over
-  * tiles — q164 twins q39's T1 `aggregate` (plugins/__init__.py:124-130)
-  * and q165 twins q55's T2 nearest `resample`
-  * (plugins/__init__.py:149-192) — at per-(area, product) grain (the
-  * reference aggregates each product's raster independently), with
-  * DuckDB oracles over the TALL derivation proving tall ≡ tiled on the
-  * fixture grid, and TiledRasterSpec pinning the Spark-side tall twin
-  * equal bit-for-bit.
+  * Each query runs at per-(area, product) grain (the reference
+  * aggregates each product's raster independently), with DuckDB oracles
+  * over the TALL derivation proving tall ≡ tiled on the fixture grid,
+  * and TiledRasterSpec pinning the Spark-side tall twins equal bit for
+  * bit.
   *
-  * In-array lambdas (`transform`/`aggregate`) run interpreted, not
-  * codegen — the trade is deliberate and profiled the right way around:
-  * they REMOVE the per-pixel exchange entirely (the one case the
-  * array-at-a-time form wins; compare Dedup q121's docstring where the
-  * same rewrite LOST because the window's shuffle stayed either way).
+  * The in-tile kernels' lambdas (`transform`/`aggregate`) run
+  * interpreted, not codegen — the trade is deliberate: they REMOVE the
+  * per-pixel exchange entirely (the one case the array-at-a-time form
+  * wins; compare Dedup q121's docstring where the same rewrite LOST
+  * because the window's shuffle stayed either way).
   */
 object TiledRaster extends QueryPack {
 
@@ -219,146 +217,37 @@ object TiledRaster extends QueryPack {
        |GROUP BY 1, 2
        |ORDER BY area, product""".stripMargin
 
-  /** T2 bilinear `resample` over TILES with HALO exchange — the dask
-    * `map_overlap` pattern (the reference's chunked arrays do exactly
-    * this for any kernel with spatial support: ghost cells travel to
-    * the neighbor chunk once, then the kernel is chunk-local).
+  /** T2 bilinear `resample` over TILES (q63's semantics at per-(area,
+    * product) grain): each target cell center maps to the continuous
+    * source coordinate (128·t + 14)/100 on both axes; its value is the
+    * weight-renormalized mask-aware blend of the ≤ 4 surrounding cells.
     *
-    * q63's semantics at per-(area, product) grain: each target cell
-    * center maps to a continuous source coordinate; its value is the
-    * weight-renormalized mask-aware blend of the ≤ 4 surrounding source
-    * cells. The 4-corner neighborhood can straddle tile edges, so each
-    * tile SENDS its top row, left column, and top-left pixel to the
-    * neighbor tiles that need them (≤ 3 bounded halo records per tile,
-    * 65 doubles total), and each target is computed exactly once in the
-    * tile that owns its (y0, x0) corner.
+    * The same scale shape as q165 and q168: cells posexplode WITHIN the
+    * cropped tile rows, then [[Raster.bilinear]] scatters each cell to the
+    * targets it is a corner of and gathers the four corners in ONE
+    * target-grain hash aggregate whose `max(when(corner, value))` partials
+    * combine map-side. Scatter means a corner across a tile edge costs
+    * nothing extra, so no halo exchange is needed (dask's `map_overlap`
+    * pattern would be the GATHER form's price). No joins (pinned in
+    * TiledRasterSpec).
     *
-    * Scale shape vs the tall q63: the tall form scatters every pixel
-    * to the targets it is a corner of and shuffles those pixel-grain
-    * rows; this pays ONE tile-grain shuffle
-    * (the halo assembly — payload O(tiles × TileSize), not O(pixels))
-    * and the blend itself is a per-row array kernel. No joins at all
-    * (pinned in TiledRasterSpec). The blend is the identical fixed-order
-    * expression as q63/the oracle, so doubles agree bit-for-bit before
-    * rounding.
-    *
-    * Measured both ways (warm layout, sf0.1, best-of-2): the in-array
-    * HOF kernel below runs 1.07 s vs tall q63's 1.25 s; a
-    * codegen-friendly rewrite (explode the (ty, tx) pairs, blend as
-    * post-explode columns) measured 1.71 s — every exploded target row
-    * drags the tile's 8 KiB `cells` array (plus halo fragments) through
-    * the Generate's row copy, and that allocation churn costs more than
-    * the interpreted lambda math it saves. Same trade-shape as q121's
-    * docstring, opposite winner: keep the kernel INSIDE the array, emit
-    * only the small result structs.
-    *
-    * Geometry caveat, and why `off` is a parameter: at the REGISTERED
-    * offset 14, the map y0 = (128t+14) div 100 happens to skip every
-    * residue ≡ 31 (mod 32) on t ∈ [0,99] — no corner ever crosses a
-    * 32-tile edge, so the halo fragments ship but are never read on
-    * this exact grid. That is a property of these constants, not of the
-    * operator: TiledRasterSpec re-runs the SAME code at off = 50 (where
-    * y0 = 31/x0 = 31 occur and all four halo reads — r, b, r[ly+1],
-    * br — fire) and pins tiled ≡ tall there too, so a broken halo
-    * payload or index diverges loudly instead of hiding behind a
-    * geometry that never exercises it. */
+    * Measured (warm layout, sf0.1, 4 cores, QTime best-of-3, 4
+    * alternating pairs): this form runs 0.65–0.77 s (median 0.73) against
+    * 1.02–1.28 s (median 1.16) for the in-array halo kernel it replaced,
+    * which shuffled every tile's whole array to assemble it with its
+    * halo. */
   def q167TiledResampleBilinear(spark: SparkSession, dir: String): DataFrame =
     tiledBilinear(spark, dir, off = 14)
 
   /** [[q167TiledResampleBilinear]] with the target-mapping offset
-    * explicit — source index y0 = (128·t + off) div 100, fraction
-    * fy = ((128·t + off) % 100) / 100. */
+    * explicit: source coordinate (128·t + off)/100 on both axes, which no
+    * integer [[Raster.Grid]] states for off ≠ 14. TiledRasterSpec runs
+    * off = 50, whose corners cross tile edges. */
   private[graft] def tiledBilinear(spark: SparkSession, dir: String,
       off: Int): DataFrame = {
-    val n = TileSize
-    val t = tiles(spark, dir)
-      .filter(col("tile_y") < 128 / n && col("tile_x") < 128 / n)
-    val keys = Seq(col("area"), col("product"))
-    // halo: every tile contributes itself to its own group, its LEFT
-    // column to the tile on its left, its TOP row to the tile above, and
-    // its top-left pixel to the diagonal neighbor — the three fragments
-    // a bilinear corner can reach across an edge
-    val contrib = t
-      .select(keys :+ col("tile_y") :+ col("tile_x") :+
-        lit("c").as("kind") :+ col("cells").as("payload"): _*)
-      .unionByName(t.filter(col("tile_x") > 0)
-        .select(keys :+ col("tile_y") :+ (col("tile_x") - 1).as("tile_x") :+
-          lit("r").as("kind") :+
-          expr(s"transform(sequence(0, ${n - 1}), i -> cells[i * $n])")
-            .as("payload"): _*))
-      .unionByName(t.filter(col("tile_y") > 0)
-        .select(keys :+ (col("tile_y") - 1).as("tile_y") :+ col("tile_x") :+
-          lit("b").as("kind") :+ expr(s"slice(cells, 1, $n)").as("payload"): _*))
-      .unionByName(t.filter(col("tile_y") > 0 && col("tile_x") > 0)
-        .select(keys :+ (col("tile_y") - 1).as("tile_y") :+
-          (col("tile_x") - 1).as("tile_x") :+ lit("br").as("kind") :+
-          expr("array(cells[0])").as("payload"): _*))
-    // ONE tile-grain shuffle assembles tile + halo; a group may exist on
-    // halo alone (data-less tile whose neighbors have edge pixels — its
-    // targets still blend from the corners that DO exist, mask-aware)
-    val assembled = contrib
-      .groupBy(col("area"), col("product"), col("tile_y"), col("tile_x"))
-      .agg(
-        max(when(col("kind") === "c", col("payload"))).as("c"),
-        max(when(col("kind") === "r", col("payload"))).as("r"),
-        max(when(col("kind") === "b", col("payload"))).as("b"),
-        max(when(col("kind") === "br", col("payload"))).as("br"))
-    // tile-local kernel: every target (ty, tx) whose (y0, x0) corner
-    // lives in this tile; corners read from the tile array or the halo
-    // fragments; the blend is q63's fixed-order expression verbatim.
-    // SQL lambdas can't be immediately applied, so let-bindings use the
-    // single-element-transform idiom: element_at(transform(array(e),
-    // e -> body), 1) binds e for the body — once for the local
-    // coordinates/fractions, once for the four corner values.
-    val kernel =
-      s"""flatten(transform(
-         |  filter(sequence(0, 99),
-         |    t -> (128 * t + $off) div 100 >= tile_y * $n
-         |     and (128 * t + $off) div 100 < (tile_y + 1) * $n),
-         |  t -> transform(
-         |    filter(sequence(0, 99),
-         |      u -> (128 * u + $off) div 100 >= tile_x * $n
-         |       and (128 * u + $off) div 100 < (tile_x + 1) * $n),
-         |    u -> element_at(transform(array(named_struct(
-         |        'ly', (128 * t + $off) div 100 - tile_y * $n,
-         |        'lx', (128 * u + $off) div 100 - tile_x * $n,
-         |        'fy', ((128 * t + $off) % 100) / 100D,
-         |        'fx', ((128 * u + $off) % 100) / 100D)),
-         |      e -> element_at(transform(array(named_struct(
-         |          'v00', c[CAST(e.ly * $n + e.lx AS INT)],
-         |          'v01', if(e.lx < ${n - 1},
-         |                    c[CAST(e.ly * $n + e.lx + 1 AS INT)],
-         |                    r[CAST(e.ly AS INT)]),
-         |          'v10', if(e.ly < ${n - 1},
-         |                    c[CAST((e.ly + 1) * $n + e.lx AS INT)],
-         |                    b[CAST(e.lx AS INT)]),
-         |          'v11', if(e.ly < ${n - 1} and e.lx < ${n - 1},
-         |                      c[CAST((e.ly + 1) * $n + e.lx + 1 AS INT)],
-         |                    if(e.ly < ${n - 1}, r[CAST(e.ly + 1 AS INT)],
-         |                    if(e.lx < ${n - 1}, b[CAST(e.lx + 1 AS INT)],
-         |                       br[0]))))),
-         |        v -> named_struct(
-         |          'ty', t, 'tx', u,
-         |          'num', (1D - e.fy) * (1D - e.fx) * coalesce(v.v00, 0D)
-         |            + (1D - e.fy) * e.fx * coalesce(v.v01, 0D)
-         |            + e.fy * (1D - e.fx) * coalesce(v.v10, 0D)
-         |            + e.fy * e.fx * coalesce(v.v11, 0D),
-         |          'den', (1D - e.fy) * (1D - e.fx) * if(v.v00 is null, 0D, 1D)
-         |            + (1D - e.fy) * e.fx * if(v.v01 is null, 0D, 1D)
-         |            + e.fy * (1D - e.fx) * if(v.v10 is null, 0D, 1D)
-         |            + e.fy * e.fx * if(v.v11 is null, 0D, 1D),
-         |          'n_nb', if(v.v00 is null, 0, 1) + if(v.v01 is null, 0, 1)
-         |            + if(v.v10 is null, 0, 1) + if(v.v11 is null, 0, 1))
-         |      ), 1)
-         |    ), 1))))""".stripMargin
-    assembled
-      .select(col("area"), col("product"),
-        explode(expr(s"filter($kernel, s -> s.den > 0)")).as("s"))
-      .select(col("area"), col("product"),
-        col("s.ty").as("ty"), col("s.tx").as("tx"),
-        round(lit(1e-9) + col("s.num") / col("s.den"), 4).as("bilinear"),
-        col("s.n_nb").as("n_nb"))
-      .orderBy(col("area"), col("product"), col("ty"), col("tx"))
+    val axis = Raster.Axis(128, off, 100, 100)
+    Trollflow.shaped(Raster.bilinear(croppedPixels(spark, dir), pk, axis, axis),
+      pk, "bilinear", Some("n_nb"))
   }
 
   val q167Sql: String =
@@ -416,12 +305,11 @@ object TiledRaster extends QueryPack {
     * row, then [[Raster.ewa]] fans them out by the plan-time constant 9
     * (3×3 candidate window), and its target-grain hash aggregate
     * partial-combines map-side — the same exchange shape as q165, with
-    * sums instead of a min. No halo needed: scatter means a contribution is computed
-    * where the SOURCE lives and merged at the target key, so cross-tile
-    * support costs nothing extra (compare q167, where the GATHER form
-    * needs ghost cells). Together the three tiled resamplers cover the
-    * three scale patterns: in-tile kernel (q164), scatter + partial agg
-    * (q165/q168), gather + halo (q167). */
+    * sums instead of a min. No halo needed: scatter means a contribution
+    * is computed where the SOURCE lives and merged at the target key, so
+    * cross-tile support costs nothing extra. The tile layout has two
+    * scale patterns: in-tile kernel with zero exchange (q164, q166), and
+    * scatter + partial aggregation (q165, q167, q168). */
   def q168TiledResampleEwa(spark: SparkSession, dir: String): DataFrame =
     Trollflow.shaped(Raster.ewa(croppedPixels(spark, dir), pk, Trollflow.cropGrid),
       pk, "ewa", Some("n_contrib"))
@@ -458,8 +346,8 @@ object TiledRaster extends QueryPack {
   /** The `reduce_data` crop's non-fill pixels as a tall (area, product,
     * y, x, value) frame: the crop (y, x < 128 = 4·TileSize) prunes whole
     * tile rows on the tile KEYS, then cells posexplode WITHIN each tile
-    * row — narrow, no exchange. */
-  private def croppedPixels(spark: SparkSession, dir: String): DataFrame = {
+    * row — narrow, no exchange. The tiled resamplers' one input. */
+  private[graft] def croppedPixels(spark: SparkSession, dir: String): DataFrame = {
     val n = TileSize
     tiles(spark, dir)
       .filter(col("tile_y") < 128 / n && col("tile_x") < 128 / n)
@@ -475,8 +363,9 @@ object TiledRaster extends QueryPack {
 
   /** Tall twins at the SAME per-product grain: the shared [[Raster]]
     * kernels over the tall derivation's cell means, so the spec's
-    * tall ≡ tiled pins hold the tile-layout kernels (q164, q167) to the
-    * one definition the plugins and the Trollflow queries use (the DuckDB
+    * tall ≡ tiled pins hold the tile layout (q164's in-tile kernel, and
+    * the resamplers' [[croppedPixels]] input) to the one definition the
+    * plugins and the Trollflow queries use (the DuckDB
     * oracle independently re-derives the same results from the tall
     * CTE). Pixel-grain shuffles throughout: the encoding the tile table
     * exists to replace at scale. */
@@ -484,9 +373,7 @@ object TiledRaster extends QueryPack {
     Trollflow.shaped(Raster.blockMean(Raster.cellMeans(Trollflow.raster(spark, dir), pk),
       pk, Seq("y" -> 8L, "x" -> 8L)), pk, "block_mean", Some("n_cells"), "by", "bx")
 
-  /** Bilinear at any target-mapping offset: source coordinate
-    * (128·t + off)/100 on both axes — the mapping q167's tile kernel
-    * uses, which no integer [[Raster.Grid]] states for off ≠ 14. */
+  /** [[tiledBilinear]] over the tall cell means, at any offset. */
   private[graft] def tallResampleBilinear(spark: SparkSession, dir: String,
       off: Int = 14): DataFrame = {
     val axis = Raster.Axis(128, off, 100, 100)

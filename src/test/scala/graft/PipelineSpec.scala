@@ -250,11 +250,8 @@ class PipelineSpec extends SparkSpec {
     try {
       spark.read.parquet(s"$sf/region.parquet")
         .groupBy(col("r_regionkey")).count().collect()
-      // QueryExecutionListener delivery is async — poll briefly
-      var tries = 0
-      while (lines.synchronized(lines.isEmpty) && tries < 50) {
-        Thread.sleep(100); tries += 1
-      }
+      // QueryExecutionListener delivery is async: drain the bus
+      Profiling.drain(spark)
     } finally spark.listenerManager.unregister(l)
     val audits = lines.synchronized(lines.toList)
     val got = audits.map(_.jsonLine)

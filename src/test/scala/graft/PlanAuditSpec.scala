@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.pipeline.Profiling
+
 /** Plan-shape regression tests: the scale properties the Scaladocs claim
   * are asserted here, so a refactor that silently reintroduces a shuffle,
   * loses a broadcast, or widens a scan fails the build — "the plan you'd
@@ -47,9 +49,8 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     spark.listenerManager.register(listener)
     try {
       val df = build
-      // listener events arrive on the bus thread; the bus is Spark-private
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      // listener events arrive on the bus thread
+      Profiling.drain(spark)
       (df, ran.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }

@@ -282,12 +282,8 @@ class PluginChecksSpec extends SparkSpec {
       try SaveDatasets(outDir)(ctxOf(saveSpec, Map(None -> frame)))
       finally {
         // let the async listener bus drain before removing
-        val deadline = System.nanoTime() + 5_000_000_000L
-        var last = -1
-        while (System.nanoTime() < deadline && jobs.get() != last) {
-          last = jobs.get(); Thread.sleep(200)
-        }
-        spark.sparkContext.removeSparkListener(listener)
+        try Profiling.drain(spark)
+        finally spark.sparkContext.removeSparkListener(listener)
       }
     assert(out.manifest.size == 1 && out.manifest.head.rows == 2L)
     assert(jobs.get() == 1, s"expected 1 job for 1 sink, saw ${jobs.get()}")

@@ -1,27 +1,94 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LessThan, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Max, Min,
+  Partial, Sum}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExecBase
 
-import graft.queries.TiledRaster
+import graft.operators.Raster
+import graft.queries.{TiledRaster, Trollflow}
 
 /** The tile-row raster encoding (SURVEY §1.2 mapping (b)): tall ≡ tiled
   * on the fixture grid, and the plan shapes that make tiles the 100 TB
   * path — the block aggregate adds ZERO exchanges beyond the layout
   * build, and the resample's exchange carries target-grain rows via
-  * map-side partial min, never pixel rows. */
-class TiledRasterSpec extends SparkSpec {
+  * map-side partial aggregation, never pixel rows. */
+class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  /** The consumer-side plan text ABOVE the cached tile layout: an
-    * executed InMemoryRelation renders its own adaptive build plan twice
-    * (Final + Initial), so counting exchanges on the full string would
-    * double-count the layout build that the consumer never re-pays. */
-  private def aboveLayout(p: String): String = p.split("InMemoryRelation").head
+  private val pk = Seq("area", "product")
 
-  private def hashExchanges(p: String): Int =
-    p.linesIterator.count(_.contains("Exchange hashpartitioning"))
+  /** A [[Raster]] kernel's rows before `shaped` rounds them: target ->
+    * (raw bits of the value, support count when the kernel has one). */
+  private def rawBits(df: DataFrame): Map[Seq[Any], (Long, Option[Int])] = {
+    val n = df.columns.contains("__n")
+    val got = df.collect().toSeq.map { r =>
+      Seq(r.getAs[Any]("area"), r.getAs[Any]("product"), r.getAs[Any]("y"),
+        r.getAs[Any]("x")) -> (java.lang.Double.doubleToRawLongBits(r.getAs[Double]("value")),
+        Option.when(n)(r.getAs[Int]("__n")))
+    }
+    assert(got.map(_._1).distinct.size == got.size, "a target cell appears twice")
+    got.toMap
+  }
+
+  private def assertSameBits(tiled: DataFrame, tall: DataFrame, what: String): Unit = {
+    val (a, b) = (rawBits(tiled), rawBits(tall))
+    assert(a.nonEmpty, s"$what: an empty result would vacuously pass")
+    val diff = (a.toSet diff b.toSet) ++ (b.toSet diff a.toSet)
+    if (diff.nonEmpty)
+      fail(s"$what: tiled and tall raw values differ on ${diff.size} entries, e.g. ${diff.take(3)}")
+  }
+
+  /** The bilinear kernel over the tiled and the tall pixels of `dir`, at
+    * target mapping (128·t + off)/100, agrees on raw bits. */
+  private def assertBilinearBits(dir: String, off: Int): Unit = {
+    val axis = Raster.Axis(128, off, 100, 100)
+    assertSameBits(Raster.bilinear(TiledRaster.croppedPixels(spark, dir), pk, axis, axis),
+      Raster.bilinear(Trollflow.croppedCells(spark, dir, pk), pk, axis, axis),
+      s"bilinear at offset $off")
+  }
+
+  /** The executed plan's nodes, through AQE's wrapper and query stages.
+    * An InMemoryTableScanExec is a leaf of this walk, so the cached tile
+    * layout's own build plan, which a consumer never re-pays, is not in
+    * it. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+
+  /** A consumer query's plan above the shared tile layout, which it must
+    * read. */
+  private def aboveLayout(df: DataFrame): Seq[SparkPlan] = {
+    val ns = nodes(df.queryExecution.executedPlan)
+    assert(ns.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"not reading the shared tile layout:\n${df.queryExecution.executedPlan}")
+    ns
+  }
+
+  private def hashExchanges(ns: Seq[SparkPlan]): Int = ns.count {
+    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+    case _ => false
+  }
+
+  /** Some aggregate computes `fn` in Partial mode: a map-side combine. */
+  private def partialAgg(ns: Seq[SparkPlan], fn: Class[_ <: AggregateFunction]): Boolean =
+    ns.exists {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == Partial && fn.isInstance(e.aggregateFunction))
+      case _ => false
+    }
+
+  private def joins(ns: Seq[SparkPlan]): Boolean = ns.exists(_.isInstanceOf[BaseJoinExec])
+
+  private def windows(ns: Seq[SparkPlan]): Boolean = ns.exists(_.isInstanceOf[WindowExecBase])
 
   test("tiled block aggregate == tall block aggregate, bit for bit") {
     val tiled = rows(TiledRaster.q164TiledBlockAggregate(spark, sf))
@@ -35,16 +102,24 @@ class TiledRasterSpec extends SparkSpec {
     val tall = rows(TiledRaster.tallResampleNearest(spark, sf))
     assert(tiled.nonEmpty, "empty result would vacuously pass")
     assert(tiled == tall, "tile encoding diverged from the tall encoding")
+    // and before rounding: the one kernel over both layouts' pixels
+    assertSameBits(Raster.nearest(TiledRaster.croppedPixels(spark, sf), pk, Trollflow.areaGrid),
+      Raster.nearest(Trollflow.croppedCells(spark, sf, pk), pk, Trollflow.areaGrid), "nearest")
   }
 
   test("tiled bilinear resample (halo) == tall bilinear resample, bit for bit") {
     val tiled = rows(TiledRaster.q167TiledResampleBilinear(spark, sf))
     val tall = rows(TiledRaster.tallResampleBilinear(spark, sf))
     assert(tiled.nonEmpty, "empty result would vacuously pass")
-    assert(tiled == tall, "halo tile encoding diverged from the tall encoding")
+    assert(tiled == tall, "tile encoding diverged from the tall encoding")
+    assertBilinearBits(sf, 14)
   }
 
   test("tiled ewa resample (scatter) == tall ewa resample, bit for bit") {
+    // compared after rounding only: sum(w·v)/sum(w) adds the weights in
+    // partition order, which differs between the layouts' plans, so a few
+    // raw values differ in their last bits (2 of 5 000 rows at sf0.001,
+    // 390 of 32 550 at sf0.01)
     val tiled = rows(TiledRaster.q168TiledResampleEwa(spark, sf))
     val tall = rows(TiledRaster.tallResampleEwa(spark, sf))
     assert(tiled.nonEmpty, "empty result would vacuously pass")
@@ -52,26 +127,25 @@ class TiledRasterSpec extends SparkSpec {
   }
 
   test("q168 plan: scatter splat partial-aggregates to ONE target-grain exchange") {
-    val p = SparkEntry.queries("q168_tiled_resample_ewa")(spark, sf)
-      .queryExecution.executedPlan.toString
-    val above = aboveLayout(p)
+    val df = SparkEntry.queries("q168_tiled_resample_ewa")(spark, sf)
+    val p = df.queryExecution.executedPlan
+    val above = aboveLayout(df)
     // scatter needs no halo: contributions are computed where the source
     // lives and MERGED at the target key — one partial-combined exchange
     assert(hashExchanges(above) == 1, s"ewa scatter grew extra shuffles:\n$p")
-    assert(above.contains("partial_sum"),
+    assert(partialAgg(above, classOf[Sum]),
       s"splat lost its map-side partial aggregation:\n$p")
-    assert(!above.contains("SortMergeJoin") && !above.contains("Window"),
+    assert(!joins(above) && !windows(above),
       s"ewa scatter reintroduced a join or window:\n$p")
   }
 
   test("halo reads actually fire: tiled == tall at a halo-active offset") {
     // At the registered offset 14, y0 = (128t+14) div 100 skips every
-    // residue ≡ 31 (mod 32) on this grid — no corner crosses a tile
-    // edge, so q167's halo fragments ship unread (documented there).
-    // Re-run the SAME kernel at off = 50, where y0 = 31 (t = 24) and
-    // x0 = 31 exist, so all four halo reads (r[ly], b[lx], r[ly+1],
-    // b[lx+1], br[0]) fire — and pin tiled ≡ tall there: a wrong halo
-    // payload, index, or destination tile diverges HERE even though the
+    // residue ≡ 31 (mod 32) on this grid — no target's corners straddle
+    // a tile edge. Re-run the SAME query at off = 50, where y0 = 31
+    // (t = 24) and x0 = 31 exist, so corners come from two, three and
+    // four tiles — and pin tiled ≡ tall there: a pixel placed in the
+    // wrong tile or at the wrong index diverges HERE even though the
     // registered geometry cannot see it.
     val off = 50
     val n = TiledRaster.TileSize
@@ -82,17 +156,17 @@ class TiledRasterSpec extends SparkSpec {
     val tiled = rows(TiledRaster.tiledBilinear(spark, sf, off))
     val tall = rows(TiledRaster.tallResampleBilinear(spark, sf, off))
     assert(tiled.nonEmpty && tiled == tall,
-      "halo form diverged from the tall form at the halo-active offset")
+      "tiled form diverged from the tall form at the tile-crossing offset")
+    assertBilinearBits(sf, off)
   }
 
   test("halo bilinear survives a missing tile: halo-only groups blend mask-aware") {
-    // the dense fixture never fires the null-halo branches (every crop
-    // tile exists, every fragment arrives). Carve tile (1,1) out of the
-    // source entirely: its group then exists on HALO alone (c null, r/b/
-    // br from the neighbors), targets deep inside the hole lose all four
-    // corners (den=0, dropped), and targets at the hole's edges blend
-    // mask-aware from the fragments that DO exist — and the result must
-    // still equal the tall corner-scatter form bit for bit.
+    // the dense fixture has every crop tile. Carve tile (1,1) out of the
+    // source entirely: no tile row exists for it, targets deep inside the
+    // hole lose all four corners (den=0, dropped), and targets at the
+    // hole's edges blend mask-aware from the neighbor tiles' corners that
+    // DO exist — and the result must still equal the tall form bit for
+    // bit.
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft_tiles_sparse")
     val n = TiledRaster.TileSize
@@ -107,7 +181,8 @@ class TiledRasterSpec extends SparkSpec {
     val tiled = rows(tiledDf)
     val tall = rows(TiledRaster.tallResampleBilinear(spark, dir))
     assert(tiled.nonEmpty && tiled == tall,
-      "halo form diverged from the tall form on the sparse grid")
+      "tiled form diverged from the tall form on the sparse grid")
+    assertBilinearBits(dir, 14)
     // the hole really exercised the mask-aware path: some surviving
     // targets blend from fewer than 4 corners
     val partial = tiledDf.filter(col("n_nb") < 4).count()
@@ -119,18 +194,16 @@ class TiledRasterSpec extends SparkSpec {
   }
 
   test("q167 plan: ONE halo shuffle, zero joins — the map_overlap shape") {
-    val p = SparkEntry.queries("q167_tiled_resample_bilinear")(spark, sf)
-      .queryExecution.executedPlan.toString
-    val above = aboveLayout(p)
-    // the tall form shuffles pixel-grain corner rows; the halo form pays
-    // one tile-grain exchange (halo assembly) and the blend is row-local
-    assert(hashExchanges(above) == 1, s"halo form grew extra shuffles:\n$p")
-    assert(!above.contains("SortMergeJoin") && !above.contains("BroadcastHashJoin")
-      && !above.contains("ShuffledHashJoin"),
-      s"halo form reintroduced a join:\n$p")
-    // halo assembly partial-aggregates map-side (max(when) combine)
-    assert(above.contains("partial_max"),
-      s"halo assembly lost its map-side combine:\n$p")
+    val df = SparkEntry.queries("q167_tiled_resample_bilinear")(spark, sf)
+    val p = df.queryExecution.executedPlan
+    val above = aboveLayout(df)
+    // the scatter pays one target-grain exchange past the layout: each
+    // cell's corner rows meet at their target key, and nothing joins
+    assert(hashExchanges(above) == 1, s"bilinear grew extra shuffles:\n$p")
+    assert(!joins(above), s"bilinear reintroduced a join:\n$p")
+    // the corner gather partial-aggregates map-side (max(when) combine)
+    assert(partialAgg(above, classOf[Max]),
+      s"corner gather lost its map-side combine:\n$p")
   }
 
   test("tile table: dense row-major arrays, null fill, full coverage") {
@@ -162,56 +235,51 @@ class TiledRasterSpec extends SparkSpec {
     // the assembly into an InMemoryRelation — this pin is about the
     // BUILD's shape, which the cached path would hide
     spark.sharedState.cacheManager.clearCache()
-    val p = TiledRaster.tilesPlan(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = TiledRaster.tilesPlan(spark, sf).queryExecution.executedPlan
+    val ns = nodes(p)
     // pixel-grain cell means + tile-grain array packing — paid ONCE at
     // layout-build time (the consumers below read the shared frame)
-    assert(hashExchanges(p) == 2, s"tile assembly grew extra shuffles:\n$p")
-    assert(!p.contains("InMemoryRelation"), s"cold build still cache-matched:\n$p")
+    assert(hashExchanges(ns) == 2, s"tile assembly grew extra shuffles:\n$p")
+    assert(!ns.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"cold build still cache-matched:\n$p")
   }
 
   test("q164 plan: block means are tile-local — ZERO exchanges past the layout") {
-    val p = SparkEntry.queries("q164_tiled_block_aggregate")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val df = SparkEntry.queries("q164_tiled_block_aggregate")(spark, sf)
+    val p = df.queryExecution.executedPlan
     // the consumer reads the session-shared tile frame; the block-mean
     // kernel runs per tile ROW, so nothing shuffles at all (the tall
     // form pays a pixel-keyed exchange for the block grouping; the
-    // final orderBy is a rangepartitioning exchange over block-grain
+    // final orderBy is a range-partitioned exchange over block-grain
     // rows, not a hash one)
-    assert(p.contains("InMemoryTableScan"),
-      s"q164 is not reading the shared tile layout:\n$p")
-    assert(hashExchanges(aboveLayout(p)) == 0,
+    val above = aboveLayout(df)
+    assert(hashExchanges(above) == 0,
       s"block aggregate grew a post-layout shuffle:\n$p")
-    assert(!aboveLayout(p).contains("Window"),
-      "block aggregate should not need a window")
+    assert(!windows(above), "block aggregate should not need a window")
   }
 
   test("q165 plan: resample shuffles target-grain rows — partial min before the exchange") {
     val df = SparkEntry.queries("q165_tiled_resample_nearest")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
+    val p = df.queryExecution.executedPlan
     // the one target-cell aggregation exchange past the shared layout
-    assert(p.contains("InMemoryTableScan"),
-      s"q165 is not reading the shared tile layout:\n$p")
-    assert(hashExchanges(aboveLayout(p)) == 1,
-      s"resample grew extra shuffles:\n$p")
-    // map-side combine: a partial_min HashAggregate must sit BELOW the
+    val above = aboveLayout(df)
+    assert(hashExchanges(above) == 1, s"resample grew extra shuffles:\n$p")
+    // map-side combine: a partial min aggregate must sit BELOW the
     // target exchange, so pixels collapse to <= one candidate per target
     // cell per partition before anything crosses the network
-    assert(aboveLayout(p).contains("partial_min"),
+    assert(partialAgg(above, classOf[Min]),
       s"no map-side partial aggregation before the target exchange:\n$p")
     // nearest is an argmin aggregate, never a per-target window sort
     // over pixel rows (the tall twin's Raster.nearest has none either)
-    assert(!aboveLayout(p).contains("Window"),
-      "tiled resample reintroduced the window")
+    assert(!windows(above), "tiled resample reintroduced the window")
   }
 
   test("q166 plan: valid fraction is a per-tile kernel plus one product-grain rollup") {
     val df = SparkEntry.queries("q166_tiled_valid_fraction")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
     // one (area, product) rollup past the shared layout — the non-null
     // count itself runs inside each tile's array (filter+size kernel)
-    assert(hashExchanges(aboveLayout(p)) == 1,
-      s"valid fraction grew extra shuffles:\n$p")
+    assert(hashExchanges(aboveLayout(df)) == 1,
+      s"valid fraction grew extra shuffles:\n${df.queryExecution.executedPlan}")
     // denominator is the ALLOCATED grid: every fraction is in (0, 1],
     // and n_cells/(n_tiles * TileSize^2) reproduces it exactly
     val n = TiledRaster.TileSize * TiledRaster.TileSize
@@ -227,10 +295,24 @@ class TiledRasterSpec extends SparkSpec {
 
   test("q165 plan: reduce_data crop prunes whole tile rows before the explode") {
     val p = SparkEntry.queries("q165_tiled_resample_nearest")(spark, sf)
-      .queryExecution.executedPlan.toString
-    // the crop predicate is on the tile KEYS (tile_y/tile_x < 4), visible
-    // as a filter on the tile aggregation's output, not on exploded pixels
-    assert(p.contains("tile_y") && p.contains("tile_x"),
-      s"tile-grain crop keys missing from the plan:\n$p")
+      .queryExecution.executedPlan
+    // the crop predicate is on the tile KEYS (tile_y/tile_x < 4): a
+    // filter or a scan predicate BELOW the pixel explode, not a filter
+    // on exploded pixels (whose inferred isnotnull(tile_*) guards would
+    // sit below it too, hence the match on the bound itself)
+    def bounds(e: Expression, key: String): Boolean = e.exists {
+      case LessThan(a: Attribute, _: Literal) => a.name == key
+      case _ => false
+    }
+    def cropsTiles(ns: Seq[SparkPlan]): Boolean = Seq("tile_y", "tile_x").forall { key =>
+      ns.exists {
+        case f: FilterExec => bounds(f.condition, key)
+        case s: InMemoryTableScanExec => s.predicates.exists(bounds(_, key))
+        case _ => false
+      }
+    }
+    val explodes = nodes(p).collect { case g: GenerateExec => g }
+    assert(explodes.nonEmpty && explodes.forall(g => cropsTiles(nodes(g.child))),
+      s"tile-grain crop missing below the pixel explode:\n$p")
   }
 }
