@@ -72,12 +72,13 @@ case class RollingFpExpr(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (toks, b) => {
+      val r = ctx.freshName("r")
       s"""
-         |Object r = graft.functions.RollingFp.fp($toks, $b);
-         |if (r == null) {
+         |Object $r = graft.functions.RollingFp.fp($toks, $b);
+         |if ($r == null) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = ((Long) r).longValue();
+         |  ${ev.value} = ((Long) $r).longValue();
          |}
        """.stripMargin
     })

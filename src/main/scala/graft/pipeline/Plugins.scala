@@ -469,17 +469,18 @@ object Plugins {
     * file keeps exactly its columns and their order). Groups run in the
     * order each first appears in the work list; the area frames they
     * read are the ones [[CheckValidDataFraction]] persisted for the job.
-    * `eagerWriting=true` (doc/source/plugins.rst:162-167) instead builds
-    * and executes each file's plan, one write per file, before the next
-    * one is even constructed, trading that all-or-nothing analysis for
-    * earlier output.
+    * `eagerWriting=true` (doc/source/plugins.rst:162-167) runs the same
+    * group write with one sink per group, each planned just before its
+    * write runs: a file is written before the next one's plan is even
+    * constructed, trading that all-or-nothing analysis for earlier
+    * output.
     *
     * Row counts ride the write itself via `Dataset.observe` — never a
     * separate `count()` pass; a group observes one `count_if(__sink = i)`
     * per sink. The product-missing-from-scene skip (P1,
     * plugins/__init__.py:398-410) is the zero-row case: a sink with no
-    * rows has no partition directory (eagerly, its empty tmp dir is
-    * discarded), so the skip costs no extra job either.
+    * rows has no partition directory, so the skip costs no extra job
+    * either.
     *
     * `callbacks` (`call_on_done`, plugins/__init__.py:350-464,
     * 1082-1138): hooks invoked in order for every committed file, after
@@ -498,14 +499,13 @@ object Plugins {
     * never sees a partial batch. `earlyMoving=true` (`early_moving`,
     * plugins/__init__.py:377-381, the reference's `callback_move`
     * contract) instead moves each file as soon as its own write and those
-    * of every file before it in the work list committed: eagerly that is
-    * the moment its own write commits, batched the end of the first
-    * group write that leaves no earlier file unwritten. On a failure in
-    * deferred mode, files of groups that already committed stay in the
-    * staging zone — same as the reference's un-renamed tmp names — for
-    * inspection or re-run, and the failing write's tmp dir is removed;
-    * batched, a group's files are renamed only after its one write
-    * succeeded. Divergence: the
+    * of every file before it in the work list committed: the end of the
+    * first group write that leaves no earlier file unwritten (eagerly,
+    * the moment its own write commits). On a failure in deferred mode,
+    * files of groups that already committed stay in the staging zone —
+    * same as the reference's un-renamed tmp names — for inspection or
+    * re-run, and the failing write's tmp dir is removed; a group's files
+    * are renamed only after its one write succeeded. Divergence: the
     * reference's `early_moving` without `callback_move` leaves files in
     * staging forever; here the move is native, so they always reach
     * `outDir` on success.
@@ -533,46 +533,36 @@ object Plugins {
       val pending = scala.collection.mutable.ArrayBuffer.empty[Staged]
       def commit(st: Staged): Option[WrittenFile] =
         if (immediate) Some(publish(st)) else { pending += st; None }
-      val written =
-        if (eagerWriting)
-          ctx.worklist.flatMap(item =>
-            planOne(ctx, item).flatMap(sink => writeStaged(sink).flatMap(commit)))
-        else {
-          // force every plan before the first action (see class doc)
-          val sinks = ctx.worklist.flatMap(item => planOne(ctx, item))
-          writeGroups(sinks, commit)
-        }
+      val sinks = ctx.worklist.iterator.flatMap(planOne(ctx, _)).zipWithIndex
+      val groups =
+        if (eagerWriting) // each sink planned just before its own write
+          sinks.map(sink => tagged(Seq(sink)))
+        else // force every plan before the first action (see class doc)
+          sinks.toList.groupBy { case (sink, _) =>
+              // names and types in order; nullability may differ (the
+              // bilinear kernel's y/x are non-null), the union widens it
+              (sink.writer, sink.df.schema.map(f => (f.name, f.dataType))) }
+            .values.toList.sortBy(_.head._2).map(tagged).iterator
+      // files commit in work-list order: after each group, every sink up
+      // to the first one not yet written
+      val done = scala.collection.mutable.Map.empty[Int, Option[Staged]]
+      var next = 0
+      val written = groups.flatMap { case (members, union) =>
+        done ++= writeGroup(members, union)
+        val ready = Iterator.from(next).takeWhile(done.contains).toSeq
+        next += ready.size
+        ready.flatMap(i => done(i).flatMap(commit))
+      }.toList
       // renamed_files (plugins/__init__.py:318-327): publish the whole
       // batch only after every write committed
       val manifest = if (immediate) written else pending.map(publish).toSeq
       ctx.copy(manifest = ctx.manifest ++ manifest)
     }
 
-    /** Batched mode: one write per (writer, ordered columns) group, the
-      * groups in the order each first appears in `sinks`. Every group's
-      * union is built before the first write. Files commit in `sinks`
-      * order: after each group, every sink up to the first one not yet
-      * written. */
-    private def writeGroups(sinks: Seq[Sink],
-        commit: Staged => Option[WrittenFile]): Seq[WrittenFile] = {
-      val groups = sinks.zipWithIndex
-        .groupBy { case (sink, _) =>
-          // names and types in order; nullability may differ (the
-          // bilinear kernel's y/x are non-null), the union widens it
-          (sink.writer, sink.df.schema.map(f => (f.name, f.dataType))) }
-        .values
-        .toSeq.sortBy(_.head._2)
-        .map(members => members -> members.map { case (sink, i) =>
-          sink.df.withColumn(SinkCol, lit(i)) }.reduce(_.unionByName(_)))
-      val done = scala.collection.mutable.Map.empty[Int, Option[Staged]]
-      var next = 0
-      groups.flatMap { case (members, union) =>
-        done ++= writeGroup(members, union)
-        val ready = Iterator.from(next).takeWhile(done.contains).toSeq
-        next += ready.size
-        ready.flatMap(i => done(i).flatMap(commit))
-      }
-    }
+    /** A group's sinks, each tagged with its work-list index, unioned. */
+    private def tagged(members: Seq[(Sink, Int)]): (Seq[(Sink, Int)], DataFrame) =
+      members -> members.map { case (sink, i) => sink.df.withColumn(SinkCol, lit(i)) }
+        .reduce(_.unionByName(_))
 
     /** One group's write: ONE Spark action for every sink in it, rows
       * per sink observed on the write. Returns each sink's staged
@@ -635,35 +625,6 @@ object Plugins {
     }
 
     private case class Staged(path: Path, sink: Sink, rows: Long)
-
-    /** Eager mode: execute one sink's write: tmp dir + atomic rename
-      * inside the stage directory (staging zone if set, else `outDir`);
-      * returns the staged location, or None for the zero-row (product
-      * missing) skip. Exactly ONE Spark action — the row count is
-      * observed on the write itself. */
-    private def writeStaged(sink: Sink): Option[Staged] = {
-      val stageDir = stagingZone.getOrElse(outDir)
-      val stagedPath = Paths.get(stageDir, sink.fname)
-      val tmpPath = Paths.get(stageDir, s".tmp_${System.nanoTime()}_${sink.fname}")
-      try {
-        val obs = org.apache.spark.sql.Observation()
-        sink.df.observe(obs, count(lit(1)).as("rows"))
-          .write.mode("overwrite").format(sink.writer).save(tmpPath.toString)
-        val rows = obs.get("rows").asInstanceOf[Long]
-        if (rows == 0L) { // product missing from scene -> skip (P1)
-          deleteRecursively(tmpPath)
-          None
-        } else {
-          atomicRename(tmpPath, stagedPath)
-          Some(Staged(stagedPath, sink, rows))
-        }
-      } catch {
-        case NonFatal(e) =>
-          deleteRecursively(tmpPath)
-          throw new RuntimeException(
-            s"save_datasets failed for ${sink.item.product}: ${e.getMessage}", e)
-      }
-    }
 
     /** Move a staged file to its final location (the staging→outDir hop,
       * a no-op when there is no staging zone), record it, and fire the
@@ -1079,7 +1040,7 @@ object Plugins {
       }
   }
 
-  /** The sink-id column of a batched [[SaveDatasets]] group write. */
+  /** The sink-id column of a [[SaveDatasets]] group write. */
   private val SinkCol = "__sink"
 
   /** One fully-built sink plan: everything about the file except the
@@ -1192,9 +1153,9 @@ object Plugins {
     * exactly like `create_dispatch_uri` (urlunsplit of scheme/netloc/
     * composed path, :532-538); the dispatch row carries the source file.
     *
-    * Messages surface as a DataFrame (the Kafka-producer analog: at scale
-    * this frame IS the payload handed to a `kafka` sink / foreachBatch
-    * publisher). */
+    * Messages surface as plain [[PublishedMessage]] rows (`messageSeq`);
+    * a Spark publisher (a `kafka` sink, a foreachBatch) takes them as a
+    * frame with `toDF()`. */
   final case class FilePublisher(topicPattern: String = "/file/{product}")
       extends Plugin {
     val name = "file_publisher"
@@ -1234,10 +1195,6 @@ object Plugins {
       }
     }
 
-    def messages(ctx: PipelineContext): DataFrame = {
-      import ctx.spark.implicits._
-      messageSeq(ctx).toDF()
-    }
     def apply(ctx: PipelineContext): PipelineContext = ctx
   }
 }

@@ -122,9 +122,9 @@ class PipelineSpec extends SparkSpec {
     assert(coords.getLong(0) < 16 && coords.getLong(1) < 16)
     // publisher: one message per manifest entry, composed topic
     val pub = FilePublisher("/file/{area}/{product}")
-    val msgs = pub.messages(reports.head.finalCtx).collect()
+    val msgs = pub.messageSeq(reports.head.finalCtx)
     assert(msgs.length == m1.size)
-    assert(msgs.map(_.getString(0)).toSet ==
+    assert(msgs.map(_.topic).toSet ==
       Set("/file/euro/N", "/file/euro/R"))
     // written parquet round-trips
     val reread = spark.read.parquet(
