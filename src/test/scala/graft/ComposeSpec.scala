@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Compose
+import graft.functions.{Compose, ComposeExpr}
 
 class ComposeSpec extends SparkSpec {
 
@@ -34,14 +34,9 @@ class ComposeSpec extends SparkSpec {
     val df = spark.read.parquet(s"$sf/documents.parquet")
       .withColumn("out",
         expr("compose_tpl('{lang}/{source}', map('lang', lang, 'source', source))"))
-    // the starred Project (`*(1)`) marks the WholeStageCodegen stage; check
-    // the exec node type directly and that compose_tpl sits inside it
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
-    val codegenStages = df.queryExecution.executedPlan.collect {
-      case w: WholeStageCodegenExec => w
-    }
-    assert(codegenStages.exists(_.toString.contains("compose_tpl")),
-      df.queryExecution.executedPlan.toString)
+    // some node fused into a WholeStageCodegen stage evaluates compose_tpl
+    val plan = PlanShape.of(df)
+    assert(plan.codegenStageExprs.exists(_.exists(_.isInstanceOf[ComposeExpr])), plan.render)
     val one = df.select("lang", "source", "out").limit(1).collect().head
     assert(one.getString(2) == s"${one.getString(0)}/${one.getString(1)}")
   }

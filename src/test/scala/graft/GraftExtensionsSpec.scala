@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Conv, Literal, RegExpExtractAll}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.ComposeExpr
+import graft.functions.{ComposeExpr, H32Md5, RxCountExpr}
 import graft.plans.GraftExtensions
 
 class GraftExtensionsSpec extends SparkSpec {
@@ -29,9 +29,9 @@ class GraftExtensionsSpec extends SparkSpec {
       .select(col("doc_id"), decl.as("h"))
     // GraftSession installed RewriteMd5H32 on this session: the physical
     // plan must carry the fused kernel, not the conv/substring chain
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("h32_md5"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("conv("), s"declarative chain survived:\n$plan")
+    val plan = PlanShape.of(df)
+    assert(plan.hasExpr[H32Md5], s"rewrite did not fire:\n${plan.render}")
+    assert(!plan.hasExpr[Conv], s"declarative chain survived:\n${plan.render}")
     // and the rewritten result is bit-identical to the explicit kernel
     val native = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), graft.functions.TextFns.h32(col("text")).as("h"))
@@ -50,9 +50,9 @@ class GraftExtensionsSpec extends SparkSpec {
     pats.foreach { p =>
       val declared = docs.select(col("doc_id"),
         size(regexp_extract_all(col("t"), lit(p), lit(0))).as("n"))
-      val plan = declared.queryExecution.executedPlan.toString
-      assert(plan.contains("rx_count"), s"rewrite did not fire for '$p':\n${plan.take(800)}")
-      assert(!plan.contains("regexp_extract_all"),
+      val plan = PlanShape.of(declared)
+      assert(plan.hasExpr[RxCountExpr], s"rewrite did not fire for '$p':\n${plan.render}")
+      assert(!plan.hasExpr[RegExpExtractAll],
         s"array materialization survived for '$p'")
       // ground truth: evaluate the UNrewritten form via the expression
       // tree directly (bypassing the optimizer is not possible on a
@@ -76,7 +76,7 @@ class GraftExtensionsSpec extends SparkSpec {
     // group index != 0 is left alone (keeps Spark's group validation)
     val g1 = docs.select(
       size(regexp_extract_all(col("t"), lit("x(y)?z"), lit(1))).as("n"))
-    assert(!g1.queryExecution.executedPlan.toString.contains("rx_count"),
+    assert(!PlanShape.of(g1).hasExpr[RxCountExpr],
       "group-1 extract must not rewrite")
   }
 

@@ -1,8 +1,19 @@
 package graft
 
+import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Ranking
+
+object RankingSpec {
+  /** A window of [[Ranking.globalRank]]'s two-phase rank: the in-block
+    * row number partitions by the block, and the offsets prefix sum is a
+    * declared single-partition window over the block table, ordered by
+    * the block. */
+  def twoPhase(w: WindowExecBase): Boolean =
+    PlanShape.keys(w).contains("__rk_block") || (PlanShape.keys(w).isEmpty &&
+      w.partitionSpec.nonEmpty && w.orderSpec.exists(_.references.exists(_.name == "__rk_b")))
+}
 
 class RankingSpec extends SparkSpec {
 
@@ -34,12 +45,10 @@ class RankingSpec extends SparkSpec {
   test("no corpus-wide window: every window partitions by the block") {
     val d = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val plan = Ranking.globalRank(d, substring(col("text"), 1, 1),
-      Seq(col("text"), col("doc_id")))
-      .queryExecution.executedPlan.toString
-    val windows = plan.linesIterator.filter(_.contains("Window [")).toSeq
+    val windows = PlanShape.of(Ranking.globalRank(d, substring(col("text"), 1, 1),
+      Seq(col("text"), col("doc_id")))).windows
     assert(windows.nonEmpty)
-    windows.foreach(w => assert(w.contains("__rk_b"),
-      s"corpus-wide window crept in: $w"))
+    windows.foreach(w => assert(RankingSpec.twoPhase(w),
+      s"corpus-wide window crept in: ${PlanShape.render(w)}"))
   }
 }

@@ -2,9 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.operators.Raster
 import graft.operators.Raster.{Axis, Grid}
@@ -116,15 +114,13 @@ class RasterSpec extends SparkSpec {
     val ctx = PipelineContext(session, spec, Map.empty, Map(None -> scene),
       Worklist.expand(spec))
     val area = Resample(Seq(target))(ctx).frames(Some("bil"))
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
-    val plan = nodes(area.queryExecution.executedPlan)
-    val below = nodes(Raster.cellMeans(target.grid.crop(scene), Seq("product"))
-      .queryExecution.executedPlan)
-    def shuffles(ps: Seq[SparkPlan]) = ps.count(_.isInstanceOf[ShuffleExchangeExec])
-    assert(!plan.exists(_.isInstanceOf[BaseJoinExec]), s"a join is back:\n${plan.head}")
-    assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]),
-      s"a broadcast is back:\n${plan.head}")
+    val plan = PlanShape.of(area, PlanShape.Leaf)
+    val below = PlanShape.of(Raster.cellMeans(target.grid.crop(scene), Seq("product")),
+      PlanShape.Leaf)
+    def shuffles(s: PlanShape) = s.count[ShuffleExchangeExec]
+    assert(plan.joins.isEmpty, s"a join is back:\n${plan.render}")
+    assert(!plan.has[BroadcastExchangeExec], s"a broadcast is back:\n${plan.render}")
     assert(shuffles(plan) - shuffles(below) == 1,
-      s"want one shuffle above the cell means' ${shuffles(below)}:\n${plan.head}")
+      s"want one shuffle above the cell means' ${shuffles(below)}:\n${plan.render}")
   }
 }

@@ -2,16 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LessThan, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Max, Min,
-  Partial, Sum}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min, Sum}
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BaseJoinExec
-import org.apache.spark.sql.execution.window.WindowExecBase
 
 import graft.operators.Raster
 import graft.queries.{TiledRaster, Trollflow}
@@ -21,7 +14,7 @@ import graft.queries.{TiledRaster, Trollflow}
   * path — the block aggregate adds ZERO exchanges beyond the layout
   * build, and the resample's exchange carries target-grain rows via
   * map-side partial aggregation, never pixel rows. */
-class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class TiledRasterSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
@@ -58,37 +51,18 @@ class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"bilinear at offset $off")
   }
 
-  /** The executed plan's nodes, through AQE's wrapper and query stages.
-    * An InMemoryTableScanExec is a leaf of this walk, so the cached tile
-    * layout's own build plan, which a consumer never re-pays, is not in
-    * it. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+  /** The executed plan's nodes. An InMemoryTableScanExec is a leaf of
+    * this walk, so the cached tile layout's own build plan, which a
+    * consumer never re-pays, is not in it. */
+  private def nodes(p: SparkPlan): PlanShape = PlanShape(p, PlanShape.Leaf)
 
   /** A consumer query's plan above the shared tile layout, which it must
     * read. */
-  private def aboveLayout(df: DataFrame): Seq[SparkPlan] = {
-    val ns = nodes(df.queryExecution.executedPlan)
-    assert(ns.exists(_.isInstanceOf[InMemoryTableScanExec]),
-      s"not reading the shared tile layout:\n${df.queryExecution.executedPlan}")
+  private def aboveLayout(df: DataFrame): PlanShape = {
+    val ns = PlanShape.of(df, PlanShape.Leaf)
+    assert(ns.has[InMemoryTableScanExec], s"not reading the shared tile layout:\n${ns.render}")
     ns
   }
-
-  private def hashExchanges(ns: Seq[SparkPlan]): Int = ns.count {
-    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
-    case _ => false
-  }
-
-  /** Some aggregate computes `fn` in Partial mode: a map-side combine. */
-  private def partialAgg(ns: Seq[SparkPlan], fn: Class[_ <: AggregateFunction]): Boolean =
-    ns.exists {
-      case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
-        e.mode == Partial && fn.isInstance(e.aggregateFunction))
-      case _ => false
-    }
-
-  private def joins(ns: Seq[SparkPlan]): Boolean = ns.exists(_.isInstanceOf[BaseJoinExec])
-
-  private def windows(ns: Seq[SparkPlan]): Boolean = ns.exists(_.isInstanceOf[WindowExecBase])
 
   test("tiled block aggregate == tall block aggregate, bit for bit") {
     val tiled = rows(TiledRaster.q164TiledBlockAggregate(spark, sf))
@@ -128,15 +102,14 @@ class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("q168 plan: scatter splat partial-aggregates to ONE target-grain exchange") {
     val df = SparkEntry.queries("q168_tiled_resample_ewa")(spark, sf)
-    val p = df.queryExecution.executedPlan
     val above = aboveLayout(df)
     // scatter needs no halo: contributions are computed where the source
     // lives and MERGED at the target key — one partial-combined exchange
-    assert(hashExchanges(above) == 1, s"ewa scatter grew extra shuffles:\n$p")
-    assert(partialAgg(above, classOf[Sum]),
-      s"splat lost its map-side partial aggregation:\n$p")
-    assert(!joins(above) && !windows(above),
-      s"ewa scatter reintroduced a join or window:\n$p")
+    assert(above.hashExchanges == 1, s"ewa scatter grew extra shuffles:\n${above.render}")
+    assert(above.partial[Sum],
+      s"splat lost its map-side partial aggregation:\n${above.render}")
+    assert(above.joins.isEmpty && above.windows.isEmpty,
+      s"ewa scatter reintroduced a join or window:\n${above.render}")
   }
 
   test("halo reads actually fire: tiled == tall at a halo-active offset") {
@@ -195,15 +168,14 @@ class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("q167 plan: ONE halo shuffle, zero joins — the map_overlap shape") {
     val df = SparkEntry.queries("q167_tiled_resample_bilinear")(spark, sf)
-    val p = df.queryExecution.executedPlan
     val above = aboveLayout(df)
     // the scatter pays one target-grain exchange past the layout: each
     // cell's corner rows meet at their target key, and nothing joins
-    assert(hashExchanges(above) == 1, s"bilinear grew extra shuffles:\n$p")
-    assert(!joins(above), s"bilinear reintroduced a join:\n$p")
+    assert(above.hashExchanges == 1, s"bilinear grew extra shuffles:\n${above.render}")
+    assert(above.joins.isEmpty, s"bilinear reintroduced a join:\n${above.render}")
     // the corner gather partial-aggregates map-side (max(when) combine)
-    assert(partialAgg(above, classOf[Max]),
-      s"corner gather lost its map-side combine:\n$p")
+    assert(above.partial[Max],
+      s"corner gather lost its map-side combine:\n${above.render}")
   }
 
   test("tile table: dense row-major arrays, null fill, full coverage") {
@@ -239,47 +211,45 @@ class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val ns = nodes(p)
     // pixel-grain cell means + tile-grain array packing — paid ONCE at
     // layout-build time (the consumers below read the shared frame)
-    assert(hashExchanges(ns) == 2, s"tile assembly grew extra shuffles:\n$p")
-    assert(!ns.exists(_.isInstanceOf[InMemoryTableScanExec]),
-      s"cold build still cache-matched:\n$p")
+    assert(ns.hashExchanges == 2, s"tile assembly grew extra shuffles:\n${ns.render}")
+    assert(!ns.has[InMemoryTableScanExec],
+      s"cold build still cache-matched:\n${ns.render}")
   }
 
   test("q164 plan: block means are tile-local — ZERO exchanges past the layout") {
     val df = SparkEntry.queries("q164_tiled_block_aggregate")(spark, sf)
-    val p = df.queryExecution.executedPlan
     // the consumer reads the session-shared tile frame; the block-mean
     // kernel runs per tile ROW, so nothing shuffles at all (the tall
     // form pays a pixel-keyed exchange for the block grouping; the
     // final orderBy is a range-partitioned exchange over block-grain
     // rows, not a hash one)
     val above = aboveLayout(df)
-    assert(hashExchanges(above) == 0,
-      s"block aggregate grew a post-layout shuffle:\n$p")
-    assert(!windows(above), "block aggregate should not need a window")
+    assert(above.hashExchanges == 0,
+      s"block aggregate grew a post-layout shuffle:\n${above.render}")
+    assert(above.windows.isEmpty, "block aggregate should not need a window")
   }
 
   test("q165 plan: resample shuffles target-grain rows — partial min before the exchange") {
     val df = SparkEntry.queries("q165_tiled_resample_nearest")(spark, sf)
-    val p = df.queryExecution.executedPlan
     // the one target-cell aggregation exchange past the shared layout
     val above = aboveLayout(df)
-    assert(hashExchanges(above) == 1, s"resample grew extra shuffles:\n$p")
+    assert(above.hashExchanges == 1, s"resample grew extra shuffles:\n${above.render}")
     // map-side combine: a partial min aggregate must sit BELOW the
     // target exchange, so pixels collapse to <= one candidate per target
     // cell per partition before anything crosses the network
-    assert(partialAgg(above, classOf[Min]),
-      s"no map-side partial aggregation before the target exchange:\n$p")
+    assert(above.partial[Min],
+      s"no map-side partial aggregation before the target exchange:\n${above.render}")
     // nearest is an argmin aggregate, never a per-target window sort
     // over pixel rows (the tall twin's Raster.nearest has none either)
-    assert(!windows(above), "tiled resample reintroduced the window")
+    assert(above.windows.isEmpty, "tiled resample reintroduced the window")
   }
 
   test("q166 plan: valid fraction is a per-tile kernel plus one product-grain rollup") {
     val df = SparkEntry.queries("q166_tiled_valid_fraction")(spark, sf)
     // one (area, product) rollup past the shared layout — the non-null
     // count itself runs inside each tile's array (filter+size kernel)
-    assert(hashExchanges(aboveLayout(df)) == 1,
-      s"valid fraction grew extra shuffles:\n${df.queryExecution.executedPlan}")
+    val above = aboveLayout(df)
+    assert(above.hashExchanges == 1, s"valid fraction grew extra shuffles:\n${above.render}")
     // denominator is the ALLOCATED grid: every fraction is in (0, 1],
     // and n_cells/(n_tiles * TileSize^2) reproduces it exactly
     val n = TiledRaster.TileSize * TiledRaster.TileSize
@@ -304,15 +274,15 @@ class TiledRasterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case LessThan(a: Attribute, _: Literal) => a.name == key
       case _ => false
     }
-    def cropsTiles(ns: Seq[SparkPlan]): Boolean = Seq("tile_y", "tile_x").forall { key =>
-      ns.exists {
+    def cropsTiles(ns: PlanShape): Boolean = Seq("tile_y", "tile_x").forall { key =>
+      ns.nodes.exists {
         case f: FilterExec => bounds(f.condition, key)
         case s: InMemoryTableScanExec => s.predicates.exists(bounds(_, key))
         case _ => false
       }
     }
-    val explodes = nodes(p).collect { case g: GenerateExec => g }
+    val explodes = nodes(p).all[GenerateExec]
     assert(explodes.nonEmpty && explodes.forall(g => cropsTiles(nodes(g.child))),
-      s"tile-grain crop missing below the pixel explode:\n$p")
+      s"tile-grain crop missing below the pixel explode:\n${PlanShape.render(p)}")
   }
 }

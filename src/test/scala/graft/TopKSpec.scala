@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.expressions.Window
 import graft.operators.TopK
 
@@ -60,11 +61,10 @@ class TopKSpec extends SparkSpec {
   test("topk aggregates with map-side partials (no full sort in the plan)") {
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("user_id"), col("value"), col("event_id").cast("long").as("id"))
-    val plan = ev.groupBy(col("user_id"))
-      .agg(TopK.topk(3)(col("value"), col("id")).as("top"))
-      .queryExecution.executedPlan.toString
+    val plan = PlanShape.of(ev.groupBy(col("user_id"))
+      .agg(TopK.topk(3)(col("value"), col("id")).as("top")))
     // ObjectHashAggregate runs in partial mode below the exchange
-    assert(plan.contains("ObjectHashAggregate"))
-    assert(!plan.toLowerCase.contains("sortaggregate"))
+    assert(plan.has[ObjectHashAggregateExec])
+    assert(!plan.has[SortAggregateExec])
   }
 }
